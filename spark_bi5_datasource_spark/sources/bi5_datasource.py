@@ -33,7 +33,7 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 from datetime import datetime, timezone
-from typing import Iterator, Sequence
+from typing import Iterable, Iterator, Sequence
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -109,7 +109,10 @@ def _to_epoch_us(value) -> int:
     return int(value)
 
 
-class Bi5Reader(DataSourceReader):
+class Bi5Scan:
+    """Option validation, path-metadata pruning and decode shared by the
+    batch reader and the streaming reader."""
+
     def __init__(self, options) -> None:
         # Mirrors createReader validation incl. exact messages (DS24:31-50).
         path = options.get("path")
@@ -127,21 +130,56 @@ class Bi5Reader(DataSourceReader):
         january = int(options.get("january", "0"))
         if january < 0 or january > 1:
             raise ValueError("january can only be 0 or 1")
-        partitioning = options.get("partitioning", "file")
-        if partitioning not in ("file", "subdir"):
-            raise ValueError("partitioning must be 'file' or 'subdir'")
 
         self.path = path
         self.digits = digits
         self.january = january
-        self.partitioning = partitioning
         # Extra driver-side prune knobs (comma-separated tickers, ISO
         # instants) usable even without a WHERE clause.
         self.opt_tickers = {
             t.strip() for t in options.get("tickers", "").split(",") if t.strip()
         } or None
-        self.opt_start = options.get("start")
-        self.opt_end = options.get("end")
+        self.opt_start_us = _iso_to_us(options["start"]) if options.get("start") else None
+        self.opt_end_us = _iso_to_us(options["end"]) if options.get("end") else None
+
+    def _keep_file(self, fpath: str, tickers, ts_min, ts_max) -> bool:
+        """Driver-side prune: drop files whose path metadata can't match
+        ``tickers`` or the inclusive ``[ts_min, ts_max]`` range (``None``
+        = unbounded).  Unparseable paths are kept so the executor-side
+        silent-skip policy stays the single authority."""
+        try:
+            meta = parse_bi5_path(fpath, self.january)
+        except ValueError:
+            return True
+        if tickers is not None and meta.ticker not in tickers:
+            return False
+        if ts_min is not None and meta.hour_epoch_us + HOUR_US <= ts_min:
+            return False
+        if ts_max is not None and meta.hour_epoch_us > ts_max:
+            return False
+        return True
+
+    def _read_files(self, files: Iterable[str]):
+        from .bi5_codec import ticks_record_batch
+
+        for fpath in files:
+            cols = decode_bi5_file(fpath, self.digits, self.january)
+            if cols is None or len(cols["ts_us"]) == 0:
+                continue  # silent skip (A10, DS24:149-186)
+            yield ticks_record_batch(cols)
+
+
+def _tightest(a, b, pick):
+    return b if a is None else a if b is None else pick(a, b)
+
+
+class Bi5Reader(Bi5Scan, DataSourceReader):
+    def __init__(self, options) -> None:
+        super().__init__(options)
+        partitioning = options.get("partitioning", "file")
+        if partitioning not in ("file", "subdir"):
+            raise ValueError("partitioning must be 'file' or 'subdir'")
+        self.partitioning = partitioning
         # Populated by pushFilters.
         self._pushed_tickers: set[str] | None = None
         self._pushed_ts_min_us: int | None = None  # inclusive
@@ -181,37 +219,6 @@ class Bi5Reader(DataSourceReader):
         else:
             self._pushed_tickers &= tickers
 
-    def _keep_file(self, fpath: str) -> bool:
-        """Driver-side prune: drop files whose path metadata can't match
-        the pushed/option filters.  Unparseable paths are kept so the
-        executor-side silent-skip policy stays the single authority."""
-        try:
-            meta = parse_bi5_path(fpath, self.january)
-        except ValueError:
-            return True
-        tickers = self._pushed_tickers
-        if self.opt_tickers is not None:
-            tickers = (tickers & self.opt_tickers) if tickers is not None else self.opt_tickers
-        if tickers is not None and meta.ticker not in tickers:
-            return False
-        lo_us, hi_us = meta.hour_epoch_us, meta.hour_epoch_us + HOUR_US
-        ts_min, ts_max = self._pushed_ts_min_us, self._pushed_ts_max_us
-        if self.opt_start:
-            ts_min = max(
-                ts_min if ts_min is not None else -(1 << 62),
-                _iso_to_us(self.opt_start),
-            )
-        if self.opt_end:
-            ts_max = min(
-                ts_max if ts_max is not None else (1 << 62),
-                _iso_to_us(self.opt_end),
-            )
-        if ts_min is not None and lo_us + HOUR_US <= ts_min:
-            return False
-        if ts_max is not None and lo_us > ts_max:
-            return False
-        return True
-
     # -- planning ------------------------------------------------------
     def partitions(self) -> Sequence[Bi5Partition]:
         if self.partitioning == "subdir":
@@ -226,8 +233,16 @@ class Bi5Reader(DataSourceReader):
             else:
                 parts = [Bi5Partition(files=(self.path,), walk=True)]
         else:
-            # Scale path: one partition per file, pruned by pushed filters.
-            files = [f for f in iter_bi5_files(self.path) if self._keep_file(f)]
+            # Scale path: one partition per file, pruned by pushed filters
+            # met with the option hints.
+            tickers = _tightest(self._pushed_tickers, self.opt_tickers, set.intersection)
+            ts_min = _tightest(self._pushed_ts_min_us, self.opt_start_us, max)
+            ts_max = _tightest(self._pushed_ts_max_us, self.opt_end_us, min)
+            files = [
+                f
+                for f in iter_bi5_files(self.path)
+                if self._keep_file(f, tickers, ts_min, ts_max)
+            ]
             parts = [Bi5Partition(files=(f,), walk=False) for f in files]
         # Zero partitions is legal but loses schema-only queries' task
         # metrics parity; keep an empty partition so count()==0 still
@@ -236,19 +251,10 @@ class Bi5Reader(DataSourceReader):
 
     # -- execution -----------------------------------------------------
     def read(self, partition: Bi5Partition):
-        from .bi5_codec import ticks_record_batch
-
+        files: Iterable[str] = partition.files
         if partition.walk:
-            files: Iterator[str] = (
-                f for root in partition.files for f in iter_bi5_files(root)
-            )
-        else:
-            files = iter(partition.files)
-        for fpath in files:
-            cols = decode_bi5_file(fpath, self.digits, self.january)
-            if cols is None or len(cols["ts_us"]) == 0:
-                continue  # silent skip (A10, DS24:149-186)
-            yield ticks_record_batch(cols)
+            files = (f for root in files for f in iter_bi5_files(root))
+        return self._read_files(files)
 
 
 def _iso_to_us(value: str) -> int:

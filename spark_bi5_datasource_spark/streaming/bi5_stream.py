@@ -8,8 +8,8 @@ streaming scan").  Micro-batch model:
   list in the offset JSON (hour files are immutable once written —
   Dukascopy trees are append-only, so set-difference is exact);
 * each micro-batch plans one partition per new file (same per-file
-  parallelism as the batch source) and reuses the batch codec and
-  Arrow batch builder;
+  parallelism as the batch source) and shares the batch reader's
+  option validation, path pruning and decode (``Bi5Scan``);
 * dirty files follow the same silent-skip contract (A10);
 * the ``tickers``/``start``/``end`` prune options are honored when
   listing, so the watch window is bounded the same way as the batch
@@ -29,28 +29,13 @@ from __future__ import annotations
 import os
 import time
 from dataclasses import dataclass
-from datetime import datetime, timezone
 
 from pyspark.sql.datasource import DataSourceStreamReader, InputPartition
 
-from ..sources.bi5_datasource import local_path
-from ..sources.bi5_codec import (
-    decode_bi5_file,
-    iter_bi5_files,
-    parse_bi5_path,
-    ticks_record_batch,
-)
+from ..sources.bi5_codec import iter_bi5_files
+from ..sources.bi5_datasource import Bi5Scan
 
 __all__ = ["Bi5StreamReader", "stream_bi5_writer"]
-
-HOUR_US = 3_600_000_000
-
-
-def _iso_to_us(value: str) -> int:
-    dt = datetime.fromisoformat(value)
-    if dt.tzinfo is None:
-        dt = dt.replace(tzinfo=timezone.utc)
-    return int(dt.timestamp() * 1_000_000)
 
 
 @dataclass
@@ -58,29 +43,9 @@ class Bi5StreamPartition(InputPartition):
     files: tuple[str, ...]
 
 
-class Bi5StreamReader(DataSourceStreamReader):
+class Bi5StreamReader(Bi5Scan, DataSourceStreamReader):
     def __init__(self, options) -> None:
-        path = options.get("path")
-        if path is None:
-            raise ValueError("'path' must be specified for BI5 data.")
-        path = local_path(path)
-        if not os.path.exists(path):
-            raise ValueError("Invalid path")
-        digits_raw = options.get("digits")
-        if digits_raw is None:
-            raise ValueError("'digits' should be the digits for the currency")
-        self.digits = int(digits_raw)
-        if self.digits < 0:
-            raise ValueError("digits cannot be smaller than 0")
-        self.january = int(options.get("january", "0"))
-        if self.january < 0 or self.january > 1:
-            raise ValueError("january can only be 0 or 1")
-        self.path = path
-        self.tickers = {
-            t.strip() for t in options.get("tickers", "").split(",") if t.strip()
-        } or None
-        self.start_us = _iso_to_us(options["start"]) if options.get("start") else None
-        self.end_us = _iso_to_us(options["end"]) if options.get("end") else None
+        super().__init__(options)
         self.min_age_s = float(options.get("min.age.seconds", "0"))
 
     def _keep(self, fpath: str) -> bool:
@@ -90,17 +55,7 @@ class Bi5StreamReader(DataSourceStreamReader):
                     return False  # possibly still being written
             except OSError:
                 return False
-        try:
-            meta = parse_bi5_path(fpath, self.january)
-        except ValueError:
-            return True  # let executor-side silent-skip decide
-        if self.tickers is not None and meta.ticker not in self.tickers:
-            return False
-        if self.start_us is not None and meta.hour_epoch_us + HOUR_US <= self.start_us:
-            return False
-        if self.end_us is not None and meta.hour_epoch_us > self.end_us:
-            return False
-        return True
+        return self._keep_file(fpath, self.opt_tickers, self.opt_start_us, self.opt_end_us)
 
     # offsets are {"files": [...]} — immutable-file set semantics
     def initialOffset(self) -> dict:
@@ -116,11 +71,7 @@ class Bi5StreamReader(DataSourceStreamReader):
         return [Bi5StreamPartition(files=(f,)) for f in new_files]
 
     def read(self, partition: Bi5StreamPartition):
-        for fpath in partition.files:
-            cols = decode_bi5_file(fpath, self.digits, self.january)
-            if cols is None or len(cols["ts_us"]) == 0:
-                continue
-            yield ticks_record_batch(cols)
+        return self._read_files(partition.files)
 
     def commit(self, end: dict) -> None:
         pass  # offsets are self-contained; nothing to clean up

@@ -370,6 +370,43 @@ def test_bi5_stream_min_age_excludes_fresh_files(spark, tmp_path):
     assert len(reader2.latestOffset()["files"]) == 1
 
 
+@pytest.mark.parametrize(
+    "options, message",
+    [
+        ({}, r"'path' must be specified for BI5 data\."),
+        ({"path": "bumba", "digits": "1"}, "Invalid path"),
+        ({"path": None}, "'digits' should be the digits for the currency"),
+        ({"path": None, "digits": "-1"}, "digits cannot be smaller than 0"),
+        ({"path": None, "digits": "5", "january": "2"}, "january can only be 0 or 1"),
+    ],
+)
+def test_bi5_stream_validates_like_batch(bi5_tree, options, message):
+    from spark_bi5_datasource_spark.sources.bi5_datasource import Bi5Reader
+    from spark_bi5_datasource_spark.streaming.bi5_stream import Bi5StreamReader
+
+    if "path" in options and options["path"] is None:
+        options = {**options, "path": bi5_tree}
+    for cls in (Bi5Reader, Bi5StreamReader):
+        with pytest.raises(ValueError, match=message):
+            cls(options)
+
+
+def test_bi5_stream_prunes_like_batch(bi5_tree):
+    from spark_bi5_datasource_spark.sources.bi5_datasource import Bi5Reader
+    from spark_bi5_datasource_spark.streaming.bi5_stream import Bi5StreamReader
+
+    options = {
+        "path": bi5_tree,
+        "digits": "5",
+        "tickers": "EURUSD",
+        "start": "2020-01-01",
+        "end": "2020-12-31",
+    }
+    batch = sorted(f for p in Bi5Reader(options).partitions() for f in p.files)
+    assert Bi5StreamReader(options).latestOffset()["files"] == batch
+    assert [os.path.relpath(f, bi5_tree) for f in batch] == ["EURUSD/2020/03/03/00h_ticks.bi5"]
+
+
 def test_stateful_running_stats_across_batches(spark, tmp_path):
     """applyInPandasWithState keeps per-key state across micro-batches:
     round 2 (new file, recovered checkpoint) accumulates on round 1."""
