@@ -71,7 +71,7 @@ def build_spark():
         .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
         # shuffle/broadcast/spill codec, parameterised for cluster use
         # (r14): on this no-network box zstd's CPU overhead shows no
-        # win over lz4 (R14_CODEC_AB.jsonl — q21 10.8-11.1 s lz4 vs
+        # win over lz4 (HISTORY.md "Shuffle codec" — q21 10.8-11.1 s lz4 vs
         # 14.7 s zstd; basket/winnow inside drift), so the local
         # default stays lz4; on a real cluster where the shuffle
         # crosses NICs, zstd's better ratio is the documented
@@ -97,10 +97,11 @@ def scan_sentinel(spark, data_dir: str, runs: int = 3) -> float:
     projection of lineitem, noop sink) timed with the same warm-up +
     min-of-N discipline as the real queries.  The box's storage-layer
     writeback makes identical legs drift 0.16→1.15 s within minutes
-    (SCALE_NOTES r17); emitting this leg at the START and END of every
-    bench window records the box state the window's timings were taken
-    in, so a cross-round delta can be read as drift vs regression from
-    the artifact alone instead of re-pinning by hand."""
+    (HISTORY.md "Scan-floor sentinel"); emitting this leg at the START
+    and END of every bench window records the box state the window's
+    timings were taken in, so a cross-round delta can be read as drift
+    vs regression from the artifact alone instead of re-pinning by
+    hand."""
     df = spark.read.parquet(
         os.path.join(data_dir, "lineitem.parquet")
     ).select("l_quantity", "l_extendedprice")
@@ -206,7 +207,7 @@ _SHIFT_COLS: dict[str, list[str]] = {
     "embeddings": ["vec_id"],
 }
 
-# the round-2 sweep (ratio 0.97 in BENCH_r02) — kept as a labeled
+# the round-2 sweep (ratio 0.97 in round 2, HISTORY.md) — kept as a labeled
 # subset so the headline ratio stays trend-comparable as the sweep grows
 _CORE11 = [
     "b5_groupby_count", "q1_pricing_summary", "q3_top_revenue_orders",
@@ -454,7 +455,7 @@ def main() -> None:
     timings["bi5_write_480k"] = round(wt_best, 3)
     shutil.rmtree("/tmp/spark_bi5_bench_wtree", ignore_errors=True)
 
-    # Drift countermeasure (r9 finding, SCALE_NOTES "box shuffle-I/O
+    # Drift countermeasure (r9 finding, HISTORY.md "Box shuffle-I/O
     # drift"): identical plans degrade monotonically within one JVM —
     # blockmgr shuffle dirs accumulate ~1 GB/run and later legs pay
     # the dirty-page backlog — and a fresh JVM resets the clock.  Each
@@ -482,10 +483,10 @@ def main() -> None:
         floor = min(floor, time.perf_counter() - t0)
     scaled_x100["spark_job_floor"] = round(floor, 3)
 
-    # r14 (VERDICT item 6): sentinel-normalized seconds so the PERF
+    # r14: sentinel-normalized seconds so the PERF
     # comparison can separate box drift from plan changes from the
     # artifact alone.  REF is the healthy-box sentinel median across
-    # rounds (BENCH_r12/r13 windows: 0.157/0.100/0.068/0.050 →
+    # rounds (r12/r13 windows: 0.157/0.100/0.068/0.050 →
     # ~0.1 s); factor = this window's sentinel mean / REF, and
     # value_norm = value / factor.  Normalization assumes query time
     # scales with the storage layer the sentinel measures — exact for

@@ -46,47 +46,10 @@ def driver_exposed() -> dict[str, int]:
 
 
 def main() -> None:
-    # Import the raw (pre-rotation) catalog modules so ordering is the
-    # stable module-definition order, not the current window order.
-    from spark_bi5_datasource_spark.plans.analytics_ops import ANALYTICS_OPS
-    from spark_bi5_datasource_spark.plans.curation_ops import CURATION_OPS
-    from spark_bi5_datasource_spark.plans.llm_ops import LLM_OPS
-    from spark_bi5_datasource_spark.plans.relational import RELATIONAL
-    from spark_bi5_datasource_spark.plans.round4_ops import ROUND4_OPS
-    from spark_bi5_datasource_spark.plans.round5_ops import ROUND5_OPS
-    from spark_bi5_datasource_spark.plans.round6_ops import ROUND6_OPS
-    from spark_bi5_datasource_spark.plans.round7_ops import ROUND7_OPS
-    from spark_bi5_datasource_spark.plans.round8_ops import ROUND8_OPS
-    from spark_bi5_datasource_spark.plans.round9_ops import ROUND9_OPS
-    from spark_bi5_datasource_spark.plans.round10_ops import ROUND10_OPS
-    from spark_bi5_datasource_spark.plans.round11_ops import ROUND11_OPS
-    from spark_bi5_datasource_spark.plans.round12_ops import ROUND12_OPS
-    from spark_bi5_datasource_spark.plans.round13_ops import ROUND13_OPS
-    from spark_bi5_datasource_spark.plans.round14_ops import ROUND14_OPS
-    from spark_bi5_datasource_spark.plans.round15_ops import ROUND15_OPS
-    from spark_bi5_datasource_spark.plans.round16_ops import ROUND16_OPS
-    from spark_bi5_datasource_spark.plans.tpch_pack import TPCH_PACK
+    # The registry, not plans.CATALOG: ordering is the stable
+    # registration order, not the current window order.
+    from spark_bi5_datasource_spark.plans.registry import REGISTRY as catalog
 
-    catalog: dict[str, tuple] = {
-        **RELATIONAL,
-        **LLM_OPS,
-        **CURATION_OPS,
-        **ANALYTICS_OPS,
-        **ROUND4_OPS,
-        **TPCH_PACK,
-        **ROUND5_OPS,
-        **ROUND6_OPS,
-        **ROUND7_OPS,
-        **ROUND8_OPS,
-        **ROUND9_OPS,
-        **ROUND10_OPS,
-        **ROUND11_OPS,
-        **ROUND12_OPS,
-        **ROUND13_OPS,
-        **ROUND14_OPS,
-        **ROUND15_OPS,
-        **ROUND16_OPS,
-    }
     oracle_backed = [n for n, (_f, sql, _b) in catalog.items() if sql is not None]
     exposed = driver_exposed()
     never = [n for n in oracle_backed if n not in exposed]

@@ -319,7 +319,7 @@ def term_count_partials(
     ``utf8_lower`` + RE2 ``split_pattern_regex('[^a-z]+')`` + drop
     empties — semantics identical to the JVM
     ``split(lower(text), '[^a-z]+')`` idiom, verified
-    count-for-count in scripts/exp_tokenize_kernel.py).  The caller
+    count-for-count).  The caller
     reduces partials with a groupBy-sum to exact corpus counts, so
     the oracle contract is untouched.
 
@@ -327,7 +327,7 @@ def term_count_partials(
     fixture-shaped corpus the JVM split+explode+partial-agg (although
     fused in one codegen stage) is dominated by per-token object
     churn — measured x100 13.1 s vs 6.0 s and x1000 16.2 s vs 9.1 s
-    for the identical exact counts (exp_tokenize_kernel.py).  The
+    for the identical exact counts.  The
     kernel emits AT MOST |batch vocab| x |batch groups| rows per
     batch, so the downstream shuffle carries partials, not tokens.
 
@@ -450,8 +450,8 @@ def repetition_counts_arrow(
     Why a Python boundary here, against the package's stay-JVM-side
     default: the exact JVM formulation needs per-row higher-order
     folds over SORTED gram arrays, and Catalyst evaluates lambda
-    functions interpreted — measured at x10 (50k docs, 32 cores,
-    scripts/exp_repetition_pieces.py): string-sort folds 4.35 s,
+    functions interpreted — measured at x10 (50k docs, 32 cores):
+    string-sort folds 4.35 s,
     struct-sort 4.75 s, comparator-lambda index sort 1.99 s for the
     bigram piece alone, xxhash64-sorted folds 3.28 s (and those trade
     away provable exactness).  This kernel — Arrow ``utf8_lower`` +

@@ -578,7 +578,7 @@ def minhash_dedup(
     and every round's anti-join.  Requires ``id_col`` to identify
     rows uniquely (it is the dedup key's tie-break; every corpus and
     fixture satisfies it).  sf0.1: 1.07 → 0.98 s same-window,
-    survivor set identical (scripts/exp_r13_exact.py).
+    survivor set identical.
     """
     narrow = df.select(id_col, text_col)
     out = (
@@ -622,7 +622,7 @@ def _minhash_dedup_once(
     candidate frame by two id joins (planner-chosen build side:
     broadcast at bench scale, shuffle at corpus scale via AQE — 2×
     text exchanged worst-case vs bands×).  sf0.1: 1.32 → 1.29 s,
-    survivor set identical (scripts/exp_r13_unfolds.py).
+    survivor set identical.
 
     Candidates are deduped on (id_a, id_b) BEFORE verification: true
     near-dups collide in most of the 8 bands (~7× duplication
@@ -802,10 +802,10 @@ def reuse_gate(df: DataFrame, col: str) -> DataFrame:
     ~16 bytes/row, a trivially cheap shuffle — gives every branch the
     SAME exchange to reuse, so the kernel runs once.  Measured x100
     (500K docs, dedup_media_phash): 21.5 s → 9.4 s, landing at
-    DuckDB parity (9.7 s); the kernel-only floor is 5.7 s
-    (scripts/exp_phash_floor.py).  At cluster scale this is the
-    standard materialize-narrow-before-fanout pattern (persist would
-    also work but pins executor memory; the exchange spills)."""
+    DuckDB parity (9.7 s); the kernel-only floor is 5.7 s.  At cluster
+    scale this is the standard materialize-narrow-before-fanout pattern
+    (persist would also work but pins executor memory; the exchange
+    spills)."""
     return df.repartition(F.col(col))
 
 

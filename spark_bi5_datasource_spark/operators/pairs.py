@@ -30,8 +30,8 @@ __all__ = [
 #: (``maybe_prefilter_min2``).  256 MiB ≈ the x10 fixture tier: below
 #: it the pre-filter's two extra stages (~0.4 s measured at sf0.1)
 #: outweigh the shuffle it saves; above it the pair exchange dominates
-#: and the filter pays (x100: 58.5/26.5 → 35.7/20.7 s interleaved,
-#: scripts/exp_r14_basket_prefilter.py).  Set to 0 to force it on
+#: and the filter pays (x100: 58.5/26.5 → 35.7/20.7 s interleaved).
+#: Set to 0 to force it on
 #: (tests), or a huge value to force it off.
 PAIR_PREFILTER_CONF = "spark.bi5.pairPrefilterBytes"
 PAIR_PREFILTER_DEFAULT = 256 * 1024 * 1024

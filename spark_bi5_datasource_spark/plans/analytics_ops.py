@@ -17,18 +17,8 @@ from pyspark.sql import functions as F
 
 from ..functions.text import repetition_counts_arrow
 from .fastmoney import spark_fast_sql
+from .registry import query as _q
 from .tables import fanout, t
-
-ANALYTICS_OPS: dict[str, tuple] = {}
-
-
-def _q(name: str, sql: str | None, bench: bool = False):
-    def wrap(fn):
-        ANALYTICS_OPS[name] = (fn, sql, bench)
-        return fn
-
-    return wrap
-
 
 # one tokenization, bound as a column so every downstream branch
 # (counts, gram generators) reads the materialized array — the same
@@ -80,8 +70,8 @@ def text_repetition_stats(spark: SparkSession, sf: str) -> DataFrame:
     (boilerplate detector) and the share of trigram occurrences that
     are repeats (template/spam detector).
 
-    Three generations of this plan, all measured at x10
-    (scripts/exp_repetition_pieces.py): gram-explode + doc-keyed hash
+    Three generations of this plan, all measured at x10:
+    gram-explode + doc-keyed hash
     agg (24 s — the shuffle was 8x the answer), per-row sorted-array
     run-length folds in Catalyst (4.35 s — exact, zero-shuffle, but
     higher-order lambdas evaluate interpreted, and no JVM variant

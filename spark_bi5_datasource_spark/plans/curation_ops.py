@@ -23,18 +23,8 @@ from ..operators.fuzzy_join import edit_distance_join
 from ..operators.knn import knn_graph
 from ..operators.pagerank import pagerank
 from .llm_ops import _DOT_D
+from .registry import query as _q
 from .tables import fanout, t
-
-CURATION_OPS: dict[str, tuple] = {}
-
-
-def _q(name: str, sql: str | None, bench: bool = False):
-    def wrap(fn):
-        CURATION_OPS[name] = (fn, sql, bench)
-        return fn
-
-    return wrap
-
 
 # ------------------------------------------------------- fuzzy join
 

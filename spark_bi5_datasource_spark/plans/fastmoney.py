@@ -7,7 +7,7 @@ allocates a ``java.math.BigDecimal`` per row (``Round`` falls back to
 ``BigDecimal.valueOf(x).setScale(0, HALF_UP)``), which dominates wide
 scans: on the 60 M-row x100 lineitem, ``sum(CAST(round(...)))`` costs
 0.65 s vs 0.18 s for the arithmetically identical half-adjust cast
-(scripts/exp_q8_pieces.py) — `round()` alone was ~27 % of TPC-H q8's
+— `round()` alone was ~27 % of TPC-H q8's
 wall clock.
 
 ``spark_fast_sql`` rewrites exactly that idiom in a SQL string:

@@ -30,18 +30,8 @@ from ..operators import (
     simhash_pairs,
 )
 from ..operators.dedup import exact_dedup
+from .registry import query as _q
 from .tables import fanout, t
-
-LLM_OPS: dict[str, tuple] = {}
-
-
-def _q(name: str, sql: str | None, bench: bool = False):
-    def wrap(fn):
-        LLM_OPS[name] = (fn, sql, bench)
-        return fn
-
-    return wrap
-
 
 # ------------------------------------------------------------- dedup
 
@@ -1051,7 +1041,7 @@ def _zorder_sql() -> str:
     """
 
 
-@_q("zorder_values", None, bench=True)  # SQL attached below (needs the import)
+@_q("zorder_values", _zorder_sql(), bench=True)
 def zorder_values(spark: SparkSession, sf: str) -> DataFrame:
     """Morton z-values over (user_id, value) — the multi-column
     data-skipping sort key (operators/zorder.py).  The bit-interleave
@@ -1069,9 +1059,6 @@ def zorder_values(spark: SparkSession, sf: str) -> DataFrame:
         _Z_BITS,
     )
     return ev.select("event_id", z.alias("zval"))
-
-
-LLM_OPS["zorder_values"] = (zorder_values, _zorder_sql(), True)
 
 
 @_q(
@@ -1447,7 +1434,7 @@ def events_gap_report(spark: SparkSession, sf: str) -> DataFrame:
 
 
 # (relational coverage, registered here to keep the 50-entry driver
-# window's membership frozen — RELATIONAL registers before LLM_OPS)
+# window's membership frozen — relational.py registers before llm_ops.py)
 @_q(
     "window_dist_kinds",
     """
@@ -1486,7 +1473,7 @@ def window_dist_kinds(spark: SparkSession, sf: str) -> DataFrame:
 # sketch values; approximate top-k whose recall is measured against
 # sim_cosine_topk in tests/test_operators.py) — parked at the very end
 # of the catalog; every oracle-backed query from the original 50-row
-# gate window still sits inside it (see COVERAGE.md).
+# gate window (CORRECTNESS_r01.json) still sits inside it.
 @_q("dedup_simhash", None)
 def dedup_simhash(spark: SparkSession, sf: str) -> DataFrame:
     """SimHash near-dup pairs at hamming ≤ 8 of 64 bits."""

@@ -23,18 +23,8 @@ from pyspark.sql import functions as F
 from ..operators import asof_join, top_k, top_k_per_group
 from .fastmoney import HALF_ADJUST_CENTS as _HA
 from .fastmoney import spark_fast_sql
+from .registry import query as _q
 from .tables import t, table_bytes
-
-# name -> (fn(spark, sf_dir) -> DataFrame, oracle_sql | None, in_bench)
-RELATIONAL: dict[str, tuple] = {}
-
-
-def _q(name: str, sql: str | None, bench: bool = False):
-    def wrap(fn):
-        RELATIONAL[name] = (fn, sql, bench)
-        return fn
-
-    return wrap
 
 
 def _dsum(col: str, scale: int = 2, alias: str | None = None) -> F.Column:

@@ -40,19 +40,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .fastmoney import HALF_ADJUST_CENTS as _HA
+from .registry import query as _q
 from .round4_ops import _copurchase_pairs, _salted_wedge_join
 from .tables import t
-
-ROUND10_OPS: dict[str, tuple] = {}
-
-
-def _q(name: str, sql: str | None, bench: bool = False):
-    def wrap(fn):
-        ROUND10_OPS[name] = (fn, sql, bench)
-        return fn
-
-    return wrap
-
 
 # ------------------------------------------- stochastic oscillator
 
@@ -457,10 +447,11 @@ def events_ab_srm_check(spark: SparkSession, sf: str) -> DataFrame:
     distinct-user row (every user contributes the marker exactly
     once).  The pre-r07 formulation unioned two independent
     subtrees, each rescanning and re-distincting the 100M-event
-    table; x1000 decomposition (scripts/exp_r7_pieces.py): union
+    table; x1000 decomposition: union
     7.1 s / marker-twin-into-distinct 7.1 s / persist+two-rollups
     9.2 s / this per-user-set chain 5.6 s, against a measured
-    irreducible 100M→40M-pair dedup stream (SCALE_NOTES.md).  All
+    irreducible 100M→40M-pair dedup stream (HISTORY.md "SRM distinct
+    floor").  All
     integer arithmetic, no float χ² crosses the engine boundary."""
     per_user = (
         t(spark, sf, "events")
@@ -547,7 +538,7 @@ def graph_neighbor_jaccard(spark: SparkSession, sf: str) -> DataFrame:
     unfold JVM-side from the sorted array — no self-join, no
     post-join distinct; clean x1000 head-to-head (234 s vs 250 s for
     the self-join + distinct shape) and the DuckDB disk-death story
-    live in SCALE_NOTES.md "graph pair-counting"."""
+    live in HISTORY.md "Graph pair-counting"."""
     from ..operators.pairs import maybe_prefilter_min2
 
     li = t(spark, sf, "lineitem")

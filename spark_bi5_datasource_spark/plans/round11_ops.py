@@ -26,18 +26,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .fastmoney import HALF_ADJUST_CENTS as _HA
+from .registry import query as _q
 from .tables import t
-
-ROUND11_OPS: dict[str, tuple] = {}
-
-
-def _q(name: str, sql: str | None, bench: bool = False):
-    def wrap(fn):
-        ROUND11_OPS[name] = (fn, sql, bench)
-        return fn
-
-    return wrap
-
 
 # ------------------------------------------- SemDeDup semantic dedup
 
@@ -139,7 +129,7 @@ def text_contamination_matrix(spark: SparkSession, sf: str) -> DataFrame:
     (source → split) assignment is trusted.  Zero-overlap pairs are
     absent by construction (the report is the overlap set).
 
-    Scale shape (r10 bitmask rollup, scripts/exp_contam_variants.py —
+    Scale shape (r10 bitmask rollup —
     48.3 → 24.7 s at x100, landing ahead of the same-window DuckDB
     leg): the ONLY corpus-sized work is one integer aggregation —
     each gram folds to a ≤64-bit SOURCE BITMASK via bit_or(1 << idx)
@@ -575,7 +565,7 @@ def basket_association_lift(spark: SparkSession, sf: str) -> DataFrame:
     # HAVING discards post-exchange; above the size gate a hash-count
     # + broadcast-semi pre-filter drops them BEFORE the exchange
     # (guide §8 / §2.3; x100 interleaved A/B 58.5/26.5 → 35.7/20.7 s,
-    # result-equal — exp_r14_basket_prefilter.py).  The exact
+    # result-equal).  The exact
     # ``n_uv >= 2`` below stays: it is what makes the filter lossless.
     pairs = (
         maybe_prefilter_min2(unfold_sorted_pairs(baskets, "parts"), li)
@@ -1953,7 +1943,7 @@ def text_url_email_stats(spark: SparkSession, sf: str) -> DataFrame:
 
     Scale shape: pure per-row regexp counts over one scan feeding a
     |sources|-row rollup.  Measured floor, extended end-to-end in r9
-    (scripts/exp_urlmail_floor.py, x1000 = 5M docs / 1.5 GB text):
+    (x1000 = 5M docs / 1.5 GB text):
     full query 1.17 s = string-decode floor 0.57 s + the two instr()
     gate scans 0.60 s + 0.00 s for everything else — the fixture
     contains zero 'http'/'@' hits, so the regex branches never
@@ -1962,8 +1952,7 @@ def text_url_email_stats(spark: SparkSession, sf: str) -> DataFrame:
     literal-prefix primitive vs the JVM's byte-loop indexOf — engine
     string primitives, not plan shape (alternatives measured and
     rejected: ungated regex 11.9 s, exact instr/HOF rewrite 3.1 s,
-    Arrow-RE2 mapInArrow kernel 1.53 s;
-    scripts/exp_urlmail_strops.py)."""
+    Arrow-RE2 mapInArrow kernel 1.53 s)."""
     f = (
         t(spark, sf, "documents")
         .where("text IS NOT NULL")
@@ -2164,8 +2153,7 @@ def dedup_winnow_pairs(spark: SparkSession, sf: str) -> DataFrame:
 
     docs = t(spark, sf, "documents")
     fps = winnow_fingerprints(docs, "doc_id", "text")
-    # r14 negative result, kept for the record
-    # (scripts/exp_r14_q21_winnow_ab.py): a two-pass shape — one
+    # r14 negative result, kept for the record: a two-pass shape — one
     # explicit fp exchange shared by a per-fp count (the df band
     # BEFORE any set is built) and the surviving collect_set — was
     # installed and REVERTED: x100 interleaved A/B 4.5/12.9 s (this
@@ -2709,7 +2697,7 @@ def dq_duplicate_event_audit(spark: SparkSession, sf: str) -> DataFrame:
     ALONE measures 4.5 s, and every alternative measured worse —
     full-tuple two-pass 5.7 s (r8), partial+final hash pass 5.9 s,
     sortWithinPartitions + vectorized Arrow dup-scan 4.2 s
-    (scripts/exp_dupaudit_twopass.py; SCALE_NOTES)."""
+    (HISTORY.md "Duplicate-event audit")."""
     ev = t(spark, sf, "events").select(
         "event_type", "user_id", "ts", "value"
     )

@@ -30,18 +30,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .fastmoney import HALF_ADJUST_CENTS as _HA
+from .registry import query as _q
 from .tables import fanout, t
-
-ROUND12_OPS: dict[str, tuple] = {}
-
-
-def _q(name: str, sql: str | None, bench: bool = False):
-    def wrap(fn):
-        ROUND12_OPS[name] = (fn, sql, bench)
-        return fn
-
-    return wrap
-
 
 # ------------------------------------- incremental corpus-delta dedup
 
@@ -108,7 +98,7 @@ def dedup_incremental_delta(spark: SparkSession, sf: str) -> DataFrame:
     fixture regeneration rebuilds it), and the timed plan probes it
     with |Δ|-side signatures only — the shape every recurring crawl
     actually pays, measured 1.69× vs the inline rebuild's 5.56× at
-    x10 (r10 cost anatomy, scripts/exp_delta_variants.py: the corpus-
+    x10 (r10 cost anatomy: the corpus-
     side signature kernel was 6.3 s of the 12.4 s total, and
     production pays it once per crawl, not once per query).  The
     build cost is NOT hidden from the bench suite: the
@@ -692,11 +682,12 @@ def orders_backlog_aging(spark: SparkSession, sf: str) -> DataFrame:
     fully-shipped history — 27% of rows survive on the fixture) and a
     left-anti against the key-only projection for line-less orders.
     Replacing the r8 max-agg plan, measured x1000
-    (scripts/exp_backlog_variants.py, min-of-2 warm): agg shape
+    (min-of-2 warm): agg shape
     84.1 s (its 150M-group date-max aggregate alone is 121 s cold)
     → shj hint 52.1 → boolean-indicator agg 46.6 → **EXISTS split
     32.0 s** — 2.6× over shipped while running LAST in the sweep
-    (the within-session degradation documented in SCALE_NOTES biases
+    (the within-session degradation in HISTORY.md "Box shuffle-I/O
+    drift" biases
     against it).  Both legs key on the orderkey — exchange-free under
     the bucketed layout (tables.BUCKET_SPECS) like
     dq_order_reconciliation; then a ≤13-row rollup with a 1-row total
@@ -1270,7 +1261,7 @@ def dq_doc_embedding_coverage(spark: SparkSession, sf: str) -> DataFrame:
     aggregate over the ≤|sources|+1 post-agg rows.  The r8 shape ran
     two separate joins (per-source left + orphan left_anti) — two
     scans of each table and two id exchanges; measured x1000
-    (scripts/exp_coverage_variants.py): 4.97 → 3.67 s, against a
+    4.97 → 3.67 s, against a
     0.36 s two-table scan floor — the residual is the 5M×5M id
     exchange itself, which DuckDB's single-process in-memory hash
     join does in 0.11 s (the shuffle-constant class; at broadcast-

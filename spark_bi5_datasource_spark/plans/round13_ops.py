@@ -25,18 +25,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .registry import query as _q
 from .tables import t
-
-ROUND13_OPS: dict[str, tuple] = {}
-
-
-def _q(name: str, sql: str | None, bench: bool = False):
-    def wrap(fn):
-        ROUND13_OPS[name] = (fn, sql, bench)
-        return fn
-
-    return wrap
-
 
 # --------------------------------- persisted band-index maintenance
 
@@ -123,8 +113,8 @@ def dedup_band_index_merge(spark: SparkSession, sf: str) -> DataFrame:
     — boilerplate attractors whose fan-out is quadratic while their
     members collide in other bands anyway — so the entry stays
     bounded on duplicate-saturated corpora (the x1000 stride-replica
-    tier degenerated the no-cap config to ~5e8 verify pairs,
-    BENCH_X1000_R14).  The cap is NON-BINDING at oracle scales
+    tier degenerated the no-cap config to ~5e8 verify pairs;
+    HISTORY.md "Band-index cap").  The cap is NON-BINDING at oracle scales
     (measured max bucket: 3 at sf0.01, 5 at sf0.1 — r10), so exact
     SQL equality still gates every driver run; no-cap exactness is
     separately pinned by the band_index pytest suite, and

@@ -19,19 +19,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .registry import query as _q
 from .round13_ops import _warehouse
 from .tables import t
-
-ROUND14_OPS: dict[str, tuple] = {}
-
-
-def _q(name: str, sql: str | None, bench: bool = False):
-    def wrap(fn):
-        ROUND14_OPS[name] = (fn, sql, bench)
-        return fn
-
-    return wrap
-
 
 # ------------------------------------------- video-fingerprint dedup
 

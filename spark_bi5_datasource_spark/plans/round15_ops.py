@@ -18,18 +18,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .llm_ops import _QUALITY_SQL
+from .registry import query as _q
 from .tables import t
-
-ROUND15_OPS: dict[str, tuple] = {}
-
-
-def _q(name: str, sql: str | None, bench: bool = False):
-    def wrap(fn):
-        ROUND15_OPS[name] = (fn, sql, bench)
-        return fn
-
-    return wrap
-
 
 # ------------------------------------- end-to-end corpus snapshot
 
@@ -165,7 +155,7 @@ def corpus_build_snapshot(spark: SparkSession, sf: str) -> DataFrame:
     # survivor anti-join (and d3 below likewise feeds decontamination
     # and the final anti-join) — ungated, each extra consumer re-runs
     # the whole upstream chain (measured sf0.1: 6.6 → 5.2 s with the
-    # two gates, scripts log in SCALE_NOTES r10)
+    # two gates, r10)
     wt = Window.partitionBy("text")
     d1 = reuse_gate(
         d0.withColumn("__min_id", F.min("doc_id").over(wt))

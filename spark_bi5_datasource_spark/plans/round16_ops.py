@@ -19,17 +19,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .registry import query as _q
 from .round15_ops import _CBS_SQL, corpus_inputs, corpus_tail_stages
-
-ROUND16_OPS: dict[str, tuple] = {}
-
-
-def _q(name: str, sql: str | None, bench: bool = False):
-    def wrap(fn):
-        ROUND16_OPS[name] = (fn, sql, bench)
-        return fn
-
-    return wrap
 
 
 @_q("corpus_build_production", _CBS_SQL)

@@ -16,20 +16,11 @@ from pyspark.sql import functions as F
 
 from .fastmoney import HALF_ADJUST_CENTS as _HA
 from .fastmoney import spark_fast_sql
+from .registry import query as _q
 from .tables import t
-
-ROUND4_OPS: dict[str, tuple] = {}
 
 # one tokenization, same regex as the text/analytics tiers
 _TKS_R4 = "filter(split(lower(text), '[^a-z]+'), x -> x <> '')"
-
-
-def _q(name: str, sql: str | None, bench: bool = False):
-    def wrap(fn):
-        ROUND4_OPS[name] = (fn, sql, bench)
-        return fn
-
-    return wrap
 
 
 # ------------------------------------------------- TPC-H q13 shape
@@ -488,13 +479,12 @@ def _copurchase_pairs(lineitem) -> DataFrame:
     higher-order functions.  No self-join, no post-join distinct: the
     bounded ~C(items-per-order, 2) fan-out exists only between the
     generator and the next aggregation's map-side partials.  Clean
-    head-to-head at x1000 (600M lineitem → 1.2B pairs,
-    scripts/exp_pair_strategies.py): basket 234 s vs self-join +
-    post-join distinct 250 s, with the smallest shuffle footprint of
-    the three strategies tried (the pre-join-distinct variant
+    head-to-head at x1000 (600M lineitem → 1.2B pairs): basket 234 s
+    vs self-join + post-join distinct 250 s, with the smallest shuffle
+    footprint of the three strategies tried (the pre-join-distinct variant
     exhausted shuffle disk first under concurrent load) — the pair
     stream itself is the remaining cost, and it partitions linearly
-    across executors (SCALE_NOTES.md "graph pair-counting")."""
+    across executors (HISTORY.md "Graph pair-counting")."""
     baskets = (
         lineitem.select("l_orderkey", "l_partkey")
         .groupBy("l_orderkey")
@@ -553,7 +543,7 @@ def _salted_wedge_join(x, y, key: str, salt_on: str, hub_cap: int = 4096,
     has few nodes above any sane cap) and ×salts replication of hub
     rows only; the deg² work itself is the query's answer and cannot
     shrink, only spread.  Measured on a planted power-law graph in
-    SCALE_NOTES.md ("wedge skew guard")."""
+    HISTORY.md ("Wedge skew guard")."""
     hubs = (
         y.groupBy(key)
         .agg(F.count("*").alias("__kc"))

@@ -18,18 +18,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .fastmoney import HALF_ADJUST_CENTS as _HA
+from .registry import query as _q
 from .tables import t
-
-ROUND5_OPS: dict[str, tuple] = {}
-
-
-def _q(name: str, sql: str | None, bench: bool = False):
-    def wrap(fn):
-        ROUND5_OPS[name] = (fn, sql, bench)
-        return fn
-
-    return wrap
-
 
 # ---------------------------------------------------- deterministic mode
 

@@ -26,18 +26,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .fastmoney import HALF_ADJUST_CENTS as _HA
+from .registry import query as _q
 from .tables import t
-
-ROUND6_OPS: dict[str, tuple] = {}
-
-
-def _q(name: str, sql: str | None, bench: bool = False):
-    def wrap(fn):
-        ROUND6_OPS[name] = (fn, sql, bench)
-        return fn
-
-    return wrap
-
 
 _TKS = "filter(split(lower(text), '[^a-z]+'), x -> x <> '')"
 _TKS_D = "list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')"

@@ -44,18 +44,8 @@ from pyspark.sql import functions as F
 
 from ..operators import asof_join
 from .fastmoney import HALF_ADJUST_CENTS as _HA
+from .registry import query as _q
 from .tables import t
-
-ROUND7_OPS: dict[str, tuple] = {}
-
-
-def _q(name: str, sql: str | None, bench: bool = False):
-    def wrap(fn):
-        ROUND7_OPS[name] = (fn, sql, bench)
-        return fn
-
-    return wrap
-
 
 _TKS = "filter(split(lower(text), '[^a-z]+'), x -> x <> '')"
 _TKS_D = "list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')"

@@ -51,18 +51,8 @@ from pyspark.sql import functions as F
 from ..functions.text import term_count_partials
 from ..operators import asof_join
 from .fastmoney import HALF_ADJUST_CENTS as _HA
+from .registry import query as _q
 from .tables import t
-
-ROUND8_OPS: dict[str, tuple] = {}
-
-
-def _q(name: str, sql: str | None, bench: bool = False):
-    def wrap(fn):
-        ROUND8_OPS[name] = (fn, sql, bench)
-        return fn
-
-    return wrap
-
 
 _TKS = "filter(split(lower(text), '[^a-z]+'), x -> x <> '')"
 _TKS_D = "list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')"
@@ -351,7 +341,7 @@ def tok_zipf_profile(spark: SparkSession, sf: str) -> DataFrame:
 
     Scale shape: the Arrow partial-count kernel
     (functions.text.term_count_partials — measured ~1.8x the fused
-    JVM split+explode at x1000, exp_tokenize_kernel.py) emits ≤|batch
+    JVM split+explode at x1000) emits ≤|batch
     vocab| partial rows per batch, reduced by one groupBy-sum to the
     same exact counts; the ranking window runs over the
     POST-AGGREGATION vocabulary (bounded by |distinct terms|, not
@@ -455,7 +445,7 @@ def text_source_diversity(spark: SparkSession, sf: str) -> DataFrame:
     (functions.text.term_count_partials) tokenizes and pre-counts per
     batch, so the (source, term) shuffle carries ≤|vocab|·|sources|
     partials instead of ~10⁸ token rows (measured 16.2→9.1 s at
-    x1000, exp_tokenize_kernel.py); then one |sources|-row reduction
+    x1000); then one |sources|-row reduction
     — Σ cnt·(cnt−1) stays in BIGINT (bounded by n_tokens²/vocab per
     source: ~4·10¹⁴ at x1000), the n·(n−1) denominator rides a
     double so it never overflows."""
@@ -588,8 +578,7 @@ def events_wau_sliding(spark: SparkSession, sf: str) -> DataFrame:
     totals.  Replaces the explode-7-offsets contribution shape
     (700M rows through a per-day distinct at x1000) with a keyed
     window over the deduped (user, day) pairs: measured 43.0 s →
-    8.7 s at x1000 (scripts/exp_wau_sweep.py, exact-equality
-    checked).
+    8.7 s at x1000 (exact-equality checked).
 
     Scale shape: one distinct over (day, user) (map-side
     combinable), one user_id-keyed window pass (the lag and the

@@ -166,8 +166,7 @@ def fanout(df: DataFrame) -> DataFrame:
     at scale — the gate is a no-op and nothing is ever shuffled.
 
     Measured (x10, 32 cores): text_repetition_stats 1.81→0.52 s,
-    and the same shape for the cosine/GEMM/vocab/quantize ops
-    (scripts/exp_repetition_pieces.py and BENCH_DETAIL deltas).
+    and the same shape for the cosine/GEMM/vocab/quantize ops.
     """
     sc = df.sparkSession.sparkContext
     cores = sc.defaultParallelism

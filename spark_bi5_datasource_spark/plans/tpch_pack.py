@@ -39,9 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from .fastmoney import spark_fast_sql
+from .registry import query
 from .tables import t
-
-TPCH_PACK: dict[str, tuple] = {}
 
 
 def _q(
@@ -71,8 +70,7 @@ def _q(
 
         fn.__name__ = name
         fn.__doc__ = doc
-        TPCH_PACK[name] = (fn, sql.format(p=""), bench)
-        return fn
+        return query(name, sql.format(p=""), bench)(fn)
 
     return wrap
 
@@ -174,14 +172,16 @@ _Q8_SQL = f"""
     ORDER BY o_year
 """
 
+
+@query("sql_tpch_q8", _Q8_SQL.format(p=""), bench=True)
 def sql_tpch_q8(spark: SparkSession, sf: str) -> DataFrame:
     """TPC-H q8 (national market share) — hand-shaped join tree.
 
     The literal SQL form passes the 60 M-row fact stream through
     SEVEN joins with the selective ASIA filter applied dead last
     (region is the outermost dim), so the stream stays full-width
-    through customer and nation.  Measured piecewise at x100
-    (scripts/exp_q8_pieces.py): 1.76 s, of which the post-orders dim
+    through customer and nation.  Measured piecewise at x100:
+    1.76 s, of which the post-orders dim
     chain alone was 0.72 s.  This shape pre-reduces the dims BEFORE
     the stream is touched — supplier⋈nation composes the share
     dimension into one broadcast, customer⋈nation⋈region(ASIA)
@@ -274,9 +274,6 @@ def sql_tpch_q8(spark: SparkSession, sf: str) -> DataFrame:
         )
         .orderBy("o_year")
     )
-
-
-TPCH_PACK["sql_tpch_q8"] = (sql_tpch_q8, _Q8_SQL.format(p=""), True)
 
 
 # ------------------------------------------------- q9: product-type profit
@@ -567,7 +564,7 @@ _Q21_SQL = """
 # INNER join drops null-suppkey l1 rows anyway, and count(DISTINCT
 # l_suppkey) ignores nulls), so the second copy plans as a
 # ReusedExchange — one fewer lineitem-scale exchange + scan
-# (guide §2.4; plans/r14/sql_tpch_q21_{before,after}.txt).
+# (guide §2.4; HISTORY.md "q21 ReusedExchange").
 _Q21_SPARK_SQL = """
     WITH late AS (
       SELECT l.l_orderkey, l.l_suppkey

@@ -212,7 +212,7 @@ def write_bi5_tree(
     exactly one task, then invokes the ``bi5`` writer.
 
     The keyed repartition is left AQE-coalescible ON PURPOSE (r14
-    decomposition, recorded in OPTIMIZATION_r14.md): AQE fuses the
+    decomposition, recorded in HISTORY.md): AQE fuses the
     480k-row bench tree's 24 hour groups into 2 write tasks, which
     LOOKS like a §2.5 fan-out collapse — but pinning the partition
     count to the session's 32 was measured WORSE (steady-state write

@@ -457,7 +457,7 @@ def compact_buckets_selective(
     fragmented bucket, in parallel across the cluster.  (The first cut
     ran one coalesce(1) job PER bucket; at 32 fragmented buckets the
     sequential job overhead made it 6× slower than the full rewrite —
-    measured, see SCALE_NOTES r12.)
+    measured, see HISTORY.md.)
 
     Crash safety is manifest-based (the standard lake-format pattern,
     scaled down): per bucket, a ``_compact_manifest_<run>.json``

@@ -117,3 +117,26 @@ class TestBandIndexMegabucketGuard:
         )
         assert exact.count() == 0  # exact probe drops the duplicate
         assert capped.count() == 1  # every bucket skipped: dup survives
+
+
+class TestCatalogRegistryGuard:
+    """plans/registry.query registers each catalog name once: a second
+    registration raises instead of silently replacing the first entry,
+    which would let whichever module imports later win."""
+
+    def test_duplicate_name_raises(self):
+        from spark_bi5_datasource_spark import plans
+        from spark_bi5_datasource_spark.plans.registry import REGISTRY, query
+
+        first = REGISTRY["q1_pricing_summary"]
+        with pytest.raises(ValueError, match="q1_pricing_summary"):
+            query("q1_pricing_summary", None)(lambda spark, sf: None)
+        assert REGISTRY["q1_pricing_summary"] is first
+        assert plans.CATALOG["q1_pricing_summary"] is first
+
+    def test_catalog_is_the_registry_reordered(self):
+        from spark_bi5_datasource_spark import plans
+        from spark_bi5_datasource_spark.plans.registry import REGISTRY
+
+        assert plans.CATALOG == REGISTRY
+        assert list(plans.CATALOG)[:50] == plans.DRIVER_WINDOW

@@ -342,7 +342,7 @@ def test_round5_plans(spark):
 
     # repetition stats: the Arrow kernel is the second intended Arrow
     # boundary (after int8 quantize) — measured 8.5x over the exact
-    # JVM fold at x10 (scripts/exp_repetition_pieces.py).  Map-side
+    # JVM fold at x10.  Map-side
     # only: no gram shuffle, no aggregation exchange; the only
     # Exchange allowed is the small-scan round-robin fan-out gate
     # (fires at fixture scale where the whole table is one split).
@@ -586,7 +586,7 @@ def test_iterative_ops_scan_multiplicity_gate(spark, name):
         f" (pinned ≤ {_ITERATIVE_SCAN_BOUNDS[name]}) — an iterative"
         " lineage-truncation discipline (persist / localCheckpoint /"
         " reuse_gate) has regressed; see operators/pagerank.py and"
-        " SCALE_NOTES '470-scan' history before raising the bound"
+        " HISTORY.md's '470-scan pagerank' entry before raising the bound"
     )
 
 

@@ -443,7 +443,7 @@ class TestMultiFileStaging:
     def test_stray_selcompact_catalog_entry_dropped(
         self, spark, tmp_path
     ):
-        """r13 (VERDICT #5): a crash between saveAsTable and DROP used
+        """r13: a crash between saveAsTable and DROP used
         to leak a `<table>_selcompact_<run>` catalog entry forever;
         recovery at the next maintenance entry drops it."""
         from spark_bi5_datasource_spark.sources.layout import (
