@@ -8,14 +8,12 @@ from .bi5_codec import (
     parse_bi5_path,
 )
 from .bi5_datasource import BI5_SCHEMA, Bi5DataSource
-from .bi5_helpers import load_bi5
 
 __all__ = [
     "BI5_PATH_RE",
     "BI5_SCHEMA",
     "Bi5DataSource",
     "Bi5FileMeta",
-    "load_bi5",
     "decode_bi5_bytes",
     "decode_bi5_file",
     "hour_epoch_micros",

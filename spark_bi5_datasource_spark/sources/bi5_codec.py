@@ -201,12 +201,14 @@ def ticks_record_batch(cols: dict[str, np.ndarray]):
 def iter_bi5_files(root: str) -> Iterator[str]:
     """Recursively list ``.bi5`` files (case-insensitive suffix), following
     symlinks — DS24:103-109.  A plain-file root yields itself if it has
-    the suffix."""
+    the suffix.  Directories are walked in sorted order, so the listing
+    is deterministic."""
     if os.path.isfile(root):
         if root.lower().endswith(".bi5"):
             yield root
         return
-    for dirpath, _dirnames, filenames in os.walk(root, followlinks=True):
+    for dirpath, dirnames, filenames in os.walk(root, followlinks=True):
+        dirnames.sort()
         for name in sorted(filenames):
             if name.lower().endswith(".bi5"):
                 yield os.path.join(dirpath, name)

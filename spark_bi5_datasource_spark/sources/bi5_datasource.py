@@ -7,10 +7,13 @@ salvania/BI5DataSource.scala, "DS24") Spark-first:
   with the exact error strings (DS24:34-47, asserted by the reference
   tests T:164-214), month-0 path convention, silent dirty-file skip;
 * scale upgrades over the reference:
-  - default **one partition per .bi5 file** (reference: one per
-    immediate subdirectory, DS24:70-79, which is skew-prone); the
-    ``partitioning=subdir`` option restores reference semantics for
-    exact test parity including ``df.rdd.getNumPartitions`` (T:218-228);
+  - **one scan planner**: the kept files are grouped by their first
+    path component under the load path — the reference's one partition
+    per immediate entry (DS24:68-79), so ``df.rdd.getNumPartitions``
+    matches its tests (T:218-228) — and each group is cut, in listing
+    order, into chunks under Spark's file-scan byte budget
+    (``maxPartitionBytes`` 128 MiB, ``openCostInBytes`` 4 MiB per file),
+    so a large subtree is not one skewed task;
   - **filter pushdown** via ``pushFilters`` (new in Spark 4.1): the
     path encodes ``ticker`` and the ``ts`` hour, so ticker equality/IN
     and ts range predicates prune the driver-side file list before any
@@ -73,14 +76,47 @@ BI5_SCHEMA = StructType(
 
 HOUR_US = 3_600_000_000
 
+# Spark's file-scan packing defaults (spark.sql.files.maxPartitionBytes
+# and spark.sql.files.openCostInBytes): a partition holds at most
+# MAX_PARTITION_BYTES, and each file counts as its size plus
+# OPEN_COST_BYTES, so a partition of small hour files holds 31 of them.
+MAX_PARTITION_BYTES = 128 * 1024 * 1024
+OPEN_COST_BYTES = 4 * 1024 * 1024
+
 
 @dataclass
 class Bi5Partition(InputPartition):
-    """One scan task: a list of files (file mode → length 1; subdir
-    compat mode → a subtree root to walk at read time)."""
+    """One scan task: the files it decodes, in listing order."""
 
     files: tuple[str, ...]
-    walk: bool  # True → entries are roots to walk (subdir compat mode)
+
+
+def plan_partitions(root: str, files: Iterable[str]) -> list[Bi5Partition]:
+    """Group ``files`` by their first path component under ``root`` (a
+    single-file root is one group), then cut each group, in order, into
+    chunks of at most ``MAX_PARTITION_BYTES``.  No file → one empty
+    partition, so ``count()`` on a prune that keeps nothing still runs
+    a (no-op) task like the reference's empty-walk reader."""
+    groups: dict[str, list[str]] = {}
+    for f in files:
+        top = os.path.relpath(f, root).split(os.sep, 1)[0]
+        groups.setdefault(top, []).append(f)
+    parts = []
+    for group in groups.values():
+        chunk: list[str] = []
+        used = 0
+        for f in group:
+            try:
+                cost = os.path.getsize(f) + OPEN_COST_BYTES
+            except OSError:
+                cost = OPEN_COST_BYTES  # gone since listing: read() skips it
+            if chunk and used + cost > MAX_PARTITION_BYTES:
+                parts.append(Bi5Partition(files=tuple(chunk)))
+                chunk, used = [], 0
+            chunk.append(f)
+            used += cost
+        parts.append(Bi5Partition(files=tuple(chunk)))
+    return parts or [Bi5Partition(files=())]
 
 
 def local_path(path: str) -> str:
@@ -159,10 +195,10 @@ class Bi5Scan:
             return False
         return True
 
-    def _read_files(self, files: Iterable[str]):
+    def read(self, partition: Bi5Partition):
         from .bi5_codec import ticks_record_batch
 
-        for fpath in files:
+        for fpath in partition.files:
             cols = decode_bi5_file(fpath, self.digits, self.january)
             if cols is None or len(cols["ts_us"]) == 0:
                 continue  # silent skip (A10, DS24:149-186)
@@ -176,10 +212,6 @@ def _tightest(a, b, pick):
 class Bi5Reader(Bi5Scan, DataSourceReader):
     def __init__(self, options) -> None:
         super().__init__(options)
-        partitioning = options.get("partitioning", "file")
-        if partitioning not in ("file", "subdir"):
-            raise ValueError("partitioning must be 'file' or 'subdir'")
-        self.partitioning = partitioning
         # Populated by pushFilters.
         self._pushed_tickers: set[str] | None = None
         self._pushed_ts_min_us: int | None = None  # inclusive
@@ -221,40 +253,16 @@ class Bi5Reader(Bi5Scan, DataSourceReader):
 
     # -- planning ------------------------------------------------------
     def partitions(self) -> Sequence[Bi5Partition]:
-        if self.partitioning == "subdir":
-            # Reference parity (DS24:68-79): one partition per immediate
-            # directory entry; single file → one partition.
-            if os.path.isdir(self.path):
-                entries = sorted(os.listdir(self.path))
-                parts = [
-                    Bi5Partition(files=(os.path.join(self.path, e),), walk=True)
-                    for e in entries
-                ]
-            else:
-                parts = [Bi5Partition(files=(self.path,), walk=True)]
-        else:
-            # Scale path: one partition per file, pruned by pushed filters
-            # met with the option hints.
-            tickers = _tightest(self._pushed_tickers, self.opt_tickers, set.intersection)
-            ts_min = _tightest(self._pushed_ts_min_us, self.opt_start_us, max)
-            ts_max = _tightest(self._pushed_ts_max_us, self.opt_end_us, min)
-            files = [
-                f
-                for f in iter_bi5_files(self.path)
-                if self._keep_file(f, tickers, ts_min, ts_max)
-            ]
-            parts = [Bi5Partition(files=(f,), walk=False) for f in files]
-        # Zero partitions is legal but loses schema-only queries' task
-        # metrics parity; keep an empty partition so count()==0 still
-        # runs a (no-op) task like the reference's empty-walk reader.
-        return parts or [Bi5Partition(files=(), walk=False)]
-
-    # -- execution -----------------------------------------------------
-    def read(self, partition: Bi5Partition):
-        files: Iterable[str] = partition.files
-        if partition.walk:
-            files = (f for root in files for f in iter_bi5_files(root))
-        return self._read_files(files)
+        # Prune by pushed filters met with the option hints.
+        tickers = _tightest(self._pushed_tickers, self.opt_tickers, set.intersection)
+        ts_min = _tightest(self._pushed_ts_min_us, self.opt_start_us, max)
+        ts_max = _tightest(self._pushed_ts_max_us, self.opt_end_us, min)
+        files = (
+            f
+            for f in iter_bi5_files(self.path)
+            if self._keep_file(f, tickers, ts_min, ts_max)
+        )
+        return plan_partitions(self.path, files)
 
 
 def _iso_to_us(value: str) -> int:
@@ -268,8 +276,7 @@ class Bi5DataSource(DataSource):
     """``spark.read.format("bi5")`` — Dukascopy tick files.
 
     Options: ``digits`` (required, int ≥ 0), ``january`` (0/1, default
-    0), ``partitioning`` (``file``/``subdir``), ``tickers``, ``start``,
-    ``end`` (driver-side prune hints).
+    0), ``tickers``, ``start``, ``end`` (driver-side prune hints).
     """
 
     @classmethod

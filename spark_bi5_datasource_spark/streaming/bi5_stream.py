@@ -7,9 +7,10 @@ streaming scan").  Micro-batch model:
 * offset = the set of files already processed, tracked as a sorted
   list in the offset JSON (hour files are immutable once written —
   Dukascopy trees are append-only, so set-difference is exact);
-* each micro-batch plans one partition per new file (same per-file
-  parallelism as the batch source) and shares the batch reader's
-  option validation, path pruning and decode (``Bi5Scan``);
+* each micro-batch plans its new files with the batch source's
+  planner (``plan_partitions``: grouped by top-level entry, cut under
+  Spark's byte budget) and shares the batch reader's option
+  validation, path pruning and decode (``Bi5Scan``);
 * dirty files follow the same silent-skip contract (A10);
 * the ``tickers``/``start``/``end`` prune options are honored when
   listing, so the watch window is bounded the same way as the batch
@@ -28,19 +29,13 @@ from __future__ import annotations
 
 import os
 import time
-from dataclasses import dataclass
 
-from pyspark.sql.datasource import DataSourceStreamReader, InputPartition
+from pyspark.sql.datasource import DataSourceStreamReader
 
 from ..sources.bi5_codec import iter_bi5_files
-from ..sources.bi5_datasource import Bi5Scan
+from ..sources.bi5_datasource import Bi5Scan, plan_partitions
 
 __all__ = ["Bi5StreamReader", "stream_bi5_writer"]
-
-
-@dataclass
-class Bi5StreamPartition(InputPartition):
-    files: tuple[str, ...]
 
 
 class Bi5StreamReader(Bi5Scan, DataSourceStreamReader):
@@ -66,12 +61,7 @@ class Bi5StreamReader(Bi5Scan, DataSourceStreamReader):
 
     def partitions(self, start: dict, end: dict):
         new_files = sorted(set(end["files"]) - set(start["files"]))
-        if not new_files:
-            return [Bi5StreamPartition(files=())]
-        return [Bi5StreamPartition(files=(f,)) for f in new_files]
-
-    def read(self, partition: Bi5StreamPartition):
-        return self._read_files(partition.files)
+        return plan_partitions(self.path, new_files)
 
     def commit(self, end: dict) -> None:
         pass  # offsets are self-contained; nothing to clean up

@@ -134,7 +134,6 @@ class TestSynthesizedScans:
             spark,
             os.path.join(bi5_tree, "EURUSD"),
             digits=DIGITS_EUR,
-            partitioning="subdir",
         )
         assert df.rdd.getNumPartitions() == 2  # 2019/, 2020/
         assert df.count() == 5
@@ -193,6 +192,101 @@ class TestPushdownPruning:
         assert df.count() == 2
 
 
+# ---- scan planner: top-level groups cut under Spark's byte budget ----
+
+
+def _relfiles(parts, root):
+    return [os.path.relpath(f, root) for p in parts for f in p.files]
+
+
+EUR_FILES = [
+    "EURUSD/2019/11/31/01h_ticks.bi5",
+    "EURUSD/2019/11/31/15h_ticks.bi5",
+    "EURUSD/2020/03/03/00h_ticks.bi5",
+]
+JPY_FILES = ["USDJPY/2020/12/1/00h_ticks.bi5", "USDJPY/2020/12/1/23h_ticks.bi5"]
+
+
+class TestScanPlanner:
+    @pytest.mark.parametrize(
+        "sub, expected",
+        [
+            ("EURUSD", 2),  # 2019/, 2020/ (T:223)
+            ("USDJPY", 1),  # 2020/ (T:228)
+            ("", 2),  # EURUSD/, USDJPY/
+            ("EURUSD/2019/11/31/15h_ticks.bi5", 1),  # T:218
+        ],
+    )
+    def test_default_partition_counts_match_reference(self, spark, bi5_tree, sub, expected):
+        df = read_bi5(spark, os.path.join(bi5_tree, sub), digits=DIGITS_EUR)
+        assert df.rdd.getNumPartitions() == expected
+
+    def test_tickers_option_prunes_groups(self, spark, bi5_tree):
+        df = read_bi5(spark, bi5_tree, digits=DIGITS_EUR, tickers="EURUSD")
+        assert df.rdd.getNumPartitions() == 1
+        assert df.count() == 5
+
+    @pytest.mark.parametrize(
+        "filters, options, kept",
+        [
+            ([("eq", "ticker", "USDJPY")], {}, JPY_FILES),
+            ([("in", "ticker", ("EURUSD", "GBPUSD"))], {}, EUR_FILES),
+            ([("ge", "ts", dt.datetime(2020, 1, 1))], {}, EUR_FILES[2:] + JPY_FILES),
+            (
+                [("ge", "ts", dt.datetime(2020, 1, 1)), ("lt", "ts", dt.datetime(2020, 12, 31))],
+                {},
+                EUR_FILES[2:],
+            ),
+            ([], {"tickers": "EURUSD"}, EUR_FILES),
+            ([], {"start": "2020-01-01"}, EUR_FILES[2:] + JPY_FILES),
+            ([], {"end": "2020-12-31"}, EUR_FILES),
+            ([("eq", "ticker", "EURUSD")], {"end": "2019-12-31T10:00"}, EUR_FILES[:1]),
+        ],
+        ids=["eq", "in", "ts-ge", "ts-range", "tickers", "start", "end", "pushed+option"],
+    )
+    def test_prune_keeps_exact_file_set(self, bi5_tree, filters, options, kept):
+        from pyspark.sql.datasource import EqualTo, GreaterThanOrEqual, In, LessThan
+
+        from spark_bi5_datasource_spark.sources.bi5_datasource import Bi5Reader
+
+        make = {"eq": EqualTo, "in": In, "ge": GreaterThanOrEqual, "lt": LessThan}
+        reader = Bi5Reader({"path": bi5_tree, "digits": "5", **options})
+        list(reader.pushFilters([make[op]((col,), v) for op, col, v in filters]))
+        assert _relfiles(reader.partitions(), bi5_tree) == kept
+
+    def test_prune_to_nothing_keeps_one_empty_partition(self, bi5_tree):
+        from spark_bi5_datasource_spark.sources.bi5_datasource import Bi5Reader
+
+        reader = Bi5Reader({"path": bi5_tree, "digits": "5", "tickers": "GBPUSD"})
+        assert [p.files for p in reader.partitions()] == [()]
+
+    def test_byte_budget_splits_a_group(self, tmp_path, monkeypatch):
+        import random
+
+        from spark_bi5_datasource_spark.sources import bi5_datasource as ds
+
+        budget, open_cost = 1_000, 100
+        monkeypatch.setattr(ds, "MAX_PARTITION_BYTES", budget)
+        monkeypatch.setattr(ds, "OPEN_COST_BYTES", open_cost)
+        rng = random.Random(5)
+        root = tmp_path / "ticks"
+        for day in range(1, 4):
+            for hour in range(24):
+                f = root / f"EURUSD/2020/0/{day}/{hour:02d}h_ticks.bi5"
+                f.parent.mkdir(parents=True, exist_ok=True)
+                size = 1_500 if (day, hour) == (2, 7) else rng.randrange(0, 400)
+                f.write_bytes(b"x" * size)
+        reader = ds.Bi5Reader({"path": str(root), "digits": "5"})
+        parts = reader.partitions()
+        assert len(parts) > 1
+        for p in parts:
+            cost = sum(os.path.getsize(f) + open_cost for f in p.files)
+            assert cost <= budget or len(p.files) == 1
+        flat = [f for p in parts for f in p.files]
+        assert flat == list(ds.iter_bi5_files(str(root)))
+        assert len(flat) == len(set(flat)) == 72
+
+
 # ---- reference-resource golden tests (skip when tree absent) ----
 
 
@@ -238,7 +332,6 @@ class TestReferenceGolden:
             spark,
             os.path.join(REFERENCE_RESOURCES, "EURUSD"),
             digits=DIGITS_EUR,
-            partitioning="subdir",
         )
         assert df.count() == 27521  # T:223
         assert df.rdd.getNumPartitions() == 2
@@ -261,7 +354,6 @@ class TestReferenceGolden:
             os.path.join(REFERENCE_RESOURCES, "USDJPY"),
             digits=DIGITS_JPY,
             january=1,
-            partitioning="subdir",
         )
         assert df.count() == 1454  # T:228
         assert df.rdd.getNumPartitions() == 1

@@ -1,12 +1,14 @@
-"""Repository hygiene: every script has a documented caller, and every
-repo file the code cites exists.
+"""Repository hygiene: every script has a documented caller, every repo
+file the code cites exists, and every bi5 reader option is documented.
 
-Two checks, no Spark:
+Three checks, no Spark:
 
 - each file in ``scripts/`` is named in README.md;
 - each ``scripts/<name>.py``, ``plans/r<NN>/`` or root
   ``UPPER_CASE.{md,json,jsonl,txt}`` name cited in the package,
-  ``tests/``, ``bench.py`` or ``__spark_entry__.py`` exists.
+  ``tests/``, ``bench.py`` or ``__spark_entry__.py`` exists;
+- each option key the bi5 batch and stream readers read is named in
+  README.md.
 """
 
 from __future__ import annotations
@@ -23,6 +25,11 @@ _SCRIPT = re.compile(r"scripts/[A-Za-z0-9_]+\.py")
 _PLAN_DUMPS = re.compile(r"(?<![\w/])plans/r\d+\b")
 _ROOT_DOC = re.compile(
     r"(?<![\w/.{-])[A-Z][A-Z0-9]*(?:_[A-Za-z0-9]+)*\.(?:md|jsonl|json|txt)\b"
+)
+_OPTION_KEY = re.compile(r'options(?:\.get\(|\[)"([^"]+)"')
+BI5_READERS = (
+    "spark_bi5_datasource_spark/sources/bi5_datasource.py",
+    "spark_bi5_datasource_spark/streaming/bi5_stream.py",
 )
 
 
@@ -79,3 +86,15 @@ def test_cited_repo_files_exist():
     assert not missing, "citations of files that do not exist:\n" + "\n".join(
         missing
     )
+
+
+def test_every_bi5_option_is_documented():
+    keys = set()
+    for rel in BI5_READERS:
+        with open(os.path.join(REPO, rel), encoding="utf-8") as f:
+            keys |= set(_OPTION_KEY.findall(f.read()))
+    assert {"path", "digits", "january", "min.age.seconds"} <= keys
+    with open(os.path.join(REPO, "README.md"), encoding="utf-8") as f:
+        readme = f.read()
+    undocumented = sorted(k for k in keys if f"`{k}`" not in readme)
+    assert not undocumented, f"bi5 options not named in README.md: {undocumented}"

@@ -405,6 +405,12 @@ def test_bi5_stream_prunes_like_batch(bi5_tree):
     batch = sorted(f for p in Bi5Reader(options).partitions() for f in p.files)
     assert Bi5StreamReader(options).latestOffset()["files"] == batch
     assert [os.path.relpath(f, bi5_tree) for f in batch] == ["EURUSD/2020/03/03/00h_ticks.bi5"]
+    # same planner: without the time window, both group EURUSD/ and USDJPY/ alike
+    options = {"path": bi5_tree, "digits": "5"}
+    stream = Bi5StreamReader(options)
+    planned = stream.partitions(stream.initialOffset(), stream.latestOffset())
+    assert [p.files for p in planned] == [p.files for p in Bi5Reader(options).partitions()]
+    assert len(planned) == 2
 
 
 def test_stateful_running_stats_across_batches(spark, tmp_path):
