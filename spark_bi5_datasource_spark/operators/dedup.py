@@ -59,7 +59,12 @@ def exact_dedup(
     Requires ``tie_break`` to be unique per (keys) group — it is the
     representative's identity; with ties, every tied row survives
     (the window kept an arbitrary one).  Null keys match null-safely,
-    exactly as a window partition groups them."""
+    exactly as a window partition groups them.
+
+    Null ``tie_break`` values count as ties: ``min`` skips nulls, so a
+    group whose values are all null keeps every row, and a null row
+    never represents a group that has a non-null value (its lowest
+    non-null row does)."""
     minids = (
         df.select(*keys, tie_break)
         .groupBy(*keys)

@@ -37,12 +37,22 @@ PAIR_PREFILTER_CONF = "spark.bi5.pairPrefilterBytes"
 PAIR_PREFILTER_DEFAULT = 256 * 1024 * 1024
 
 
-def scan_size_bytes(df: DataFrame) -> int:
+def scan_size_bytes(df: DataFrame) -> int | None:
     """Catalyst's size estimate for ``df``'s optimized plan — for a
     parquet scan this is the file-size sum, read driver-side from
     metadata (no job runs).  Used to pick scale-dependent plan shapes
-    deterministically from the input, never from a computed result."""
-    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    deterministically from the input, never from a computed result.
+
+    None (unknown) when any leaf reports ``spark.sql.defaultSizeInBytes``,
+    Catalyst's "no statistics" sentinel: a source without statistics,
+    such as the bi5 Python DataSource, reports it filtered or not, and
+    a projection above it only scales the sentinel down."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    unknown = df.sparkSession._jsparkSession.sessionState().conf().defaultSizeInBytes()
+    leaves = plan.collectLeaves()
+    if any(int(leaves.apply(i).stats().sizeInBytes()) >= unknown for i in range(leaves.size())):
+        return None
+    return int(plan.stats().sizeInBytes())
 
 
 def prefilter_min2(pairs: DataFrame, u: str = "u", v: str = "v") -> DataFrame:
@@ -82,13 +92,16 @@ def maybe_prefilter_min2(
     """Apply ``prefilter_min2`` when ``sized_on``'s scan is big enough
     for the saved shuffle to beat the filter's fixed two-stage cost.
     The gate reads input-file metadata only (deterministic per
-    invocation — nothing is cached across runs)."""
+    invocation — nothing is cached across runs).  An input of unknown
+    size (``scan_size_bytes`` is None, e.g. any bi5 scan) skips the
+    filter unless the threshold is 0."""
     thr = int(
         pairs.sparkSession.conf.get(
             PAIR_PREFILTER_CONF, str(PAIR_PREFILTER_DEFAULT)
         )
     )
-    if scan_size_bytes(sized_on) >= thr:
+    size = scan_size_bytes(sized_on)
+    if thr <= 0 or (size is not None and size >= thr):
         return prefilter_min2(pairs, u, v)
     return pairs
 

@@ -55,6 +55,16 @@ class TestDedup:
             (1, "a"), (3, "c"),
         ]
 
+    def test_exact_dedup_null_tie_break_counts_as_tie(self, spark):
+        """Null tie-breaks are ties: an all-null group keeps every row,
+        and a null row never represents a group with a non-null value."""
+        df = spark.createDataFrame(
+            [("a", None), ("a", None), ("b", None), ("b", 5), ("b", 7)],
+            "k string, id int",
+        )
+        out = sorted(exact_dedup(df, ["k"], "id").collect(), key=lambda r: (r.k, r.id or 0))
+        assert [tuple(r) for r in out] == [("a", None), ("a", None), ("b", 5)]
+
     def test_minhash_finds_planted_near_dup(self, spark, docs):
         kept = sorted(
             r.doc_id
@@ -566,6 +576,30 @@ class TestCopurchaseKernel:
 
             gated = counted(maybe_prefilter_min2(pairs, li)).collect()
             assert sorted(map(tuple, base)) == sorted(map(tuple, gated))
+        finally:
+            spark.conf.unset(PAIR_PREFILTER_CONF)
+
+    def test_unknown_scan_size_skips_prefilter(self, spark, bi5_tree):
+        """A bi5 scan has no statistics: Catalyst reports the
+        defaultSizeInBytes sentinel for it, filtered or projected, so
+        its size is unknown and the gate leaves the pairs alone."""
+        from pyspark.sql import functions as F
+
+        from spark_bi5_datasource_spark.operators.pairs import (
+            PAIR_PREFILTER_CONF,
+            maybe_prefilter_min2,
+            scan_size_bytes,
+        )
+
+        ticks = spark.read.format("bi5").option("digits", 5).load(bi5_tree)
+        for df in (ticks, ticks.where(F.col("ticker") == "EURUSD"), ticks.select("ticker", "bid")):
+            assert scan_size_bytes(df) is None
+        pairs = spark.range(4).selectExpr("id AS u", "id + 1 AS v")
+        assert scan_size_bytes(pairs) > 0
+        assert maybe_prefilter_min2(pairs, ticks) is pairs
+        spark.conf.set(PAIR_PREFILTER_CONF, "0")
+        try:
+            assert maybe_prefilter_min2(pairs, ticks) is not pairs
         finally:
             spark.conf.unset(PAIR_PREFILTER_CONF)
 

@@ -4,9 +4,11 @@ file the code cites exists, and every bi5 reader option is documented.
 Three checks, no Spark:
 
 - each file in ``scripts/`` is named in README.md;
-- each ``scripts/<name>.py``, ``plans/r<NN>/`` or root
-  ``UPPER_CASE.{md,json,jsonl,txt}`` name cited in the package,
-  ``tests/``, ``bench.py`` or ``__spark_entry__.py`` exists;
+- each ``scripts/<name>.py``, ``plans/r<NN>/``, root
+  ``UPPER_CASE.{md,json,jsonl,txt}`` or in-package module path
+  (``functions/ohlc.py``, resolved under ``spark_bi5_datasource_spark/``)
+  cited in the package, ``tests/``, ``bench.py`` or
+  ``__spark_entry__.py`` exists;
 - each option key the bi5 batch and stream readers read is named in
   README.md.
 """
@@ -25,6 +27,10 @@ _SCRIPT = re.compile(r"scripts/[A-Za-z0-9_]+\.py")
 _PLAN_DUMPS = re.compile(r"(?<![\w/])plans/r\d+\b")
 _ROOT_DOC = re.compile(
     r"(?<![\w/.{-])[A-Z][A-Z0-9]*(?:_[A-Za-z0-9]+)*\.(?:md|jsonl|json|txt)\b"
+)
+PACKAGE = "spark_bi5_datasource_spark"
+_MODULE = re.compile(
+    rf"(?<![\w/.])(?:{PACKAGE}/)?((?:sources|streaming|functions|operators|plans)/[A-Za-z0-9_]+\.py)"
 )
 _OPTION_KEY = re.compile(r'options(?:\.get\(|\[)"([^"]+)"')
 BI5_READERS = (
@@ -46,15 +52,17 @@ def citations(text: str) -> set[str]:
     """Repo paths cited in ``text``, relative to the repo root."""
     found = set(_SCRIPT.findall(text)) | set(_PLAN_DUMPS.findall(text))
     found |= set(_ROOT_DOC.findall(text))
+    found |= {f"{PACKAGE}/{m}" for m in _MODULE.findall(text)}
     return found - REFERENCE_CITATIONS
 
 
 def test_citations_pattern():
     text = (
         "see scripts/plan_audit.py, plans/r14/q21.txt, BENCH_r02.json,"
-        " R14_CODEC_AB.jsonl and HISTORY.md; plans/round4_ops.py,"
-        " perfbench/data/X.json, CORRECTNESS_r{N}.json and the"
-        " reference's scripts/bi5_to_csv.py are not repo-root citations"
+        " R14_CODEC_AB.jsonl, HISTORY.md, plans/round4_ops.py (functions/ohlc.py)"
+        " and spark_bi5_datasource_spark/sources/bi5_datasource.py;"
+        " perfbench/data/X.json, perfbench/functions/x.py, CORRECTNESS_r{N}.json"
+        " and the reference's scripts/bi5_to_csv.py are not citations"
     )
     assert citations(text) == {
         "scripts/plan_audit.py",
@@ -62,6 +70,9 @@ def test_citations_pattern():
         "BENCH_r02.json",
         "R14_CODEC_AB.jsonl",
         "HISTORY.md",
+        "spark_bi5_datasource_spark/plans/round4_ops.py",
+        "spark_bi5_datasource_spark/functions/ohlc.py",
+        "spark_bi5_datasource_spark/sources/bi5_datasource.py",
     }
 
 
