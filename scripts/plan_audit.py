@@ -177,7 +177,7 @@ def main() -> None:
 
     report: dict[str, dict] = {}
     violations: list[str] = []
-    for name, (fn, _sql, _b) in plans.CATALOG.items():
+    for name, (fn, _sql) in plans.CATALOG.items():
         try:
             df = fn(spark, SF)
             p = df._jdf.queryExecution().executedPlan().toString()

@@ -50,7 +50,7 @@ def main() -> None:
     # registration order, not the current window order.
     from spark_bi5_datasource_spark.plans.registry import REGISTRY as catalog
 
-    oracle_backed = [n for n, (_f, sql, _b) in catalog.items() if sql is not None]
+    oracle_backed = [n for n, (_f, sql) in catalog.items() if sql is not None]
     exposed = driver_exposed()
     never = [n for n in oracle_backed if n not in exposed]
     # least-recently-exposed fill if the never-exposed set is short

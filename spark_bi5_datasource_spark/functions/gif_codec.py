@@ -26,14 +26,14 @@ import numpy as np
 __all__ = ["gif_decode", "gif_encode", "gif_dims"]
 
 
-
 def _normalize_dirty(fn):
     """Corrupt-stream escapes (missing-table KeyError, truncated-read
     IndexError, short struct unpacks) normalize to ValueError so the
     media kernels' uniform dirty-input policy — catch (ValueError,
     NotImplementedError), emit null / skip the frame — holds for every
     decode entry point (the documented contract; previously a corrupt
-    frame could fail a whole task via KeyError)."""
+    frame could fail a whole task via KeyError).  jpeg_codec imports
+    this copy."""
     import functools
 
     @functools.wraps(fn)

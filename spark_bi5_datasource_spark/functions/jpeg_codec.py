@@ -34,6 +34,8 @@ import struct
 
 import numpy as np
 
+from .gif_codec import _normalize_dirty
+
 __all__ = ["jpeg_decode", "jpeg_encode", "jpeg_dims"]
 
 # ------------------------------------------------------------ shared
@@ -55,28 +57,6 @@ for _u in range(8):
     for _x in range(8):
         _c = np.sqrt(0.5) if _u == 0 else 1.0
         _T[_u, _x] = 0.5 * _c * np.cos((2 * _x + 1) * _u * np.pi / 16)
-
-
-
-def _normalize_dirty(fn):
-    """Corrupt-stream escapes (missing-table KeyError, truncated-read
-    IndexError, short struct unpacks) normalize to ValueError so the
-    media kernels' uniform dirty-input policy — catch (ValueError,
-    NotImplementedError), emit null / skip the frame — holds for every
-    decode entry point (the documented contract; previously a corrupt
-    frame could fail a whole task via KeyError)."""
-    import functools
-
-    @functools.wraps(fn)
-    def wrapped(*args, **kwargs):
-        try:
-            return fn(*args, **kwargs)
-        except (KeyError, IndexError, struct.error) as exc:
-            raise ValueError(
-                f"corrupt payload in {fn.__name__}: {exc!r}"
-            ) from exc
-
-    return wrapped
 
 
 def _idct_blocks(blocks: np.ndarray) -> np.ndarray:

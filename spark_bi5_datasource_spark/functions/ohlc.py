@@ -173,7 +173,6 @@ def ohlc_bars(
     volume_col: str | None = "bid_volume",
     by: Sequence[str] = ("ticker",),
     extra_aggs: Sequence[F.Column] = (),
-    integer_buckets: bool = True,
 ) -> DataFrame:
     """Open/high/low/close (+volume) bars per key per time bucket.
 
@@ -182,19 +181,18 @@ def ohlc_bars(
     need a sort.  ``extra_aggs`` lets callers ride additional
     aliased aggregates on the same exchange (e.g. a value sum).
 
-    ``integer_buckets`` (default) computes the tumbling bucket as
-    epoch-aligned int64 arithmetic on ``unix_micros`` — measured 30 %
-    faster than ``F.window``/``date_trunc`` at the x1000 tier, whose
-    per-row interval machinery is pure overhead for fixed-width
-    buckets (epoch alignment is identical).  On this path ``duration``
-    must be a positive whole number of microseconds (``ValueError``
-    otherwise).  Streaming inputs always take the ``window()`` path
-    regardless of the flag: the engine recognizes only that construct
-    as event-time, so watermark state eviction (and append-mode
-    output) depends on it.
+    A batch input computes the tumbling bucket as epoch-aligned int64
+    arithmetic on ``unix_micros`` — measured 30 % faster than
+    ``F.window``/``date_trunc`` at the x1000 tier, whose per-row
+    interval machinery is pure overhead for fixed-width buckets
+    (epoch alignment is identical).  ``duration`` must then be a
+    positive whole number of microseconds (``ValueError`` otherwise).
+    A streaming input takes the ``window()`` path: the engine
+    recognizes only that construct as event-time, so watermark state
+    eviction (and append-mode output) depends on it.
 
-    A batch input with ``integer_buckets`` on, no ``extra_aggs`` and
-    non-nullable Timestamp/Double/Double/String columns for
+    A batch input with no ``extra_aggs`` and non-nullable
+    Timestamp/Double/Double/String columns for
     ``ts_col``/``price_col``/``volume_col``/``by`` (the bi5 schema) is
     planned as one ``mapInArrow`` over ``_bars_kernel``; that plan is
     kept only when it reads one scan partition with no exchange, where
@@ -210,29 +208,25 @@ def ohlc_bars(
     if volume_col is not None:
         aggs.append(F.sum(volume_col).alias("volume"))
     aggs.extend(extra_aggs)
-    if integer_buckets and not df.isStreaming:
-        n = _bucket_micros(duration)
-        if not extra_aggs:
-            bars = _one_partition_bars(df, n, ts_col, price_col, volume_col, by)
-            if bars is not None:
-                return bars
-        um = F.unix_micros(F.col(ts_col))
-        bucket = (um - F.pmod(um, F.lit(n))).alias("_bucket")
-        # row-set parity with the window() path, which silently drops
-        # null-timestamp rows via TimeWindowing's IsNotNull filter —
-        # without this, the two code paths of the same function would
-        # disagree on data with null timestamps
-        out = (
-            df.where(F.col(ts_col).isNotNull()).groupBy(bucket, *by).agg(*aggs)
-        )
+    if df.isStreaming:
+        out = df.groupBy(F.window(ts_col, duration).alias("w"), *by).agg(*aggs)
         return out.select(
-            F.timestamp_micros("_bucket").alias("bar_start"),
-            *[c for c in out.columns if c != "_bucket"],
+            F.col("w.start").alias("bar_start"),
+            *[c for c in out.columns if c != "w"],
         )
-    out = df.groupBy(F.window(ts_col, duration).alias("w"), *by).agg(*aggs)
+    n = _bucket_micros(duration)
+    if not extra_aggs:
+        bars = _one_partition_bars(df, n, ts_col, price_col, volume_col, by)
+        if bars is not None:
+            return bars
+    um = F.unix_micros(F.col(ts_col))
+    bucket = (um - F.pmod(um, F.lit(n))).alias("_bucket")
+    # row-set parity with the streaming window() path, which silently
+    # drops null-timestamp rows via TimeWindowing's IsNotNull filter
+    out = df.where(F.col(ts_col).isNotNull()).groupBy(bucket, *by).agg(*aggs)
     return out.select(
-        F.col("w.start").alias("bar_start"),
-        *[c for c in out.columns if c != "w"],
+        F.timestamp_micros("_bucket").alias("bar_start"),
+        *[c for c in out.columns if c != "_bucket"],
     )
 
 

@@ -64,7 +64,7 @@ assert len(DRIVER_WINDOW) == 50 and len(set(DRIVER_WINDOW)) == 50
 assert set(DRIVER_WINDOW) <= set(REGISTRY), sorted(
     set(DRIVER_WINDOW) - set(REGISTRY)
 )
-# name -> (fn, oracle_sql | None, in_bench), driver window first
+# name -> (fn, oracle_sql | None), driver window first
 CATALOG: dict[str, tuple] = {
     **{n: REGISTRY[n] for n in DRIVER_WINDOW},
     **{n: v for n, v in REGISTRY.items() if n not in DRIVER_WINDOW},
@@ -79,7 +79,7 @@ def _utc(fn: Callable[[SparkSession, str], DataFrame]):
     Session-mutation contract: the UTC ``timeZone`` conf is left set
     on the caller's session — timestamp expressions resolve their
     zone during analysis, but the query is *executed* later (by the
-    driver / bench harness), so the conf must still read UTC then.
+    caller's action), so the conf must still read UTC then.
     The parquet ``inferTimestampNTZ`` toggle, by contrast, only
     matters while ``fn`` builds the DataFrame (parquet schema
     inference is eager at ``spark.read`` time), so it is restored
@@ -111,12 +111,8 @@ def _utc(fn: Callable[[SparkSession, str], DataFrame]):
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: _utc(fn) for name, (fn, _sql, _b) in CATALOG.items()}
+    return {name: _utc(fn) for name, (fn, _sql) in CATALOG.items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {name: sql for name, (_fn, sql, _b) in CATALOG.items() if sql is not None}
-
-
-def bench_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: fn for name, (fn, _sql, b) in CATALOG.items() if b}
+    return {name: sql for name, (_fn, sql) in CATALOG.items() if sql is not None}

@@ -62,7 +62,6 @@ _TKS = "filter(split(lower(text), '[^a-z]+'), x -> x <> '')"
            round(tgs.dup / tgs.tot, 6) AS dup_trigram_frac
     FROM dd JOIN bgs USING (doc_id) JOIN tgs USING (doc_id)
     """,
-    bench=True,
 )
 def text_repetition_stats(spark: SparkSession, sf: str) -> DataFrame:
     """Gopher-style repetition quality signals per document: the
@@ -86,8 +85,8 @@ def text_repetition_stats(spark: SparkSession, sf: str) -> DataFrame:
     untouched.
 
     Parallelism gate: a Python kernel gets exactly the scan's split
-    count, and the bench's 512m split cap leaves a small documents
-    file as ONE split (kernel measured 1.81 s serialized vs 0.52 s
+    count, and a 512 MiB ``maxPartitionBytes`` split cap leaves a small
+    documents file as ONE split (kernel measured 1.81 s serialized vs 0.52 s
     after a 32-way round-robin of the ~35 MB of text — the fan-out
     shuffle costs far less than the serialization it removes).  The
     repartition fires only when the scan has fewer splits than cores;
@@ -259,7 +258,6 @@ def text_pmi_bigrams(spark: SparkSession, sf: str) -> DataFrame:
     )
     SELECT day, dau.dau, wau.wau FROM dau JOIN wau USING (day)
     """,
-    bench=True,
 )
 def events_active_users(spark: SparkSession, sf: str) -> DataFrame:
     """DAU + trailing-7-day WAU per observed day.  The oracle uses
@@ -405,7 +403,6 @@ def events_gap_fill_linear(spark: SparkSession, sf: str) -> DataFrame:
              ELSE list_transform(e, x -> 0) END, ',') AS qvec
     FROM s
     """,
-    bench=True,
 )
 def sim_quantize_int8(spark: SparkSession, sf: str) -> DataFrame:
     """Symmetric int8 scalar quantization of the embedding column via

@@ -53,7 +53,6 @@ from .tables import fanout, t
     JOIN part x ON x.p_name = np.na
     JOIN part y ON y.p_name = np.nb
     """,
-    bench=True,
 )
 def join_fuzzy_parts(spark: SparkSession, sf: str) -> DataFrame:
     """Fuzzy self-join: part pairs whose names are within edit
@@ -84,7 +83,6 @@ def join_fuzzy_parts(spark: SparkSession, sf: str) -> DataFrame:
     WHERE a.vec_id <> b.vec_id AND a.nrm > 0 AND b.nrm > 0
     QUALIFY rank <= 5
     """,
-    bench=True,
 )
 def sim_knn_graph(spark: SparkSession, sf: str) -> DataFrame:
     """Exact 5-NN cosine graph over every embedding — block-pair GEMM,

@@ -11,22 +11,8 @@ series before their (cheap) window math:
   thousand-dollar daily revenue from the orders scan; consumed by
   ``window_rsi_cutler`` and ``window_bollinger_bands``.
 
-Each op used to inline an identical copy of its reduction, so a sweep
-over the family paid the full fact scan once PER INDICATOR — at x1000
-that is 6 scans of ~10⁸ rows to recompute the same ≤|types|·|days|
-bars.  The builders here are the single source of truth for the bar
-semantics (bit-identical to the old inlined copies, so every driver /
-oracle hash is unchanged), and a sweep harness can opt in to
-amortization with ``cache_daily_bars``: the bars are persisted once
-and every family member's plan starts from the cached aggregate.
-
-The cache is OPT-IN and session-scoped: the driver's correctness gate
-and ``verify_oracle.py`` never call ``cache_daily_bars``, so their
-plans are exactly the pre-factoring ones.  Cached bars are
-≤|event_type|·|days| (OHLC) or ≤|days| (revenue) rows — a few
-thousand rows even at x1000, so the persisted footprint is
-negligible and ``uncache_daily_bars`` is provided mostly for
-symmetry.
+These builders are the one definition of the bar semantics the six
+indicators share.
 
 Scale shape: both builders are single map-side-combinable groupBys —
 the ONLY unbounded-input work in the whole indicator family; every
@@ -42,29 +28,14 @@ from pyspark.sql import functions as F
 from .fastmoney import HALF_ADJUST_CENTS as _HA
 from .tables import t
 
-__all__ = [
-    "daily_ohlc_bars",
-    "daily_revenue_kusd",
-    "cache_daily_bars",
-    "uncache_daily_bars",
-]
-
-# (applicationId, sf_dir, kind) -> collected local bars frame.  Only
-# populated through cache_daily_bars (probe/sweep harnesses); never by
-# the catalog entries themselves.  Keyed on the session's
-# applicationId — stable for the session's lifetime and never reused
-# by a new session (unlike id(spark), which CPython can recycle after
-# a stopped session is garbage-collected).  The cache is a
-# point-in-time snapshot: call uncache_daily_bars if the underlying
-# tables change mid-sweep.
-_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+__all__ = ["daily_ohlc_bars", "daily_revenue_kusd"]
 
 
-def _skey(spark: SparkSession) -> str:
-    return spark.sparkContext.applicationId
-
-
-def _build_ohlc(spark: SparkSession, sf: str) -> DataFrame:
+def daily_ohlc_bars(spark: SparkSession, sf: str) -> DataFrame:
+    """Per-(event_type, day) OHLC bar: hi/lo cents and the
+    last-by-timestamp close — the shared first stage of the
+    events-series indicators (semantics identical to the
+    events_daily_ohlc pass, relational.py)."""
     base = (
         t(spark, sf, "events")
         .where("ts IS NOT NULL AND value IS NOT NULL")
@@ -82,7 +53,11 @@ def _build_ohlc(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _build_rev(spark: SparkSession, sf: str) -> DataFrame:
+def daily_revenue_kusd(spark: SparkSession, sf: str) -> DataFrame:
+    """Per-day revenue in exact integer thousand-dollar units
+    (cents div 100000) — the shared first stage of the
+    revenue-series indicators (k$ units keep the Bollinger Σx²
+    moment inside BIGINT at x1000; see window_bollinger_bands)."""
     return (
         t(spark, sf, "orders")
         .groupBy(F.col("o_orderdate").alias("day"))
@@ -95,73 +70,3 @@ def _build_rev(spark: SparkSession, sf: str) -> DataFrame:
             "day", F.expr("rev_c div 100000").cast("bigint").alias("rev_k")
         )
     )
-
-
-def daily_ohlc_bars(spark: SparkSession, sf: str) -> DataFrame:
-    """Per-(event_type, day) OHLC bar: hi/lo cents and the
-    last-by-timestamp close — the shared first stage of the
-    events-series indicators (semantics identical to the
-    events_daily_ohlc pass, relational.py)."""
-    return _CACHE.get((_skey(spark), sf, "ohlc")) or _build_ohlc(spark, sf)
-
-
-def daily_revenue_kusd(spark: SparkSession, sf: str) -> DataFrame:
-    """Per-day revenue in exact integer thousand-dollar units
-    (cents div 100000) — the shared first stage of the
-    revenue-series indicators (k$ units keep the Bollinger Σx²
-    moment inside BIGINT at x1000; see window_bollinger_bands)."""
-    return _CACHE.get((_skey(spark), sf, "rev")) or _build_rev(spark, sf)
-
-
-def cache_daily_bars(spark: SparkSession, sf: str) -> None:
-    """Opt-in amortization for sweep harnesses: materialize both bar
-    frames once so the indicator family pays each fact scan once.
-
-    The bars are collected to the driver and re-created as local
-    DataFrames rather than ``persist()``-ed: the collect is bounded
-    by ≤|event_type|·|days| (OHLC) / ≤|days| (revenue) rows — the
-    same bounded-model-state class as the IVF centroid collect
-    (operators/ivf.py) — and the local frame skips the
-    InMemoryRelation scan machinery entirely, so each downstream
-    window job is a single tiny local stage (measured at x1000:
-    persist-based sweep 5.96 s vs collect-based ~3 s for the same
-    six indicators)."""
-    _evict_stale()
-    current = set()
-    for kind, build in (("ohlc", _build_ohlc), ("rev", _build_rev)):
-        key = (_skey(spark), sf, kind)
-        current.add(key)
-        if key not in _CACHE:
-            built = build(spark, sf)
-            _CACHE[key] = spark.createDataFrame(
-                built.collect(), schema=built.schema
-            )
-    # FIFO cap: one long-lived session sweeping many sf dirs would
-    # otherwise accumulate one bar pair per dir forever; bars are
-    # cheap to rebuild, so evicting the oldest is harmless — but
-    # never THIS call's entries (a cache-then-immediately-evicted
-    # pair would silently defeat the amortization just promised)
-    evictable = [k for k in _CACHE if k not in current]
-    while len(_CACHE) > _CACHE_MAX and evictable:
-        _CACHE.pop(evictable.pop(0), None)
-
-
-_CACHE_MAX = 8  # 4 sf dirs × 2 kinds
-
-
-def _evict_stale() -> None:
-    """Drop cache entries owned by stopped sessions: their local
-    frames are unusable (the session is gone) and, without this,
-    every stop/start cycle leaked one bar pair per swept sf dir."""
-    for key, df in list(_CACHE.items()):
-        try:
-            stale = df.sparkSession.sparkContext._jsc.sc().isStopped()
-        except Exception:
-            stale = True  # session torn down far enough to throw
-        if stale:
-            _CACHE.pop(key, None)
-
-
-def uncache_daily_bars(spark: SparkSession, sf: str) -> None:
-    for kind in ("ohlc", "rev"):
-        _CACHE.pop((_skey(spark), sf, kind), None)

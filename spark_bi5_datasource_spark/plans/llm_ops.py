@@ -126,7 +126,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf: str) -> DataFrame:
     SELECT doc_id, lang, source FROM documents
     WHERE doc_id NOT IN (SELECT id FROM losers)
     """,
-    bench=True,
 )
 def dedup_minhash(spark: SparkSession, sf: str) -> DataFrame:
     """MinHash-LSH near-dedup: surviving docs (min-id policy).
@@ -274,7 +273,6 @@ _DOT_D = (
     WHERE b.vec_id < 10 AND a.vec_id <> b.vec_id
     QUALIFY rank <= 5
     """,
-    bench=True,
 )
 def sim_cosine_topk(spark: SparkSession, sf: str) -> DataFrame:
     """Exact brute-force cosine top-5 neighbors for the first 10
@@ -433,7 +431,6 @@ _EN = ", ".join(f"'{w}'" for w in STOPWORDS["en"])
       round({_sql_stopword_ratio(STOPWORDS["en"])}, 6) AS stopword_ratio
     FROM documents
     """,
-    bench=True,
 )
 def text_stats(spark: SparkSession, sf: str) -> DataFrame:
     """Token/char statistics — all JVM-side expressions; one
@@ -657,7 +654,6 @@ def sim_pandas_udf_norm(spark: SparkSession, sf: str) -> DataFrame:
     WHERE b.vec_id < 10 AND a.vec_id <> b.vec_id
     QUALIFY rank <= 5
     """,
-    bench=True,
 )
 def sim_gemm_topk(spark: SparkSession, sf: str) -> DataFrame:
     """Sharded-GEMM ANN (mapInPandas matrix kernel) — exact results,
@@ -1041,7 +1037,7 @@ def _zorder_sql() -> str:
     """
 
 
-@_q("zorder_values", _zorder_sql(), bench=True)
+@_q("zorder_values", _zorder_sql())
 def zorder_values(spark: SparkSession, sf: str) -> DataFrame:
     """Morton z-values over (user_id, value) — the multi-column
     data-skipping sort key (operators/zorder.py).  The bit-interleave
@@ -1279,7 +1275,6 @@ def scd2_customer_orders(spark: SparkSession, sf: str) -> DataFrame:
         AS value_sum
     FROM events GROUP BY bar_start, event_type
     """,
-    bench=True,
 )
 def events_ohlc_rollup(spark: SparkSession, sf: str) -> DataFrame:
     """Hypertable-style two-level rollup: hourly OHLC partials merged

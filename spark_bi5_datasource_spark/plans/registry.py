@@ -7,19 +7,19 @@ is this dict reordered for the driver window."""
 
 from __future__ import annotations
 
-# name -> (fn, oracle_sql | None, in_bench), in registration order
+# name -> (fn, oracle_sql | None), in registration order
 REGISTRY: dict[str, tuple] = {}
 
 
-def query(name: str, sql: str | None, bench: bool = False):
+def query(name: str, sql: str | None):
     """Decorator: register ``fn`` as catalog query ``name`` with its
-    DuckDB oracle ``sql`` (None when the output has no SQL twin) and
-    whether ``bench.py`` times it.  A name registers once."""
+    DuckDB oracle ``sql`` (None when the output has no SQL twin).  A
+    name registers once."""
 
     def wrap(fn):
         if name in REGISTRY:
             raise ValueError(f"catalog query {name!r} is already registered")
-        REGISTRY[name] = (fn, sql, bench)
+        REGISTRY[name] = (fn, sql)
         return fn
 
     return wrap

@@ -90,7 +90,6 @@ def b2_sort_topk(spark: SparkSession, sf: str) -> DataFrame:
     SELECT l_returnflag, l_linestatus, count(*) AS cnt
     FROM lineitem GROUP BY l_returnflag, l_linestatus
     """,
-    bench=True,
 )
 def b5_groupby_count(spark: SparkSession, sf: str) -> DataFrame:
     """Hash aggregate (T:71-73)."""
@@ -151,7 +150,6 @@ def b6_filter_project(spark: SparkSession, sf: str) -> DataFrame:
     WHERE l_shipdate <= TIMESTAMP '2000-09-02 00:00:00'
     GROUP BY l_returnflag, l_linestatus
     """,
-    bench=True,
 )
 def q1_pricing_summary(spark: SparkSession, sf: str) -> DataFrame:
     """TPC-H Q1 adapted to the fixture schema — partial+final hash agg,
@@ -181,7 +179,6 @@ def q1_pricing_summary(spark: SparkSession, sf: str) -> DataFrame:
     GROUP BY l_orderkey, o.o_orderdate
     ORDER BY revenue DESC, l_orderkey ASC LIMIT 10
     """,
-    bench=True,
 )
 def q3_top_revenue_orders(spark: SparkSession, sf: str) -> DataFrame:
     """TPC-H Q3 shape: selective dim filter → join → agg → top-k."""
@@ -212,7 +209,6 @@ def q3_top_revenue_orders(spark: SparkSession, sf: str) -> DataFrame:
     JOIN region r ON n.n_regionkey = r.r_regionkey
     GROUP BY r_name, n_name
     """,
-    bench=True,
 )
 def q5_region_revenue(spark: SparkSession, sf: str) -> DataFrame:
     """TPC-H Q5 shape: big-table equi-joins + broadcast dims.  nation/
@@ -443,7 +439,6 @@ def join_range(spark: SparkSession, sf: str) -> DataFrame:
     FROM events e ASOF LEFT JOIN orders o
       ON e.user_id = o.o_custkey AND e.ts >= o.o_orderdate
     """,
-    bench=True,
 )
 def join_asof_events_orders(spark: SparkSession, sf: str) -> DataFrame:
     """As-of join (tick-data semantics, SURVEY §2 Tier C): the latest
@@ -541,7 +536,6 @@ def window_lag_range_daily(spark: SparkSession, sf: str) -> DataFrame:
         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) / 100.0) AS running_spent
     FROM orders
     """,
-    bench=True,
 )
 def window_running_total(spark: SparkSession, sf: str) -> DataFrame:
     """Cumulative frame aggregate (rowsBetween) with total ordering."""
@@ -895,7 +889,6 @@ def scalar_math_case(spark: SparkSession, sf: str) -> DataFrame:
       (CAST(SUM(CAST(round((value) * 100) AS BIGINT)) AS DOUBLE) / 100.0) AS value_sum
     FROM events GROUP BY bar_start, event_type
     """,
-    bench=True,
 )
 def events_daily_ohlc(spark: SparkSession, sf: str) -> DataFrame:
     """Tumbling-window aggregation + OHLC bars (flagship tick
@@ -941,7 +934,6 @@ def events_daily_ohlc(spark: SparkSession, sf: str) -> DataFrame:
       FROM sess GROUP BY user_id, session_id
     ) GROUP BY user_id
     """,
-    bench=True,
 )
 def events_sessionize(spark: SparkSession, sf: str) -> DataFrame:
     """Gap-based sessionization (30-min inactivity) via lag + running

@@ -83,7 +83,7 @@ _STOCH_SQL = """
 """
 
 
-@_q("window_stochastic_osc", _STOCH_SQL, bench=True)
+@_q("window_stochastic_osc", _STOCH_SQL)
 def window_stochastic_osc(spark: SparkSession, sf: str) -> DataFrame:
     """Stochastic oscillator per event-type price series: 14-day raw
     %K = (close − low₁₄) / (high₁₄ − low₁₄) and the 3-day simple-mean
@@ -274,7 +274,7 @@ _BENFORD_SQL = f"""
 """
 
 
-@_q("dq_benford_first_digit", _BENFORD_SQL, bench=True)
+@_q("dq_benford_first_digit", _BENFORD_SQL)
 def dq_benford_first_digit(spark: SparkSession, sf: str) -> DataFrame:
     """Benford's-law forensics on the order totals: first-significant-
     digit shares in ppm against the pinned floor(log10(1+1/d)·10⁶)
@@ -605,7 +605,7 @@ _TTR_SQL = """
 """
 
 
-@_q("tok_ttr_by_source", _TTR_SQL, bench=True)
+@_q("tok_ttr_by_source", _TTR_SQL)
 def tok_ttr_by_source(spark: SparkSession, sf: str) -> DataFrame:
     """Per-source lexical diversity under the corpus tokenization
     convention of tok_vocab_topk (curation_ops.py): type-token ratio

@@ -303,7 +303,7 @@ _WINNOW_SQL = f"""
 """
 
 
-@_q("dedup_winnowing_fingerprints", _WINNOW_SQL, bench=True)
+@_q("dedup_winnowing_fingerprints", _WINNOW_SQL)
 def dedup_winnowing_fingerprints(spark: SparkSession, sf: str) -> DataFrame:
     """MOSS-style winnowing fingerprints (k=8 char-grams, window
     w=4): per document, the count of distinct winnowed fingerprints
@@ -367,7 +367,7 @@ _REFINT_SQL = """
 """
 
 
-@_q("dq_referential_integrity", _REFINT_SQL, bench=True)
+@_q("dq_referential_integrity", _REFINT_SQL)
 def dq_referential_integrity(spark: SparkSession, sf: str) -> DataFrame:
     """Foreign-key orphan audit across the four star-schema edges:
     per edge, the child row count, the count of non-null child keys
@@ -521,7 +521,7 @@ _LIFT_SQL = """
 """
 
 
-@_q("basket_association_lift", _LIFT_SQL, bench=True)
+@_q("basket_association_lift", _LIFT_SQL)
 def basket_association_lift(spark: SparkSession, sf: str) -> DataFrame:
     """Market-basket association lift for co-purchased part pairs
     with support >= 2 co-orders: lift = P(u,v) / (P(u)·P(v)) in
@@ -2130,7 +2130,7 @@ _WINNOW_PAIRS_SQL = f"""
 """
 
 
-@_q("dedup_winnow_pairs", _WINNOW_PAIRS_SQL, bench=True)
+@_q("dedup_winnow_pairs", _WINNOW_PAIRS_SQL)
 def dedup_winnow_pairs(spark: SparkSession, sf: str) -> DataFrame:
     """MOSS-style near-dup pair detection over the winnowing
     fingerprints: document pairs sharing >= 2 winnowed fingerprints,

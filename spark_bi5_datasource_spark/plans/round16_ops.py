@@ -115,9 +115,8 @@ def _cobucketed_tables(
             parts.append(f"{name}:{st.st_size}:{st.st_mtime_ns}")
     fp = hashlib.md5("|".join(parts).encode()).hexdigest()[:12]
     base = os.path.join(_warehouse(sf, "cobucketed_docs_emb"), fp)
-    # layout-session flag via the shared setup path (bench.py also
-    # sets it at session build, so timed sessions see ONE uniform
-    # value rather than a mid-run flip ordered by entry execution)
+    # layout-session flag via the shared setup path (idempotent; see
+    # enable_sorted_bucketed_scans for why it is session-wide)
     enable_sorted_bucketed_scans(spark)
     out = []
     for name, key in (("documents", "doc_id"), ("embeddings", "vec_id")):

@@ -274,7 +274,7 @@ _OVERLAP_SQL = f"""
 """
 
 
-@_q("join_interval_overlap", _OVERLAP_SQL, bench=True)
+@_q("join_interval_overlap", _OVERLAP_SQL)
 def join_interval_overlap(spark: SparkSession, sf: str) -> DataFrame:
     """Interval-overlap join (same-type event intervals that
     intersect) via BIN BLOCKING: each interval explodes to the hour

@@ -116,7 +116,7 @@ _DQ_SQL = """
 """
 
 
-@_q("dq_expectations", _DQ_SQL, bench=True)
+@_q("dq_expectations", _DQ_SQL)
 def dq_expectations(spark: SparkSession, sf: str) -> DataFrame:
     """Deequ-style data-quality audit: primary-key uniqueness,
     referential integrity, range checks, and null checks across four
@@ -329,7 +329,7 @@ _ZIPF_SQL = f"""
 """
 
 
-@_q("tok_zipf_profile", _ZIPF_SQL, bench=True)
+@_q("tok_zipf_profile", _ZIPF_SQL)
 def tok_zipf_profile(spark: SparkSession, sf: str) -> DataFrame:
     """Zipf-law profile of the corpus token distribution: the top-50
     rank/frequency table with integer ppm share, cumulative coverage,
@@ -563,7 +563,7 @@ _WAU_SQL = """
 """
 
 
-@_q("events_wau_sliding", _WAU_SQL, bench=True)
+@_q("events_wau_sliding", _WAU_SQL)
 def events_wau_sliding(spark: SparkSession, sf: str) -> DataFrame:
     """7-day rolling weekly-active-users per calendar day, with the
     DAU/WAU stickiness ratio in integer ppm.  A sliding COUNT

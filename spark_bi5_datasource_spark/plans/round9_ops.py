@@ -718,7 +718,7 @@ _MRL_SQL = f"""
 """
 
 
-@_q("sim_mrl_prefix_recall", _MRL_SQL, bench=True)
+@_q("sim_mrl_prefix_recall", _MRL_SQL)
 def sim_mrl_prefix_recall(spark: SparkSession, sf: str) -> DataFrame:
     """Matryoshka-representation evaluation: top-5 recall of
     PREFIX-dimension (first 16 of 64) cosine retrieval against the

@@ -47,7 +47,6 @@ def _q(
     name: str,
     sql: str,
     tables: tuple[str, ...],
-    bench: bool = False,
     spark_sql: str | None = None,
 ):
     """Register a SQL-interface query: the Spark side materializes the
@@ -70,7 +69,7 @@ def _q(
 
         fn.__name__ = name
         fn.__doc__ = doc
-        return query(name, sql.format(p=""), bench)(fn)
+        return query(name, sql.format(p=""))(fn)
 
     return wrap
 
@@ -173,7 +172,7 @@ _Q8_SQL = f"""
 """
 
 
-@query("sql_tpch_q8", _Q8_SQL.format(p=""), bench=True)
+@query("sql_tpch_q8", _Q8_SQL.format(p=""))
 def sql_tpch_q8(spark: SparkSession, sf: str) -> DataFrame:
     """TPC-H q8 (national market share) — hand-shaped join tree.
 
@@ -597,7 +596,6 @@ sql_tpch_q21 = _q(
     "sql_tpch_q21",
     _Q21_SQL,
     ("supplier", "lineitem", "orders", "nation", "region"),
-    bench=True,
     spark_sql=_Q21_SPARK_SQL,
 )(
     """TPC-H q21 (suppliers who kept orders waiting): the hardest

@@ -126,9 +126,8 @@ def enable_sorted_bucketed_scans(spark) -> None:
     ``write_bucketed`` layout genuinely provides).  Call it once at
     session setup — NOT from inside individual timed operations — so
     plan shapes are uniform across a session rather than dependent on
-    which entry ran first (bench.py sets it at session build;
-    ``ensure_bucketed_layout`` and the co-bucketed fixtures route
-    through here)."""
+    which entry ran first (``ensure_bucketed_layout`` and the
+    co-bucketed fixtures route through here)."""
     spark.conf.set(
         "spark.sql.legacy.bucketedTableScan.outputOrdering", "true"
     )

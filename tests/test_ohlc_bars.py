@@ -123,9 +123,6 @@ class TestFallbacks:
         q = ohlc_bars(point_query(spark, tick_tree), extra_aggs=[F.sum("ask").alias("s")])
         assert _is_hash_aggregate(q)
 
-    def test_window_buckets(self, spark, tick_tree, no_planning):
-        assert _is_hash_aggregate(ohlc_bars(point_query(spark, tick_tree), integer_buckets=False))
-
     def test_nullable_columns(self, spark, no_planning):
         df = spark.createDataFrame(
             [(dt.datetime(2020, 1, 1, tzinfo=UTC), "EURUSD", 1.0, 1.0)],

@@ -1459,10 +1459,9 @@ class TestOhlcRollup:
         assert merged == direct and len(direct) >= 2
 
     def test_null_ts_rows_dropped_on_both_paths(self, spark):
-        """The integer-bucket (batch default) and window() code paths
-        must return the same row set on data with null timestamps:
-        both drop them (window() via TimeWindowing's IsNotNull filter,
-        the integer path via an explicit where)."""
+        """The batch integer-bucket path drops null-timestamp rows (an
+        explicit where), as the streaming window() path does via
+        TimeWindowing's IsNotNull filter."""
         from pyspark.sql import functions as F
 
         from spark_bi5_datasource_spark.functions.ohlc import ohlc_bars
@@ -1476,13 +1475,10 @@ class TestOhlcRollup:
             F.col("ts_s").cast("timestamp").alias("ts"),
             "ticker", "bid", "bid_volume",
         )
-        fast = {(r.bar_start, r.ticker): (r.open, r.close, r.n_ticks)
-                for r in ohlc_bars(df, "1 minute").collect()}
-        slow = {(r.bar_start, r.ticker): (r.open, r.close, r.n_ticks)
-                for r in ohlc_bars(df, "1 minute", integer_buckets=False).collect()}
-        assert fast == slow
-        assert all(k[0] is not None for k in fast)
-        assert list(fast.values()) == [(1.0, 2.0, 2)]
+        got = {(r.bar_start, r.ticker): (r.open, r.close, r.n_ticks)
+               for r in ohlc_bars(df, "1 minute").collect()}
+        assert all(k[0] is not None for k in got)
+        assert list(got.values()) == [(1.0, 2.0, 2)]
 
 
 class TestRound3NullEdges:

@@ -1,20 +1,26 @@
 """Repository hygiene: every script has a documented caller, every repo
-file the code cites exists, and every bi5 reader option is documented.
+file the code cites exists, every bi5 reader option is documented, and
+every package module is reachable.
 
-Three checks, no Spark:
+Four checks, no Spark:
 
 - each file in ``scripts/`` is named in README.md;
 - each ``scripts/<name>.py``, ``plans/r<NN>/``, root
   ``UPPER_CASE.{md,json,jsonl,txt}`` or in-package module path
   (``functions/ohlc.py``, resolved under ``spark_bi5_datasource_spark/``)
-  cited in the package, ``tests/``, ``bench.py`` or
-  ``__spark_entry__.py`` exists;
+  cited in the package, ``tests/`` or ``__spark_entry__.py`` exists;
 - each option key the bi5 batch and stream readers read is named in
-  README.md.
+  README.md;
+- each package module is imported, directly or through other modules,
+  from a package ``__init__``, ``__spark_entry__.py``, ``perfbench/``
+  or ``scripts/``, or is on ``UNROOTED_SURFACES`` with the document
+  that names it.
 """
 
 from __future__ import annotations
 
+import ast
+import glob
 import os
 import re
 
@@ -37,10 +43,17 @@ BI5_READERS = (
     "spark_bi5_datasource_spark/sources/bi5_datasource.py",
     "spark_bi5_datasource_spark/streaming/bi5_stream.py",
 )
+# package modules no root imports, kept because a document offers them
+# to users: module -> (document, the phrase there that names it)
+UNROOTED_SURFACES = {
+    f"{PACKAGE}/plans/scale_audit.py": ("README.md", "explain_scale"),
+    f"{PACKAGE}/functions/bi5_udtf.py": ("SURVEY.md", "`bi5_decode` UDTF"),
+    f"{PACKAGE}/streaming/tws.py": ("SURVEY.md", "transformWithState"),
+}
 
 
 def _cited_sources() -> list[str]:
-    paths = [os.path.join(REPO, "bench.py"), os.path.join(REPO, "__spark_entry__.py")]
+    paths = [os.path.join(REPO, "__spark_entry__.py")]
     for top in ("spark_bi5_datasource_spark", "tests"):
         for root, _dirs, files in os.walk(os.path.join(REPO, top)):
             paths += [os.path.join(root, f) for f in files if f.endswith(".py")]
@@ -109,3 +122,61 @@ def test_every_bi5_option_is_documented():
         readme = f.read()
     undocumented = sorted(k for k in keys if f"`{k}`" not in readme)
     assert not undocumented, f"bi5 options not named in README.md: {undocumented}"
+
+
+def _dotted(rel: str) -> str:
+    parts = rel[: -len(".py")].split("/")
+    return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+
+def _imported(rel: str) -> set[str]:
+    """Dotted names ``rel`` imports anywhere in its body, relative
+    imports resolved; ``from m import x`` yields both ``m`` and ``m.x``."""
+    with open(os.path.join(REPO, rel), encoding="utf-8") as f:
+        tree = ast.parse(f.read(), rel)
+    package = _dotted(rel) if rel.endswith("__init__.py") else _dotted(rel).rpartition(".")[0]
+    names: set[str] = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            names |= {a.name for a in node.names}
+        elif isinstance(node, ast.ImportFrom):
+            base = node.module or ""
+            if node.level:
+                parts = package.split(".")
+                parts = parts[: len(parts) - node.level + 1]
+                base = ".".join(parts + ([node.module] if node.module else []))
+            names |= {base} | {f"{base}.{a.name}" for a in node.names}
+    return names
+
+
+def unreachable_modules() -> list[str]:
+    """Package modules that no root reaches through imports."""
+    modules = {
+        _dotted(rel): rel
+        for rel in (
+            os.path.relpath(p, REPO)
+            for p in glob.glob(os.path.join(REPO, PACKAGE, "**", "*.py"), recursive=True)
+        )
+    }
+    roots = [rel for rel in modules.values() if rel.endswith("__init__.py")]
+    roots.append("__spark_entry__.py")
+    for top in ("perfbench", "scripts"):
+        roots += [os.path.relpath(p, REPO) for p in glob.glob(os.path.join(REPO, top, "*.py"))]
+    seen, todo = set(roots), list(roots)
+    while todo:
+        for name in _imported(todo.pop()):
+            rel = modules.get(name)
+            if rel is not None and rel not in seen:
+                seen.add(rel)
+                todo.append(rel)
+    return sorted(set(modules.values()) - seen)
+
+
+def test_every_module_is_reachable():
+    unreachable = unreachable_modules()
+    unlisted = [m for m in unreachable if m not in UNROOTED_SURFACES]
+    assert not unlisted, f"modules nothing imports (delete them with their tests): {unlisted}"
+    assert sorted(UNROOTED_SURFACES) == unreachable, "UNROOTED_SURFACES lists a reachable or missing module"
+    for module, (doc, phrase) in UNROOTED_SURFACES.items():
+        with open(os.path.join(REPO, doc), encoding="utf-8") as f:
+            assert phrase in f.read(), f"{doc} no longer names {module} ({phrase!r})"

@@ -418,43 +418,6 @@ class TestCumeUsers:
         assert got == {1: (2, 2), 2: (0, 2), 3: (2, 4)}
 
 
-class TestHllSketchPipeline:
-    def test_merged_partials_equal_direct_sketch(self, spark):
-        import datetime as dt
-
-        from spark_bi5_datasource_spark.functions.sketches import (
-            bucket_distinct_sketches,
-            merge_distinct_sketches,
-        )
-        from pyspark.sql import functions as F2
-
-        rows = [
-            (i, dt.datetime(2024, 1, 1 + (i % 5), i % 24), i % 137, "t", 1.0, "{}")
-            for i in range(2000)
-        ]
-        df = spark.createDataFrame(
-            rows,
-            "event_id long, ts timestamp, user_id long, event_type string,"
-            " value double, props string",
-        )
-        partials = bucket_distinct_sketches(df).cache()
-        assert partials.count() == 5
-        merged = merge_distinct_sketches(partials).collect()[0][
-            "merged_estimate"
-        ]
-        direct = df.agg(
-            F2.hll_sketch_estimate(
-                F2.hll_sketch_agg("user_id", F2.lit(12))
-            ).alias("e")
-        ).collect()[0]["e"]
-        # union over disjoint row sets IS the sketch of the union —
-        # estimates agree exactly, not approximately
-        assert merged == direct
-        # and the estimate lands near the true distinct count (137)
-        assert abs(merged - 137) / 137 < 0.05
-        partials.unpersist()
-
-
 # ------------------------------------------------ SQL pack plans
 
 

@@ -1,9 +1,7 @@
-"""Enforced cleanup for the two documented resource-retention sites
-(r11 verdict ask #5): pagerank's persisted invariants + checkpoint
-blocks, and daily_bars' driver-side bar cache.  The docstring
-contracts ("call clearCache() between runs") become APIs with tests:
-``storage_scope`` returns executor storage to baseline, and the bar
-cache evicts stale-session entries and caps its size.
+"""Enforced cleanup for pagerank's persisted invariants + checkpoint
+blocks (r11 verdict ask #5).  The docstring contract ("call
+clearCache() between runs") becomes an API with tests:
+``storage_scope`` returns executor storage to baseline.
 """
 
 from __future__ import annotations
@@ -73,55 +71,3 @@ class TestStorageScope:
                 d.count()
                 raise RuntimeError("boom")
         assert _persisted(spark) == baseline
-
-
-class TestDailyBarsCacheEviction:
-    @pytest.fixture()
-    def sf_dir(self):
-        from tests.conftest import TESTDATA_SF
-
-        return TESTDATA_SF
-
-    def test_stale_session_entries_evicted(self, spark, sf_dir):
-        import os
-
-        if not os.path.isdir(sf_dir):
-            pytest.skip(f"no fixture at {sf_dir}")
-        from spark_bi5_datasource_spark.plans import daily_bars as db
-
-        class _Dead:
-            @property
-            def sparkSession(self):
-                raise RuntimeError("session is gone")
-
-        db._CACHE.clear()
-        db._CACHE[("dead-app", "sf", "ohlc")] = _Dead()
-        try:
-            db.cache_daily_bars(spark, sf_dir)
-            assert ("dead-app", "sf", "ohlc") not in db._CACHE
-            # the live entries were created and are usable
-            assert db.daily_ohlc_bars(spark, sf_dir).count() > 0
-        finally:
-            db._CACHE.clear()
-
-    def test_fifo_cap_bounds_cache(self, spark, sf_dir):
-        import os
-
-        if not os.path.isdir(sf_dir):
-            pytest.skip(f"no fixture at {sf_dir}")
-        from spark_bi5_datasource_spark.plans import daily_bars as db
-
-        db._CACHE.clear()
-        try:
-            app = spark.sparkContext.applicationId
-            # simulate a long sweep: many prior sf dirs, LIVE session
-            for i in range(db._CACHE_MAX + 4):
-                df = spark.createDataFrame([(i,)], "x long")
-                db._CACHE[(app, f"/fake/sf{i}", "ohlc")] = df
-            db.cache_daily_bars(spark, sf_dir)
-            assert len(db._CACHE) <= db._CACHE_MAX
-            # the entries just built for THIS call survived the cap
-            assert (app, sf_dir, "ohlc") in db._CACHE
-            assert (app, sf_dir, "rev") in db._CACHE
-        finally:
-            db._CACHE.clear()
