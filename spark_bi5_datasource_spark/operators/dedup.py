@@ -64,15 +64,22 @@ def exact_dedup(
     Null ``tie_break`` values count as ties: ``min`` skips nulls, so a
     group whose values are all null keeps every row, and a null row
     never represents a group that has a non-null value (its lowest
-    non-null row does)."""
+    non-null row does).
+
+    The representative frame's columns are renamed, so the join
+    condition names each column on one side only and resolves even
+    when ``df`` is itself a self-join (no dataset-id disambiguation
+    of a column shared by both sides)."""
+    cols = [*keys, tie_break]
+    ren = {c: f"__dedup_{i}" for i, c in enumerate(cols)}
     minids = (
-        df.select(*keys, tie_break)
-        .groupBy(*keys)
-        .agg(F.min(tie_break).alias(tie_break))
+        df.select(*[F.col(c).alias(ren[c]) for c in cols])
+        .groupBy(*[ren[k] for k in keys])
+        .agg(F.min(ren[tie_break]).alias(ren[tie_break]))
     )
     cond = None
-    for c in [*keys, tie_break]:
-        eq = df[c].eqNullSafe(minids[c])
+    for c in cols:
+        eq = df[c].eqNullSafe(minids[ren[c]])
         cond = eq if cond is None else cond & eq
     return df.join(minids, cond, "left_semi")
 

@@ -81,9 +81,11 @@ def _utc(fn: Callable[[SparkSession, str], DataFrame]):
     zone during analysis, but the query is *executed* later (by the
     caller's action), so the conf must still read UTC then.
     The parquet ``inferTimestampNTZ`` toggle, by contrast, only
-    matters while ``fn`` builds the DataFrame (parquet schema
-    inference is eager at ``spark.read`` time), so it is restored
-    before returning."""
+    matters while ``fn`` builds the DataFrame, and then only when
+    ``tables.read_parquet`` misses its schema cache and infers a
+    schema (eagerly, at ``spark.read`` time); the toggle is part of
+    that cache's key, so a schema inferred under another value is
+    not reused.  It is restored before returning."""
 
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
         from .. import ship_package

@@ -315,14 +315,19 @@ _DOT_RAW = (
 # instead of stacking a new persist per call and leaning on
 # block-LRU eviction (advisor r8 note).  The frame is deterministic
 # for a given (session, sf): centroids are the 16 smallest vec_ids'
-# unit vectors and the hyperplanes are seed-42 literals.
+# unit vectors and the hyperplanes are seed-42 literals.  A process
+# runs one SparkContext at a time, so an entry under another
+# applicationId belongs to a stopped session and is dropped.
 _RECALL_FEAT_CACHE: dict[tuple[str, str], tuple[DataFrame, str]] = {}
 
 
 def _recall_feat(spark: SparkSession, sf: str) -> tuple[DataFrame, str]:
     from ..operators.similarity import rp_signature, with_norm
 
-    key = (spark.sparkContext.applicationId, sf)
+    app = spark.sparkContext.applicationId
+    for stale in [k for k in _RECALL_FEAT_CACHE if k[0] != app]:
+        del _RECALL_FEAT_CACHE[stale]
+    key = (app, sf)
     hit = _RECALL_FEAT_CACHE.get(key)
     if hit is not None:
         return hit

@@ -106,6 +106,7 @@ def _cobucketed_tables(
         write_bucketed,
     )
     from .round13_ops import _warehouse
+    from .tables import read_parquet
 
     parts: list[str] = []
     for name in ("documents", "embeddings"):
@@ -127,9 +128,7 @@ def _cobucketed_tables(
                 register_bucketed(spark, path, tbl, key, 32)
             else:
                 write_bucketed(
-                    spark.read.parquet(
-                        os.path.join(sf, f"{name}.parquet")
-                    ),
+                    read_parquet(spark, os.path.join(sf, f"{name}.parquet")),
                     path,
                     tbl,
                     key,

@@ -1,5 +1,19 @@
 """Table loading for the driver's parquet fixtures (TESTDATA.md).
 
+Every fixture read goes through ``read_parquet``, which pins each
+path's parquet schema.  Spark infers a parquet schema with a one-task
+job (``mergeSchemasInParallel``) on every ``spark.read.parquet``,
+about 70 ms of each table load on a warm 4-core session; with the
+schema given the read runs no job.  So the first read of a path records
+``df.schema`` here, and later reads hand that schema to
+``spark.read.schema(...)`` and run no job.  An entry is reused only
+while the path's files (size, mtime_ns, inode of each) and the two
+confs that change what inference returns are as they were; it holds
+a ``StructType`` and that fingerprint, no DataFrame and no JVM object,
+so it cannot keep a stopped session alive.  Each call still returns
+a new DataFrame: two loads of one table carry distinct attribute ids,
+so a self-join of them resolves.
+
 Also implements the optional BUCKETED layout for the big join tables:
 at warehouse scale the lineitem⋈orders join is the classic shuffle
 bottleneck, and the standard cure is co-located storage — both tables
@@ -17,6 +31,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import LongType, StructType
 
 TABLES = (
     "region",
@@ -46,6 +61,56 @@ BUCKET_SPECS: dict[str, str] = {
     "embeddings": "vec_id",
 }
 _BUCKETS = 32
+
+# the confs that change the schema parquet inference returns: int64
+# TIMESTAMP(NANOS) columns read as bigint, and NTZ-flavoured timestamps
+# read as TIMESTAMP_NTZ
+_INFER_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+# resolved path -> (file fingerprint, _INFER_CONFS values, schema)
+_SCHEMAS: dict[str, tuple[tuple, tuple, StructType]] = {}
+
+
+def _fingerprint(path: str) -> tuple:
+    """(size, mtime_ns, inode) of a file; for a directory, that
+    triple for every file under it, with its relative name."""
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return (st.st_size, st.st_mtime_ns, st.st_ino)
+    out = []
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            full = os.path.join(root, f)
+            st = os.stat(full)
+            out.append(
+                (os.path.relpath(full, path), st.st_size, st.st_mtime_ns, st.st_ino)
+            )
+    return tuple(sorted(out))
+
+
+def _read_pinned(spark: SparkSession, path: str) -> tuple[DataFrame, StructType]:
+    """``read_parquet`` plus the schema it read with, so a caller can
+    inspect column types without a JVM round trip."""
+    key = os.path.realpath(path)
+    fp = _fingerprint(key)
+    confs = tuple(spark.conf.get(c) for c in _INFER_CONFS)
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == fp and hit[1] == confs:
+        return spark.read.schema(hit[2]).parquet(path), hit[2]
+    df = spark.read.parquet(path)
+    schema = df.schema
+    _SCHEMAS[key] = (fp, confs, schema)
+    return df, schema
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """A new DataFrame over the parquet file or directory ``path``,
+    read with its pinned schema (module docstring): the first read
+    of a path, or of one whose files or inference confs changed,
+    infers the schema; every other read runs no Spark job."""
+    return _read_pinned(spark, path)[0]
 
 
 def _bucket_table_name(name: str, sf_dir: str) -> str:
@@ -99,9 +164,7 @@ def ensure_bucketed_layout(
             register_bucketed(spark, path, tbl, key, _BUCKETS)
         else:
             write_bucketed(
-                spark.read.parquet(
-                    os.path.join(sf_dir, f"{name}.parquet")
-                ),
+                read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet")),
                 path,
                 tbl,
                 key,
@@ -131,24 +194,28 @@ def table_bytes(sf_dir: str, name: str) -> int:
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one fixture table.  Plain parquet scan → Catalyst gets
-    pushdown/pruning for free.
+    """Load one fixture table as a new DataFrame.  Plain parquet scan
+    through ``read_parquet`` → Catalyst gets pushdown/pruning for
+    free, and after the first load of a table no inference job runs.
 
     events.parquet stores TIMESTAMP(NANOS), which Spark's parquet
     reader rejects by default; read it as int64 nanos and floor to
     microseconds (identical to how DuckDB/Python surface ns values).
+    The nanos conf is set on every call, because the scan reads it
+    again when it runs.
     """
     if is_bucketed(spark, sf_dir, name):
         return spark.table(_bucket_table_name(name, sf_dir))
+    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         from pyspark.sql import functions as F
 
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        if dict(df.dtypes).get("ts") == "bigint":
+        df, schema = _read_pinned(spark, path)
+        if "ts" in schema.names and schema["ts"].dataType == LongType():
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
         return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, path)
 
 
 def fanout(df: DataFrame) -> DataFrame:

@@ -65,6 +65,26 @@ class TestDedup:
         out = sorted(exact_dedup(df, ["k"], "id").collect(), key=lambda r: (r.k, r.id or 0))
         assert [tuple(r) for r in out] == [("a", None), ("a", None), ("b", 5)]
 
+    def test_exact_dedup_over_a_self_join(self, spark):
+        """A self-joined input shares its key's attribute with the
+        representative frame built from it; the join still resolves,
+        keeping one row per key with the lowest id."""
+        df = spark.createDataFrame(
+            [(1, 5), (2, 5), (3, 6), (4, 7), (0, 7)], "id long, k long"
+        )
+        out = exact_dedup(df.join(df.select("k").distinct(), "k"), ["k"], "id")
+        assert sorted((r.k, r.id) for r in out.collect()) == [(5, 1), (6, 3), (7, 0)]
+
+    def test_exact_dedup_dotted_key_name(self, spark):
+        """A key whose name holds a dot: a join condition that compared
+        the key with itself was re-resolved by name, and the dotted
+        name parsed as a struct field."""
+        df = spark.createDataFrame(
+            [(5, 1), (5, 2), (6, 3), (7, 4), (7, 0)], "`a.b` long, id long"
+        )
+        out = exact_dedup(df, ["`a.b`"], "id")
+        assert sorted(tuple(r) for r in out.collect()) == [(5, 1), (6, 3), (7, 0)]
+
     def test_minhash_finds_planted_near_dup(self, spark, docs):
         kept = sorted(
             r.doc_id

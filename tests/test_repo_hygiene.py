@@ -1,8 +1,9 @@
 """Repository hygiene: every script has a documented caller, every repo
-file the code cites exists, every bi5 reader option is documented, and
-every package module is reachable.
+file the code cites exists, every bi5 reader option is documented,
+every package module is reachable, and the catalog reads parquet in
+one place.
 
-Four checks, no Spark:
+Five checks, no Spark:
 
 - each file in ``scripts/`` is named in README.md;
 - each ``scripts/<name>.py``, ``plans/r<NN>/``, root
@@ -14,7 +15,9 @@ Four checks, no Spark:
 - each package module is imported, directly or through other modules,
   from a package ``__init__``, ``__spark_entry__.py``, ``perfbench/``
   or ``scripts/``, or is on ``UNROOTED_SURFACES`` with the document
-  that names it.
+  that names it;
+- no module under ``plans/`` but ``plans/tables.py`` calls
+  ``read.parquet``: fixtures load through its schema-pinning reader.
 """
 
 from __future__ import annotations
@@ -180,3 +183,42 @@ def test_every_module_is_reachable():
     for module, (doc, phrase) in UNROOTED_SURFACES.items():
         with open(os.path.join(REPO, doc), encoding="utf-8") as f:
             assert phrase in f.read(), f"{doc} no longer names {module} ({phrase!r})"
+
+
+def parquet_reads(source: str) -> list[int]:
+    """Lines of ``source`` that call ``<x>.read[...].parquet(...)``,
+    options or a schema chained in between included."""
+    lines = []
+    for node in ast.walk(ast.parse(source)):
+        if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+            continue
+        if node.func.attr != "parquet":
+            continue
+        inner = node.func.value
+        while isinstance(inner, (ast.Call, ast.Attribute)):
+            if isinstance(inner, ast.Attribute) and inner.attr == "read":
+                lines.append(node.lineno)
+                break
+            inner = inner.func if isinstance(inner, ast.Call) else inner.value
+    return lines
+
+
+def test_parquet_reads_pattern():
+    source = (
+        "spark.read.parquet(p)\n"
+        "spark.read.option('a', 1).schema(s).parquet(p)\n"
+        "df.write.parquet(p)\n"
+        "tables.read_parquet(spark, p)\n"
+    )
+    assert parquet_reads(source) == [1, 2]
+
+
+def test_plans_read_parquet_only_through_tables():
+    found = []
+    for p in sorted(glob.glob(os.path.join(REPO, PACKAGE, "plans", "*.py"))):
+        rel = os.path.relpath(p, REPO)
+        if rel == f"{PACKAGE}/plans/tables.py":
+            continue
+        with open(p, encoding="utf-8") as f:
+            found += [f"{rel}:{n}" for n in parquet_reads(f.read())]
+    assert not found, f"read fixtures through plans.tables.read_parquet: {found}"

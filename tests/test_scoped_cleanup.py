@@ -1,7 +1,9 @@
 """Enforced cleanup for pagerank's persisted invariants + checkpoint
 blocks (r11 verdict ask #5).  The docstring contract ("call
 clearCache() between runs") becomes an API with tests:
-``storage_scope`` returns executor storage to baseline.
+``storage_scope`` returns executor storage to baseline.  Also: the
+ANN recall monitor's per-session feature cache drops the entries of
+stopped sessions.
 """
 
 from __future__ import annotations
@@ -71,3 +73,25 @@ class TestStorageScope:
                 d.count()
                 raise RuntimeError("boom")
         assert _persisted(spark) == baseline
+
+
+class TestRecallFeatCacheEviction:
+    def test_stale_session_entry_dropped(self, spark):
+        import os
+
+        from tests.conftest import TESTDATA_SF
+
+        if not os.path.isdir(TESTDATA_SF):
+            pytest.skip(f"no fixture at {TESTDATA_SF}")
+        from spark_bi5_datasource_spark import plans
+        from spark_bi5_datasource_spark.plans import round12_ops
+
+        stale = ("app-stale", TESTDATA_SF)
+        round12_ops._RECALL_FEAT_CACHE[stale] = (None, "")
+        try:
+            plans.queries()["sim_ann_recall_monitor"](spark, TESTDATA_SF)
+            assert stale not in round12_ops._RECALL_FEAT_CACHE
+            live = (spark.sparkContext.applicationId, TESTDATA_SF)
+            assert live in round12_ops._RECALL_FEAT_CACHE
+        finally:
+            round12_ops._RECALL_FEAT_CACHE.pop(stale, None)
