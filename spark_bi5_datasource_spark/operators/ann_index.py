@@ -46,11 +46,11 @@ from __future__ import annotations
 
 import numpy as np
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .ivf import _nearest_cells_udf
-from .similarity import _DOT, with_norm
+from .similarity import _DOT, rank_topk, with_norm
 
 __all__ = [
     "build_ivf_index",
@@ -225,16 +225,4 @@ def ivf_probe_index(
         F.expr(_DOT.format(a="vec", b="__qv"))
         / (F.col("norm") * F.col("__qn")),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("nbr_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "nbr_id",
-            F.round("cosine", 6).alias("cosine"),
-            "rank",
-        )
-    )
+    return rank_topk(scored, k)

@@ -21,10 +21,63 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["ann_topk_gemm"]
+from .similarity import rank_topk
+
+__all__ = ["ann_topk_gemm", "block_topk"]
+
+
+def block_topk(
+    c_ids: np.ndarray,
+    c_mat: np.ndarray,
+    q_ids: np.ndarray,
+    q_mat: np.ndarray,
+    k: int,
+    include_self: bool = False,
+) -> pd.DataFrame:
+    """The NumPy kernel of the GEMM tiers: the ``k`` best corpus rows
+    per query for one corpus block × query block, by one GEMM, plus
+    every row tied with the ``k``-th.
+
+    Zero-norm rows of either side are dropped: their cosine is
+    undefined (as in ``cosine_topk`` and the DuckDB oracle).  Unless
+    ``include_self``, a row paired with its own id scores ``-inf``; it
+    is still returned when the block has fewer than ``k`` other rows,
+    so the caller drops ``-inf`` before ``rank_topk`` merges the
+    blocks.  Returns ``query_id, nbr_id, cosine`` in no order."""
+    if c_ids.size and q_ids.size:
+        c_norm = np.linalg.norm(c_mat, axis=1)
+        q_norm = np.linalg.norm(q_mat, axis=1)
+        keep_c, keep_q = c_norm > 0, q_norm > 0
+        c_ids, c_mat, c_norm = c_ids[keep_c], c_mat[keep_c], c_norm[keep_c]
+        q_ids, q_mat, q_norm = q_ids[keep_q], q_mat[keep_q], q_norm[keep_q]
+    if c_ids.size == 0 or q_ids.size == 0:
+        return pd.DataFrame(
+            {
+                "query_id": np.empty(0, np.int64),
+                "nbr_id": np.empty(0, np.int64),
+                "cosine": np.empty(0, np.float64),
+            }
+        )
+    sims = (c_mat @ q_mat.T) / c_norm[:, None] / q_norm[None, :]
+    if not include_self:
+        sims[c_ids[:, None] == q_ids[None, :]] = -np.inf
+    kk = min(k, sims.shape[0])
+    # each query's kk-th best score (a partition, not a full sort).
+    # Every row tied with it is kept too: a cut at exactly kk rows
+    # would keep an arbitrary one of the tied rows, and the caller's
+    # window could then not break the tie by the lower nbr_id
+    kth = -np.partition(-sims, kk - 1, axis=0)[kk - 1]
+    rows, cols = np.nonzero(sims >= kth[None, :])
+    return pd.DataFrame(
+        {
+            "query_id": q_ids[cols],
+            "nbr_id": c_ids[rows],
+            "cosine": sims[rows, cols],
+        }
+    )
 
 
 def ann_topk_gemm(
@@ -43,62 +96,24 @@ def ann_topk_gemm(
     constraint as a broadcast join).
     """
     q_rows = queries.select(id_col, vec_col).collect()
-    if not q_rows:
-        schema = "query_id long, nbr_id long, cosine double, rank int"
-        return corpus.sparkSession.createDataFrame([], schema)
     q_ids = np.array([r[0] for r in q_rows])
     q_mat = np.asarray([r[1] for r in q_rows], dtype=np.float64)
-    q_norm = np.linalg.norm(q_mat, axis=1)
-    # zero-norm vectors have undefined cosine: drop them from both
-    # sides, matching cosine_topk (and the DuckDB oracle) exactly
-    keep_q = q_norm > 0
-    q_ids, q_mat, q_norm = q_ids[keep_q], q_mat[keep_q], q_norm[keep_q]
-    if q_ids.size == 0:
+    if not q_rows or not (np.linalg.norm(q_mat, axis=1) > 0).any():
         schema = "query_id long, nbr_id long, cosine double, rank int"
         return corpus.sparkSession.createDataFrame([], schema)
 
     def shard_topk(batches):
         for pdf in batches:
-            ids = pdf[id_col].to_numpy()
-            mat = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
-            if mat.size == 0:
-                continue
-            norms = np.linalg.norm(mat, axis=1)
-            keep = norms > 0
-            if not keep.all():
-                ids, mat, norms = ids[keep], mat[keep], norms[keep]
-            if mat.shape[0] == 0:
-                continue
-            sims = (mat @ q_mat.T) / norms[:, None] / q_norm[None, :]
-            if not include_self:
-                sims[ids[:, None] == q_ids[None, :]] = -np.inf
-            kk = min(k, sims.shape[0])
-            # local top-k per query (argpartition = heap, not full sort)
-            top = np.argpartition(-sims, kk - 1, axis=0)[:kk]
-            out_q, out_n, out_s = [], [], []
-            for j in range(sims.shape[1]):
-                rows = top[:, j]
-                out_q.extend([q_ids[j]] * len(rows))
-                out_n.extend(ids[rows])
-                out_s.extend(sims[rows, j])
-            yield pd.DataFrame(
-                {"query_id": out_q, "nbr_id": out_n, "cosine": out_s}
+            yield block_topk(
+                pdf[id_col].to_numpy(),
+                np.asarray(pdf[vec_col].tolist(), dtype=np.float64),
+                q_ids,
+                q_mat,
+                k,
+                include_self,
             )
 
     local = corpus.select(id_col, vec_col).mapInPandas(
         shard_topk, schema="query_id long, nbr_id long, cosine double"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("nbr_id").asc()
-    )
-    return (
-        local.filter(F.col("cosine") != float("-inf"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "nbr_id",
-            F.round("cosine", 6).alias("cosine"),
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
+    return rank_topk(local.filter(F.col("cosine") != float("-inf")), k)

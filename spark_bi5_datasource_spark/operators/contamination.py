@@ -1,18 +1,17 @@
-"""Cross-source contamination matrix over ARBITRARY source counts —
-the multi-word generalization of the ≤64-source bitmask rollup
-(plans/round11_ops.text_contamination_matrix).
+"""Cross-source contamination matrix over ARBITRARY source counts,
+and the one implementation behind the catalog's
+``plans/round11_ops.text_contamination_matrix`` (``words=1``).
 
-The single-word kernel folds every shingle to ONE 64-bit source
-bitmask (`bit_or(1 << idx)`), then runs all pair expansion on the
-tiny per-mask count frame.  Its in-plan `assert_true(idx < 64)`
-enforces the word width; corpora with more sources use THIS operator:
-source index idx maps to word `idx div 64`, bit `idx % 64`, the
-per-shingle aggregate becomes `words` parallel `bit_or` columns (one
-HashAggregate, same single corpus-sized exchange), and the per-mask
-collapse keys on the mask TUPLE.  Set bits explode to global indexes
-`w*64 + b`, so the pair expansion and containment arithmetic are
-unchanged.  words=1 reproduces the catalog entry exactly (pinned by
-pytest); any words*64 ≥ |sources| is valid.
+Every shingle folds to a source bitmask (`bit_or(1 << idx)`), and all
+pair expansion runs on the tiny per-mask count frame.  Source index
+idx maps to word `idx div 64`, bit `idx % 64`; the per-shingle
+aggregate is `words` parallel `bit_or` columns (one HashAggregate, one
+corpus-sized exchange), and the per-mask collapse keys on the mask
+TUPLE.  Set bits explode to global indexes `w*64 + b`, so the pair
+expansion and containment arithmetic do not depend on `words`.  An
+in-plan `assert_true(idx < words*64)` fails the job when there are
+more sources than bits; without it a source past the last word would
+silently drop out of every mask.
 
 `words` is an explicit caller parameter, NOT inferred: inference
 would need a distinct-count over the corpus at plan-build time — a

@@ -27,10 +27,10 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd  # module-level: pandas_udf type hints must resolve
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .similarity import _DOT, with_norm
+from .similarity import _DOT, rank_topk, with_norm
 
 __all__ = ["kmeans_centroids", "ivf_topk"]
 
@@ -171,11 +171,4 @@ def ivf_topk(
         "cosine",
         F.expr(_DOT.format(a="__cv", b="__qv")) / (F.col("__cn") * F.col("__qn")),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("nbr_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "nbr_id", F.round("cosine", 6).alias("cosine"), "rank")
-    )
+    return rank_topk(scored, k)

@@ -12,8 +12,9 @@ O(n²) pairing fully distributed with the block-pair plan:
    (i, j) for all j as the "corpus" side, block-j rows carry (i, j)
    for all i as the "query" side.  One shuffle of 2·B·n rows
    co-locates every pair.
-3. ``applyInPandas`` per pair key: one NumPy GEMM (corpus-block ×
-   query-blockᵀ), per-query local top-k via ``argpartition``.
+3. ``applyInPandas`` per pair key: ``block_topk``, the NumPy kernel
+   ``ann_topk_gemm`` runs per shard (one GEMM, corpus-block ×
+   query-blockᵀ, per-query local top-k via ``argpartition``).
 4. A global per-query window merges the B partial top-k lists into
    the exact graph (ties broken by neighbor id — deterministic).
 
@@ -31,8 +32,11 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .ann_shard import block_topk
+from .similarity import rank_topk
 
 __all__ = ["knn_graph"]
 
@@ -68,54 +72,18 @@ def knn_graph(
         queries.select("_i", "_j", "_role", "_id", "_v")
     )
 
-    kk = k
-
     def pair_topk(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         c = pdf[pdf["_role"] == 0]
         q = pdf[pdf["_role"] == 1]
-        if c.empty or q.empty:
-            return pd.DataFrame(
-                {"query_id": [], "nbr_id": [], "cosine": []}
-            ).astype({"query_id": "int64", "nbr_id": "int64", "cosine": "float64"})
-        c_ids = c["_id"].to_numpy()
-        q_ids = q["_id"].to_numpy()
-        cm = np.asarray(c["_v"].tolist(), dtype=np.float64)
-        qm = np.asarray(q["_v"].tolist(), dtype=np.float64)
-        cn = np.linalg.norm(cm, axis=1)
-        qn = np.linalg.norm(qm, axis=1)
-        ck, qk = cn > 0, qn > 0
-        c_ids, cm, cn = c_ids[ck], cm[ck], cn[ck]
-        q_ids, qm, qn = q_ids[qk], qm[qk], qn[qk]
-        if c_ids.size == 0 or q_ids.size == 0:
-            return pd.DataFrame(
-                {"query_id": [], "nbr_id": [], "cosine": []}
-            ).astype({"query_id": "int64", "nbr_id": "int64", "cosine": "float64"})
-        sims = (cm @ qm.T) / cn[:, None] / qn[None, :]
-        sims[c_ids[:, None] == q_ids[None, :]] = -np.inf  # self-pairs
-        top = min(kk, sims.shape[0])
-        part = np.argpartition(-sims, top - 1, axis=0)[:top]
-        out_q, out_n, out_s = [], [], []
-        for col in range(sims.shape[1]):
-            rows = part[:, col]
-            out_q.extend([q_ids[col]] * len(rows))
-            out_n.extend(c_ids[rows])
-            out_s.extend(sims[rows, col])
-        return pd.DataFrame({"query_id": out_q, "nbr_id": out_n, "cosine": out_s})
+        return block_topk(
+            c["_id"].to_numpy(),
+            np.asarray(c["_v"].tolist(), dtype=np.float64),
+            q["_id"].to_numpy(),
+            np.asarray(q["_v"].tolist(), dtype=np.float64),
+            k,
+        )
 
     local = tagged.groupBy("_i", "_j").applyInPandas(
         pair_topk, schema="query_id long, nbr_id long, cosine double"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("nbr_id").asc()
-    )
-    return (
-        local.filter(F.col("cosine") != float("-inf"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "nbr_id",
-            F.round("cosine", 6).alias("cosine"),
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
+    return rank_topk(local.filter(F.col("cosine") != float("-inf")), k)

@@ -48,7 +48,7 @@ import pandas as pd  # module-level: mapInPandas type hints must resolve
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .similarity import _DOT, with_norm
+from .similarity import _DOT, rank_topk, with_norm
 
 __all__ = ["pq_train", "pq_topk"]
 
@@ -218,11 +218,4 @@ def pq_topk(
             / (F.col("__cn") * F.col("__qn")),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("nbr_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "nbr_id", F.round("cosine", 6).alias("cosine"), "rank")
-    )
+    return rank_topk(scored, k)

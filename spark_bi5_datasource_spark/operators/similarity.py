@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "with_norm",
+    "rank_topk",
     "cosine_topk",
     "cosine_radius",
     "rp_signature",
@@ -38,6 +39,19 @@ def with_norm(df: DataFrame, vec_col: str, out_col: str = "norm") -> DataFrame:
     """L2 norm as a JVM-side expression (cast to double first)."""
     return df.withColumn("__v", F.expr(f"transform({vec_col}, x -> cast(x AS double))")).withColumn(
         out_col, F.expr(_NORM.format(v="__v"))
+    )
+
+
+def rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """The last step of every neighbor tier: per ``query_id``, the
+    ``k`` best rows by ``cosine`` descending, ties to the lower
+    ``nbr_id``.  Returns ``query_id, nbr_id, cosine`` (rounded to 6
+    places) and ``rank`` (int, 1..k)."""
+    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("nbr_id").asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "nbr_id", F.round("cosine", 6).alias("cosine"), "rank")
     )
 
 
@@ -67,12 +81,7 @@ def cosine_topk(
         "cosine",
         F.expr(_DOT.format(a="__cv", b="__qv")) / (F.col("__cn") * F.col("__qn")),
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("nbr_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "nbr_id", F.round("cosine", 6).alias("cosine"), "rank")
-    )
+    return rank_topk(scored, k)
 
 
 def cosine_radius(
@@ -187,13 +196,7 @@ def rp_lsh_topk(
         "cosine",
         F.expr(_DOT.format(a="__cv", b="__qv")) / (F.col("__cn") * F.col("__qn")),
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("nbr_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "nbr_id", F.round("cosine", 6).alias("cosine"), "rank")
-        .distinct()
-    )
+    return rank_topk(scored, k).distinct()
 
 
 def cosine_pairs(

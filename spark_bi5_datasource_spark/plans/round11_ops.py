@@ -10,11 +10,8 @@ pipeline ops (r6 verdict ask #6):
 * cross-table contamination matrix — text_decontaminate generalized
   from one (train, bench) split to the full per-source-pair 3-gram
   overlap report: the train/eval leakage audit a corpus runs before
-  any split is trusted.  Pair generation is the basket pattern
-  (collect_set per shingle + array-HOF unfold, round4_ops.py
-  _copurchase_pairs): the shingle→sources inverted index never
-  self-joins, and the per-shingle fan-out is bounded by
-  C(|sources|, 2).
+  any split is trusted.  The entry calls
+  operators/contamination.contamination_matrix with one mask word.
 
 Oracle policy unchanged: counts BIGINT, derived floats in half-up
 integer ppm, deterministic total orders.
@@ -129,126 +126,13 @@ def text_contamination_matrix(spark: SparkSession, sf: str) -> DataFrame:
     (source → split) assignment is trusted.  Zero-overlap pairs are
     absent by construction (the report is the overlap set).
 
-    Scale shape (r10 bitmask rollup —
-    48.3 → 24.7 s at x100, landing ahead of the same-window DuckDB
-    leg): the ONLY corpus-sized work is one integer aggregation —
-    each gram folds to a ≤64-bit SOURCE BITMASK via bit_or(1 << idx)
-    (plain codegen HashAggregate; the r8 shape paid TWO full-size
-    exchanges — a (source, shingle) distinct and a collect_set
-    ObjectHashAggregate inverted index — over string keys).  The mask
-    frame then collapses to per-mask counts (≤2^|sources| rows,
-    thousands in practice), and ALL pair expansion, intersection
-    counting and per-source sizes ride that tiny frame — the pair
-    explode that used to run per-gram runs per-MASK.  The source→idx
-    dim is ≤|sources| rows (broadcast everywhere; row_number over the
-    distinct is a bounded SinglePartition, the day-bitmask kernel
-    precedent).  Contract: ≤64 sources per run, ENFORCED in-plan by
-    the assert on the idx column below (r10 ADVICE) — corpora with
-    more sources use the multi-word generalization
-    ``operators.contamination.contamination_matrix(words=k)``, which
-    widens the mask to k 64-bit bit_or columns in the same single
-    aggregate (words=1 reproduces this entry exactly; pytest-pinned
-    on a 70-source frame vs brute force).
-    Exact: gram keys stay strings; only set REPRESENTATION changed."""
-    from pyspark.sql import Window
+    The catalog entry is ``operators.contamination.contamination_matrix``
+    with one 64-bit mask word (the r10 bitmask rollup: 48.3 → 24.7 s
+    at x100): ≤64 sources, enforced in-plan; the operator's docstring
+    has the plan shape."""
+    from ..operators.contamination import contamination_matrix
 
-    from ..operators.dedup import with_shingles
-
-    docs = t(spark, sf, "documents").select("source", "text")
-    raw = with_shingles(docs, "text", 3).select(
-        "source", F.explode("shingles").alias("shingle")
-    )
-    sdim = (
-        docs.select("source")
-        .distinct()
-        .withColumn(
-            "idx",
-            F.row_number().over(Window.partitionBy().orderBy("source")) - 1,
-        )
-        # enforce the ≤64-source contract IN-PLAN: shiftleft takes the
-        # count mod 64 (Java shift semantics), so a 65th source would
-        # silently alias onto bit 0 and corrupt every overlap count.
-        # assert_true rides the live idx column (not a prunable extra
-        # projection) over the ≤|sources|-row dim — essentially free —
-        # and fails the job loudly instead.  Corpora with more
-        # sources shard the matrix by source group (masks OR-compose).
-        .withColumn(
-            "idx",
-            F.when(
-                F.assert_true(
-                    F.col("idx") < F.lit(64),
-                    F.lit(
-                        "text_contamination_matrix: >64 distinct"
-                        " sources — shard by source group (bitmask"
-                        " bits would alias mod 64)"
-                    ),
-                ).isNull(),
-                F.col("idx"),
-            ),
-        )
-    )
-    masks = (
-        raw.join(F.broadcast(sdim), "source")
-        .groupBy("shingle")
-        .agg(F.expr("bit_or(shiftleft(1L, idx))").alias("mask"))
-        .groupBy("mask")
-        .agg(F.count("*").cast("bigint").alias("cnt"))
-    )
-    bits = "filter(sequence(0, 63), b -> (mask >> b) & 1 = 1)"
-    inter = (
-        masks.select(
-            "cnt",
-            F.explode(
-                F.expr(
-                    f"flatten(transform({bits}, (x, i) ->"
-                    f" transform(slice({bits}, i + 2, size({bits})),"
-                    " y -> struct(x AS ia, y AS ib))))"
-                )
-            ).alias("p"),
-        )
-        .groupBy("p.ia", "p.ib")
-        .agg(F.sum("cnt").cast("bigint").alias("n_common"))
-        .join(
-            F.broadcast(
-                sdim.select(F.col("idx").alias("ia"), F.col("source").alias("sa"))
-            ),
-            "ia",
-        )
-        .join(
-            F.broadcast(
-                sdim.select(F.col("idx").alias("ib"), F.col("source").alias("sb"))
-            ),
-            "ib",
-        )
-        .select("sa", "sb", "n_common")
-    )
-    sz = (
-        masks.select("cnt", F.explode(F.expr(bits)).alias("idx"))
-        .groupBy("idx")
-        .agg(F.sum("cnt").cast("bigint").alias("sz"))
-        .join(F.broadcast(sdim), "idx")
-        .select("source", "sz")
-    )
-    za = sz.select(F.col("source").alias("sa"), F.col("sz").alias("sz_a"))
-    zb = sz.select(F.col("source").alias("sb"), F.col("sz").alias("sz_b"))
-    return (
-        inter.join(F.broadcast(za), "sa")
-        .join(F.broadcast(zb), "sb")
-        .select(
-            F.col("sa").alias("source_a"),
-            F.col("sb").alias("source_b"),
-            "n_common",
-            "sz_a",
-            "sz_b",
-            F.expr("CAST(n_common * 1000000 div sz_a AS BIGINT)").alias(
-                "contain_a_ppm"
-            ),
-            F.expr("CAST(n_common * 1000000 div sz_b AS BIGINT)").alias(
-                "contain_b_ppm"
-            ),
-        )
-        .orderBy("source_a", "source_b")
-    )
+    return contamination_matrix(t(spark, sf, "documents"), words=1)
 
 
 # ---------------------------------------- winnowing fingerprints

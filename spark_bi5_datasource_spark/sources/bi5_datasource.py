@@ -19,7 +19,11 @@ salvania/BI5DataSource.scala, "DS24") Spark-first:
     and ts range predicates prune the driver-side file list before any
     task is launched.  The reference reads every file on every query
     (no pushdown interfaces, DS24:12-17).  Filters are also left for
-    Spark to re-apply, so pruning is conservative and exact.
+    Spark to re-apply, so a kept file never adds a wrong row.  The
+    ``ts`` prune is NOT exact, though: it assumes every row lies in its
+    file's hour, but the codec accepts any u32 ``ms``, which can put a
+    row up to 49.7 days past that hour.  A ``ts >=`` bound past a file's
+    hour drops the file and such rows with it (open in ROADMAP.md).
   - **vectorized decode**: each file decodes NumPy→Arrow in one shot
     and ``read()`` yields Arrow RecordBatches, instead of the
     reference's row-at-a-time JVM iterator (DS24:150-194).
@@ -136,6 +140,30 @@ def local_path(path: str) -> str:
     return path
 
 
+def bi5_options(options, must_exist: bool = True) -> tuple[str, int, int]:
+    """Validate the ``path``, ``digits`` and ``january`` options with
+    the reference's exact messages, in its order (DS24:31-50); returns
+    ``(path, digits, january)`` with a ``file:`` URI path normalized.
+    The readers need the path to exist; the writer, which creates the
+    tree, passes ``must_exist=False``."""
+    path = options.get("path")
+    if path is None:
+        raise ValueError("'path' must be specified for BI5 data.")
+    path = local_path(path)
+    if must_exist and not os.path.exists(path):
+        raise ValueError("Invalid path")
+    digits_raw = options.get("digits")
+    if digits_raw is None:
+        raise ValueError("'digits' should be the digits for the currency")
+    digits = int(digits_raw)
+    if digits < 0:
+        raise ValueError("digits cannot be smaller than 0")
+    january = int(options.get("january", "0"))
+    if january < 0 or january > 1:
+        raise ValueError("january can only be 0 or 1")
+    return path, digits, january
+
+
 def _to_epoch_us(value) -> int:
     """Convert a pushed literal (datetime / int micros) to epoch micros."""
     if isinstance(value, datetime):
@@ -150,26 +178,7 @@ class Bi5Scan:
     batch reader and the streaming reader."""
 
     def __init__(self, options) -> None:
-        # Mirrors createReader validation incl. exact messages (DS24:31-50).
-        path = options.get("path")
-        if path is None:
-            raise ValueError("'path' must be specified for BI5 data.")
-        path = local_path(path)
-        if not os.path.exists(path):
-            raise ValueError("Invalid path")
-        digits_raw = options.get("digits")
-        if digits_raw is None:
-            raise ValueError("'digits' should be the digits for the currency")
-        digits = int(digits_raw)
-        if digits < 0:
-            raise ValueError("digits cannot be smaller than 0")
-        january = int(options.get("january", "0"))
-        if january < 0 or january > 1:
-            raise ValueError("january can only be 0 or 1")
-
-        self.path = path
-        self.digits = digits
-        self.january = january
+        self.path, self.digits, self.january = bi5_options(options)
         # Extra driver-side prune knobs (comma-separated tickers, ISO
         # instants) usable even without a WHERE clause.
         self.opt_tickers = {
@@ -222,9 +231,11 @@ class Bi5Reader(Bi5Scan, DataSourceReader):
         """Prune the file list from ticker/ts predicates.
 
         The path encodes ticker and the file's hour, so these predicates
-        translate to file-list pruning (hour granularity for ts — kept
-        conservative).  All filters are returned for Spark to re-apply,
-        so correctness never depends on the pruning.
+        translate to file-list pruning at hour granularity for ts.  All
+        filters are returned for Spark to re-apply, so a kept file never
+        adds a wrong row; but a file holding a row whose ``ms`` runs
+        past its hour can be dropped although the row matches (see the
+        module docstring).
         """
         for f in filters:
             try:
@@ -243,7 +254,7 @@ class Bi5Reader(Bi5Scan, DataSourceReader):
                         self._pushed_ts_max_us = hi
             except Exception:
                 pass  # never let pruning break planning
-        return iter(filters)  # Spark re-applies everything (exact semantics)
+        return iter(filters)  # Spark re-applies everything
 
     def _intersect_tickers(self, tickers: set[str]) -> None:
         if self._pushed_tickers is None:

@@ -19,9 +19,12 @@ local wall time.
 Because the bi5 naming scheme has no room for part-files, **all rows
 of one (ticker, hour) must land in one task** — use
 ``write_bi5_tree`` (which repartitions by (ticker, hour) first), or
-pre-partition yourself.  Cross-task collisions are detected at commit
-time via the tasks' WriterCommitMessages and fail the job rather than
-silently truncating data.
+pre-partition yourself.  ``commit()`` compares the files the tasks of
+one job report and fails the job when two tasks wrote the same hour,
+but only after both have written it, so one task's rows are already
+lost.  Each hour file is opened with ``"wb"``: a later job with rows
+for an hour already on disk replaces that file without error
+(open in ROADMAP.md).
 """
 
 from __future__ import annotations
@@ -37,10 +40,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql.datasource import DataSourceArrowWriter, WriterCommitMessage
 
 from .bi5_codec import RECORD_DTYPE
+from .bi5_datasource import HOUR_US, bi5_options
 
 __all__ = ["Bi5Writer", "write_bi5_tree"]
 
-_HOUR_US = 3_600_000_000
+# LZMA effort; decoders accept any preset.  On tick payloads preset 1
+# measured 7x faster than the library default (6) and slightly smaller
+# (repetitive fixed-width records).
+LZMA_PRESET = 1
 
 
 @dataclass
@@ -50,26 +57,9 @@ class Bi5CommitMessage(WriterCommitMessage):
 
 class Bi5Writer(DataSourceArrowWriter):
     def __init__(self, options) -> None:
-        path = options.get("path")
-        if path is None:
-            raise ValueError("'path' must be specified for BI5 data.")
-        digits_raw = options.get("digits")
-        if digits_raw is None:
-            raise ValueError("'digits' should be the digits for the currency")
-        self.digits = int(digits_raw)
-        if self.digits < 0:
-            raise ValueError("digits cannot be smaller than 0")
-        self.january = int(options.get("january", "0"))
-        if self.january < 0 or self.january > 1:
-            raise ValueError("january can only be 0 or 1")
-        # LZMA effort: decoders accept any preset; on tick payloads
-        # preset 1 measured 7x faster than the library default (6) AND
-        # slightly smaller (repetitive fixed-width records), so it is
-        # the default — raise via option for archival re-compression
-        self.preset = int(options.get("compression.preset", "1"))
-        if self.preset < 0 or self.preset > 9:
-            raise ValueError("compression.preset must be 0..9")
-        self.path = path
+        self.path, self.digits, self.january = bi5_options(
+            options, must_exist=False
+        )
 
     @staticmethod
     def _epoch_us(ts_col) -> np.ndarray:
@@ -118,7 +108,7 @@ class Bi5Writer(DataSourceArrowWriter):
                         f"(got {col[vc].null_count} nulls in a batch)"
                     )
             ts_us = self._epoch_us(col["ts"])
-            hour_us = (ts_us // _HOUR_US) * _HOUR_US
+            hour_us = (ts_us // HOUR_US) * HOUR_US
             chunks.append(
                 pd.DataFrame(
                     {
@@ -178,7 +168,7 @@ class Bi5Writer(DataSourceArrowWriter):
             with open(full, "wb") as f:
                 f.write(
                     lzma.compress(
-                        arr.tobytes(), format=lzma.FORMAT_ALONE, preset=self.preset
+                        arr.tobytes(), format=lzma.FORMAT_ALONE, preset=LZMA_PRESET
                     )
                 )
             written.append(rel)

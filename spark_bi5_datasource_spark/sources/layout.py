@@ -275,28 +275,6 @@ def validate_bucketed(
     )
 
 
-def _footer_rows(path: str) -> int:
-    """Exact row count of a parquet tree from file-footer metadata —
-    no Spark job, no data read beyond the footers.  Dot-prefixed
-    subdirectories are pruned to MATCH Spark's reader (which hides
-    them): counting a leftover ``.compact_stage_*`` dir that Spark
-    ignores would make the compaction row guard disagree with what a
-    scan actually sees."""
-    import pyarrow.parquet as pq
-
-    total = 0
-    for root, dirs, files in os.walk(path):
-        dirs[:] = sorted(
-            d for d in dirs if not (d.startswith(".") or d.startswith("_"))
-        )
-        for f in sorted(files):
-            if f.endswith(".parquet") and not f.startswith("."):
-                total += pq.ParquetFile(
-                    os.path.join(root, f)
-                ).metadata.num_rows
-    return total
-
-
 def compact_bucketed(
     spark,
     table: str,
@@ -304,124 +282,23 @@ def compact_bucketed(
     key: str | None = None,
     buckets: int | None = None,
     sort: bool | None = None,
-    keep_old: bool = False,
 ) -> int:
     """Compact a bucketed table back to ONE file per bucket after
     streaming appends have fragmented it (each appended micro-batch
-    adds up to ``buckets`` files).
-
-    A generic directory compactor (operators/sharding.compact_parquet)
-    would merge files ACROSS buckets and silently corrupt the
-    bucket→file mapping the exchange-free join contract depends on —
-    bucketed compaction must re-run the bucketed WRITE path.  This
-    rewrites the table snapshot through ``write_bucketed`` into a
-    staging directory (same key, same bucket count — the rewrite is
-    one hash repartition), then swaps directories and re-registers.
-
-    Concurrency contract: compaction assumes NO concurrent readers of
-    the pre-compaction snapshot — an in-flight query holding the old
-    DataFrame will fail with FileNotFoundException once the old files
-    are removed.  Pass ``keep_old=True`` to leave the pre-compaction
-    snapshot at ``<path>.old`` for the caller to purge after draining
-    readers (the caller owns the eventual ``shutil.rmtree``).
-
-    Crash safety: the swap is two directory renames; a crash between
-    them leaves both snapshots intact on disk (``<path>.old`` = full
-    pre-compaction data, ``<path>.compacting`` = full compacted data)
-    and the NEXT ``compact_bucketed`` call on the same path
-    auto-recovers by restoring ``.old`` before starting over.  A
-    row-count guard (parquet footer metadata, no scan) refuses the
-    swap when the staging rewrite does not hold exactly the
-    snapshot's rows — a partial or corrupt rewrite can never replace
-    good data.  The
-    catalog entry for ``table`` is dropped only AFTER the data swap
-    completes, so at every crash point either the directory or the
-    prior registration is recoverable.  Returns the data-file count
-    after compaction (== buckets touched)."""
-    import shutil
-
-    old = f"{path}.old"
-    # recover from a crash mid-swap in a PRIOR run: path missing but
-    # the pre-compaction snapshot survives at .old — restore it and
-    # redo the compaction from scratch
-    if not os.path.exists(path) and os.path.exists(old):
-        os.rename(old, path)
-    # finish/undo any interrupted SELECTIVE cycle first: a crashed
-    # compact_buckets_selective can leave a bucket holding both its
-    # compacted file and the retired originals — reading that state
-    # here would bake the duplicate rows into the full rewrite (and
-    # pass the row guard, which counts the same duplicates)
-    _recover_selective(path, spark=spark, table=table)
-
-    # parameter consistency, same contract as register_bucketed: the
-    # sidecar wins; contradicting explicit params raise rather than
-    # silently re-bucketing the table away from its co-located twins
-    spec = read_bucket_spec(path)
-    if spec is not None:
-        for name, given in (("key", key), ("buckets", buckets),
-                            ("sort", sort)):
-            if given is not None and given != spec[name]:
-                raise ValueError(
-                    f"compact_bucketed: {name}={given!r} contradicts "
-                    f"_bucket_spec.json ({name}={spec[name]!r} at "
-                    f"{path}) — compacting with wrong bucketing would "
-                    "silently change the table's layout"
-                )
-        key = spec["key"] if key is None else key
-        buckets = spec["buckets"] if buckets is None else buckets
-        sort = spec["sort"] if sort is None else sort
-    else:
-        if key is None or buckets is None:
-            raise ValueError(
-                "compact_bucketed: no _bucket_spec.json at "
-                f"{path} — key= and buckets= must be given explicitly"
-            )
-        sort = True if sort is None else sort
-
-    tmp_table = f"{table}_compacting"
-    staging = f"{path}.compacting"
-    shutil.rmtree(staging, ignore_errors=True)
-    spark.sql(f"DROP TABLE IF EXISTS {tmp_table}")
-    # read the DIRECTORY, not the table: the bucketed scan already
-    # reports HashPartitioning(key, buckets), so EnsureRequirements
-    # elides write_bucketed's repartition and every fragment file
-    # passes through as its own task → its own output file (measured:
-    # a 19-file table "compacted" to 19 files).  A plain parquet scan
-    # carries no partitioning, forcing the real one-task-per-bucket
-    # shuffle.
-    write_bucketed(
-        spark.read.parquet(path), staging, tmp_table, key, buckets,
-        sort=sort,
+    adds up to ``buckets`` files): ``compact_buckets_selective`` with
+    ``min_files=1``, so every bucket goes through the same
+    manifest-safe swap and per-bucket row guard.  A generic directory
+    compactor (operators/sharding.compact_parquet) would merge files
+    ACROSS buckets and silently corrupt the bucket→file mapping the
+    exchange-free join contract depends on.  Returns the data-file
+    count after compaction."""
+    compact_buckets_selective(
+        spark, table, path, min_files=1, key=key, buckets=buckets, sort=sort
     )
-    # pre-swap guard: the rewrite must hold exactly the snapshot's
-    # rows before it may REPLACE the snapshot.  Parquet footer
-    # metadata only (pyarrow num_rows per file) — no scan job, so the
-    # guard is ~free even on a TB-sized table
-    n_src, n_stage = _footer_rows(path), _footer_rows(staging)
-    if n_src != n_stage:
-        spark.sql(f"DROP TABLE {tmp_table}")
-        raise RuntimeError(
-            f"compact_bucketed: staging rewrite holds {n_stage} rows "
-            f"but the table snapshot holds {n_src} — refusing to swap "
-            f"(staging left at {staging} for inspection)"
-        )
-    # external tables: DROP removes metadata only, files stay put
-    spark.sql(f"DROP TABLE {tmp_table}")
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(path, old)
-    os.rename(staging, path)
-    # catalog swap only after the data swap is complete: a crash
-    # before this line leaves the old registration pointing at a
-    # fully-populated ``path`` (now holding the compacted snapshot,
-    # same rows), never at a hole
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    register_bucketed(spark, path, table, key, buckets, sort=sort)
-    if not keep_old:
-        shutil.rmtree(old, ignore_errors=True)
     return sum(
         1
         for f in os.listdir(path)
-        if f.endswith(".parquet") or f.startswith("part-")
+        if f.startswith("part-") and f.endswith(".parquet")
     )
 
 
@@ -435,7 +312,7 @@ def compact_buckets_selective(
     sort: bool | None = None,
 ) -> dict[int, int]:
     """Compact ONLY the buckets fragmented into ``min_files``-or-more
-    files — the incremental counterpart of ``compact_bucketed``.
+    files; ``min_files=1`` (``compact_bucketed``) rewrites every bucket.
 
     A streaming append fragments just the buckets its batch touched;
     rewriting the WHOLE table per maintenance cycle is O(table) when
@@ -467,9 +344,10 @@ def compact_buckets_selective(
     deletes) or back (not visible: drop the staging) — every crash
     point lands on exactly-the-old or exactly-the-new bucket contents.
     A footer-metadata row-count guard refuses the swap when staging
-    does not hold exactly the fragmented buckets' rows.  Like
-    ``compact_bucketed``, the visible-duplicate window between rename
-    and deletes assumes no concurrent readers.
+    does not hold exactly the fragmented buckets' rows.  The
+    visible-duplicate window between rename and deletes assumes no
+    concurrent readers, and a reader holding the pre-compaction file
+    list fails once the retired files are deleted.
 
     Parameters default from the ``_bucket_spec.json`` sidecar.
     Returns ``{bucket_id: file_count_before}`` for compacted buckets
@@ -482,8 +360,9 @@ def compact_buckets_selective(
 
     spec = read_bucket_spec(path)
     if spec is not None:
-        # same contract as register_bucketed/compact_bucketed: the
-        # sidecar wins; contradicting explicit params raise
+        # same contract as register_bucketed: the sidecar wins;
+        # contradicting explicit params raise rather than silently
+        # re-bucketing the table away from its co-located twins
         for name, given in (("key", key), ("buckets", buckets),
                             ("sort", sort)):
             if given is not None and given != spec[name]:

@@ -5,8 +5,11 @@ is the natural Structured Streaming extension (SURVEY §2 Tier C "bi5
 streaming scan").  Micro-batch model:
 
 * offset = the set of files already processed, tracked as a sorted
-  list in the offset JSON (hour files are immutable once written —
-  Dukascopy trees are append-only, so set-difference is exact);
+  list in the offset JSON.  Set-difference is exact only while no
+  processed hour file is rewritten: true of a Dukascopy download, but
+  not of this repo's own writer, which replaces an existing hour file
+  without error (open in ROADMAP.md).  A rewritten path is never re-read,
+  so its new rows are missed;
 * each micro-batch plans its new files with the batch source's
   planner (``plan_partitions``: grouped by top-level entry, cut under
   Spark's byte budget) and shares the batch reader's option
@@ -77,12 +80,14 @@ def stream_bi5_writer(stream_df, path: str, digits: int, january: int = 0):
 
     Each batch routes through ``write_bi5_tree`` (one task per
     (ticker, hour) file).  Delivery is at-least-once per Structured
-    Streaming's foreachBatch contract; the bi5 writer's commit-time
-    collision detection turns a replayed batch that would re-emit an
-    existing hour file into a loud failure instead of silent
-    duplication, so batches aligned to hour boundaries are
-    effectively idempotent.  Returns the DataStreamWriter (caller
-    picks trigger/checkpoint and starts it).
+    Streaming's foreachBatch contract.  Each hour file is opened with
+    ``"wb"``, so a batch with rows for an hour already on disk, a
+    replay or a later batch alike, replaces that file without error:
+    a replay rewrites the same rows, but a later batch's rows for the
+    same hour replace the earlier ones (open in ROADMAP.md).  The writer's
+    commit-time check only compares the tasks of one job, after they
+    have written.  Returns the DataStreamWriter (caller picks
+    trigger/checkpoint and starts it).
     """
     from ..sources.bi5_writer import write_bi5_tree
 

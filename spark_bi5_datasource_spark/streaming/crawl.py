@@ -19,6 +19,11 @@ loop is |Δ|·|C| per batch forever, and a replayed batch converges via
 the ``_applied_batch`` marker (the upsert_sink exactly-once
 discipline).
 
+One loop serves both writers: ``stream_corpus_build_writer`` puts an
+optional quality filter and benchmark decontamination in front of the
+dedup, and ``stream_crawl_dedup_writer`` is that writer with both
+filters off.
+
 Correctness is pinned by tests/test_streaming.py: an availableNow
 replay over N increment files (maxFilesPerTrigger=1) must leave
 exactly the corpus the batch-mode fold of ``minhash_delta_dedup``
@@ -50,7 +55,8 @@ def stream_crawl_dedup_writer(
     checkpoint_dir: str | None = None,
 ):
     """Wire a streaming document frame into the crawl-dedup loop;
-    returns the started ``StreamingQuery``.
+    returns the started ``StreamingQuery``.  This is
+    ``stream_corpus_build_writer`` with both filter stages off.
 
     ``corpus_dir``/``index_dir`` may start empty (the first batch
     seeds both) or pre-seeded by a batch build
@@ -58,49 +64,18 @@ def stream_crawl_dedup_writer(
     duplicates both survive — the delta contract: dedup is against
     the standing corpus, not within the increment (an in-batch exact
     pass can be composed upstream with ``exact_dedup``)."""
-
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        marker = os.path.join(corpus_dir, f"_applied_batch_{batch_id}")
-        if os.path.exists(marker):
-            return
-        batch_df = batch_df.select(id_col, text_col)
-        have_corpus = any(
-            f.endswith(".parquet")
-            for _, _, fs in os.walk(corpus_dir)
-            for f in fs
-        )
-        if have_corpus:
-            corpus = spark.read.parquet(os.path.join(corpus_dir, "docs"))
-            stored = spark.read.parquet(os.path.join(index_dir, "bands"))
-            kept = minhash_delta_dedup(
-                corpus,
-                batch_df,
-                id_col,
-                text_col,
-                n=n,
-                num_perm=num_perm,
-                bands=bands,
-                threshold=threshold,
-                corpus_index=stored,
-            )
-        else:
-            kept = batch_df
-        # localCheckpoint: cut the lineage so the two writes below
-        # compute the dedup exactly once (and don't re-read the
-        # corpus dirs they are about to append to)
-        kept = kept.localCheckpoint(eager=True)
-        # index-before-docs crash ordering — see stream_corpus_build_writer
-        minhash_band_index(
-            kept, id_col, text_col, n, num_perm, bands
-        ).write.mode("append").parquet(os.path.join(index_dir, "bands"))
-        kept.write.mode("append").parquet(os.path.join(corpus_dir, "docs"))
-        open(marker, "w").close()
-
-    writer = increments.writeStream.foreachBatch(apply)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.trigger(availableNow=True).start()
+    return stream_corpus_build_writer(
+        increments,
+        corpus_dir,
+        index_dir,
+        id_col=id_col,
+        text_col=text_col,
+        n=n,
+        num_perm=num_perm,
+        bands=bands,
+        threshold=threshold,
+        checkpoint_dir=checkpoint_dir,
+    )
 
 
 def stream_corpus_build_writer(
@@ -128,9 +103,8 @@ def stream_corpus_build_writer(
        eval-set-sized ``shingle`` frame, e.g. from ``with_shingles``
        over the held-out slice — drop at ≥ ``contam_threshold``;
        skipped when None),
-    3. delta dedup against everything kept so far (the
-       ``stream_crawl_dedup_writer`` loop: stored band index probe,
-       |Δ|·|C| per batch, corpus never self-pairs),
+    3. delta dedup against everything kept so far (stored band index
+       probe, |Δ|·|C| per batch, corpus never self-pairs),
 
     then appends survivors to the kept-corpus parquet and their band
     rows to the stored index.  Stage ORDER contract: quality and
@@ -211,6 +185,9 @@ def stream_corpus_build_writer(
             )
         else:
             kept = batch_df
+        # localCheckpoint: cut the lineage so the two writes below
+        # compute the dedup exactly once (and don't re-read the
+        # corpus dirs they are about to append to)
         kept = kept.localCheckpoint(eager=True)
         # Index BEFORE docs: a crash between the appends leaves an
         # orphan index row (harmless — verification inner-joins back

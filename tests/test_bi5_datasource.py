@@ -444,6 +444,31 @@ class TestBi5Writer:
         back = read_bi5(spark, out, digits=DIGITS_JPY, january=1)
         assert {tuple(r) for r in src.collect()} == {tuple(r) for r in back.collect()}
 
+    @pytest.mark.parametrize(
+        "options, message",
+        [
+            ({"digits": "5"}, r"'path' must be specified for BI5 data\."),
+            ({"path": None}, "'digits' should be the digits for the currency"),
+            ({"path": None, "digits": "-1"}, "digits cannot be smaller than 0"),
+            (
+                {"path": None, "digits": "5", "january": "2"},
+                "january can only be 0 or 1",
+            ),
+        ],
+    )
+    def test_write_validates_like_read(
+        self, spark, bi5_tree, tmp_path, options, message
+    ):
+        """The writer shares the readers' option validation, so a write
+        raises the reference's messages (T:164-214); ``None`` stands for
+        a path that does not exist yet, which a write must accept."""
+        src = read_bi5(spark, bi5_tree, digits=DIGITS_EUR).limit(1)
+        w = src.write.format("bi5").mode("append")
+        for k, v in options.items():
+            w = w.option(k, str(tmp_path / "new") if v is None else v)
+        with pytest.raises(Exception, match=message):
+            w.save()
+
     def test_non_utc_ts_maps_to_utc_path(self, tmp_path):
         """Hour paths are derived from absolute epoch micros, never
         from wall-clock fields: a batch whose timestamps display as

@@ -1,7 +1,8 @@
-"""Crash/concurrency drills for sources/layout.compact_bucketed's
-r12 swap ordering: an interrupted swap must be auto-recoverable, and
-``keep_old`` must preserve the pre-compaction snapshot for callers
-draining concurrent readers.
+"""Crash/concurrency drills for sources/layout.compact_bucketed, the
+full compaction (``compact_buckets_selective`` with ``min_files=1``):
+it must recover an interrupted selective cycle before reading, ignore
+stray staging directories, enforce the sidecar contract and refuse a
+rewrite whose per-bucket row counts do not match.
 """
 
 from __future__ import annotations
@@ -41,36 +42,6 @@ def _bucketed_table(spark, tmp_path, table: str, frags: int = 3):
 
 
 class TestCompactCrashSafety:
-    def test_interrupted_swap_auto_recovers(self, spark, tmp_path):
-        """Crash point: between ``rename(path, old)`` and
-        ``rename(staging, path)`` — path is momentarily absent.  The
-        next compact_bucketed call must restore from .old and finish
-        normally (the r11-advice manual-recovery scenario made
-        automatic)."""
-        import shutil
-
-        from spark_bi5_datasource_spark.sources.layout import (
-            compact_bucketed,
-        )
-
-        table = "bi5_test_compact_crash"
-        path = _bucketed_table(spark, tmp_path, table)
-        try:
-            # simulate the mid-swap crash state by hand: data moved to
-            # .old, nothing at path, catalog stale
-            spark.sql(f"DROP TABLE {table}")
-            os.rename(path, f"{path}.old")
-            assert not os.path.exists(path)
-
-            n = compact_bucketed(spark, table, path, "doc_id", buckets=4)
-            assert n <= 4
-            got = sorted(r.doc_id for r in spark.table(table).collect())
-            assert got == list(range(120))  # nothing lost
-            assert not os.path.exists(f"{path}.old")  # cleaned up
-            shutil.rmtree(f"{path}.compacting", ignore_errors=True)
-        finally:
-            spark.sql(f"DROP TABLE IF EXISTS {table}")
-
     def test_full_compact_recovers_interrupted_selective_cycle(
         self, spark, tmp_path
     ):
@@ -178,56 +149,31 @@ class TestCompactCrashSafety:
         self, spark, tmp_path, monkeypatch
     ):
         """A partial/corrupt staging rewrite must never replace the
-        snapshot: fake a row-count mismatch and assert the swap is
-        refused with the table fully intact."""
+        snapshot: fake a per-bucket row-count mismatch on the staged
+        side and assert the swap is refused with the table fully
+        intact (no file renamed, retired or left staged)."""
         import pytest
 
         from spark_bi5_datasource_spark.sources import layout
 
         table = "bi5_test_compact_guard"
         path = _bucketed_table(spark, tmp_path, table)
-        real = layout._footer_rows
+        before = sorted(os.listdir(path))
+        real = layout._footer_rows_files
 
-        def lying(p):
-            n = real(p)
-            return n - 1 if p.endswith(".compacting") else n
+        def lying(p, files):
+            n = real(p, files)
+            return n - 1 if ".compact_stage_" in p else n
 
-        monkeypatch.setattr(layout, "_footer_rows", lying)
+        monkeypatch.setattr(layout, "_footer_rows_files", lying)
         try:
             with pytest.raises(RuntimeError, match="refusing to swap"):
                 layout.compact_bucketed(
                     spark, table, path, "doc_id", buckets=4
                 )
             # nothing was swapped or dropped
+            assert sorted(os.listdir(path)) == before
             got = sorted(r.doc_id for r in spark.table(table).collect())
             assert got == list(range(120))
-            assert os.path.isdir(path)
-        finally:
-            spark.sql(f"DROP TABLE IF EXISTS {table}")
-
-    def test_keep_old_preserves_snapshot(self, spark, tmp_path):
-        import shutil
-
-        from spark_bi5_datasource_spark.sources.layout import (
-            compact_bucketed,
-        )
-
-        table = "bi5_test_compact_keepold"
-        path = _bucketed_table(spark, tmp_path, table)
-        try:
-            n_before = sum(
-                1 for f in os.listdir(path) if f.startswith("part-")
-            )
-            assert n_before > 4  # fragmentation is real
-            compact_bucketed(
-                spark, table, path, "doc_id", buckets=4, keep_old=True
-            )
-            old = f"{path}.old"
-            assert os.path.isdir(old)  # caller owns the purge
-            old_rows = spark.read.parquet(old).count()
-            assert old_rows == 120  # full pre-compaction snapshot
-            got = sorted(r.doc_id for r in spark.table(table).collect())
-            assert got == list(range(120))
-            shutil.rmtree(old)
         finally:
             spark.sql(f"DROP TABLE IF EXISTS {table}")

@@ -504,6 +504,98 @@ class TestAnnGemm:
         assert not any(n == 3 for n, _ in gemm.values())  # zero neighbor dropped
 
 
+class TestNeighborTiers:
+    """Every neighbor tier ends in ``similarity.rank_topk``.  Duplicate
+    vectors give exactly tied cosines (small integer entries: every dot
+    product is exact in any summation order), so each tier must break
+    the ties by the lower ``nbr_id`` and return one schema.  Each
+    approximate tier is run at its exact setting: one hyperplane with
+    multiprobe, every IVF cell probed, a PQ shortlist ≥ the corpus."""
+
+    BASE = [[3, 1, 0, 2], [1, 2, 2, 0], [0, 1, 3, 1], [2, 0, 1, 3]]
+    K = 4
+
+    @pytest.fixture(scope="class")
+    def emb(self, spark):
+        # ids i and i+4 and i+8 share BASE[i % 4]; id 12 has zero norm
+        rows = [(i, [float(x) for x in self.BASE[i % 4]]) for i in range(12)]
+        rows.append((12, [0.0] * 4))
+        return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+    def _expected(self):
+        import numpy as np
+
+        vecs = {i: np.asarray(self.BASE[i % 4], dtype=np.float64) for i in range(12)}
+        out = []
+        for q in range(4):
+            scored = sorted(
+                (-(vecs[q] @ v) / np.linalg.norm(vecs[q]) / np.linalg.norm(v), n)
+                for n, v in vecs.items()
+                if n != q
+            )[: self.K]
+            out += [(q, n, -c, r + 1) for r, (c, n) in enumerate(scored)]
+        return out
+
+    @pytest.mark.parametrize(
+        "tier",
+        ["cosine_topk", "rp_lsh_topk", "ann_topk_gemm", "knn_graph",
+         "ivf_topk", "ivf_probe_index", "pq_topk"],
+    )
+    def test_ties_break_by_lower_nbr_id(self, spark, emb, tier):
+        import numpy as np
+
+        from spark_bi5_datasource_spark.operators import (
+            ann_topk_gemm,
+            ivf_topk,
+            knn_graph,
+            pq_topk,
+        )
+        from spark_bi5_datasource_spark.operators.ann_index import (
+            build_ivf_index,
+            ivf_probe_index,
+        )
+
+        k, queries = self.K, emb.filter("vec_id < 4")
+        cents = np.asarray([[1.0, 0, 0, 0], [0, 0, 1.0, 0]])
+        books = np.random.default_rng(0).standard_normal((2, 2, 2))
+        out = {
+            "cosine_topk": lambda: cosine_topk(emb, queries, k=k),
+            "rp_lsh_topk": lambda: rp_lsh_topk(
+                emb, queries, k=k, dim=4, n_planes=1
+            ),
+            "ann_topk_gemm": lambda: ann_topk_gemm(emb, queries, k=k),
+            "knn_graph": lambda: knn_graph(emb, k=k, blocks=2).filter(
+                "query_id < 4"
+            ),
+            "ivf_topk": lambda: ivf_topk(
+                emb, queries, k=k, centroids=cents, nprobe=2
+            ),
+            "ivf_probe_index": lambda: ivf_probe_index(
+                build_ivf_index(emb, cents), cents, queries, k=k, nprobe=2
+            ),
+            "pq_topk": lambda: pq_topk(
+                emb, queries, k=k, shortlist=100, codebooks=books
+            ),
+        }[tier]()
+        assert [
+            (f.name, f.dataType.simpleString(), f.nullable)
+            for f in out.schema.fields
+        ] == [
+            ("query_id", "bigint", True),
+            ("nbr_id", "bigint", True),
+            ("cosine", "double", True),
+            ("rank", "int", False),
+        ]
+        got = sorted(tuple(r) for r in out.collect())
+        want = sorted(self._expected())
+        assert [(q, n, r) for q, n, _, r in got] == [
+            (q, n, r) for q, n, _, r in want
+        ]
+        assert [c for _, _, c, _ in got] == pytest.approx(
+            [c for _, _, c, _ in want], abs=1e-6
+        )
+
+
 class TestSaltedJoin:
     def test_matches_plain_join_on_skewed_keys(self, spark):
         from spark_bi5_datasource_spark.operators import salted_join

@@ -1,17 +1,20 @@
 """Repository hygiene: every script has a documented caller, every repo
-file the code cites exists, every bi5 reader option is documented,
-every package module is reachable, and the catalog reads parquet in
-one place.
+file and module name the code cites exists, every bi5 option is
+documented, every package module is reachable, and the catalog reads
+parquet in one place.
 
-Five checks, no Spark:
+Six checks, no Spark:
 
 - each file in ``scripts/`` is named in README.md;
 - each ``scripts/<name>.py``, ``plans/r<NN>/``, root
   ``UPPER_CASE.{md,json,jsonl,txt}`` or in-package module path
   (``functions/ohlc.py``, resolved under ``spark_bi5_datasource_spark/``)
   cited in the package, ``tests/`` or ``__spark_entry__.py`` exists;
-- each option key the bi5 batch and stream readers read is named in
-  README.md;
+- each ``<dir>/<module>.<name>`` citation there
+  (``sources/layout.compact_bucketed``) names a top-level definition,
+  assignment or import of that module, read with ``ast``;
+- each option key the bi5 batch and stream readers and the bi5 writer
+  read is named in README.md;
 - each package module is imported, directly or through other modules,
   from a package ``__init__``, ``__spark_entry__.py``, ``perfbench/``
   or ``scripts/``, or is on ``UNROOTED_SURFACES`` with the document
@@ -41,9 +44,14 @@ PACKAGE = "spark_bi5_datasource_spark"
 _MODULE = re.compile(
     rf"(?<![\w/.])(?:{PACKAGE}/)?((?:sources|streaming|functions|operators|plans)/[A-Za-z0-9_]+\.py)"
 )
+_MODULE_NAME = re.compile(
+    rf"(?<![\w/.])(?:{PACKAGE}/)?((?:sources|streaming|functions|operators|plans)/[A-Za-z0-9_]+)"
+    r"\.([A-Za-z_]\w*)"
+)
 _OPTION_KEY = re.compile(r'options(?:\.get\(|\[)"([^"]+)"')
-BI5_READERS = (
+BI5_OPTION_READERS = (
     "spark_bi5_datasource_spark/sources/bi5_datasource.py",
+    "spark_bi5_datasource_spark/sources/bi5_writer.py",
     "spark_bi5_datasource_spark/streaming/bi5_stream.py",
 )
 # package modules no root imports, kept because a document offers them
@@ -92,6 +100,63 @@ def test_citations_pattern():
     }
 
 
+def name_citations(text: str) -> set[tuple[str, str]]:
+    """``(module path, name)`` for each ``<dir>/<module>.<name>`` cited
+    in ``text``; ``<dir>/<module>.py`` is a file citation, not a name."""
+    return {
+        (f"{PACKAGE}/{module}.py", name)
+        for module, name in _MODULE_NAME.findall(text)
+        if name != "py"
+    }
+
+
+def top_level_names(rel: str) -> set[str]:
+    """Names a module binds at its top level: defs, classes,
+    assignments and imports."""
+    with open(os.path.join(REPO, rel), encoding="utf-8") as f:
+        tree = ast.parse(f.read(), rel)
+    names: set[str] = set()
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            names.add(node.name)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            for t in targets:
+                names |= {n.id for n in ast.walk(t) if isinstance(n, ast.Name)}
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            names |= {(a.asname or a.name).split(".")[0] for a in node.names}
+    return names
+
+
+def test_name_citations_pattern():
+    text = (
+        "see sources/layout.compact_bucketed, (plans/round11_ops.text_x)"
+        " and spark_bi5_datasource_spark/operators/similarity.rank_topk;"
+        " functions/ohlc.py is a file, perfbench/x.y and a/sources/b.c are not"
+    )
+    assert name_citations(text) == {
+        (f"{PACKAGE}/sources/layout.py", "compact_bucketed"),
+        (f"{PACKAGE}/plans/round11_ops.py", "text_x"),
+        (f"{PACKAGE}/operators/similarity.py", "rank_topk"),
+    }
+
+
+def test_cited_module_names_exist():
+    stale = []
+    for path in _cited_sources():
+        with open(path, encoding="utf-8") as f:
+            text = f.read()
+        for module, name in sorted(name_citations(text)):
+            where = f"{os.path.relpath(path, REPO)}: {module}.{name}"
+            if not os.path.exists(os.path.join(REPO, module)):
+                stale.append(f"{where} (no such module)")
+            elif name not in top_level_names(module):
+                stale.append(where)
+    assert not stale, "citations of names a module does not define:\n" + "\n".join(
+        stale
+    )
+
+
 def test_every_script_is_documented():
     with open(os.path.join(REPO, "README.md"), encoding="utf-8") as f:
         readme = f.read()
@@ -117,7 +182,7 @@ def test_cited_repo_files_exist():
 
 def test_every_bi5_option_is_documented():
     keys = set()
-    for rel in BI5_READERS:
+    for rel in BI5_OPTION_READERS:
         with open(os.path.join(REPO, rel), encoding="utf-8") as f:
             keys |= set(_OPTION_KEY.findall(f.read()))
     assert {"path", "digits", "january", "min.age.seconds"} <= keys
