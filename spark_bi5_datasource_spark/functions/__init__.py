@@ -1,28 +1,19 @@
-from .ohlc import ohlc_bars, vwap
+from .ohlc import ohlc_bars
 from .text import (
     STOPWORDS,
-    avg_token_len,
     chunk_array,
     doc_fingerprint,
     lang_id,
-    punct_ratio,
     quality_score,
-    stopword_ratio,
     token_count,
-    with_text_stats,
 )
 
 __all__ = [
     "STOPWORDS",
-    "avg_token_len",
     "chunk_array",
     "doc_fingerprint",
     "lang_id",
     "ohlc_bars",
-    "punct_ratio",
     "quality_score",
-    "stopword_ratio",
     "token_count",
-    "vwap",
-    "with_text_stats",
 ]

@@ -4,17 +4,11 @@ GIF's only compression is LZW over palette indices, which is a
 sequential dictionary walk — fully implementable in the standard
 library.  The decoder handles GIF87a/GIF89a: global and local color
 tables, interlaced row order, extension blocks (graphic-control
-transparency is dropped — these are feature/resize kernels, not a
+transparency is dropped — these are feature kernels, not a
 compositor), and decodes the FIRST image descriptor placed on the
 logical screen; animation compositing (disposal methods, partial
-frames) is out of scope and later frames are ignored.
-
-The encoder writes a single-frame GIF89a for images whose channels
-palettize losslessly (≤ 256 unique colors — test fixtures and
-synthetic rasters; arbitrary photos would need quantization, which
-belongs to a real imaging stack).  Round-tripping through both sides
-is therefore bit-exact on the pixel array, which is what the tests
-pin.
+frames) is out of scope and later frames are ignored.  The tests'
+fixtures come from the encoder in ``tests/media_encoders.py``.
 """
 
 from __future__ import annotations
@@ -23,7 +17,7 @@ import struct
 
 import numpy as np
 
-__all__ = ["gif_decode", "gif_encode", "gif_dims"]
+__all__ = ["gif_decode", "gif_dims"]
 
 
 def _normalize_dirty(fn):
@@ -193,89 +187,3 @@ def gif_decode(data: bytes) -> np.ndarray:
         else:
             raise ValueError(f"unknown GIF block 0x{b:02x}")
     raise ValueError("GIF without an image descriptor")
-
-
-# ------------------------------------------------------------- encode
-
-
-def _lzw_encode(indices: np.ndarray, min_code_size: int) -> bytes:
-    clear = 1 << min_code_size
-    eoi = clear + 1
-    table = {bytes([i]): i for i in range(clear)}
-    next_code = eoi + 1
-    width = min_code_size + 1
-
-    out = bytearray()
-    acc = 0
-    nbits = 0
-
-    def emit(code: int) -> None:
-        nonlocal acc, nbits
-        acc |= code << nbits
-        nbits += width
-        while nbits >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-
-    emit(clear)
-    buf = b""
-    for i in indices.tobytes():
-        nxt = buf + bytes([i])
-        if nxt in table:
-            buf = nxt
-            continue
-        emit(table[buf])
-        if next_code < 4096:
-            table[nxt] = next_code
-            next_code += 1
-            # one entry LATER than the decoder's own bump: the
-            # decoder's dictionary lags the encoder by exactly one
-            # entry at each read, so its (1 << width) threshold is
-            # reached while the encoder's counter shows one more
-            if next_code == (1 << width) + 1 and width < 12:
-                width += 1
-        else:
-            emit(clear)
-            table = {bytes([j]): j for j in range(clear)}
-            next_code = eoi + 1
-            width = min_code_size + 1
-        buf = bytes([i])
-    if buf:
-        emit(table[buf])
-    emit(eoi)
-    if nbits:
-        out.append(acc & 0xFF)
-    return bytes(out)
-
-
-def gif_encode(px: np.ndarray) -> bytes:
-    """(H, W, 3) uint8 with ≤ 256 unique colors → single-frame GIF89a."""
-    h, w, _ = px.shape
-    flat = px.reshape(-1, 3)
-    colors, idx = np.unique(flat, axis=0, return_inverse=True)
-    if colors.shape[0] > 256:
-        raise NotImplementedError(
-            "gif_encode requires a palettizable image (≤ 256 unique "
-            "colors); arbitrary photos need a quantizer from a real "
-            "imaging stack"
-        )
-    size = max(2, colors.shape[0])
-    bits = max(1, int(np.ceil(np.log2(size))))
-    table = np.zeros((1 << bits, 3), np.uint8)
-    table[: colors.shape[0]] = colors
-
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HHBBB", w, h, 0x80 | ((bits - 1) & 7), 0, 0)
-    out += table.tobytes()
-    out += b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, 0)
-    min_code = max(2, bits)
-    out.append(min_code)
-    blob = _lzw_encode(idx.astype(np.uint8), min_code)
-    for i in range(0, len(blob), 255):
-        chunk = blob[i : i + 255]
-        out.append(len(chunk))
-        out += chunk
-    out.append(0)
-    out += b"\x3b"
-    return bytes(out)

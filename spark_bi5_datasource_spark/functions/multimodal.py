@@ -2,18 +2,18 @@
 columns with typed metadata, processed via Arrow-batched
 ``mapInPandas`` (north-star operator, SURVEY §2 Tier C).
 
-Decode/resize/frame-sample kernels are REAL for every format a
-pure-Python stack can honestly implement — images PPM (P6) / PGM
-(P5) / 24-bit BMP, 8-bit PNG (DEFLATE is stdlib ``zlib``; the five
-scanline filters unfilter in NumPy), baseline JPEG (SOF0 — full
-entropy decode + IDCT in ``jpeg_codec.py``, validated against
-real-world encoder output), and GIF (pure-Python LZW in
-``gif_codec.py``, likewise pinned by real files), audio 8/16-bit PCM
-WAV, video AVI with uncompressed DIB or MJPEG frames.  Formats that
-remain out of pure-Python reach (progressive JPEG, MP3, H.264) raise
-``NotImplementedError``;
-the deterministic fake kernels remain available for exercising the
-Arrow plumbing independent of payload format.
+The perceptual-hash kernels decode for real every format a pure-Python
+stack can honestly implement — images PPM (P6) / PGM (P5) / 24-bit
+BMP, 8-bit PNG (DEFLATE is stdlib ``zlib``; the five scanline filters
+unfilter in NumPy), baseline JPEG (SOF0 — full entropy decode + IDCT
+in ``jpeg_codec.py``, validated against real-world encoder output),
+and GIF (pure-Python LZW in ``gif_codec.py``, likewise pinned by real
+files), audio WAV (8/16-bit PCM, G.711 A-law/μ-law, IMA ADPCM), video
+AVI with uncompressed DIB or MJPEG frames.  Formats that remain out
+of pure-Python reach (progressive JPEG, MP3, H.264) raise
+``NotImplementedError``.  ``extract_media_features`` exercises the
+Arrow plumbing with a deterministic fake kernel that derives the
+dimensions from the payload size, independent of payload format.
 """
 
 from __future__ import annotations
@@ -28,7 +28,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     BinaryType,
-    DoubleType,
     IntegerType,
     LongType,
     StringType,
@@ -39,13 +38,7 @@ from pyspark.sql.types import (
 __all__ = [
     "MEDIA_SCHEMA",
     "FEATURE_SCHEMA",
-    "AUDIO_FEATURE_SCHEMA",
-    "decode_image",
-    "decode_audio",
-    "audio_features",
-    "resample_audio",
     "extract_media_features",
-    "extract_audio_features",
     "documents_as_media",
     "documents_as_ppm_media",
     "dhash64",
@@ -135,7 +128,6 @@ def _bmp_header(data: bytes) -> tuple[int, int, int, int, bool]:
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 # channels per PNG color type (8-bit): gray, RGB, palette idx, gray+A, RGBA
 _PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
-_PNG_CT_FOR_CHANNELS = {1: 0, 2: 4, 3: 2, 4: 6}
 
 
 def _png_parse(data: bytes) -> tuple[int, int, int, int, int, bytes, bytes]:
@@ -216,7 +208,7 @@ def _png_unfilter(raw: np.ndarray, bpp: int) -> np.ndarray:
 def _png_decode(data: bytes) -> tuple[np.ndarray, dict]:
     """8-bit non-interlaced PNG → (H, W, C) uint8.  Palette images
     resolve through PLTE to RGB (palette alpha/tRNS is dropped — these
-    are feature/resize kernels, not a compositor).  16-bit and Adam7
+    are feature kernels, not a compositor).  16-bit and Adam7
     variants raise ``NotImplementedError`` (rare in training corpora;
     the dirty-input-null policy upstream absorbs them)."""
     w, h, depth, ct, interlace, plte, idat = _png_parse(data)
@@ -240,64 +232,6 @@ def _png_decode(data: bytes) -> tuple[np.ndarray, dict]:
         pal = np.frombuffer(plte, np.uint8).reshape(-1, 3)
         px = pal[px[:, :, 0]]
     return px, {"fmt": _PNG_SIG[:2]}
-
-
-def _png_chunk(ctype: bytes, body: bytes) -> bytes:
-    return (
-        struct.pack(">I", len(body))
-        + ctype
-        + body
-        + struct.pack(">I", zlib.crc32(ctype + body))
-    )
-
-
-def _png_encode(px: np.ndarray) -> bytes:
-    """(H, W, C) uint8 → PNG, filter 0 on every scanline."""
-    h, w, ch = px.shape
-    ct = _PNG_CT_FOR_CHANNELS[ch]
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, ct, 0, 0, 0)
-    rows = np.zeros((h, 1 + w * ch), np.uint8)  # leading filter byte 0
-    rows[:, 1:] = px.reshape(h, w * ch)
-    return (
-        _PNG_SIG
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", zlib.compress(rows.tobytes(), 6))
-        + _png_chunk(b"IEND", b"")
-    )
-
-
-def decode_image(payload: bytes) -> tuple[int, int]:
-    """Decode an image payload to (width, height).
-
-    Real (pure NumPy/struct/zlib, no codec library needed) for PPM
-    ``P6``, PGM ``P5``, BMP, and PNG (dims read straight from IHDR —
-    no inflate); formats that need a real codec (JPEG etc.) raise
-    ``NotImplementedError`` (use ``fake_decode=True`` for the
-    deterministic test kernel on arbitrary payloads)."""
-    head = bytes(payload[:2])
-    if head in (b"P5", b"P6"):
-        _, w, h, _, _ = _ppm_header(bytes(payload))
-        return w, h
-    if head == b"BM":
-        w, h, _, _, _ = _bmp_header(bytes(payload))
-        return w, h
-    if bytes(payload[:8]) == _PNG_SIG:
-        w, h, _, _, _, _, _ = _png_parse(bytes(payload))
-        return w, h
-    if bytes(payload[:2]) == b"\xff\xd8":
-        from .jpeg_codec import jpeg_dims
-
-        return jpeg_dims(bytes(payload))
-    if bytes(payload[:6]) in (b"GIF87a", b"GIF89a"):
-        from .gif_codec import gif_dims
-
-        return gif_dims(bytes(payload))
-    raise NotImplementedError(
-        f"payload magic {head!r} needs an imaging library (e.g. PIL); "
-        "supported codec-free formats: PPM(P6)/PGM(P5)/BMP/PNG/"
-        "baseline JPEG/GIF; use fake_decode=True for the deterministic "
-        "test kernel"
-    )
 
 
 def _nn_index(dst: int, src: int) -> np.ndarray:
@@ -338,43 +272,6 @@ def _decode_pixels(data: bytes) -> tuple[np.ndarray, dict]:
 
         return gif_decode(data), {"fmt": b"GI"}
     raise NotImplementedError(f"payload magic {head!r} needs an imaging library")
-
-
-def _encode_pixels(px: np.ndarray, meta: dict) -> bytes:
-    h, w, ch = px.shape
-    if meta["fmt"] == _PNG_SIG[:2]:
-        return _png_encode(px)
-    if meta["fmt"] == b"\xff\xd8":
-        from .jpeg_codec import jpeg_encode
-
-        return jpeg_encode(px)
-    if meta["fmt"] == b"GI":
-        from .gif_codec import gif_encode
-
-        return gif_encode(px)  # NN resize preserves the palette
-    if meta["fmt"] in (b"P5", b"P6"):
-        header = b"%s\n%d %d\n%d\n" % (meta["fmt"], w, h, meta["maxval"])
-        return header + px.tobytes()
-    stride = (w * 3 + 3) // 4 * 4
-    rows = np.zeros((h, stride), np.uint8)
-    rows[:, : w * 3] = px[::-1].reshape(h, w * 3)  # bottom-up
-    body = rows.tobytes()
-    header = struct.pack(
-        "<2sIHHI" + "IiiHHIIiiII",
-        b"BM", 54 + len(body), 0, 0, 54,
-        40, w, h, 1, 24, 0, len(body), 2835, 2835, 0, 0,
-    )
-    return header + body
-
-
-def resize_image(payload: bytes, width: int, height: int) -> bytes:
-    """Nearest-neighbor resize for the codec-free formats (PPM/PGM/
-    BMP/PNG), re-encoded in the source format (palette PNG re-encodes
-    as RGB).  Pure NumPy: two index gathers, no per-pixel Python."""
-    px, meta = _decode_pixels(bytes(payload))
-    h, w, _ = px.shape
-    out = px[_nn_index(height, h)][:, _nn_index(width, w)]
-    return _encode_pixels(np.ascontiguousarray(out), meta)
 
 
 _WAV_TAGS = {1: "pcm", 6: "alaw", 7: "ulaw", 17: "ima_adpcm"}
@@ -456,16 +353,6 @@ _IMA_STEP = np.array([
 _IMA_INDEX = np.array([-1, -1, -1, -1, 2, 4, 6, 8], np.int32)
 
 
-def _ima_block_frames(bsize: int, ch: int) -> int:
-    """Per-channel sample count of one IMA ADPCM block of ``bsize``
-    bytes: the per-channel header predictor is sample 0, then each
-    interleaved 4-byte-per-channel word group carries 8 nibbles per
-    channel."""
-    if bsize < 4 * ch:
-        return 0
-    return 1 + 8 * ((bsize - 4 * ch) // (4 * ch))
-
-
 def _ima_adpcm_decode(
     data: bytes, off: int, dlen: int, ch: int, balign: int
 ) -> np.ndarray:
@@ -527,20 +414,6 @@ def _ima_adpcm_decode(
     return np.concatenate(parts) if len(parts) > 1 else parts[0]
 
 
-def decode_audio(payload: bytes) -> tuple[int, int, int]:
-    """Decode a WAV payload to (n_channels, sample_rate, n_frames).
-    Real (pure struct/NumPy, no codec library) for 8/16-bit PCM,
-    G.711 A-law/μ-law, and IMA ADPCM; anything else raises
-    ``NotImplementedError``."""
-    ch, rate, bits, _, dlen, codec, balign = _wav_header(bytes(payload))
-    if codec == "ima_adpcm":
-        nfull, rem = divmod(dlen, balign)
-        return ch, rate, (
-            nfull * _ima_block_frames(balign, ch) + _ima_block_frames(rem, ch)
-        )
-    return ch, rate, dlen // (ch * bits // 8)
-
-
 def _audio_samples(data: bytes) -> tuple[np.ndarray, int]:
     """Payload → (frames, channels) float64 in [-1, 1] + sample rate."""
     ch, rate, bits, off, dlen, codec, balign = _wav_header(data)
@@ -562,45 +435,6 @@ def _audio_samples(data: bytes) -> tuple[np.ndarray, int]:
         raw = np.frombuffer(data, np.uint8, n * ch, off).astype(np.float64)
         x = (raw - 128.0) / 128.0
     return x.reshape(n, ch), rate
-
-
-def audio_features(payload: bytes) -> tuple[int, int, int, float, float]:
-    """PCM WAV payload → (n_channels, sample_rate, n_frames, rms,
-    peak).  One vectorized NumPy pass over the sample block."""
-    x, rate = _audio_samples(bytes(payload))
-    n, ch = x.shape
-    if n == 0:
-        return ch, rate, 0, 0.0, 0.0
-    return (
-        ch,
-        rate,
-        n,
-        float(np.sqrt(np.mean(np.square(x)))),
-        float(np.max(np.abs(x))),
-    )
-
-
-def resample_audio(payload: bytes, target_rate: int) -> bytes:
-    """Nearest-neighbor (sample-and-hold) resample of a PCM WAV payload
-    to ``target_rate``, re-encoded as 16-bit PCM.  The audio twin of
-    ``resize_image``: one index gather, no per-sample Python."""
-    x, rate = _audio_samples(bytes(payload))
-    n, ch = x.shape
-    out_n = max(1, round(n * target_rate / rate)) if n else 0
-    y = x[_nn_index(out_n, n)] if n else x
-    # encode with the same 1/32768 scale the decoder uses (clipped at
-    # +32767): an identity resample is then bit-lossless for every
-    # int16 sample, instead of losing 1 LSB to a 32767/32768 mismatch
-    pcm = np.clip(np.round(y * 32768.0), -32768, 32767).astype("<i2")
-    body = pcm.tobytes()
-    hdr = struct.pack(
-        "<4sI4s4sIHHIIHH4sI",
-        b"RIFF", 36 + len(body), b"WAVE",
-        b"fmt ", 16, 1, ch, target_rate,
-        target_rate * ch * 2, ch * 2, 16,
-        b"data", len(body),
-    )
-    return hdr + body
 
 
 def _riff_chunks(data: bytes, start: int, end: int):
@@ -666,8 +500,7 @@ def _avi_frames(data: bytes) -> tuple[int, int, list[bytes], str]:
 
 def sample_frames(payload: bytes, every_n: int) -> list[bytes]:
     """Sample every ``every_n``-th frame from a video payload,
-    returned as standalone images (consumable by ``decode_image`` /
-    ``resize_image``).
+    returned as standalone images (consumable by ``_decode_pixels``).
 
     REAL for AVI containers with uncompressed 24-bit DIB streams (the
     frame raster IS a BMP body — bottom-up, 4-byte row stride — so
@@ -703,8 +536,10 @@ def _fake_dims(payload: bytes) -> tuple[int, int]:
     return (n % 640) + 1, (n % 480) + 1
 
 
-def extract_media_features(media: DataFrame, fake_decode: bool = True) -> DataFrame:
-    """binary payload → typed features via Arrow-batched mapInPandas.
+def extract_media_features(media: DataFrame) -> DataFrame:
+    """binary payload → typed features via Arrow-batched mapInPandas,
+    with the fake dimension kernel (``_fake_dims``) that the
+    multimodal_features entry's oracle SQL reproduces.
 
     Batch-at-a-time (not row-at-a-time UDF): each pandas batch is
     vectorized Python, amortizing the Python boundary exactly like
@@ -714,17 +549,9 @@ def extract_media_features(media: DataFrame, fake_decode: bool = True) -> DataFr
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import zlib
 
-        def dims_of(p: bytes) -> tuple[int | None, int | None]:
-            if fake_decode:
-                return _fake_dims(p)
-            try:
-                return decode_image(p)
-            except (ValueError, NotImplementedError):
-                return None, None  # dirty input → null dims, task survives
-
         for pdf in it:
             payloads = pdf["payload"]
-            dims = [dims_of(p) for p in payloads.fillna(b"")]
+            dims = [_fake_dims(p) for p in payloads.fillna(b"")]
             yield pd.DataFrame(
                 {
                     "media_id": pdf["media_id"],
@@ -741,39 +568,6 @@ def extract_media_features(media: DataFrame, fake_decode: bool = True) -> DataFr
     return media.mapInPandas(batches, schema=FEATURE_SCHEMA)
 
 
-AUDIO_FEATURE_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("n_channels", IntegerType(), True),
-        StructField("sample_rate", IntegerType(), True),
-        StructField("n_frames", LongType(), True),
-        StructField("rms", DoubleType(), True),
-        StructField("peak", DoubleType(), True),
-    ]
-)
-
-
-def extract_audio_features(media: DataFrame) -> DataFrame:
-    """PCM WAV payloads → typed audio features via Arrow-batched
-    mapInPandas (non-WAV / unsupported payloads yield null features
-    — the dirty-input tolerance of the bi5 scan, applied to media)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    ch, rate, n, rms, peak = audio_features(p or b"")
-                    rows.append((mid, ch, rate, n, rms, peak))
-                except (ValueError, NotImplementedError):
-                    rows.append((mid, None, None, None, None, None))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in AUDIO_FEATURE_SCHEMA.fields]
-            )
-
-    return media.mapInPandas(batches, schema=AUDIO_FEATURE_SCHEMA)
-
-
 def documents_as_media(documents: DataFrame) -> DataFrame:
     """Adapter used by tests/queries: treat document text bytes as a
     binary payload so the media pipeline is exercised end-to-end on
@@ -787,84 +581,6 @@ def documents_as_media(documents: DataFrame) -> DataFrame:
         F.lit("application/octet-stream").alias("mime"),
         F.length(F.encode("text", "UTF-8")).cast("long").alias("n_bytes"),
     )
-
-
-def resize_media(media: DataFrame, width: int, height: int, fake_decode: bool = True) -> DataFrame:
-    """Image resize over Arrow batches (mapInPandas): payload → resized
-    payload + new dims.  Fake kernel = deterministic truncation/padding
-    of the byte payload to width*height bytes, so the batch plumbing,
-    schema, and size accounting are real and testable without codecs."""
-
-    out_schema = StructType(
-        [
-            StructField("media_id", LongType(), False),
-            StructField("kind", StringType(), False),
-            StructField("payload", BinaryType(), True),
-            StructField("width", IntegerType(), False),
-            StructField("height", IntegerType(), False),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        target = width * height
-        for pdf in it:
-            if fake_decode:
-                resized = [
-                    (bytes(p or b"") + b"\0" * target)[:target]
-                    for p in pdf["payload"]
-                ]
-            else:
-                resized = [resize_image(p, width, height) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "payload": resized,
-                    "width": width,
-                    "height": height,
-                }
-            )
-
-    return media.mapInPandas(batches, schema=out_schema)
-
-
-def sample_media_frames(media: DataFrame, every_n: int = 10, fake_decode: bool = True) -> DataFrame:
-    """Video frame sampling (1→N rows per input): each sampled frame
-    becomes its own row — the exploding shape a real decoder needs.
-    Fake kernel = fixed-size byte windows over the payload."""
-
-    out_schema = StructType(
-        [
-            StructField("media_id", LongType(), False),
-            StructField("frame_no", IntegerType(), False),
-            StructField("frame", BinaryType(), True),
-        ]
-    )
-    FRAME = 64  # fake frame = 64-byte window
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, nos, frames = [], [], []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                payload = bytes(p or b"")
-                if fake_decode:
-                    all_frames = [
-                        payload[i : i + FRAME]
-                        for i in range(0, max(len(payload), 1), FRAME)
-                    ][::every_n]
-                else:
-                    try:
-                        # the real kernel samples internally
-                        all_frames = sample_frames(payload, every_n)
-                    except (ValueError, NotImplementedError):
-                        all_frames = []  # dirty container: 0 rows, task survives
-                for no, fr in enumerate(all_frames):
-                    ids.append(mid)
-                    nos.append(no)
-                    frames.append(fr)
-            yield pd.DataFrame({"media_id": ids, "frame_no": nos, "frame": frames})
-
-    return media.mapInPandas(batches, schema=out_schema)
 
 
 # ------------------------------------------------- perceptual hashing

@@ -37,7 +37,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-__all__ = ["ohlc_bars", "merge_ohlc_bars", "vwap"]
+__all__ = ["ohlc_bars", "merge_ohlc_bars"]
 
 
 def _bucket_micros(duration: str) -> int:
@@ -259,23 +259,4 @@ def merge_ohlc_bars(
     return out.select(
         F.col("w.start").alias("bar_start"),
         *[c for c in out.columns if c != "w"],
-    )
-
-
-def vwap(
-    df: DataFrame,
-    duration: str = "5 minutes",
-    ts_col: str = "ts",
-    price_col: str = "bid",
-    volume_col: str = "bid_volume",
-    by: Sequence[str] = ("ticker",),
-) -> DataFrame:
-    """Volume-weighted average price per bucket."""
-    return (
-        df.groupBy(F.window(ts_col, duration).alias("w"), *by)
-        .agg(
-            (F.sum(F.col(price_col) * F.col(volume_col)) / F.sum(volume_col)).alias("vwap"),
-            F.sum(volume_col).alias("volume"),
-        )
-        .select(F.col("w.start").alias("bar_start"), *by, "vwap", "volume")
     )

@@ -17,7 +17,7 @@ import pandas as pd
 
 from pyspark.sql.functions import pandas_udf
 
-__all__ = ["vector_norm", "trimmed_mean", "batch_dot_topk_kernel"]
+__all__ = ["vector_norm", "trimmed_mean"]
 
 
 @pandas_udf("double")
@@ -48,23 +48,3 @@ def trimmed_mean(v: pd.Series) -> float:
     k = int(len(a) * 0.1)
     core = a[k : len(a) - k] if len(a) > 2 * k else a
     return float(core.mean()) if len(core) else float("nan")
-
-
-def batch_dot_topk_kernel(query_mat: np.ndarray, k: int):
-    """NumPy kernel for mapInPandas ANN sharding: given the partition's
-    corpus block (rows × dim) return per-query top-k via one GEMM.
-    Used by tests to validate the matrix path equals the expression
-    path; a full mapInPandas ANN operator would shard the corpus by
-    partition and merge per-query heaps."""
-
-    def run(block_ids: np.ndarray, block: np.ndarray):
-        sims = block @ query_mat.T  # (rows, nq)
-        norms = np.linalg.norm(block, axis=1, keepdims=True) * np.linalg.norm(
-            query_mat, axis=1
-        )
-        with np.errstate(divide="ignore", invalid="ignore"):
-            sims = sims / norms
-        top = np.argsort(-sims, axis=0)[:k]
-        return block_ids[top], np.take_along_axis(sims, top, axis=0)
-
-    return run

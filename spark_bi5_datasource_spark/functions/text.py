@@ -15,12 +15,7 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "token_count",
-    "avg_token_len",
-    "punct_ratio",
-    "stopword_ratio",
-    "uppercase_ratio",
     "quality_score",
-    "lang_scores",
     "lang_id",
     "doc_fingerprint",
     "text_stats_cols",
@@ -100,29 +95,10 @@ def bpe_ish_token_count(text_col: str) -> Column:
     return F.size(F.regexp_extract_all(F.col(text_col), F.lit(BPE_ISH_PATTERN), F.lit(0)))
 
 
-def avg_token_len(text_col: str) -> Column:
-    return F.expr(
-        _let_tokens(
-            text_col, "aggregate(tks, 0D, (acc, x) -> acc + length(x)) / size(tks)"
-        )
-    )
-
-
 def _punct_sql(text_col: str) -> str:
     return (
         f"length(regexp_replace({text_col}, '[^.,;:!?\\'\"()-]', '')) "
         f"/ greatest(length({text_col}), 1)"
-    )
-
-
-def punct_ratio(text_col: str) -> Column:
-    """Punctuation chars / total chars."""
-    return F.expr(_punct_sql(text_col))
-
-
-def uppercase_ratio(text_col: str) -> Column:
-    return F.expr(
-        f"length(regexp_replace({text_col}, '[^A-Z]', '')) / greatest(length({text_col}), 1)"
     )
 
 
@@ -132,11 +108,6 @@ def _stop_ratio_sql(words: list[str]) -> str:
         f"size(filter(tks, x -> lower(x) IN ({_in_list(words)}))) "
         f"/ cast(size(tks) AS double)"
     )
-
-
-def stopword_ratio(text_col: str, stopwords: list[str] | None = None) -> Column:
-    words = stopwords or _ENGLISH_STOPWORDS
-    return F.expr(_let_tokens(text_col, _stop_ratio_sql(words)))
 
 
 def _quality_body(text_col: str) -> str:
@@ -164,18 +135,6 @@ def quality_score_cols(text_col: str) -> Column:
         f"inline(transform(array({_tokens(text_col)}), "
         f"tks -> named_struct('quality', {_quality_body(text_col)})))"
     )
-
-
-def lang_scores(text_col: str) -> dict[str, Column]:
-    """Per-language stopword hit counts over the token list."""
-    out = {}
-    for lang, words in STOPWORDS.items():
-        out[lang] = F.expr(
-            _let_tokens(
-                text_col, f"size(filter(tks, x -> lower(x) IN ({_in_list(words)})))"
-            )
-        )
-    return out
 
 
 def lang_id(text_col: str) -> Column:
@@ -280,20 +239,6 @@ def redact_pii(text_col: str | Column) -> Column:
     for pat, tag in PII_PATTERNS:
         c = F.regexp_replace(c, pat, tag)
     return c
-
-
-def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Convenience: attach the full stat set."""
-    return (
-        df.withColumn("n_tokens", token_count(text_col))
-        .withColumn("avg_token_len", F.round(avg_token_len(text_col), 6))
-        .withColumn("punct_ratio", F.round(punct_ratio(text_col), 6))
-        .withColumn("stopword_ratio", F.round(stopword_ratio(text_col), 6))
-        .withColumn("quality", quality_score(text_col))
-        .withColumn("lang_pred", lang_id(text_col))
-        .withColumn("fingerprint", doc_fingerprint(text_col))
-    )
-
 
 
 def _fanout(df: DataFrame) -> DataFrame:

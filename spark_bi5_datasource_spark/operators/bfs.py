@@ -13,7 +13,7 @@ min aggregation is needed.
 Scale shape: per round the shuffle is O(|frontier-adjacent edges|)
 hashed on the node key, and the anti-join streams the visited set
 (O(|V| reached so far)).  At 100 TB the edge frame would be bucketed
-on ``src`` (tables.ensure_bucketed_layout contract) so the expansion
+on ``src`` (sources/layout.write_bucketed) so the expansion
 join is exchange-free on the big side; ``max_depth`` bounds the round
 count the way iteration caps bound PageRank.  Frontier/visited frames
 are persisted per round — without that, round k's plan would re-run

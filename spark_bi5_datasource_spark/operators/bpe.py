@@ -233,97 +233,3 @@ def encode_bpe(
         F.size("tokens").cast("bigint").alias("n_tokens"),
         "tokens",
     )
-
-
-def encode_bpe_local(
-    texts: list[str], merges: list[tuple[str, str]]
-) -> list[list[str]]:
-    """Pure-Python reference encoder (same lowest-rank-first merge
-    loop) — the pytest oracle for :func:`encode_bpe`."""
-    import re
-
-    ranks = {tuple(m): i for i, m in enumerate(merges)}
-
-    def enc_word(w: str) -> list[str]:
-        syms = list(w)
-        while len(syms) > 1:
-            best = min(
-                (ranks[p] for p in zip(syms, syms[1:]) if p in ranks),
-                default=None,
-            )
-            if best is None:
-                break
-            left, right = merges[best]
-            acc: list[str] = []
-            i = 0
-            while i < len(syms):
-                if (
-                    i < len(syms) - 1
-                    and syms[i] == left
-                    and syms[i + 1] == right
-                ):
-                    acc.append(left + right)
-                    i += 2
-                else:
-                    acc.append(syms[i])
-                    i += 1
-            syms = acc
-        return syms
-
-    out = []
-    for t in texts:
-        toks: list[str] = []
-        for w in re.split(r"[^a-z]+", (t or "").lower()):
-            if w:
-                toks.extend(enc_word(w))
-        out.append(toks)
-    return out
-
-
-def train_bpe_local(texts: list[str], num_merges: int = 20,
-                    min_pair_count: int = 2) -> list[tuple[str, str, int]]:
-    """Pure-Python reference trainer (same tokenization, same greedy
-    left-to-right merge, same count-desc-then-lexicographic argmax) —
-    the pytest oracle for :func:`train_bpe`."""
-    import re
-    from collections import Counter
-
-    wc: Counter = Counter()
-    for t in texts:
-        for w in re.split(r"[^a-z]+", t.lower()):
-            if w:
-                wc[w] += 1
-    vocab = {tuple(w): c for w, c in wc.items()}
-    out: list[tuple[str, str, int]] = []
-    for _ in range(num_merges):
-        pc: Counter = Counter()
-        for syms, c in vocab.items():
-            for i in range(len(syms) - 1):
-                pc[(syms[i], syms[i + 1])] += c
-        if not pc:
-            break
-        (left, right), c = min(
-            pc.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
-        )
-        if c < min_pair_count:
-            break
-        out.append((left, right, c))
-        merged = left + right
-        nv = {}
-        for syms, cnt in vocab.items():
-            acc: list[str] = []
-            i = 0
-            while i < len(syms):
-                if (
-                    i < len(syms) - 1
-                    and syms[i] == left
-                    and syms[i + 1] == right
-                ):
-                    acc.append(merged)
-                    i += 2
-                else:
-                    acc.append(syms[i])
-                    i += 1
-            nv[tuple(acc)] = nv.get(tuple(acc), 0) + cnt
-        vocab = nv
-    return out

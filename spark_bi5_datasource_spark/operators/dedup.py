@@ -188,8 +188,8 @@ def minhash_signatures(
     ((a·h+b) % p, min per segment) in ``num_perm`` vectorized passes.
     Values are bit-identical by construction (same xxhash64 inputs,
     same coefficient derivation, same nonneg int64 ops) and pinned by
-    a parity test against the pure-expression twin
-    (``_minhash_signatures_expr``)."""
+    a parity test against the pure-expression twin in
+    ``tests/oracles.py``."""
     import numpy as np  # driver-side availability check  # noqa: F401
 
     a, b = _minhash_coeffs(num_perm)
@@ -280,30 +280,6 @@ def minhash_signatures(
             )
 
     return hashed.mapInArrow(kernel, out_schema)
-
-
-def _minhash_signatures_expr(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    num_perm: int = 32,
-    out_col: str = "signature",
-) -> DataFrame:
-    """Pure-Catalyst twin of ``minhash_signatures`` (the pre-r13
-    implementation): the parity oracle proving the Arrow kernel's
-    values bit-identical, and a fallback for environments without
-    NumPy on the workers."""
-    a, b = _minhash_coeffs(num_perm)
-    a_arr = "array({})".format(",".join(f"{x}L" for x in a))
-    b_arr = "array({})".format(",".join(f"{x}L" for x in b))
-    hashed = _hashed_shingles(df, text_col, n)
-    sig = F.expr(
-        f"transform(array(__mh_hs), hs -> "
-        f"zip_with({a_arr}, {b_arr}, (a, b) -> "
-        f"  array_min(transform(hs, h -> (a * h + b) % {_MINHASH_P}L))))[0]"
-    )
-    return hashed.withColumn(out_col, sig).drop("__mh_hs")
 
 
 def _banded(

@@ -14,9 +14,9 @@ aggregate broadcast into the update expression.
 Scale shape: per iteration, shuffle volume is O(|E|) contributions
 hashed on dst; the rank vector is O(|V|) rows.  At 100 TB the edge
 frame would be bucketed on src so the per-iteration join is
-exchange-free on the big side (same layout contract as
-tables.ensure_bucketed_layout); iteration count is a constant
-(convergence plateaus ~O(log |V|) for damping 0.85).
+exchange-free on the big side (sources/layout.write_bucketed);
+iteration count is a constant (convergence plateaus ~O(log |V|) for
+damping 0.85).
 """
 
 from __future__ import annotations

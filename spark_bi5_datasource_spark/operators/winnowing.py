@@ -34,29 +34,7 @@ from pyspark.sql import DataFrame
 
 from ..functions.text import _fanout
 
-__all__ = ["winnow_fingerprint_stats", "winnow_fingerprints", "winnow_py"]
-
-
-def winnow_py(
-    text: str, k: int = 8, w: int = 4, base: int = 131,
-    mod: int = 1_000_000_007,
-) -> list[int]:
-    """Pure-Python reference (test oracle): sorted distinct winnowed
-    fingerprints of ``text``.  Documents with fewer than ``w`` gram
-    hashes contribute one window spanning all grams."""
-    m = len(text)
-    n = m - k + 1
-    if n <= 0:
-        return []
-    hs = []
-    for i in range(n):
-        h = 0
-        for j in range(k):
-            h = (h * base + ord(text[i + j])) % mod
-        hs.append(h)
-    if n < w:
-        return [min(hs)]
-    return sorted({min(hs[p : p + w]) for p in range(n - w + 1)})
+__all__ = ["winnow_fingerprint_stats", "winnow_fingerprints"]
 
 
 def _batch_winnow(texts, k: int, w: int, base: int, mod: int):
@@ -64,9 +42,9 @@ def _batch_winnow(texts, k: int, w: int, base: int, mod: int):
     the concatenated batch replaces the per-document per-character
     ``map(ord, ...)`` loop, and the k-step rolling-hash fold runs once
     over the concatenated codepoint array with document boundaries
-    masked out — identical int64 arithmetic to ``winnow_py``, so the
-    selected fingerprints are bit-identical (pinned by
-    test_kernel_matches_reference).
+    masked out — identical int64 arithmetic to ``tests/oracles.py``'s
+    ``winnow_py``, so the selected fingerprints are bit-identical
+    (pinned by test_kernel_matches_reference).
 
     Input: an iterable of ``str | None`` (one element per document).
     Returns ``(n_grams, fp_doc, fps)``: per-document gram counts

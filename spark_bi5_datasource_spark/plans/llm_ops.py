@@ -613,7 +613,7 @@ def multimodal_features(spark: SparkSession, sf: str) -> DataFrame:
     from ..functions.multimodal import documents_as_media, extract_media_features
 
     media = documents_as_media(t(spark, sf, "documents"))
-    return extract_media_features(media, fake_decode=True).select(
+    return extract_media_features(media).select(
         "media_id", "kind", "n_bytes", "width", "height"
     )
 

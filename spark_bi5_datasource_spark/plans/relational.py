@@ -215,16 +215,10 @@ def q5_region_revenue(spark: SparkSession, sf: str) -> DataFrame:
     region/supplier are broadcast (small side) — no shuffle of the
     fact table for the dim joins.
 
-    The fact⋈fact join (lineitem⋈orders) is the scale bottleneck.
-    When the tables carry the co-located bucketed layout
-    (tables.ensure_bucketed_layout — both bucketed+sorted on the order
-    key), the merge hint forces the exchange-free, sort-free SMJ: two
-    fact tables must never broadcast at scale, and the planner's
-    size-estimate heuristics would otherwise pick a broadcast that
-    rebuilds a multi-million-row hash table per query (measured 3×
-    slower than the co-located merge at x10).  On plain parquet the
-    choice stays with AQE."""
-    from .tables import is_bucketed
+    The fact⋈fact join (lineitem⋈orders) is the scale bottleneck;
+    its strategy is left to AQE.  Tables stored co-bucketed on the
+    order key (``sources/layout.write_bucketed``) run it with no
+    exchange."""
 
     c = t(spark, sf, "customer").select("c_custkey", "c_nationkey")
     o = t(spark, sf, "orders").select("o_orderkey", "o_custkey")
@@ -263,8 +257,6 @@ def q5_region_revenue(spark: SparkSession, sf: str) -> DataFrame:
     o2 = o.join(c_attach, o.o_custkey == c.c_custkey).select(
         "o_orderkey", "c_nationkey"
     )
-    if is_bucketed(spark, sf, "lineitem") and is_bucketed(spark, sf, "orders"):
-        o2 = o2.hint("merge")
     agg = (
         li.join(o2, li.l_orderkey == o2.o_orderkey)
         .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)

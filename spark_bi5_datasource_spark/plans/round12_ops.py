@@ -694,8 +694,8 @@ def orders_backlog_aging(spark: SparkSession, sf: str) -> DataFrame:
     32.0 s** — 2.6× over shipped while running LAST in the sweep
     (the within-session degradation in HISTORY.md "Box shuffle-I/O
     drift" biases
-    against it).  Both legs key on the orderkey — exchange-free under
-    the bucketed layout (tables.BUCKET_SPECS) like
+    against it).  Both legs key on the orderkey — exchange-free over
+    tables co-bucketed on it (sources/layout.write_bucketed) like
     dq_order_reconciliation; then a ≤13-row rollup with a 1-row total
     broadcast."""
     d = _BACKLOG_D

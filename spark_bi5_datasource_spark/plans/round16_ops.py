@@ -152,13 +152,11 @@ def layout_cobucketed_docs_emb(spark: SparkSession, sf: str) -> DataFrame:
     The plan contract (pinned by tests/test_plan_shapes.py): the
     doc⋈emb id join is a SortMergeJoin over two ``Bucketed: true``
     scans with NO exchange and NO sort between them — the layout,
-    not the optimizer, pays the co-location, exactly like the
-    lineitem⋈orders bucket contract.  The same layout transparently
-    serves every other id-keyed consumer (coverage, referential
-    integrity, ANN index probes, retrieval join-backs) via
-    tables.BUCKET_SPECS; this entry exercises the WRITE path that
-    produces it, fingerprint-cached per fixture like the stored band
-    index.
+    not the optimizer, pays the co-location.  Any id-keyed consumer
+    (coverage, referential integrity, ANN index probes, retrieval
+    join-backs) that reads the two registered tables joins the same
+    way; this entry exercises the WRITE path that produces them,
+    fingerprint-cached per fixture like the stored band index.
 
     Scale shape: the write is one hash repartition per table (once
     per corpus snapshot, amortized across every subsequent join);

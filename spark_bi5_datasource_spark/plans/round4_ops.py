@@ -502,27 +502,6 @@ def _copurchase_pairs(lineitem) -> DataFrame:
     return unfold_sorted_pairs(baskets, "parts")
 
 
-def _copurchase_pairs_hof(lineitem) -> DataFrame:
-    """Pure-Catalyst twin of ``_copurchase_pairs`` (the pre-r13
-    unfold): the parity oracle for the Arrow kernel, and a fallback
-    for environments without NumPy on the workers."""
-    baskets = (
-        lineitem.select("l_orderkey", "l_partkey")
-        .groupBy("l_orderkey")
-        .agg(F.expr("sort_array(collect_set(l_partkey))").alias("parts"))
-        .where(F.expr("size(parts) >= 2"))
-    )
-    return baskets.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(parts, (x, i) ->"
-                " transform(slice(parts, i + 2, size(parts)),"
-                " y -> struct(x AS u, y AS v))))"
-            )
-        ).alias("p")
-    ).select("p.u", "p.v")
-
-
 def _salted_wedge_join(x, y, key: str, salt_on: str, hub_cap: int = 4096,
                        salts: int = 16):
     """Skew guard for wedge generation (the r6 verdict's power-law

@@ -13,17 +13,6 @@ a ``StructType`` and that fingerprint, no DataFrame and no JVM object,
 so it cannot keep a stopped session alive.  Each call still returns
 a new DataFrame: two loads of one table carry distinct attribute ids,
 so a self-join of them resolves.
-
-Also implements the optional BUCKETED layout for the big join tables:
-at warehouse scale the lineitem⋈orders join is the classic shuffle
-bottleneck, and the standard cure is co-located storage — both tables
-hash-bucketed (and sorted) on the join key with the same bucket
-count, so the sort-merge join runs with NO exchange and NO sort.
-``ensure_bucketed_layout`` materializes that layout next to a fixture
-directory (one-time, cached) and registers the bucketed tables;
-``t()`` then resolves those tables transparently for any catalog
-query.  Opt-in via the ``spark.bi5.bucketedDir`` session conf — the
-driver's correctness runs keep reading plain parquet.
 """
 
 from __future__ import annotations
@@ -45,22 +34,6 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-# join keys for the co-located layout: the two structured fact tables
-# meet on the order key, and the two unstructured-tier tables meet on
-# the document id (doc_id = vec_id is the text↔embedding pipeline
-# contract — every coverage/integrity/ANN-probe join in the catalog
-# keys on it).  Everything else is dim-sized (broadcast) or unjoined.
-# Spark's bucketed join only needs each side bucketed on ITS join key
-# with the same bucket count, so doc_id⋈vec_id runs exchange-free
-# exactly like l_orderkey⋈o_orderkey.
-BUCKET_SPECS: dict[str, str] = {
-    "lineitem": "l_orderkey",
-    "orders": "o_orderkey",
-    "documents": "doc_id",
-    "embeddings": "vec_id",
-}
-_BUCKETS = 32
 
 # the confs that change the schema parquet inference returns: int64
 # TIMESTAMP(NANOS) columns read as bigint, and NTZ-flavoured timestamps
@@ -113,69 +86,6 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return _read_pinned(spark, path)[0]
 
 
-def _bucket_table_name(name: str, sf_dir: str) -> str:
-    # table names are keyed by the source directory so two fixture
-    # scales can carry bucketed layouts in the same session
-    import hashlib
-
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    return f"bi5_bucketed_{tag}_{name}"
-
-
-def is_bucketed(spark: SparkSession, sf_dir: str, name: str) -> bool:
-    """True when ``t(spark, sf_dir, name)`` resolves to the co-located
-    bucketed layout (queries may then force the exchange-free merge
-    join instead of leaving the choice to size estimates)."""
-    return (
-        name in BUCKET_SPECS
-        and spark.conf.get("spark.bi5.bucketedDir", "") == sf_dir
-        and spark.catalog.tableExists(_bucket_table_name(name, sf_dir))
-    )
-
-
-def ensure_bucketed_layout(
-    spark: SparkSession,
-    sf_dir: str,
-    dest_dir: str | None = None,
-    tables: list[str] | None = None,
-) -> None:
-    """Materialize + register the bucketed twin of ``sf_dir``'s big
-    tables (one parquet file per bucket, sorted by the join key).
-
-    Files are written once and cached (``_SUCCESS`` marker); later
-    sessions only re-issue the CREATE TABLE DDL (the default catalog
-    is in-memory).  Enables the sorted-scan flag so the per-bucket
-    sort order survives into the plan (1 file/bucket makes it free)."""
-    dest = dest_dir or os.path.join(sf_dir, "_bucketed")
-    for name, key in BUCKET_SPECS.items():
-        if tables is not None and name not in tables:
-            continue
-        tbl = _bucket_table_name(name, sf_dir)
-        path = os.path.join(dest, name)
-        if spark.catalog.tableExists(tbl):
-            continue
-        # partially-synthesized scaled dirs (a perf probe replicating
-        # only the tables it measures) simply skip the absent ones
-        if not os.path.exists(os.path.join(sf_dir, f"{name}.parquet")):
-            continue
-        from ..sources.layout import register_bucketed, write_bucketed
-
-        if os.path.exists(os.path.join(path, "_SUCCESS")):
-            register_bucketed(spark, path, tbl, key, _BUCKETS)
-        else:
-            write_bucketed(
-                read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet")),
-                path,
-                tbl,
-                key,
-                _BUCKETS,
-            )
-    from ..sources.layout import enable_sorted_bucketed_scans
-
-    enable_sorted_bucketed_scans(spark)
-    spark.conf.set("spark.bi5.bucketedDir", sf_dir)
-
-
 def table_bytes(sf_dir: str, name: str) -> int:
     """On-disk parquet size of a fixture table — the cheap stand-in for
     optimizer row-count stats when a plan picks its join strategy by
@@ -204,8 +114,6 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     The nanos conf is set on every call, because the scan reads it
     again when it runs.
     """
-    if is_bucketed(spark, sf_dir, name):
-        return spark.table(_bucket_table_name(name, sf_dir))
     path = f"{sf_dir}/{name}.parquet"
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -19,6 +19,11 @@ BI5DataSource.scala, abbreviated DS24):
 * Error policy (DS24:149-186): any per-file failure — bad path shape,
   bad LZMA, truncated stream — silently yields the rows decoded so far
   for that file and moves on.  Never fails the task.
+* A record whose ms offset is an hour or more (``ms >= 3_600_000``) is
+  dropped as dirty, extending that policy (the reference keeps it).  A
+  Dukascopy hour file and ``Bi5Writer`` only write offsets inside the
+  hour, and the drop makes the scan's hour-granular ``ts`` prune exact:
+  every row lies in its file's hour.
 """
 
 from __future__ import annotations
@@ -71,6 +76,7 @@ RECORD_DTYPE = np.dtype(
 )
 
 _EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
+HOUR_US = 3_600_000_000
 
 
 @dataclass(frozen=True)
@@ -134,11 +140,15 @@ def decode_bi5_bytes(raw: bytes, digits: int, hour_epoch_us: int) -> dict[str, n
     Returns dict of numpy arrays: ``ts_us`` (int64 epoch micros), ``ask``,
     ``bid``, ``ask_volume``, ``bid_volume`` (float64).  Vectorized
     replacement for the reference's row-at-a-time loop (DS24:166-175);
-    trailing partial records are dropped like the EOFException path.
+    trailing partial records are dropped like the EOFException path,
+    and so are records with ``ms`` of an hour or more (module docstring).
     """
     payload = _decompress_lenient(raw)
     n = len(payload) // RECORD_SIZE
     recs = np.frombuffer(payload, dtype=RECORD_DTYPE, count=n)
+    in_hour = recs["ms"] < HOUR_US // 1000
+    if not in_hour.all():
+        recs = recs[in_hour]
     divisor = float(10**digits)
     return {
         "ts_us": hour_epoch_us + recs["ms"].astype(np.int64) * 1000,

@@ -20,10 +20,8 @@ salvania/BI5DataSource.scala, "DS24") Spark-first:
     task is launched.  The reference reads every file on every query
     (no pushdown interfaces, DS24:12-17).  Filters are also left for
     Spark to re-apply, so a kept file never adds a wrong row.  The
-    ``ts`` prune is NOT exact, though: it assumes every row lies in its
-    file's hour, but the codec accepts any u32 ``ms``, which can put a
-    row up to 49.7 days past that hour.  A ``ts >=`` bound past a file's
-    hour drops the file and such rows with it (open in ROADMAP.md).
+    ``ts`` prune is exact: the codec drops records whose ``ms`` lies
+    outside the file's hour, so every row lies in its file's hour.
   - **vectorized decode**: each file decodes NumPy→Arrow in one shot
     and ``read()`` yields Arrow RecordBatches, instead of the
     reference's row-at-a-time JVM iterator (DS24:150-194).
@@ -62,7 +60,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from .bi5_codec import decode_bi5_file, iter_bi5_files, parse_bi5_path
+from .bi5_codec import HOUR_US, decode_bi5_file, iter_bi5_files, parse_bi5_path
 
 __all__ = ["Bi5DataSource", "BI5_SCHEMA"]
 
@@ -77,8 +75,6 @@ BI5_SCHEMA = StructType(
         StructField("bid_volume", DoubleType(), nullable=False),
     ]
 )
-
-HOUR_US = 3_600_000_000
 
 # Spark's file-scan packing defaults (spark.sql.files.maxPartitionBytes
 # and spark.sql.files.openCostInBytes): a partition holds at most
@@ -231,11 +227,10 @@ class Bi5Reader(Bi5Scan, DataSourceReader):
         """Prune the file list from ticker/ts predicates.
 
         The path encodes ticker and the file's hour, so these predicates
-        translate to file-list pruning at hour granularity for ts.  All
+        translate to file-list pruning at hour granularity for ts, which
+        is exact because every decoded row lies in its file's hour.  All
         filters are returned for Spark to re-apply, so a kept file never
-        adds a wrong row; but a file holding a row whose ``ms`` runs
-        past its hour can be dropped although the row matches (see the
-        module docstring).
+        adds a wrong row.
         """
         for f in filters:
             try:

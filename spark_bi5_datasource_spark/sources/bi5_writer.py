@@ -39,8 +39,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql.datasource import DataSourceArrowWriter, WriterCommitMessage
 
-from .bi5_codec import RECORD_DTYPE
-from .bi5_datasource import HOUR_US, bi5_options
+from .bi5_codec import HOUR_US, RECORD_DTYPE
+from .bi5_datasource import bi5_options
 
 __all__ = ["Bi5Writer", "write_bi5_tree"]
 

@@ -1,25 +1,14 @@
-"""Storage layout helpers: hive-partitioned writes and one-pass
-pipeline metrics.
+"""Co-located storage layout: hash-bucketed tables that recurring
+joins read with no exchange.
 
-Three layout tools now cover the three pruning axes a 100-TB
-warehouse needs (each validated by plan tests):
-
-* **partition pruning** (this module): ``write_partitioned`` lays
-  data out as ``col=value/`` directories; an equality/IN filter on
-  the partition column never touches non-matching files — the plan
-  shows it under ``PartitionFilters`` and the scan's file list
-  shrinks before any task launches.  Right for low-cardinality,
-  always-filtered columns (day, tenant, source).
-* **file skipping** (operators/zorder.py): range-clusters the rows
-  so min/max footer stats prune *within* a partition — right for
-  high-cardinality or multi-dimension predicates.
-* **co-located joins** (plans/tables.py): hash-bucketed layout so
-  recurring fact-fact joins run with no exchange at all.
-
-``observed_write`` rides the ``df.observe`` API: audit counters
-(row counts, null counts, min/max freshness) computed during the
-one write pass — no second scan for the "how much did we just
-write" dashboard, which at 100 TB would double the job cost.
+``write_bucketed`` writes a frame bucketed (and sorted) on its join key
+and registers it, with a ``_bucket_spec.json`` sidecar that makes the
+directory self-describing; ``register_bucketed`` re-registers such a
+directory and rejects parameters that contradict the sidecar.
+``validate_bucketed`` audits the hash→bucket invariant file by file,
+``bucket_fragmentation`` reports how many files each bucket holds after
+appends, and ``compact_buckets_selective`` rewrites the fragmented
+buckets back to one file each (``min_files=1`` rewrites every bucket).
 """
 
 from __future__ import annotations
@@ -27,9 +16,7 @@ from __future__ import annotations
 import json
 import os
 
-from collections.abc import Callable
-
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import DataFrame
 
 _SPEC_FILE = "_bucket_spec.json"
 
@@ -62,26 +49,6 @@ def read_bucket_spec(path: str) -> dict | None:
         return json.load(fh)
 
 
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    mode: str = "overwrite",
-    max_records_per_file: int | None = None,
-) -> None:
-    """Write ``df`` hive-partitioned by ``partition_cols``.
-
-    Partition columns should be low-cardinality derivations (a date
-    bucket, a source tag) — one directory per distinct combination;
-    a high-cardinality partition key is the classic small-files
-    failure.  ``max_records_per_file`` caps file size inside hot
-    partitions without an extra repartition pass."""
-    w = df.write.mode(mode)
-    if max_records_per_file:
-        w = w.option("maxRecordsPerFile", max_records_per_file)
-    w.partitionBy(*partition_cols).parquet(path)
-
-
 def write_bucketed(
     df: DataFrame,
     path: str,
@@ -93,9 +60,7 @@ def write_bucketed(
 ) -> str:
     """Write ``df`` hash-bucketed (and by default sorted) on ``key``
     into ``path`` and register it as ``table`` — the co-located-join
-    write path, generalized from the fixture-layout helper
-    (plans/tables.ensure_bucketed_layout) to ANY frame a pipeline
-    materializes.
+    write path for ANY frame a pipeline materializes.
 
     Two frames written with the same ``buckets`` count, each on ITS
     join key, join with NO exchange and (when ``sort``) NO sort: the
@@ -126,8 +91,8 @@ def enable_sorted_bucketed_scans(spark) -> None:
     ``write_bucketed`` layout genuinely provides).  Call it once at
     session setup — NOT from inside individual timed operations — so
     plan shapes are uniform across a session rather than dependent on
-    which entry ran first (``ensure_bucketed_layout`` and the
-    co-bucketed fixtures route through here)."""
+    which entry ran first (the co-bucketed fixtures route through
+    here)."""
     spark.conf.set(
         "spark.sql.legacy.bucketedTableScan.outputOrdering", "true"
     )
@@ -275,33 +240,6 @@ def validate_bucketed(
     )
 
 
-def compact_bucketed(
-    spark,
-    table: str,
-    path: str,
-    key: str | None = None,
-    buckets: int | None = None,
-    sort: bool | None = None,
-) -> int:
-    """Compact a bucketed table back to ONE file per bucket after
-    streaming appends have fragmented it (each appended micro-batch
-    adds up to ``buckets`` files): ``compact_buckets_selective`` with
-    ``min_files=1``, so every bucket goes through the same
-    manifest-safe swap and per-bucket row guard.  A generic directory
-    compactor (operators/sharding.compact_parquet) would merge files
-    ACROSS buckets and silently corrupt the bucket→file mapping the
-    exchange-free join contract depends on.  Returns the data-file
-    count after compaction."""
-    compact_buckets_selective(
-        spark, table, path, min_files=1, key=key, buckets=buckets, sort=sort
-    )
-    return sum(
-        1
-        for f in os.listdir(path)
-        if f.startswith("part-") and f.endswith(".parquet")
-    )
-
-
 def compact_buckets_selective(
     spark,
     table: str,
@@ -312,7 +250,7 @@ def compact_buckets_selective(
     sort: bool | None = None,
 ) -> dict[int, int]:
     """Compact ONLY the buckets fragmented into ``min_files``-or-more
-    files; ``min_files=1`` (``compact_bucketed``) rewrites every bucket.
+    files; ``min_files=1`` rewrites every bucket.
 
     A streaming append fragments just the buckets its batch touched;
     rewriting the WHOLE table per maintenance cycle is O(table) when
@@ -594,24 +532,3 @@ def _recover_selective(
         os.path.join(path, "_compact_manifest_*.json.tmp")
     ):
         os.remove(stray)
-
-
-def observed_write(
-    df: DataFrame,
-    metrics: dict[str, Column],
-    action: Callable[[DataFrame], None] | None = None,
-    name: str = "pipeline_metrics",
-) -> dict:
-    """Attach observation ``metrics`` (aggregate Columns over the
-    full frame) to ``df``, run ``action`` (default: a noop-sink
-    write, i.e. full execution), and return the realized metric
-    values.  One scan: the metrics are accumulated by the tasks that
-    execute the action, not by a second job."""
-    obs = Observation(name)
-    named = [c.alias(n) for n, c in metrics.items()]
-    observed = df.observe(obs, *named)
-    if action is None:
-        observed.write.format("noop").mode("overwrite").save()
-    else:
-        action(observed)
-    return obs.get

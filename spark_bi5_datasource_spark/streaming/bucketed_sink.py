@@ -17,9 +17,8 @@ bucket it touches).  That is the same small-files pressure every
 streaming lake sink has; the cure is BUCKET-AWARE compaction —
 ``sources/layout.compact_buckets_selective``, which rewrites only the
 buckets recent batches fragmented (O(recent ingest)) behind a
-per-bucket manifest and row guard; ``compact_bucketed`` is the same
-call with ``min_files=1``, a full one-file-per-bucket rebuild.  A
-generic directory compactor must
+per-bucket manifest and row guard (``min_files=1`` is a full
+one-file-per-bucket rebuild).  A generic directory compactor must
 NOT be used here: merging files across buckets corrupts the
 bucket→file mapping the exchange-free join contract depends on.
 

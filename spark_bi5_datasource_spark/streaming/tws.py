@@ -33,6 +33,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 
+__all__ = ["running_totals_tws"]
+
 OUTPUT_SCHEMA = "event_type string, cnt bigint, value_sum double"
 
 

@@ -181,6 +181,34 @@ class TestPushdownPruning:
         df = read_bi5(spark, bi5_tree, digits=DIGITS_EUR, tickers="EURUSD")
         assert df.count() == 5
 
+    def test_ts_prune_equals_unpushed_read(self, tmp_path):
+        """A pushed ``ts`` bound keeps every row the unpushed read keeps
+        under the same filter, also for a record whose ``ms`` lies two
+        hours past its file's hour (the codec drops such a record)."""
+        from pyspark.sql.datasource import GreaterThanOrEqual
+
+        from spark_bi5_datasource_spark.sources.bi5_datasource import Bi5Reader
+        from tests.conftest import write_bi5
+
+        write_bi5(str(tmp_path / "EURUSD/2024/00/01/10h_ticks.bi5"), [(7_200_000, 1, 1, 1.0, 1.0)])
+        write_bi5(str(tmp_path / "EURUSD/2024/00/01/11h_ticks.bi5"), [(2_000_000, 2, 2, 1.0, 1.0)])
+        bound = dt.datetime(2024, 1, 1, 11, 30)
+
+        def rows(reader):
+            return sorted(
+                row
+                for part in reader.partitions()
+                for batch in reader.read(part)
+                for row in zip(*(c.to_pylist() for c in batch.columns))
+            )
+
+        pushed = Bi5Reader({"path": str(tmp_path), "digits": "5"})
+        list(pushed.pushFilters([GreaterThanOrEqual(("ts",), bound)]))
+        unpushed = Bi5Reader({"path": str(tmp_path), "digits": "5"})
+        want = [r for r in rows(unpushed) if r[1] >= bound.replace(tzinfo=UTC)]
+        assert rows(pushed) == want
+        assert [r[2] for r in want] == [2e-05]  # 11:33:20; the 12:00 record is dirty
+
     def test_start_end_options(self, spark, bi5_tree):
         df = read_bi5(
             spark,

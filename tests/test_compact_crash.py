@@ -1,5 +1,5 @@
-"""Crash/concurrency drills for sources/layout.compact_bucketed, the
-full compaction (``compact_buckets_selective`` with ``min_files=1``):
+"""Crash/concurrency drills for the full compaction,
+``sources/layout.compact_buckets_selective`` with ``min_files=1``:
 it must recover an interrupted selective cycle before reading, ignore
 stray staging directories, enforce the sidecar contract and refuse a
 rewrite whose per-bucket row counts do not match.
@@ -41,6 +41,12 @@ def _bucketed_table(spark, tmp_path, table: str, frags: int = 3):
     return path
 
 
+def _data_files(path: str) -> int:
+    return sum(
+        1 for f in os.listdir(path) if f.startswith("part-") and f.endswith(".parquet")
+    )
+
+
 class TestCompactCrashSafety:
     def test_full_compact_recovers_interrupted_selective_cycle(
         self, spark, tmp_path
@@ -57,7 +63,7 @@ class TestCompactCrashSafety:
         import pyarrow.parquet as pq
 
         from spark_bi5_datasource_spark.sources.layout import (
-            compact_bucketed,
+            compact_buckets_selective,
         )
 
         table = "bi5_test_compact_selrec"
@@ -85,8 +91,8 @@ class TestCompactCrashSafety:
             # bucket 0 currently holds every row twice on disk; the
             # full compaction must finish the interrupted deletes
             # before reading
-            n = compact_bucketed(spark, table, path)
-            assert n <= 4
+            compact_buckets_selective(spark, table, path, min_files=1)
+            assert _data_files(path) <= 4
             got = sorted(r.doc_id for r in spark.table(table).collect())
             assert got == list(range(120))  # no duplicates baked in
         finally:
@@ -99,7 +105,7 @@ class TestCompactCrashSafety:
         invisible to Spark's reader but was counted by the footer
         row-guard, spuriously refusing a healthy compaction."""
         from spark_bi5_datasource_spark.sources.layout import (
-            compact_bucketed,
+            compact_buckets_selective,
         )
 
         table = "bi5_test_compact_stray"
@@ -115,32 +121,32 @@ class TestCompactCrashSafety:
                 pa.table({"doc_id": [1], "text": ["x"]}),
                 os.path.join(stray, "part-ghost.parquet"),
             )
-            n = compact_bucketed(spark, table, path)  # must not raise
-            assert n <= 4
+            compact_buckets_selective(spark, table, path, min_files=1)  # must not raise
+            assert _data_files(path) <= 4
             assert spark.table(table).count() == 120
         finally:
             spark.sql(f"DROP TABLE IF EXISTS {table}")
 
     def test_spec_contradiction_refused(self, spark, tmp_path):
-        """compact_bucketed now enforces the sidecar contract like
+        """compact_buckets_selective enforces the sidecar contract like
         register_bucketed: compacting a 4-bucket table 'as 32' (the
         old silent default) must raise, and sidecar-resolved
         no-param compaction must work."""
         import pytest as _pytest
 
         from spark_bi5_datasource_spark.sources.layout import (
-            compact_bucketed,
+            compact_buckets_selective,
         )
 
         table = "bi5_test_compact_spec"
         path = _bucketed_table(spark, tmp_path, table)
         try:
             with _pytest.raises(ValueError, match="contradicts"):
-                compact_bucketed(
-                    spark, table, path, "doc_id", buckets=32
+                compact_buckets_selective(
+                    spark, table, path, min_files=1, key="doc_id", buckets=32
                 )
-            n = compact_bucketed(spark, table, path)  # sidecar params
-            assert n <= 4
+            compact_buckets_selective(spark, table, path, min_files=1)  # sidecar params
+            assert _data_files(path) <= 4
             assert spark.table(table).count() == 120
         finally:
             spark.sql(f"DROP TABLE IF EXISTS {table}")
@@ -168,8 +174,8 @@ class TestCompactCrashSafety:
         monkeypatch.setattr(layout, "_footer_rows_files", lying)
         try:
             with pytest.raises(RuntimeError, match="refusing to swap"):
-                layout.compact_bucketed(
-                    spark, table, path, "doc_id", buckets=4
+                layout.compact_buckets_selective(
+                    spark, table, path, min_files=1, key="doc_id", buckets=4
                 )
             # nothing was swapped or dropped
             assert sorted(os.listdir(path)) == before

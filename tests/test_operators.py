@@ -622,10 +622,8 @@ class TestCopurchaseKernel:
         the singleton/empty degenerate baskets."""
         import random
 
-        from spark_bi5_datasource_spark.plans.round4_ops import (
-            _copurchase_pairs,
-            _copurchase_pairs_hof,
-        )
+        from spark_bi5_datasource_spark.plans.round4_ops import _copurchase_pairs
+        from tests.oracles import _copurchase_pairs_hof
 
         rng = random.Random(13)
         rows = [(1, x) for x in range(53)] + [(2, 7), (3, 4)]
@@ -758,10 +756,8 @@ class TestDedupPolish:
         [null] * num_perm rather than a null signature."""
         import random
 
-        from spark_bi5_datasource_spark.operators.dedup import (
-            _minhash_signatures_expr,
-            minhash_signatures,
-        )
+        from spark_bi5_datasource_spark.operators.dedup import minhash_signatures
+        from tests.oracles import _minhash_signatures_expr
 
         rows = [
             (1, "the quick brown fox jumps over the lazy dog"),
@@ -871,27 +867,6 @@ class TestConnectedComponents:
 
 
 class TestMultimodalKernels:
-    def test_resize_plumbing(self, spark):
-        from spark_bi5_datasource_spark.functions.multimodal import (
-            documents_as_media,
-            resize_media,
-        )
-
-        docs = spark.createDataFrame([(1, "hello world " * 30)], "doc_id long, text string")
-        out = resize_media(documents_as_media(docs), 16, 8).collect()[0]
-        assert (out.width, out.height, len(out.payload)) == (16, 8, 128)
-
-    def test_frame_sampling_explodes_rows(self, spark):
-        from spark_bi5_datasource_spark.functions.multimodal import (
-            documents_as_media,
-            sample_media_frames,
-        )
-
-        docs = spark.createDataFrame([(1, "x" * 640)], "doc_id long, text string")
-        rows = sample_media_frames(documents_as_media(docs), every_n=2).collect()
-        # 640 bytes → 10 fake frames → every 2nd → 5 rows
-        assert len(rows) == 5
-        assert [r.frame_no for r in rows] == list(range(5))
 
     # ---- real (codec-free) kernels: PPM / PGM / BMP --------------
 
@@ -924,24 +899,26 @@ class TestMultimodalKernels:
         return header + body, px
 
     def test_decode_image_real_formats(self):
-        from spark_bi5_datasource_spark.functions.multimodal import decode_image
+        from spark_bi5_datasource_spark.functions.multimodal import _decode_pixels
 
         head, px = self._ppm(17, 9, comment=True)
-        assert decode_image(head + px.tobytes()) == (17, 9)
-        bmp, _ = self._bmp(13, 5)
-        assert decode_image(bmp) == (13, 5)
+        got, _ = _decode_pixels(head + px.tobytes())
+        assert (got == px).all()
+        bmp, px = self._bmp(13, 5)
+        got, _ = _decode_pixels(bmp)
+        assert (got == px).all()
         pgm = b"P5\n4 3\n255\n" + bytes(12)
-        assert decode_image(pgm) == (4, 3)
+        assert _decode_pixels(pgm)[0].shape == (3, 4, 1)
 
     def test_decode_image_rejects_unsupported_formats(self):
         import pytest
 
-        from spark_bi5_datasource_spark.functions.multimodal import decode_image
+        from spark_bi5_datasource_spark.functions.multimodal import _decode_pixels
 
         # PNG, baseline JPEG, and GIF decode for real (tests below);
         # formats still outside the pure-Python codecs reject cleanly
         with pytest.raises(NotImplementedError, match="imaging library"):
-            decode_image(b"II*\x00" + bytes(64))  # TIFF
+            _decode_pixels(b"II*\x00" + bytes(64))  # TIFF
 
     # ---- PNG: stdlib-zlib + NumPy-unfilter codec ------------------
 
@@ -997,15 +974,11 @@ class TestMultimodalKernels:
     def test_png_unfilter_inverts_all_five_filters(self):
         import numpy as np
 
-        from spark_bi5_datasource_spark.functions.multimodal import (
-            _decode_pixels,
-            decode_image,
-        )
+        from spark_bi5_datasource_spark.functions.multimodal import _decode_pixels
 
         rng = np.random.default_rng(7)
         px = rng.integers(0, 256, (5, 11, 3), dtype=np.uint8)
         payload = self._png_manual(px, filters=[0, 1, 2, 3, 4])
-        assert decode_image(payload) == (11, 5)  # dims from IHDR, no inflate
         got, meta = _decode_pixels(payload)
         assert meta["fmt"] == b"\x89P"
         assert (got == px).all()
@@ -1013,10 +986,8 @@ class TestMultimodalKernels:
     def test_png_encode_decode_roundtrip_channel_counts(self):
         import numpy as np
 
-        from spark_bi5_datasource_spark.functions.multimodal import (
-            _decode_pixels,
-            _png_encode,
-        )
+        from spark_bi5_datasource_spark.functions.multimodal import _decode_pixels
+        from tests.media_encoders import _png_encode
 
         rng = np.random.default_rng(11)
         for ch in (1, 2, 3, 4):  # gray / gray+A / RGB / RGBA
@@ -1050,24 +1021,6 @@ class TestMultimodalKernels:
         got, _ = _decode_pixels(payload)
         assert got.shape == (2, 3, 3) and (got == pal[idx]).all()
 
-    def test_png_resize_keeps_format(self):
-        import numpy as np
-
-        from spark_bi5_datasource_spark.functions.multimodal import (
-            _decode_pixels,
-            _png_encode,
-            decode_image,
-            resize_image,
-        )
-
-        rng = np.random.default_rng(3)
-        px = rng.integers(0, 256, (8, 10, 3), dtype=np.uint8)
-        out = resize_image(_png_encode(px), 20, 16)
-        assert out[:8] == b"\x89PNG\r\n\x1a\n"
-        assert decode_image(out) == (20, 16)
-        upx, _ = _decode_pixels(out)
-        assert (upx[::2, ::2] == px).all()
-
     def test_png_unsupported_variants_raise(self):
         import struct
         import zlib as _z
@@ -1089,67 +1042,8 @@ class TestMultimodalKernels:
         with pytest.raises(NotImplementedError, match="8-bit"):
             _decode_pixels(png_with_ihdr(16, 2, 0))
 
-    def test_resize_ppm_matches_numpy_nn(self):
-        import numpy as np
-
-        from spark_bi5_datasource_spark.functions.multimodal import (
-            decode_image,
-            resize_image,
-        )
-
-        head, px = self._ppm(16, 12)
-        out = resize_image(head + px.tobytes(), 8, 6)
-        assert decode_image(out) == (8, 6)
-        # reference NN with the same pixel-center convention
-        ri = ((np.arange(6) + 0.5) * 12 / 6).astype(int)
-        ci = ((np.arange(8) + 0.5) * 16 / 8).astype(int)
-        expect = px[ri][:, ci]
-        got = np.frombuffer(out.split(b"255\n", 1)[1], np.uint8).reshape(6, 8, 3)
-        assert (got == expect).all()
-
-    def test_resize_bmp_roundtrip(self):
-        import numpy as np
-
-        from spark_bi5_datasource_spark.functions.multimodal import (
-            _decode_pixels,
-            decode_image,
-            resize_image,
-        )
-
-        bmp, px = self._bmp(10, 6)
-        # identity resize preserves every pixel through decode+encode
-        same, _ = _decode_pixels(resize_image(bmp, 10, 6))
-        assert (same == px).all()
-        # upscale 2x: each source pixel appears in a 2x2 block
-        up = resize_image(bmp, 20, 12)
-        assert decode_image(up) == (20, 12)
-        upx, _ = _decode_pixels(up)
-        assert (upx[::2, ::2] == px).all()
-
-    def test_resize_media_real_kernel(self, spark):
-        """The mapInPandas plumbing with the REAL decoder: PPM payloads
-        through resize_media(fake_decode=False)."""
-        from pyspark.sql import functions as F
-
-        from spark_bi5_datasource_spark.functions.multimodal import (
-            _decode_pixels,
-            resize_media,
-        )
-
-        head, px = self._ppm(12, 4)
-        payload = head + px.tobytes()
-        media = spark.createDataFrame(
-            [(1, "image", bytearray(payload))],
-            "media_id long, kind string, payload binary",
-        ).withColumn("mime", F.lit("image/x-portable-pixmap"))
-        out = resize_media(media, 6, 2, fake_decode=False).collect()[0]
-        assert (out.width, out.height) == (6, 2)
-        got, meta = _decode_pixels(bytes(out.payload))
-        assert meta["fmt"] == b"P6" and got.shape == (2, 6, 3)
-
-
 class TestAudioKernels:
-    """Real (codec-free) PCM WAV kernels: decode / features / resample."""
+    """Real (codec-free) PCM WAV decoding."""
 
     @staticmethod
     def _wav(n, ch=1, rate=8000, bits=16, extra_chunk=False):
@@ -1177,21 +1071,25 @@ class TestAudioKernels:
         return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
 
     def test_decode_audio(self):
-        from spark_bi5_datasource_spark.functions.multimodal import decode_audio
+        from spark_bi5_datasource_spark.functions.multimodal import _audio_samples
 
-        assert decode_audio(self._wav(500)) == (1, 8000, 500)
-        assert decode_audio(self._wav(250, ch=2, rate=44100)) == (2, 44100, 250)
-        assert decode_audio(self._wav(100, bits=8, extra_chunk=True)) == (1, 8000, 100)
+        def shape(wav):
+            x, rate = _audio_samples(wav)
+            return x.shape[1], rate, x.shape[0]
+
+        assert shape(self._wav(500)) == (1, 8000, 500)
+        assert shape(self._wav(250, ch=2, rate=44100)) == (2, 44100, 250)
+        assert shape(self._wav(100, bits=8, extra_chunk=True)) == (1, 8000, 100)
 
     def test_decode_audio_rejects_non_pcm(self):
         import struct
 
         import pytest
 
-        from spark_bi5_datasource_spark.functions.multimodal import decode_audio
+        from spark_bi5_datasource_spark.functions.multimodal import _audio_samples
 
         with pytest.raises(ValueError, match="RIFF"):
-            decode_audio(b"OggS" + bytes(64))
+            _audio_samples(b"OggS" + bytes(64))
         # format tag 3 = IEEE float → needs a codec path we don't have
         f = self._wav(10)
         bad = f.replace(
@@ -1199,52 +1097,7 @@ class TestAudioKernels:
             b"fmt " + struct.pack("<IHH", 16, 3, 1),
         )
         with pytest.raises(NotImplementedError, match="PCM"):
-            decode_audio(bad)
-
-    def test_audio_features_match_numpy(self):
-        import numpy as np
-
-        from spark_bi5_datasource_spark.functions.multimodal import audio_features
-
-        wav = self._wav(1000, ch=2)
-        ch, rate, n, rms, peak = audio_features(wav)
-        assert (ch, rate, n) == (2, 8000, 1000)
-        x = np.frombuffer(wav[-4000:], "<i2").astype(np.float64) / 32768.0
-        assert abs(rms - np.sqrt(np.mean(x * x))) < 1e-12
-        assert abs(peak - np.max(np.abs(x))) < 1e-12
-
-    def test_resample_roundtrip_and_rate(self):
-        from spark_bi5_datasource_spark.functions.multimodal import (
-            decode_audio,
-            resample_audio,
-        )
-
-        wav = self._wav(800, rate=8000)
-        down = resample_audio(wav, 4000)
-        assert decode_audio(down) == (1, 4000, 400)
-        # identity resample preserves the sample count and rate
-        same = resample_audio(wav, 8000)
-        assert decode_audio(same) == (1, 8000, 800)
-
-    def test_extract_audio_features_spark(self, spark):
-        """mapInPandas plumbing: good WAV + dirty payload in one frame;
-        dirty rows yield null features, not task failure."""
-        from spark_bi5_datasource_spark.functions.multimodal import (
-            extract_audio_features,
-        )
-
-        media = spark.createDataFrame(
-            [
-                (1, "audio", bytearray(self._wav(600, ch=2))),
-                (2, "audio", bytearray(b"not a wav at all")),
-            ],
-            "media_id long, kind string, payload binary",
-        )
-        rows = {r.media_id: r for r in extract_audio_features(media).collect()}
-        assert rows[1].n_channels == 2 and rows[1].n_frames == 600
-        assert rows[1].rms > 0 and rows[1].peak <= 1.0
-        assert rows[2].n_channels is None and rows[2].rms is None
-
+            _audio_samples(bad)
 
 class TestG711Companding:
     """μ-law / A-law WAV (G.711): the decoders are vectorized formula
@@ -1306,21 +1159,16 @@ class TestG711Companding:
     def test_wav_surface_decodes_companded_audio(self):
         import numpy as np
 
-        from spark_bi5_datasource_spark.functions.multimodal import (
-            audio_features, decode_audio, resample_audio,
-        )
+        from spark_bi5_datasource_spark.functions.multimodal import _audio_samples
 
         sig = np.round(np.sin(np.arange(400) * 0.07) * 20000).astype(int)
         for tag, enc in ((7, self._ulaw_encode), (6, self._alaw_encode)):
             payload = bytes(enc(int(v)) for v in sig)
-            wav = self._companded_wav(tag, payload)
-            assert decode_audio(wav) == (1, 8000, 400)
-            ch, rate, n, rms, peak = audio_features(wav)
-            assert (ch, rate, n) == (1, 8000, 400)
-            # companding error ≪ signal level: features match PCM truth
+            x, rate = _audio_samples(self._companded_wav(tag, payload))
+            assert (x.shape, rate) == ((400, 1), 8000)
+            # companding error ≪ signal level: the RMS matches PCM truth
+            rms = np.sqrt(np.mean(np.square(x)))
             assert abs(rms - np.sqrt(np.mean((sig / 32768) ** 2))) < 0.01
-            out = resample_audio(wav, 4000)
-            assert decode_audio(out) == (1, 4000, 200)
 
     def test_ima_adpcm_decodes_msadpcm_still_rejects(self):
         """IMA ADPCM (tag 17) is now a real decoder (see
@@ -1331,7 +1179,7 @@ class TestG711Companding:
 
         import pytest
 
-        from spark_bi5_datasource_spark.functions.multimodal import decode_audio
+        from spark_bi5_datasource_spark.functions.multimodal import _audio_samples
 
         # tag-17 needs bits=4 + block_align: a 12-byte mono block
         # (4-byte header + 8 nibble bytes) = 17 samples
@@ -1342,12 +1190,13 @@ class TestG711Companding:
             + b"data" + struct.pack("<I", len(body)) + body
         )
         wav = b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
-        assert decode_audio(wav) == (1, 8000, 17)
+        x, rate = _audio_samples(wav)
+        assert (x.shape, rate) == ((17, 1), 8000)
 
         for tag in (2, 85):
             bad = self._companded_wav(tag, bytes(64))
             with pytest.raises(NotImplementedError, match="codec library"):
-                decode_audio(bad)
+                _audio_samples(bad)
 
 
 class TestMergeUpsert:
@@ -1651,7 +1500,6 @@ class TestVideoKernels:
     def test_sample_frames_every_n_as_bmp(self):
         from spark_bi5_datasource_spark.functions.multimodal import (
             _decode_pixels,
-            decode_image,
             sample_frames,
         )
 
@@ -1659,7 +1507,6 @@ class TestVideoKernels:
         got = sample_frames(avi, 3)
         assert len(got) == 4  # frames 0, 3, 6, 9
         for bmp, src in zip(got, frames[::3]):
-            assert decode_image(bmp) == (6, 4)
             px, meta = _decode_pixels(bmp)
             assert meta["fmt"] == b"BM" and px.shape == (4, 6, 3)
         # sampled frame content round-trips exactly (body == raster)
@@ -1679,28 +1526,13 @@ class TestVideoKernels:
         with pytest.raises(NotImplementedError, match="codec"):
             sample_frames(dc, 1)
 
-    def test_spark_plumbing_real_kernel(self, spark):
-        from spark_bi5_datasource_spark.functions.multimodal import (
-            decode_image,
-            sample_media_frames,
-        )
-
-        avi, _ = self._avi(8, 6, 6)
-        media = spark.createDataFrame(
-            [(7, "video", bytearray(avi))],
-            "media_id long, kind string, payload binary",
-        )
-        rows = sample_media_frames(media, every_n=2, fake_decode=False).collect()
-        assert [r.frame_no for r in rows] == [0, 1, 2]  # frames 0, 2, 4
-        assert all(decode_image(bytes(r.frame)) == (8, 6) for r in rows)
-
     @staticmethod
     def _mjpeg_avi(w, h, n_frames):
         import struct
 
         import numpy as np
 
-        from spark_bi5_datasource_spark.functions.jpeg_codec import jpeg_encode
+        from tests.media_encoders import jpeg_encode
 
         frames = []
         for f in range(n_frames):
@@ -1731,7 +1563,6 @@ class TestVideoKernels:
 
         from spark_bi5_datasource_spark.functions.multimodal import (
             _decode_pixels,
-            decode_image,
             sample_frames,
         )
 
@@ -1740,8 +1571,8 @@ class TestVideoKernels:
         assert len(got) == 3 and [g[:2] for g in got] == [b"\xff\xd8"] * 3
         assert got[1] == frames[2]  # frames pass through byte-identical
         for i, g in zip((0, 2, 4), got):
-            assert decode_image(g) == (16, 8)
             px, _ = _decode_pixels(g)
+            assert px.shape == (8, 16, 3)
             assert abs(int(np.median(px)) - (40 + 20 * i)) <= 1
 
 
@@ -2030,11 +1861,10 @@ class TestContaminationMatrixMultiword:
     contract instead of just asserting it."""
 
     def test_words1_equals_catalog_entry(self, spark):
+        """``words=1`` is the catalog's text_contamination_matrix; on
+        the fixture's documents it must equal the brute force."""
         from spark_bi5_datasource_spark.operators.contamination import (
             contamination_matrix,
-        )
-        from spark_bi5_datasource_spark.plans.round11_ops import (
-            text_contamination_matrix,
         )
         from tests.conftest import TESTDATA_SF, has_testdata
 
@@ -2046,13 +1876,8 @@ class TestContaminationMatrixMultiword:
         got = sorted(
             map(tuple, contamination_matrix(docs, words=1).collect())
         )
-        want = sorted(
-            map(
-                tuple,
-                text_contamination_matrix(spark, TESTDATA_SF).collect(),
-            )
-        )
-        assert got == want
+        rows = [(r.source, r.text) for r in docs.collect()]
+        assert got and got == self._brute_force(rows)
 
     @staticmethod
     def _synthetic_70_sources(spark):
@@ -2199,11 +2024,11 @@ class TestTopKSketch:
 
 
 class TestJpegCodec:
-    """Pure-NumPy baseline JPEG (functions/jpeg_codec.py): encoder and
-    decoder are independent implementations of the wire format (the
-    encoder uses fixed-length canonical tables, the decoder handles
-    arbitrary DHT tables), so round-trip agreement within the quant
-    step pins both sides."""
+    """Pure-NumPy baseline JPEG decoder (functions/jpeg_codec.py) and
+    the test encoder (tests/media_encoders.py) are independent
+    implementations of the wire format (the encoder uses fixed-length
+    canonical tables, the decoder handles arbitrary DHT tables), so
+    round-trip agreement within the quant step pins both sides."""
 
     @staticmethod
     def _gradient(h=24, w=40):
@@ -2218,9 +2043,8 @@ class TestJpegCodec:
     def test_roundtrip_within_quant_step(self):
         import numpy as np
 
-        from spark_bi5_datasource_spark.functions.jpeg_codec import (
-            jpeg_decode, jpeg_dims, jpeg_encode,
-        )
+        from spark_bi5_datasource_spark.functions.jpeg_codec import jpeg_decode
+        from tests.media_encoders import jpeg_dims, jpeg_encode
 
         px = self._gradient()
         enc = jpeg_encode(px, quality=95)
@@ -2231,9 +2055,8 @@ class TestJpegCodec:
     def test_constant_and_grayscale_exact(self):
         import numpy as np
 
-        from spark_bi5_datasource_spark.functions.jpeg_codec import (
-            jpeg_decode, jpeg_encode,
-        )
+        from spark_bi5_datasource_spark.functions.jpeg_codec import jpeg_decode
+        from tests.media_encoders import jpeg_encode
 
         c = np.full((16, 16, 3), 77, np.uint8)
         assert (jpeg_decode(jpeg_encode(c, quality=95)) == c).all()
@@ -2244,9 +2067,8 @@ class TestJpegCodec:
     def test_chroma_subsampling_420(self):
         import numpy as np
 
-        from spark_bi5_datasource_spark.functions.jpeg_codec import (
-            jpeg_decode, jpeg_encode,
-        )
+        from spark_bi5_datasource_spark.functions.jpeg_codec import jpeg_decode
+        from tests.media_encoders import jpeg_encode
 
         px = self._gradient()
         dec = jpeg_decode(jpeg_encode(px, quality=95, subsample=True))
@@ -2256,9 +2078,8 @@ class TestJpegCodec:
     def test_restart_markers(self):
         import numpy as np
 
-        from spark_bi5_datasource_spark.functions.jpeg_codec import (
-            jpeg_decode, jpeg_encode,
-        )
+        from spark_bi5_datasource_spark.functions.jpeg_codec import jpeg_decode
+        from tests.media_encoders import jpeg_encode
 
         px = self._gradient()
         enc = jpeg_encode(px, quality=95, restart_interval=2)
@@ -2266,16 +2087,12 @@ class TestJpegCodec:
         err = np.abs(jpeg_decode(enc).astype(int) - px.astype(int))
         assert err.max() <= 2
 
-    def test_multimodal_dispatch_and_resize(self):
-        from spark_bi5_datasource_spark.functions.jpeg_codec import jpeg_encode
-        from spark_bi5_datasource_spark.functions.multimodal import (
-            decode_image, resize_image,
-        )
+    def test_multimodal_dispatch(self):
+        from spark_bi5_datasource_spark.functions.multimodal import _decode_pixels
+        from tests.media_encoders import jpeg_encode
 
-        enc = jpeg_encode(self._gradient(), quality=95)
-        assert decode_image(enc) == (40, 24)
-        out = resize_image(enc, 20, 12)
-        assert out[:2] == b"\xff\xd8" and decode_image(out) == (20, 12)
+        px, meta = _decode_pixels(jpeg_encode(self._gradient(), quality=95))
+        assert px.shape == (24, 40, 3) and meta["fmt"] == b"\xff\xd8"
 
     def test_canonical_huffman_matches_spec_assignment(self):
         # the standard luminance-DC table's well-known code assignment
@@ -2295,9 +2112,7 @@ class TestJpegCodec:
 
         import pytest
 
-        from spark_bi5_datasource_spark.functions.jpeg_codec import (
-            jpeg_decode, jpeg_dims,
-        )
+        from spark_bi5_datasource_spark.functions.jpeg_codec import jpeg_decode
 
         sof2 = struct.pack(">BHHB", 8, 4, 4, 1) + bytes([1, 0x11, 0])
         data = (
@@ -2305,7 +2120,6 @@ class TestJpegCodec:
             + struct.pack(">BBH", 0xFF, 0xC2, len(sof2) + 2) + sof2
             + b"\xff\xd9"
         )
-        assert jpeg_dims(data) == (4, 4)  # dims work for any SOFn
         with pytest.raises(NotImplementedError, match="baseline"):
             jpeg_decode(data)
 
@@ -2329,9 +2143,8 @@ class TestJpegCodec:
         found = [p for p in candidates if os.path.isfile(p)]
         if not found:
             pytest.skip("no foreign JPEG fixtures on this image")
-        from spark_bi5_datasource_spark.functions.jpeg_codec import (
-            jpeg_decode, jpeg_dims,
-        )
+        from spark_bi5_datasource_spark.functions.jpeg_codec import jpeg_decode
+        from tests.media_encoders import jpeg_dims
 
         for p in found:
             data = open(p, "rb").read()
@@ -2345,7 +2158,8 @@ class TestGifCodec:
     """Pure-Python GIF/LZW (functions/gif_codec.py).  The decoder's
     code-width schedule is pinned by real-world files (every idlelib
     icon — a single off-by-one in the width bump desyncs the LZW walk
-    immediately); the encoder round-trips bit-exact against it."""
+    immediately); the test encoder (tests/media_encoders.py)
+    round-trips bit-exact against it."""
 
     @staticmethod
     def _palette_image(n_colors, h, w, seed=1):
@@ -2358,9 +2172,8 @@ class TestGifCodec:
         return pal[rng.integers(0, pal.shape[0], (h, w))]
 
     def test_roundtrip_exact_through_width_growth(self):
-        from spark_bi5_datasource_spark.functions.gif_codec import (
-            gif_decode, gif_encode,
-        )
+        from spark_bi5_datasource_spark.functions.gif_codec import gif_decode
+        from tests.media_encoders import gif_encode
 
         # enough entropy that the LZW dictionary crosses several
         # code-width boundaries
@@ -2374,9 +2187,8 @@ class TestGifCodec:
 
         import numpy as np
 
-        from spark_bi5_datasource_spark.functions.gif_codec import (
-            _lzw_encode, gif_decode,
-        )
+        from spark_bi5_datasource_spark.functions.gif_codec import gif_decode
+        from tests.media_encoders import _lzw_encode
 
         pal = np.array([[i, 0, 0] for i in range(16)], np.uint8)
         h, w = 13, 4
@@ -2423,30 +2235,20 @@ class TestGifCodec:
             w, h = gif_dims(data)
             assert gif_decode(data).shape == (h, w, 3), os.path.basename(p)
 
-    def test_multimodal_dispatch_and_resize(self):
-        from spark_bi5_datasource_spark.functions.gif_codec import gif_encode
-        from spark_bi5_datasource_spark.functions.multimodal import (
-            _decode_pixels,
-            decode_image,
-            resize_image,
-        )
+    def test_multimodal_dispatch(self):
+        from spark_bi5_datasource_spark.functions.multimodal import _decode_pixels
+        from tests.media_encoders import gif_encode
 
         px = self._palette_image(7, 10, 20)
-        enc = gif_encode(px)
-        assert decode_image(enc) == (20, 10)
-        out = resize_image(enc, 10, 5)
-        assert out[:6] == b"GIF89a" and decode_image(out) == (10, 5)
-        got, _ = _decode_pixels(out)
-        # pixel-center NN convention: source index (i+0.5)*src/dst
-        assert (got == px[1::2, 1::2]).all()
+        got, meta = _decode_pixels(gif_encode(px))
+        assert meta["fmt"] == b"GI" and (got == px).all()
 
     def test_unpalettizable_rejected_truncated_tolerated(self):
         import numpy as np
         import pytest
 
-        from spark_bi5_datasource_spark.functions.gif_codec import (
-            gif_decode, gif_encode,
-        )
+        from spark_bi5_datasource_spark.functions.gif_codec import gif_decode
+        from tests.media_encoders import gif_encode
 
         # 300 guaranteed-distinct 24-bit colors > the 256-entry table
         c = (np.arange(300, dtype=np.int64) * 65539) % (1 << 24)

@@ -45,46 +45,6 @@ def test_asof_join_single_exchange(spark):
     assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
 
 
-def test_bucketed_layout_colocated_join(spark, tmp_path):
-    """The co-located bucketed layout must (a) produce byte-identical
-    q5 results and (b) plan the lineitem⋈orders join as an
-    exchange-free, sort-free SortMergeJoin over bucketed scans."""
-    from spark_bi5_datasource_spark import plans
-    from spark_bi5_datasource_spark.plans.tables import (
-        BUCKET_SPECS,
-        _bucket_table_name,
-        ensure_bucketed_layout,
-    )
-
-    plain = {
-        tuple(r)
-        for r in plans.CATALOG["q5_region_revenue"][0](spark, TESTDATA_SF).collect()
-    }
-    try:
-        ensure_bucketed_layout(spark, TESTDATA_SF, dest_dir=str(tmp_path / "b"))
-        df = plans.CATALOG["q5_region_revenue"][0](spark, TESTDATA_SF)
-        p = df._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in p
-        assert p.count("Bucketed: true") == 2
-        # no exchange/sort may sit between the SMJ and the bucketed
-        # scans: the whole point of the layout
-        orders_tbl = _bucket_table_name("orders", TESTDATA_SF)
-        smj_block = p[p.index("SortMergeJoin") : p.index(orders_tbl)]
-        # customer rides a BroadcastExchange onto the orders side (that
-        # preserves the bucketed partitioning); what must NOT appear is
-        # a shuffle or a sort between the SMJ and the bucketed scans
-        assert "Exchange hashpartitioning" not in smj_block
-        assert "Exchange SinglePartition" not in smj_block
-        assert "+- Sort" not in smj_block
-        assert {tuple(r) for r in df.collect()} == plain
-    finally:
-        for name in BUCKET_SPECS:
-            spark.sql(
-                f"DROP TABLE IF EXISTS {_bucket_table_name(name, TESTDATA_SF)}"
-            )
-        spark.conf.set("spark.bi5.bucketedDir", "")
-
-
 def test_no_python_in_relational_paths(spark):
     for name in ["q1_pricing_summary", "q3_top_revenue_orders", "b5_groupby_count",
                  "window_running_total", "events_sessionize", "text_stats",
@@ -594,8 +554,7 @@ def test_cobucketed_write_path_exchange_free_join(spark, tmp_path, monkeypatch):
     """sources/layout.write_bucketed (the public co-located write
     path) must plan the layout_cobucketed_docs_emb id join as a
     SortMergeJoin over two Bucketed: true scans with no exchange and
-    no sort between them — the doc⋈emb twin of the lineitem⋈orders
-    bucket contract."""
+    no sort between them."""
     from spark_bi5_datasource_spark import plans
     from spark_bi5_datasource_spark.plans import round13_ops
 
@@ -622,40 +581,3 @@ def test_cobucketed_write_path_exchange_free_join(spark, tmp_path, monkeypatch):
     smj_block = p[p.index("SortMergeJoin"):]
     assert "Exchange hashpartitioning" not in smj_block
     assert "+- Sort" not in smj_block
-
-
-def test_doc_emb_consumers_exchange_free_under_bucketed_layout(
-    spark, tmp_path
-):
-    """With the documents/embeddings bucketed layout enabled
-    (tables.BUCKET_SPECS via ensure_bucketed_layout), the id-keyed
-    doc⋈emb consumers must join exchange-free: the layout written
-    once serves EVERY consumer through t() transparently."""
-    from spark_bi5_datasource_spark import plans
-    from spark_bi5_datasource_spark.plans.tables import (
-        BUCKET_SPECS,
-        _bucket_table_name,
-        ensure_bucketed_layout,
-        is_bucketed,
-    )
-
-    try:
-        ensure_bucketed_layout(
-            spark, TESTDATA_SF, dest_dir=str(tmp_path / "b"),
-            tables=["documents", "embeddings"],
-        )
-        assert is_bucketed(spark, TESTDATA_SF, "documents")
-        assert is_bucketed(spark, TESTDATA_SF, "embeddings")
-        p = plan_of(spark, "dq_doc_embedding_coverage")
-        assert p.count("Bucketed: true") == 2
-        # the full-outer id join must sit directly on the bucketed
-        # scans: no hash exchange anywhere upstream of the join (the
-        # only exchanges left are the ≤|sources|+1 post-agg rollup)
-        join_block = p[p.index("SortMergeJoin"):]
-        assert "Exchange hashpartitioning" not in join_block
-    finally:
-        for name in BUCKET_SPECS:
-            spark.sql(
-                f"DROP TABLE IF EXISTS {_bucket_table_name(name, TESTDATA_SF)}"
-            )
-        spark.conf.set("spark.bi5.bucketedDir", "")

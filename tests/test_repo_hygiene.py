@@ -1,6 +1,6 @@
 """Repository hygiene: every script has a documented caller, every repo
 file and module name the code cites exists, every bi5 option is
-documented, every package module is reachable, and the catalog reads
+documented, every package def is reachable, and the catalog reads
 parquet in one place.
 
 Six checks, no Spark:
@@ -11,14 +11,16 @@ Six checks, no Spark:
   (``functions/ohlc.py``, resolved under ``spark_bi5_datasource_spark/``)
   cited in the package, ``tests/`` or ``__spark_entry__.py`` exists;
 - each ``<dir>/<module>.<name>`` citation there
-  (``sources/layout.compact_bucketed``) names a top-level definition,
+  (``sources/layout.write_bucketed``) names a top-level definition,
   assignment or import of that module, read with ``ast``;
 - each option key the bi5 batch and stream readers and the bi5 writer
   read is named in README.md;
-- each package module is imported, directly or through other modules,
-  from a package ``__init__``, ``__spark_entry__.py``, ``perfbench/``
-  or ``scripts/``, or is on ``UNROOTED_SURFACES`` with the document
-  that names it;
+- each package module, and each top-level def and class in it, is
+  reached from a root (``__spark_entry__.py``, ``perfbench/``,
+  ``scripts/``, a catalog query or a package ``__init__``'s
+  ``__all__``), or is on ``UNROOTED_SURFACES`` with the document that
+  names it; and each ``__all__`` name is used by reached code or named
+  by a test;
 - no module under ``plans/`` but ``plans/tables.py`` calls
   ``read.parquet``: fixtures load through its schema-pinning reader.
 """
@@ -54,12 +56,20 @@ BI5_OPTION_READERS = (
     "spark_bi5_datasource_spark/sources/bi5_writer.py",
     "spark_bi5_datasource_spark/streaming/bi5_stream.py",
 )
-# package modules no root imports, kept because a document offers them
-# to users: module -> (document, the phrase there that names it)
+# package modules and defs no root reaches, kept because a document
+# offers them to users: "<module path>" (a module and the names in its
+# __all__) or "<module path>:<def>" -> (document, the phrase there
+# that names it)
 UNROOTED_SURFACES = {
     f"{PACKAGE}/plans/scale_audit.py": ("README.md", "explain_scale"),
     f"{PACKAGE}/functions/bi5_udtf.py": ("SURVEY.md", "`bi5_decode` UDTF"),
     f"{PACKAGE}/streaming/tws.py": ("SURVEY.md", "transformWithState"),
+    f"{PACKAGE}/sources/layout.py:validate_bucketed": ("README.md", "`validate_bucketed`"),
+    f"{PACKAGE}/sources/layout.py:bucket_fragmentation": ("README.md", "`bucket_fragmentation`"),
+    f"{PACKAGE}/sources/layout.py:compact_buckets_selective": (
+        "README.md",
+        "`compact_buckets_selective`",
+    ),
 }
 
 
@@ -130,12 +140,12 @@ def top_level_names(rel: str) -> set[str]:
 
 def test_name_citations_pattern():
     text = (
-        "see sources/layout.compact_bucketed, (plans/round11_ops.text_x)"
+        "see sources/layout.write_bucketed, (plans/round11_ops.text_x)"
         " and spark_bi5_datasource_spark/operators/similarity.rank_topk;"
         " functions/ohlc.py is a file, perfbench/x.y and a/sources/b.c are not"
     )
     assert name_citations(text) == {
-        (f"{PACKAGE}/sources/layout.py", "compact_bucketed"),
+        (f"{PACKAGE}/sources/layout.py", "write_bucketed"),
         (f"{PACKAGE}/plans/round11_ops.py", "text_x"),
         (f"{PACKAGE}/operators/similarity.py", "rank_topk"),
     }
@@ -197,57 +207,340 @@ def _dotted(rel: str) -> str:
     return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
 
 
-def _imported(rel: str) -> set[str]:
-    """Dotted names ``rel`` imports anywhere in its body, relative
-    imports resolved; ``from m import x`` yields both ``m`` and ``m.x``."""
-    with open(os.path.join(REPO, rel), encoding="utf-8") as f:
-        tree = ast.parse(f.read(), rel)
-    package = _dotted(rel) if rel.endswith("__init__.py") else _dotted(rel).rpartition(".")[0]
-    names: set[str] = set()
-    for node in ast.walk(tree):
-        if isinstance(node, ast.Import):
-            names |= {a.name for a in node.names}
-        elif isinstance(node, ast.ImportFrom):
-            base = node.module or ""
-            if node.level:
-                parts = package.split(".")
-                parts = parts[: len(parts) - node.level + 1]
-                base = ".".join(parts + ([node.module] if node.module else []))
-            names |= {base} | {f"{base}.{a.name}" for a in node.names}
+def _is_all(stmt: ast.stmt) -> bool:
+    return isinstance(stmt, ast.Assign) and any(
+        isinstance(t, ast.Name) and t.id == "__all__" for t in stmt.targets
+    )
+
+
+class ReferenceGraph:
+    """Which top-level defs and classes of the package refer to which.
+
+    Built from ``sources`` (repo-relative path -> source text): the
+    package modules plus the root files.  Nodes are ``<path>`` for a
+    module's top-level statements, which run when it is imported, and
+    ``<path>:<name>`` for each top-level def and class; a top-level
+    assignment's name is a node too, with its right-hand side counted
+    among the module's statements.  A unit refers to a name through a
+    bare name, an import binding (package re-exports followed to the
+    defining module) or an attribute of an imported module.  Importing
+    a module refers to its top-level statements and those of its
+    parent packages, but not to the names the import binds, and
+    ``__all__`` strings refer to nothing: re-exporting a def does not
+    reach it.  Local names that shadow a top-level name count as
+    references, so a def this reports as unreached really is.
+
+    Roots: every root file (whole), every def registered with
+    ``plans.registry.query``, and the names in each package
+    ``__init__``'s ``__all__``."""
+
+    def __init__(self, sources: dict[str, str]):
+        self.trees = {_dotted(rel): (rel, ast.parse(src, rel)) for rel, src in sources.items()}
+        self.defs: dict[str, dict[str, ast.AST]] = {}
+        self.assigned: dict[str, set[str]] = {}
+        for dotted, (_rel, tree) in self.trees.items():
+            self.defs[dotted] = {
+                n.name: n
+                for n in tree.body
+                if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+            }
+            self.assigned[dotted] = {
+                t.id
+                for n in tree.body
+                if isinstance(n, (ast.Assign, ast.AnnAssign))
+                for t in ast.walk(n.targets[0] if isinstance(n, ast.Assign) else n.target)
+                if isinstance(t, ast.Name)
+            }
+        self.bindings = {
+            dotted: self._bindings(dotted, [n for n in tree.body if isinstance(n, (ast.Import, ast.ImportFrom))])
+            for dotted, (_rel, tree) in self.trees.items()
+        }
+        self.edges: dict[str, set[str]] = {}
+        self.roots: set[str] = set()
+        for dotted, (rel, tree) in self.trees.items():
+            if not rel.startswith(PACKAGE + "/"):
+                self.roots.add(rel)
+                self.edges[rel] = self._refs(dotted, tree.body, tree.body)
+                continue
+            defs = self.defs[dotted]
+            body = [n for n in tree.body if n not in defs.values()]
+            self.edges[rel] = self._refs(dotted, body, []) | self._parents(dotted)
+            for name, node in defs.items():
+                self.edges[f"{rel}:{name}"] = self._refs(dotted, [node], [node]) | {rel}
+                if self._registered(dotted, node):
+                    self.roots.add(f"{rel}:{name}")
+            if rel.endswith("__init__.py"):
+                self.roots |= {self.key(t) for t in self.all_targets(rel)}
+
+    # -- name resolution -------------------------------------------------
+
+    def _base(self, dotted: str, node: ast.ImportFrom) -> str:
+        if not node.level:
+            return node.module or ""
+        package = dotted if self.trees[dotted][0].endswith("__init__.py") else dotted.rpartition(".")[0]
+        parts = package.split(".")
+        parts = parts[: len(parts) - node.level + 1]
+        return ".".join(parts + ([node.module] if node.module else []))
+
+    def _bindings(self, dotted: str, scope: list[ast.AST]) -> dict[str, tuple]:
+        """Names the imports anywhere in ``scope`` bind: a module
+        ``("mod", dotted)`` or a module's name ``("name", dotted, name)``."""
+        out: dict[str, tuple] = {}
+        for stmt in scope:
+            for node in ast.walk(stmt):
+                if isinstance(node, ast.Import):
+                    for a in node.names:
+                        if a.asname:
+                            out[a.asname] = ("mod", a.name)
+                        else:
+                            out[a.name.split(".")[0]] = ("mod", a.name.split(".")[0])
+                elif isinstance(node, ast.ImportFrom):
+                    base = self._base(dotted, node)
+                    for a in node.names:
+                        full = f"{base}.{a.name}"
+                        out[a.asname or a.name] = ("mod", full) if full in self.trees else ("name", base, a.name)
+        return out
+
+    def resolve(self, dotted: str, name: str, _seen: tuple = ()) -> tuple | None:
+        """``dotted.name`` as ``("mod", module)`` or ``("name", module,
+        name)`` where ``module`` defines ``name``; None outside the
+        sources."""
+        if f"{dotted}.{name}" in self.trees:
+            return ("mod", f"{dotted}.{name}")
+        if dotted not in self.trees or (dotted, name) in _seen:
+            return None
+        if name in self.defs[dotted] or name in self.assigned[dotted]:
+            return ("name", dotted, name)
+        target = self.bindings[dotted].get(name)
+        if target is None or target[0] == "mod":
+            return target
+        return self.resolve(target[1], target[2], _seen + ((dotted, name),))
+
+    def key(self, target: tuple) -> str:
+        rel = self.trees[target[1]][0]
+        return rel if target[0] == "mod" else f"{rel}:{target[2]}"
+
+    def _lookup(self, dotted: str, name: str, bound: dict[str, tuple]) -> tuple | None:
+        if name in self.defs[dotted] or name in self.assigned[dotted]:
+            return ("name", dotted, name)
+        target = bound.get(name)
+        if target is None or target[0] == "mod":
+            return target
+        return self.resolve(target[1], target[2])
+
+    def _refs(self, dotted: str, nodes: list[ast.AST], scope: list[ast.AST]) -> set[str]:
+        """Keys ``nodes`` refer to; imports inside ``scope`` bind too."""
+        bound = {**self.bindings[dotted], **self._bindings(dotted, scope)}
+        found: list[tuple] = []
+        for stmt in nodes:
+            for node in ast.walk(stmt):
+                if isinstance(node, ast.Import):
+                    found += [("mod", a.name) for a in node.names]
+                elif isinstance(node, ast.ImportFrom):
+                    base = self._base(dotted, node)
+                    found += [("mod", base)] + [("mod", f"{base}.{a.name}") for a in node.names]
+                elif isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+                    found.append(self._lookup(dotted, node.id, bound))
+                elif isinstance(node, ast.Attribute):
+                    chain = []
+                    while isinstance(node, ast.Attribute):
+                        chain.append(node.attr)
+                        node = node.value
+                    target = self._lookup(dotted, node.id, bound) if isinstance(node, ast.Name) else None
+                    for attr in reversed(chain):
+                        if target is None or target[0] != "mod":
+                            break
+                        target = self.resolve(target[1], attr)
+                        found.append(target)
+        return {self.key(t) for t in found if t is not None and t[1] in self.trees}
+
+    def _parents(self, dotted: str) -> set[str]:
+        parts = dotted.split(".")
+        return {
+            self.trees[p][0]
+            for p in (".".join(parts[:i]) for i in range(1, len(parts)))
+            if p in self.trees
+        }
+
+    def _registered(self, dotted: str, node: ast.AST) -> bool:
+        for dec in node.decorator_list:
+            fn = dec.func if isinstance(dec, ast.Call) else dec
+            if isinstance(fn, ast.Name) and self._lookup(dotted, fn.id, self.bindings[dotted]) == (
+                "name", f"{PACKAGE}.plans.registry", "query"
+            ):
+                return True
+        return False
+
+    def all_targets(self, rel: str) -> list[tuple]:
+        """What each name in ``rel``'s ``__all__`` resolves to."""
+        dotted = _dotted(rel)
+        names = [
+            e.value
+            for stmt in self.trees[dotted][1].body
+            if _is_all(stmt)
+            for e in stmt.value.elts
+        ]
+        return [self.resolve(dotted, n) or ("name", dotted, n) for n in names]
+
+    # -- reachability ----------------------------------------------------
+
+    def reached(self, roots: set[str]) -> set[str]:
+        seen, todo = set(roots), list(roots)
+        while todo:
+            for nxt in self.edges.get(todo.pop(), ()):
+                if nxt not in seen:
+                    seen.add(nxt)
+                    todo.append(nxt)
+        return seen
+
+    def definitions(self) -> set[str]:
+        """``<path>:<name>`` of every package top-level def and class."""
+        return {
+            f"{rel}:{name}"
+            for dotted, (rel, _tree) in self.trees.items()
+            if rel.startswith(PACKAGE + "/")
+            for name in self.defs[dotted]
+        }
+
+
+def package_sources() -> dict[str, str]:
+    """The package modules and the root files, by repo-relative path."""
+    paths = glob.glob(os.path.join(REPO, PACKAGE, "**", "*.py"), recursive=True)
+    paths.append(os.path.join(REPO, "__spark_entry__.py"))
+    for top in ("perfbench", "scripts"):
+        paths += glob.glob(os.path.join(REPO, top, "*.py"))
+    out = {}
+    for p in sorted(paths):
+        with open(p, encoding="utf-8") as f:
+            out[os.path.relpath(p, REPO)] = f.read()
+    return out
+
+
+def unreachable_modules(graph: ReferenceGraph | None = None) -> list[str]:
+    """Package modules that no root reaches."""
+    graph = graph or ReferenceGraph(package_sources())
+    reached = graph.reached(graph.roots)
+    return sorted(
+        rel
+        for rel, _tree in graph.trees.values()
+        if rel.startswith(PACKAGE + "/") and rel not in reached
+    )
+
+
+def surface_roots(graph: ReferenceGraph, surfaces) -> set[str]:
+    """The defs an allowlist offers: a ``<path>:<def>`` entry names
+    one; a module entry offers the names in its ``__all__``."""
+    roots = set()
+    for entry in surfaces:
+        if ":" in entry:
+            roots.add(entry)
+        else:
+            roots |= {graph.key(t) for t in graph.all_targets(entry)} | {entry}
+    return roots
+
+
+def unreached_defs(graph: ReferenceGraph, surfaces=()) -> list[str]:
+    """Package defs and classes that no root and no allowlisted
+    surface reaches."""
+    reached = graph.reached(graph.roots | surface_roots(graph, surfaces))
+    return sorted(graph.definitions() - reached)
+
+
+def unused_exports(graph: ReferenceGraph, test_names: set[str]) -> list[str]:
+    """``__all__`` names of package ``__init__``s that no test names
+    and no reached unit but the export itself refers to."""
+    reached = graph.reached(graph.roots)
+    used = {dst for src in reached for dst in graph.edges.get(src, ()) if dst != src}
+    unused = []
+    for rel, _tree in graph.trees.values():
+        if rel.startswith(PACKAGE + "/") and rel.endswith("__init__.py"):
+            for target in graph.all_targets(rel):
+                if target[-1] not in test_names and graph.key(target) not in used:
+                    unused.append(f"{rel}: {target[-1]}")
+    return sorted(unused)
+
+
+def names_in_tests() -> set[str]:
+    """Every identifier the test files use or import."""
+    names = set()
+    for p in glob.glob(os.path.join(REPO, "tests", "*.py")):
+        with open(p, encoding="utf-8") as f:
+            tree = ast.parse(f.read(), p)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name):
+                names.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                names.add(node.attr)
+            elif isinstance(node, ast.alias):
+                names.add((node.asname or node.name).split(".")[0])
+                names.add(node.name)
     return names
 
 
-def unreachable_modules() -> list[str]:
-    """Package modules that no root reaches through imports."""
-    modules = {
-        _dotted(rel): rel
-        for rel in (
-            os.path.relpath(p, REPO)
-            for p in glob.glob(os.path.join(REPO, PACKAGE, "**", "*.py"), recursive=True)
-        )
+def test_reference_graph_pattern():
+    pkg = f"{PACKAGE}/lib"
+    sources = {
+        f"{PACKAGE}/__init__.py": "",
+        f"{PACKAGE}/plans/__init__.py": "from . import cat\n",
+        f"{PACKAGE}/plans/registry.py": "def query(name, sql):\n    return lambda f: f\n",
+        f"{PACKAGE}/plans/cat.py": (
+            "from ..lib.util import helper as h\n"
+            "from .registry import query as _q\n"
+            "@_q('x', None)\n"
+            "def entry(spark, sf):\n    return h()\n"
+        ),
+        f"{pkg}/__init__.py": "from .util import exported\n__all__ = ['exported']\n",
+        f"{pkg}/util.py": (
+            "def helper():\n    return _inner()\n"
+            "def _inner():\n    return 1\n"
+            "def exported():\n    return 2\n"
+            "def stray():\n    return helper()\n"
+            "def offered():\n    return _only_offered()\n"
+            "def _only_offered():\n    return 3\n"
+        ),
+        "scripts/run.py": f"import {PACKAGE}.plans\n",
     }
-    roots = [rel for rel in modules.values() if rel.endswith("__init__.py")]
-    roots.append("__spark_entry__.py")
-    for top in ("perfbench", "scripts"):
-        roots += [os.path.relpath(p, REPO) for p in glob.glob(os.path.join(REPO, top, "*.py"))]
-    seen, todo = set(roots), list(roots)
-    while todo:
-        for name in _imported(todo.pop()):
-            rel = modules.get(name)
-            if rel is not None and rel not in seen:
-                seen.add(rel)
-                todo.append(rel)
-    return sorted(set(modules.values()) - seen)
+    graph = ReferenceGraph(sources)
+    assert unreached_defs(graph) == [
+        f"{pkg}/util.py:_only_offered",
+        f"{pkg}/util.py:offered",
+        f"{pkg}/util.py:stray",
+    ]
+    assert unreached_defs(graph, {f"{pkg}/util.py:offered"}) == [f"{pkg}/util.py:stray"]
+    assert unused_exports(graph, set()) == [f"{pkg}/__init__.py: exported"]
+    assert unused_exports(graph, {"exported"}) == []
+    assert unreachable_modules(graph) == []
 
 
 def test_every_module_is_reachable():
+    modules = [m for m in UNROOTED_SURFACES if ":" not in m]
     unreachable = unreachable_modules()
-    unlisted = [m for m in unreachable if m not in UNROOTED_SURFACES]
+    unlisted = [m for m in unreachable if m not in modules]
     assert not unlisted, f"modules nothing imports (delete them with their tests): {unlisted}"
-    assert sorted(UNROOTED_SURFACES) == unreachable, "UNROOTED_SURFACES lists a reachable or missing module"
+    assert sorted(modules) == unreachable, "UNROOTED_SURFACES lists a reachable or missing module"
     for module, (doc, phrase) in UNROOTED_SURFACES.items():
         with open(os.path.join(REPO, doc), encoding="utf-8") as f:
             assert phrase in f.read(), f"{doc} no longer names {module} ({phrase!r})"
+
+
+def test_every_def_is_reachable():
+    graph = ReferenceGraph(package_sources())
+    unreached = unreached_defs(graph, UNROOTED_SURFACES)
+    assert not unreached, (
+        "defs no entry point, catalog query or export reaches (delete them"
+        f" with their tests, or move a test oracle into tests/): {unreached}"
+    )
+    offered = [s for s in UNROOTED_SURFACES if ":" in s]
+    stale = sorted(set(offered) & graph.reached(graph.roots))
+    missing = sorted(set(offered) - graph.definitions())
+    assert not stale and not missing, (
+        f"UNROOTED_SURFACES lists reachable {stale} or missing {missing} defs"
+    )
+
+
+def test_every_export_is_used():
+    unused = unused_exports(ReferenceGraph(package_sources()), names_in_tests())
+    assert not unused, f"exports nothing calls and no test checks: {unused}"
 
 
 def parquet_reads(source: str) -> list[int]:

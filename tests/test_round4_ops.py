@@ -27,7 +27,7 @@ class TestBpeTrain:
         ]
 
     def test_matches_reference_trainer(self, spark):
-        from spark_bi5_datasource_spark.operators.bpe import train_bpe_local
+        from tests.oracles import train_bpe_local
 
         texts = [
             "the lower the newer the wider",
@@ -51,7 +51,7 @@ class TestBpeTrain:
         assert got == []
 
     def test_tie_break_lexicographic(self, spark):
-        from spark_bi5_datasource_spark.operators.bpe import train_bpe_local
+        from tests.oracles import train_bpe_local
 
         # 'xy' and 'ab' both occur twice: lexicographic argmax -> ab
         texts = ["xy ab", "xy ab"]
@@ -62,11 +62,8 @@ class TestBpeTrain:
 
 class TestBpeEncode:
     def test_matches_reference_encoder(self, spark):
-        from spark_bi5_datasource_spark.operators.bpe import (
-            encode_bpe,
-            encode_bpe_local,
-            train_bpe_local,
-        )
+        from spark_bi5_datasource_spark.operators.bpe import encode_bpe
+        from tests.oracles import encode_bpe_local, train_bpe_local
 
         texts = [
             "the lower the newer the wider",

@@ -9,10 +9,8 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from spark_bi5_datasource_spark.operators.winnowing import (
-    winnow_fingerprint_stats,
-    winnow_py,
-)
+from spark_bi5_datasource_spark.operators.winnowing import winnow_fingerprint_stats
+from tests.oracles import winnow_py
 
 K, W = 8, 4
 
