@@ -116,7 +116,7 @@ BNLJ_OK = {
     "dedup_semantic_semdedup": (
         "exact single-cell mode: the constant cell key constant-folds "
         "the intra-cell equi-join into the all-pairs BNLJ ON PURPOSE "
-        "(provably-exact fixture-scale pin, plans/round11_ops.py); the "
+        "(provably-exact fixture-scale pin, plans/dedup_ops.py); the "
         "production nlist>1 path equi-joins on a real cell column"
     ),
     "sample_mixture": "1-row totals crossJoin broadcast",
@@ -148,7 +148,7 @@ BNLJ_OK = {
     "dq_benford_first_digit": "1-row totals crossJoin broadcast",
     "sim_ann_recall_monitor": (
         "<=8-query broadcast on the exact cosine_topk leg; every "
-        "approximate leg is a bucket/cell equi-join (round12_ops)"
+        "approximate leg is a bucket/cell equi-join (similarity_ops)"
     ),
     "orders_backlog_aging": "1-row open-total crossJoin broadcast",
     "orders_pareto_abc": "1-row revenue-total crossJoin broadcast",

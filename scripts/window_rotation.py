@@ -3,9 +3,10 @@
 The driver's correctness gate checks the first 50 entries of
 ``queries()`` each round (observed: CORRECTNESS_r{N}.json keys ==
 the catalog's first 50 keys).  The rotation policy is: operators
-that have NEVER had a driver-green row come first, oldest catalog
-order preserved; once everything oracle-backed has been exposed,
-fall back to least-recently-exposed.
+that have NEVER had a driver-green row come first, in catalog order
+(the domain modules' import order in ``plans/__init__.py``); once
+everything oracle-backed has been exposed, fall back to
+least-recently-exposed, ties again in catalog order.
 
 Usage:  python scripts/window_rotation.py
 Prints the proposed window (one name per line) plus a summary, and

@@ -75,11 +75,11 @@ FEATURE_SCHEMA = StructType(
 )
 
 
-def _ppm_header(data: bytes) -> tuple[bytes, int, int, int, int]:
-    """Parse a P5/P6 netpbm header: (magic, width, height, maxval,
-    pixel_data_offset).  Handles arbitrary whitespace and ``#``
-    comments per the spec; exactly one whitespace byte follows maxval
-    before the raster."""
+def _ppm_header(data: bytes) -> tuple[bytes, int, int, int]:
+    """Parse a P5/P6 netpbm header with a maxval of 1..255: (magic,
+    width, height, pixel_data_offset).  Handles arbitrary whitespace
+    and ``#`` comments per the spec; exactly one whitespace byte
+    follows maxval before the raster."""
     magic = data[:2]
     pos = 2
     fields: list[int] = []
@@ -103,7 +103,7 @@ def _ppm_header(data: bytes) -> tuple[bytes, int, int, int, int]:
     w, h, maxval = fields
     if not (0 < maxval < 256):
         raise ValueError(f"unsupported netpbm maxval {maxval} (need 1..255)")
-    return magic, w, h, maxval, pos + 1  # single whitespace after maxval
+    return magic, w, h, pos + 1  # single whitespace after maxval
 
 
 def _bmp_header(data: bytes) -> tuple[int, int, int, int, bool]:
@@ -205,7 +205,7 @@ def _png_unfilter(raw: np.ndarray, bpp: int) -> np.ndarray:
     return out.astype(np.uint8)
 
 
-def _png_decode(data: bytes) -> tuple[np.ndarray, dict]:
+def _png_decode(data: bytes) -> np.ndarray:
     """8-bit non-interlaced PNG → (H, W, C) uint8.  Palette images
     resolve through PLTE to RGB (palette alpha/tRNS is dropped — these
     are feature kernels, not a compositor).  16-bit and Adam7
@@ -231,7 +231,7 @@ def _png_decode(data: bytes) -> tuple[np.ndarray, dict]:
             raise ValueError("palette PNG without PLTE")
         pal = np.frombuffer(plte, np.uint8).reshape(-1, 3)
         px = pal[px[:, :, 0]]
-    return px, {"fmt": _PNG_SIG[:2]}
+    return px
 
 
 def _nn_index(dst: int, src: int) -> np.ndarray:
@@ -241,17 +241,17 @@ def _nn_index(dst: int, src: int) -> np.ndarray:
     )
 
 
-def _decode_pixels(data: bytes) -> tuple[np.ndarray, dict]:
-    """Payload → (H, W, C) uint8 array + re-encode metadata."""
+def _decode_pixels(data: bytes) -> np.ndarray:
+    """Payload → (H, W, C) uint8 array."""
     head = data[:2]
     if head in (b"P5", b"P6"):
-        magic, w, h, maxval, off = _ppm_header(data)
+        magic, w, h, off = _ppm_header(data)
         ch = 3 if magic == b"P6" else 1
         need = w * h * ch
         if len(data) < off + need:
             raise ValueError("truncated netpbm raster")
         px = np.frombuffer(data, np.uint8, need, off).reshape(h, w, ch)
-        return px, {"fmt": magic, "maxval": maxval}
+        return px
     if head == b"BM":
         w, h, off, stride, bottom_up = _bmp_header(data)
         if len(data) < off + stride * h:
@@ -260,17 +260,17 @@ def _decode_pixels(data: bytes) -> tuple[np.ndarray, dict]:
         px = rows[:, : w * 3].reshape(h, w, 3)
         if bottom_up:
             px = px[::-1]
-        return px, {"fmt": b"BM"}
+        return px
     if data[:8] == _PNG_SIG:
         return _png_decode(data)
     if head == b"\xff\xd8":
         from .jpeg_codec import jpeg_decode
 
-        return jpeg_decode(data), {"fmt": b"\xff\xd8"}
+        return jpeg_decode(data)
     if data[:6] in (b"GIF87a", b"GIF89a"):
         from .gif_codec import gif_decode
 
-        return gif_decode(data), {"fmt": b"GI"}
+        return gif_decode(data)
     raise NotImplementedError(f"payload magic {head!r} needs an imaging library")
 
 
@@ -633,7 +633,7 @@ def extract_phash(media: DataFrame) -> DataFrame:
             hs: list[int | None] = []
             for p in pdf["payload"]:
                 try:
-                    px, _ = _decode_pixels(bytes(p or b""))
+                    px = _decode_pixels(bytes(p or b""))
                     hs.append(dhash64(px))
                 except (ValueError, NotImplementedError):
                     hs.append(None)
@@ -855,7 +855,7 @@ def extract_video_fingerprint(
                     frames = sample_frames(bytes(p or b""), every_n)
                     fh = []
                     for fr in frames:
-                        px, _ = _decode_pixels(fr)
+                        px = _decode_pixels(fr)
                         fh.append(dhash64(px))
                     hs.append(vhash64(fh))
                 except (ValueError, NotImplementedError):

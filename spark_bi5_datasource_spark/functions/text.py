@@ -5,7 +5,7 @@ documents without an Arrow boundary.
 
 Each helper returns a Column so callers compose them into selects;
 the same formulas are mirrored in the DuckDB oracle SQL (plans/
-llm_ops.py) for hash-checked correctness.
+text_ops.py) for hash-checked correctness.
 """
 
 from __future__ import annotations

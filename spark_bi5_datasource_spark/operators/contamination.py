@@ -1,6 +1,6 @@
 """Cross-source contamination matrix over ARBITRARY source counts,
 and the one implementation behind the catalog's
-``plans/round11_ops.text_contamination_matrix`` (``words=1``).
+``plans/text_ops.text_contamination_matrix`` (``words=1``).
 
 Every shingle folds to a source bitmask (`bit_or(1 << idx)`), and all
 pair expansion runs on the tiny per-mask count frame.  Source index

@@ -10,7 +10,7 @@ on the co-purchase unfold).  The kernel unfolds pair (i, j) from its
 rank via the closed-form inverse of the lexicographic triangular
 numbering, entirely in NumPy.
 
-Shared by ``_copurchase_pairs`` (plans/round4_ops.py) and the
+Shared by ``_copurchase_pairs`` (plans/similarity_ops.py) and the
 winnowing inverted-index pair generation (dedup_winnow_pairs); the
 pure-Catalyst twins remain next to each call site as parity oracles.
 """
@@ -26,15 +26,13 @@ __all__ = [
     "scan_size_bytes",
 ]
 
-#: conf key / default for the scale-adaptive singleton pre-filter gate
-#: (``maybe_prefilter_min2``).  256 MiB ≈ the x10 fixture tier: below
-#: it the pre-filter's two extra stages (~0.4 s measured at sf0.1)
-#: outweigh the shuffle it saves; above it the pair exchange dominates
-#: and the filter pays (x100: 58.5/26.5 → 35.7/20.7 s interleaved).
-#: Set to 0 to force it on
-#: (tests), or a huge value to force it off.
-PAIR_PREFILTER_CONF = "spark.bi5.pairPrefilterBytes"
-PAIR_PREFILTER_DEFAULT = 256 * 1024 * 1024
+#: scan size at which the singleton pre-filter gate
+#: (``maybe_prefilter_min2``) turns on.  256 MiB ≈ the x10 fixture
+#: tier: below it the pre-filter's two extra stages (~0.4 s measured at
+#: sf0.1) outweigh the shuffle it saves; above it the pair exchange
+#: dominates and the filter pays (x100: 58.5/26.5 → 35.7/20.7 s
+#: interleaved).
+PAIR_PREFILTER_BYTES = 256 * 1024 * 1024
 
 
 def scan_size_bytes(df: DataFrame) -> int | None:
@@ -94,14 +92,9 @@ def maybe_prefilter_min2(
     The gate reads input-file metadata only (deterministic per
     invocation — nothing is cached across runs).  An input of unknown
     size (``scan_size_bytes`` is None, e.g. any bi5 scan) skips the
-    filter unless the threshold is 0."""
-    thr = int(
-        pairs.sparkSession.conf.get(
-            PAIR_PREFILTER_CONF, str(PAIR_PREFILTER_DEFAULT)
-        )
-    )
+    filter."""
     size = scan_size_bytes(sized_on)
-    if thr <= 0 or (size is not None and size >= thr):
+    if size is not None and size >= PAIR_PREFILTER_BYTES:
         return prefilter_min2(pairs, u, v)
     return pairs
 

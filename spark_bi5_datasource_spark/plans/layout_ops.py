@@ -1,15 +1,6 @@
-"""Round-16 catalog additions (builder round 11): the production
-corpus-build posture the r10 verdict asked for (ask #5).
-
-* ``corpus_build_production`` — ``corpus_build_snapshot`` with the
-  exact shingle-Jaccard self-join replaced by the MINHASH BANDED
-  stage (operators/dedup.minhash_dedup) — the posture the streaming
-  twin (streaming/crawl.stream_corpus_build_writer) already ships via
-  the stored band index.  Oracle: the same composed exact SQL as the
-  snapshot (the dedup_minhash trick — the banded stage only drops
-  VERIFIED pairs, so equality holds when LSH recall catches every
-  loser; pinned at oracle scales by pytest and hash-gated every
-  driver run).
+"""Layout and multimodal catalog: ``layout_*`` physical layouts
+(co-bucketed writes), ``zorder_*`` clustering keys and
+``multimodal_*`` media feature extraction.
 """
 
 from __future__ import annotations
@@ -20,61 +11,68 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .registry import query as _q
-from .round15_ops import _CBS_SQL, corpus_inputs, corpus_tail_stages
+from .tables import t
 
 
-@_q("corpus_build_production", _CBS_SQL)
-def corpus_build_production(spark: SparkSession, sf: str) -> DataFrame:
-    """The corpus-build pipeline in its PRODUCTION posture: stages
-    1+2 (exact dedup → near-dedup) run as one ``minhash_dedup`` pass
-    — the hash-exact pre-pass inside it IS stage 1 (min-id survivor
-    per identical text), and the banded LSH + verify-last stage
-    replaces ``corpus_build_snapshot``'s exact inverted-shingle-index
-    self-join.  Stages 3-5 (quality filter → benchmark
-    decontamination → per-source 2048-token sequence packing) are
-    literally shared code (round15_ops.corpus_tail_stages), so the
-    two entries differ ONLY in the near-dedup engine.
+# ------------------------------------------------------- multimodal
+@_q(
+    "multimodal_features",
+    """
+    SELECT doc_id AS media_id, 'image' AS kind,
+      CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
+      CAST((octet_length(encode(text)) % 640) + 1 AS INT) AS width,
+      CAST((octet_length(encode(text)) % 480) + 1 AS INT) AS height
+    FROM documents
+    """,
+)
+def multimodal_features(spark: SparkSession, sf: str) -> DataFrame:
+    """Binary-payload pipeline: documents → binary media table →
+    Arrow-batched mapInPandas feature extraction (deterministic fake
+    decode kernel; see functions/multimodal.py)."""
+    from ..functions.multimodal import documents_as_media, extract_media_features
 
-    Why this is the shape that ships at 100 TB: the snapshot's exact
-    stage pairs every co-shingled doc pair (the inverted index is
-    |pairs|-quadratic on boilerplate shingles), which is the
-    verification-grade bar its oracle can mirror — but a production
-    corpus build pays the banded cost instead: signatures once,
-    16-band bucket-representative pairing, exact Jaccard only on
-    candidates (verify-last).  The streaming twin
-    (stream_corpus_build_writer) has shipped this stage from day one
-    via the stored band index; this entry is its batch equal.
-
-    Oracle = the snapshot's composed exact SQL, unchanged (the
-    dedup_minhash discipline): the banded stage drops only VERIFIED
-    jaccard ≥ 0.5 pairs under the same min-id rule, so its survivor
-    set equals the exact pass whenever LSH recall catches every
-    loser — deterministic (seeded permutations) and pinned at both
-    oracle fixture scales by
-    tests/test_operators.py::test_corpus_production_equals_snapshot;
-    the driver re-checks the hash every window it rotates in.
-
-    Scale shape: identical to the snapshot for stages 3-5 (map-side
-    filter, broadcast decontam membership, per-source packing
-    window); stage 1+2 is the dedup_minhash engine — one exchange on
-    (band, bucket) with content-derived keys, candidates deduped
-    before verification, no corpus self-pairing beyond bucket
-    representatives."""
-    from ..operators.dedup import minhash_dedup
-
-    d0, bench_sh = corpus_inputs(spark, sf)
-    # stages 1+2 fused: minhash_dedup's built-in exact_dedup pre-pass
-    # is exactly stage 1; bands=16 at num_perm=32 (2 rows/band) is
-    # the high-recall delta-dedup configuration, and recall at the
-    # oracle scales is pinned by the equality test
-    d2 = minhash_dedup(
-        d0, "doc_id", "text", n=3, num_perm=32, bands=16, threshold=0.5
+    media = documents_as_media(t(spark, sf, "documents"))
+    return extract_media_features(media).select(
+        "media_id", "kind", "n_bytes", "width", "height"
     )
-    return corpus_tail_stages(d2, bench_sh)
+
+
+# z-value recipe shared between engines: identical bit plan, emitted
+# once as a Catalyst column tree and once as DuckDB SQL
+_Z_BITS = 16
+_Z_SQL_EXPRS = ["(user_id & 65535)", "(CAST(floor(value) AS BIGINT) & 65535)"]
+
+
+def _zorder_sql() -> str:
+    from ..operators.zorder import zvalue_sql
+
+    return f"""
+    SELECT event_id, {zvalue_sql(_Z_SQL_EXPRS, _Z_BITS)} AS zval
+    FROM events
+    """
+
+
+@_q("zorder_values", _zorder_sql())
+def zorder_values(spark: SparkSession, sf: str) -> DataFrame:
+    """Morton z-values over (user_id, value) — the multi-column
+    data-skipping sort key (operators/zorder.py).  The bit-interleave
+    is pure integer arithmetic built from one shared recipe, so Spark
+    and DuckDB agree bit-for-bit; ``zorder_write`` uses the same
+    column to produce the clustered parquet layout."""
+    from ..operators.zorder import zvalue
+
+    ev = t(spark, sf, "events")
+    z = zvalue(
+        [
+            F.col("user_id").bitwiseAND(F.lit(65535)),
+            F.expr("CAST(floor(value) AS BIGINT)").bitwiseAND(F.lit(65535)),
+        ],
+        _Z_BITS,
+    )
+    return ev.select("event_id", z.alias("zval"))
 
 
 # ---------------------------- co-bucketed doc⋈embedding write path
-
 _COBUCKET_SQL = """
     SELECT d.source,
       CAST(count(*) AS BIGINT) AS n_docs,
@@ -105,7 +103,7 @@ def _cobucketed_tables(
         register_bucketed,
         write_bucketed,
     )
-    from .round13_ops import _warehouse
+    from .dedup_ops import _warehouse
     from .tables import read_parquet
 
     parts: list[str] = []

@@ -1,6 +1,8 @@
-"""Relational query catalog — Tier B (the surface the reference's own
-tests exercise, SURVEY §2) and Tier C (full operator surface) over the
-driver's star schema.
+"""Relational catalog: TPC-H/star-schema shapes and the general operator
+surface — queries named ``q*``, ``b*``, ``sql_*``, ``join_*``, ``agg_*``,
+``scalar_*``, ``setop_*``, ``array_*``, ``reshape_*``, ``mv_*``,
+``table_*``, ``merge_*``, ``scd2_*``, ``cdc_*``, ``orders_*``,
+``basket_*`` and ``entity_*`` (``sql_tpch_*`` lives in tpch_pack.py).
 
 Every entry is (spark_fn, oracle_sql) with **identical output column
 names** and engine-deterministic values:
@@ -20,7 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators import asof_join, top_k, top_k_per_group
+from ..operators import asof_join, top_k
+from ..operators.fuzzy_join import edit_distance_join
 from .fastmoney import HALF_ADJUST_CENTS as _HA
 from .fastmoney import spark_fast_sql
 from .registry import query as _q
@@ -448,110 +451,7 @@ def join_asof_events_orders(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-# ------------------------------------------------------------ windows
-
-
-@_q(
-    "window_topk_per_segment",
-    """
-    SELECT c_mktsegment, c_custkey, c_acctbal, rn FROM (
-      SELECT c_mktsegment, c_custkey, c_acctbal,
-        row_number() OVER (PARTITION BY c_mktsegment
-                           ORDER BY c_acctbal DESC, c_custkey ASC) AS rn
-      FROM customer
-    ) WHERE rn <= 3
-    """,
-)
-def window_topk_per_segment(spark: SparkSession, sf: str) -> DataFrame:
-    """Per-group top-k = ranking window + filter (Tier B3 generalized)."""
-    return top_k_per_group(
-        t(spark, sf, "customer").select("c_mktsegment", "c_custkey", "c_acctbal"),
-        "c_mktsegment",
-        [F.col("c_acctbal").desc(), F.col("c_custkey").asc()],
-        3,
-        keep_rank=True,
-    ).select("c_mktsegment", "c_custkey", "c_acctbal", "rn")
-
-
-@_q(
-    "window_lag_range_daily",
-    """
-    WITH daily AS (
-      SELECT CAST(date_trunc('day', o_orderdate) AS TIMESTAMP) AS day,
-        (CAST(SUM(CAST(round((o_totalprice) * 100) AS BIGINT)) AS DOUBLE) / 100.0) AS revenue
-      FROM orders GROUP BY day
-    )
-    SELECT day, revenue,
-      revenue - lag(revenue) OVER (ORDER BY day) AS delta,
-      lead(revenue) OVER (ORDER BY day) AS next_revenue,
-      (CAST(SUM(CAST(round((revenue) * 100) AS BIGINT)) OVER (
-        ORDER BY CAST(day AS DATE)
-        RANGE BETWEEN INTERVAL 3 DAY PRECEDING AND CURRENT ROW) AS DOUBLE) / 100.0)
-        AS revenue_4d
-    FROM daily
-    """,
-)
-def window_lag_range_daily(spark: SparkSession, sf: str) -> DataFrame:
-    """Analytic lag/lead plus a value-based rangeBetween frame
-    (trailing 4-day revenue) over one aggregated daily series —
-    both window-frame kinds on a single exchange."""
-    daily = (
-        t(spark, sf, "orders")
-        .groupBy(F.date_trunc("day", "o_orderdate").alias("day"))
-        .agg(_dsum("o_totalprice", 2, "revenue"))
-    )
-    w = Window.orderBy("day")
-    wr = (
-        Window.orderBy(F.expr("unix_date(cast(day AS date))"))
-        .rangeBetween(-3, Window.currentRow)
-    )
-    return daily.select(
-        "day",
-        "revenue",
-        (F.col("revenue") - F.lag("revenue").over(w)).alias("delta"),
-        F.lead("revenue").over(w).alias("next_revenue"),
-        (
-            F.sum(F.expr(_HA.format(x="revenue", m=100)))
-            .over(wr)
-            .cast("double")
-            / F.lit(100.0)
-        ).alias("revenue_4d"),
-    )
-
-
-@_q(
-    "window_running_total",
-    """
-    SELECT o_custkey, o_orderkey, o_orderdate,
-      (CAST(SUM(CAST(round((o_totalprice) * 100) AS BIGINT)) OVER (
-        PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) / 100.0) AS running_spent
-    FROM orders
-    """,
-)
-def window_running_total(spark: SparkSession, sf: str) -> DataFrame:
-    """Cumulative frame aggregate (rowsBetween) with total ordering."""
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy("o_orderdate", "o_orderkey")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return t(spark, sf, "orders").select(
-        "o_custkey",
-        "o_orderkey",
-        "o_orderdate",
-        (
-            F.sum(F.expr(_HA.format(x="o_totalprice", m=100)))
-            .over(w)
-            .cast("double")
-            / F.lit(100.0)
-        ).alias("running_spent"),
-    )
-
-
 # ----------------------------------------------------------- aggregates
-
-
 @_q(
     "agg_rollup",
     """
@@ -869,120 +769,6 @@ def scalar_math_case(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-# ----------------------------------------------------- event analytics
-
-
-@_q(
-    "events_daily_ohlc",
-    """
-    SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS bar_start, event_type,
-      arg_min(value, ts) AS open, max(value) AS high, min(value) AS low,
-      arg_max(value, ts) AS close, count(*) AS n_ticks,
-      (CAST(SUM(CAST(round((value) * 100) AS BIGINT)) AS DOUBLE) / 100.0) AS value_sum
-    FROM events GROUP BY bar_start, event_type
-    """,
-)
-def events_daily_ohlc(spark: SparkSession, sf: str) -> DataFrame:
-    """Tumbling-window aggregation + OHLC bars (flagship tick
-    aggregate, functions/ohlc.py) in one hash aggregate — the batch
-    form of the streaming tumbling window (streaming/events.py runs
-    the same expressions on a stream)."""
-    from ..functions.ohlc import ohlc_bars
-
-    e = t(spark, sf, "events")
-    return ohlc_bars(
-        e,
-        "1 day",
-        ts_col="ts",
-        price_col="value",
-        volume_col=None,
-        by=("event_type",),
-        extra_aggs=[_dsum("value", 2, "value_sum")],
-    )
-
-
-@_q(
-    "events_sessionize",
-    """
-    WITH ordered AS (
-      SELECT user_id, ts, event_id,
-        CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER
-               (PARTITION BY user_id ORDER BY ts, event_id) > 1800000000
-             OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-             THEN 1 ELSE 0 END AS new_session
-      FROM events
-    ), sess AS (
-      SELECT user_id, event_id,
-        SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-      FROM ordered
-    )
-    SELECT user_id,
-      CAST(max(session_id) AS BIGINT) AS n_sessions,
-      CAST(SUM(sz) AS BIGINT) AS n_events,
-      CAST(max(sz) AS BIGINT) AS max_session_events
-    FROM (
-      SELECT user_id, session_id, count(*) AS sz
-      FROM sess GROUP BY user_id, session_id
-    ) GROUP BY user_id
-    """,
-)
-def events_sessionize(spark: SparkSession, sf: str) -> DataFrame:
-    """Gap-based sessionization (30-min inactivity) via lag + running
-    sum — the batch dual of streaming session windows."""
-    e = t(spark, sf, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    wf = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    sess = (
-        e.withColumn(
-            "new_session",
-            F.when(
-                (
-                    F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w))
-                    > 1_800_000_000
-                )
-                | F.lag("ts").over(w).isNull(),
-                1,
-            ).otherwise(0),
-        )
-        .withColumn("session_id", F.sum("new_session").over(wf))
-        .groupBy("user_id", "session_id")
-        .agg(F.count("*").alias("sz"))
-    )
-    return sess.groupBy("user_id").agg(
-        F.max("session_id").cast("bigint").alias("n_sessions"),
-        F.sum("sz").alias("n_events"),
-        F.max("sz").cast("bigint").alias("max_session_events"),
-    )
-
-
-@_q(
-    "window_rank_kinds",
-    """
-    SELECT c_mktsegment, c_custkey,
-      CAST(rank() OVER w AS INT) AS rnk,
-      CAST(dense_rank() OVER w AS INT) AS drnk,
-      CAST(ntile(4) OVER w AS INT) AS quartile,
-      round(percent_rank() OVER w, 6) AS prank
-    FROM customer
-    WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal DESC, c_custkey ASC)
-    """,
-)
-def window_rank_kinds(spark: SparkSession, sf: str) -> DataFrame:
-    """Ranking-function surface: rank/dense_rank/ntile/percent_rank."""
-    w = Window.partitionBy("c_mktsegment").orderBy(
-        F.col("c_acctbal").desc(), F.col("c_custkey").asc()
-    )
-    return t(spark, sf, "customer").select(
-        "c_mktsegment",
-        "c_custkey",
-        F.rank().over(w).cast("int").alias("rnk"),
-        F.dense_rank().over(w).cast("int").alias("drnk"),
-        F.ntile(4).over(w).cast("int").alias("quartile"),
-        F.round(F.percent_rank().over(w), 6).alias("prank"),
-    )
-
-
 @_q(
     "array_funcs",
     """
@@ -1109,4 +895,2095 @@ def scalar_map_funcs(spark: SparkSession, sf: str) -> DataFrame:
         F.element_at(F.map_keys("m"), 1).alias("first_key"),
         F.element_at(F.map_values("m"), 1).alias("first_val"),
         F.size("m").alias("n_keys"),
+    )
+
+
+@_q(
+    "merge_upsert_orders",
+    """
+    WITH base AS (
+      SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice FROM orders
+    ), src AS (
+      SELECT o_orderkey, o_custkey, 'U' AS o_orderstatus, o_totalprice
+      FROM base WHERE o_orderkey % 13 = 0
+      UNION ALL
+      SELECT o_orderkey + 500000000, o_custkey, 'N', o_totalprice
+      FROM base WHERE o_orderkey % 17 = 0
+    )
+    SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice FROM src
+    UNION ALL
+    SELECT b.o_orderkey, b.o_custkey, b.o_orderstatus, b.o_totalprice
+    FROM base b ANTI JOIN src s ON b.o_orderkey = s.o_orderkey
+    """,
+)
+def merge_upsert_orders(spark: SparkSession, sf: str) -> DataFrame:
+    """MERGE INTO semantics (operators/upsert.py): a derived delta —
+    updates (status→'U' for orderkey%13=0) plus inserts (new keys,
+    status 'N') — upserted into orders via the broadcast-anti-join
+    composition.  The target is never shuffled: the 100-TB merge
+    plan."""
+    from ..operators.upsert import merge_upsert
+
+    orders = t(spark, sf, "orders").select(
+        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
+    )
+    updates = orders.filter(F.col("o_orderkey") % 13 == 0).withColumn(
+        "o_orderstatus", F.lit("U")
+    )
+    inserts = orders.filter(F.col("o_orderkey") % 17 == 0).select(
+        (F.col("o_orderkey") + 500000000).alias("o_orderkey"),
+        "o_custkey",
+        F.lit("N").alias("o_orderstatus"),
+        "o_totalprice",
+    )
+    return merge_upsert(orders, updates.unionByName(inserts), ["o_orderkey"])
+
+
+@_q(
+    "scd2_customer_orders",
+    """
+    SELECT o_custkey, o_orderkey, o_orderstatus,
+      o_orderdate AS valid_from,
+      lead(o_orderdate) OVER (
+        PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
+      ) AS valid_to,
+      CAST(CASE WHEN lead(o_orderdate) OVER (
+        PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
+      ) IS NULL THEN 1 ELSE 0 END AS INT) AS is_current
+    FROM orders
+    """,
+)
+def scd2_customer_orders(spark: SparkSession, sf: str) -> DataFrame:
+    """SCD Type-2 build (operators/scd.py): each customer's order
+    history becomes versioned rows with [valid_from, valid_to)
+    intervals and a current flag — one window pass, no self-join."""
+    from ..operators.scd import scd2_build
+
+    orders = t(spark, sf, "orders").select(
+        "o_custkey", "o_orderkey", "o_orderstatus", "o_orderdate"
+    )
+    return scd2_build(
+        orders, ["o_custkey"], "o_orderdate", tiebreak=["o_orderkey"]
+    ).select(
+        "o_custkey",
+        "o_orderkey",
+        "o_orderstatus",
+        F.col("valid_from"),
+        F.col("valid_to"),
+        "is_current",
+    )
+
+
+@_q("agg_approx_sketches", None)
+def agg_approx_sketches(spark: SparkSession, sf: str) -> DataFrame:
+    """Approximate aggregates (HLL count-distinct + approx quantile) —
+    the sketch path whose exact twins are agg_count_distinct and
+    agg_percentile; rows-only check by design."""
+    li = t(spark, sf, "lineitem")
+    return li.groupBy("l_returnflag").agg(
+        F.approx_count_distinct("l_partkey").alias("approx_parts"),
+        F.percentile_approx("l_extendedprice", 0.5, 1000).alias("approx_median"),
+    )
+
+
+# ------------------------------------------------------- fuzzy join
+@_q(
+    "join_fuzzy_parts",
+    # naive twin: distinct names, full cross pairing, verify, expand —
+    # no q-gram blocking, so a hash match certifies the blocked plan's
+    # recall, not just its arithmetic
+    """
+    WITH names AS (SELECT DISTINCT p_name FROM part),
+    np AS (
+      SELECT a.p_name AS na, b.p_name AS nb,
+             levenshtein(a.p_name, b.p_name) AS dist
+      FROM names a JOIN names b ON a.p_name < b.p_name
+      WHERE levenshtein(a.p_name, b.p_name) BETWEEN 1 AND 1
+    )
+    SELECT least(x.p_partkey, y.p_partkey) AS id_a,
+           greatest(x.p_partkey, y.p_partkey) AS id_b,
+           CASE WHEN x.p_partkey < y.p_partkey THEN np.na ELSE np.nb END
+             AS p_name_a,
+           CASE WHEN x.p_partkey < y.p_partkey THEN np.nb ELSE np.na END
+             AS p_name_b,
+           dist
+    FROM np
+    JOIN part x ON x.p_name = np.na
+    JOIN part y ON y.p_name = np.nb
+    """,
+)
+def join_fuzzy_parts(spark: SparkSession, sf: str) -> DataFrame:
+    """Fuzzy self-join: part pairs whose names are within edit
+    distance 1 (q-gram filter-and-verify; operators/fuzzy_join.py)."""
+    return edit_distance_join(t(spark, sf, "part"), "p_partkey", "p_name", k=1)
+
+
+# ------------------------------------------------- skew-salted join
+@_q(
+    "join_salted_skew",
+    # oracle = the PLAIN join: a hash match certifies the salt/explode
+    # machinery is output-invisible
+    """
+    SELECT l_orderkey, l_linenumber, l_suppkey, s_nationkey
+    FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
+    """,
+)
+def join_salted_skew(spark: SparkSession, sf: str) -> DataFrame:
+    """Salt-scattered equi-join (operators/skew.py): the explicit cure
+    for hot keys AQE can't split.  Here run over the fixture join so
+    the driver gate proves salted output == plain join output."""
+    from ..operators.skew import salted_join
+
+    li = t(spark, sf, "lineitem").select(
+        "l_orderkey", "l_linenumber", "l_suppkey"
+    )
+    s = t(spark, sf, "supplier").select(
+        F.col("s_suppkey").alias("l_suppkey"), "s_nationkey"
+    )
+    return salted_join(li, s, "l_suppkey", replicas=8).select(
+        "l_orderkey", "l_linenumber", "l_suppkey", "s_nationkey"
+    )
+
+
+# --------------------------------------------- bloom-pruned semi-join
+@_q(
+    "join_bloom_prune",
+    # oracle = the plain semi-join: bloom false positives must be
+    # invisible in the output
+    """
+    SELECT l_orderkey, l_linenumber, l_extendedprice
+    FROM lineitem
+    WHERE l_orderkey IN (
+      SELECT o_orderkey FROM orders WHERE o_orderkey % 100 = 0
+    )
+    """,
+)
+def join_bloom_prune(spark: SparkSession, sf: str) -> DataFrame:
+    """Runtime-filter pattern (operators/bloom.py): a 1%-selectivity
+    semi-join where the bloom bitmap prunes the fact side in codegen
+    BEFORE the join — shuffle volume ∝ selectivity, exactness restored
+    by the final semi-join."""
+    from ..operators.bloom import bloom_semi_join
+
+    li = t(spark, sf, "lineitem").select(
+        "l_orderkey", "l_linenumber", "l_extendedprice"
+    )
+    keys = t(spark, sf, "orders").filter(
+        F.col("o_orderkey") % 100 == 0
+    ).select(F.col("o_orderkey").alias("l_orderkey"))
+    return bloom_semi_join(li, keys, "l_orderkey")
+
+
+# ------------------------------------------------- batch CDC apply
+
+
+@_q(
+    "cdc_apply_orders",
+    # the oracle recomputes the batch's net effect declaratively
+    """
+    WITH keep AS (
+      SELECT * FROM orders WHERE o_orderkey % 10 NOT IN (0, 1, 2)
+    ), upd AS (
+      SELECT o_orderkey, o_custkey, o_orderstatus,
+             round(o_totalprice * 1.1, 6) AS o_totalprice,
+             o_orderdate, o_orderpriority
+      FROM orders WHERE o_orderkey % 10 IN (1, 2)
+    ), ins AS (
+      SELECT o_orderkey + 100000000 AS o_orderkey, o_custkey,
+             'N' AS o_orderstatus, round(o_totalprice, 6) AS o_totalprice,
+             o_orderdate, o_orderpriority
+      FROM orders WHERE o_orderkey % 10 = 3
+    )
+    SELECT o_orderkey, o_custkey, o_orderstatus,
+           round(o_totalprice, 6) AS o_totalprice,
+           o_orderdate, o_orderpriority
+    FROM keep
+    UNION ALL SELECT * FROM upd
+    UNION ALL SELECT * FROM ins
+    """,
+)
+def cdc_apply_orders(spark: SparkSession, sf: str) -> DataFrame:
+    """Batch CDC apply (operators/upsert.py cdc_apply): a synthetic
+    change batch — deletes (key%10=0), 10% price updates (%10∈{1,2}),
+    shifted-key inserts (%10=3) — applied in one anti-join + union
+    pass; target never shuffled.  The batch is derived
+    deterministically from the fixture so the oracle can recompute
+    the net effect declaratively."""
+    from ..operators.upsert import cdc_apply
+
+    o = t(spark, sf, "orders")
+    key = F.col("o_orderkey")
+    dels = o.filter(key % 10 == 0).select(
+        "*", F.lit("D").alias("op"), F.lit(1).alias("seq")
+    )
+    upds = (
+        o.filter((key % 10).isin(1, 2))
+        .withColumn("o_totalprice", F.round(F.col("o_totalprice") * 1.1, 6))
+        .select("*", F.lit("U").alias("op"), F.lit(1).alias("seq"))
+    )
+    ins = (
+        o.filter(key % 10 == 3)
+        .withColumn("o_orderkey", key + 100_000_000)
+        .withColumn("o_orderstatus", F.lit("N"))
+        .select("*", F.lit("I").alias("op"), F.lit(1).alias("seq"))
+    )
+    changes = dels.unionByName(upds).unionByName(ins)
+    out = cdc_apply(o, changes, ["o_orderkey"], broadcast_changes=False)
+    return out.withColumn("o_totalprice", F.round("o_totalprice", 6))
+
+
+# ----------------------------------------------- entity resolution
+@_q(
+    "entity_resolution_parts",
+    # oracle: name-level recursive transitive closure over the naive
+    # fuzzy pairs, then entity = min part key of the name cluster
+    """
+    WITH RECURSIVE names AS (SELECT DISTINCT p_name FROM part),
+    np AS (
+      SELECT a.p_name AS na, b.p_name AS nb
+      FROM names a JOIN names b ON a.p_name < b.p_name
+      WHERE levenshtein(a.p_name, b.p_name) = 1
+    ),
+    sym AS (SELECT na AS a, nb AS b FROM np UNION SELECT nb, na FROM np),
+    closure(a, b) AS (
+      SELECT a, b FROM sym
+      UNION
+      SELECT c.a, s.b FROM closure c JOIN sym s ON c.b = s.a
+    ),
+    ncomp AS (
+      SELECT a AS nm, least(a, min(b)) AS rep FROM closure GROUP BY a
+    ),
+    allnames AS (
+      SELECT n.p_name AS nm, coalesce(nc.rep, n.p_name) AS rep
+      FROM names n LEFT JOIN ncomp nc ON nc.nm = n.p_name
+    ),
+    rep_entity AS (
+      SELECT an.rep, CAST(min(p.p_partkey) AS BIGINT) AS entity
+      FROM part p JOIN allnames an ON p.p_name = an.nm
+      GROUP BY an.rep
+    )
+    SELECT p.p_partkey, p.p_name, re.entity
+    FROM part p
+    JOIN allnames an ON p.p_name = an.nm
+    JOIN rep_entity re ON re.rep = an.rep
+    """,
+)
+def entity_resolution_parts(spark: SparkSession, sf: str) -> DataFrame:
+    """Entity resolution as operator composition: fuzzy edit-distance
+    edges (operators/fuzzy_join.py) ∪ exact same-value edges feed
+    large-star/small-star connected components
+    (operators/components.py); every part gets the canonical entity id
+    (= min part key of its transitive name cluster).  The blocked
+    fuzzy join and the O(log n) component rounds are each certified
+    separately; this row certifies the composition."""
+    from ..operators.components import connected_components
+
+    parts = t(spark, sf, "part").select("p_partkey", "p_name")
+    # exact edges: every part connects to its name's min-key member
+    reps = parts.groupBy("p_name").agg(F.min("p_partkey").alias("rep_id"))
+    members = parts.join(reps, "p_name")
+    exact_edges = members.filter(
+        F.col("p_partkey") != F.col("rep_id")
+    ).select(
+        F.col("rep_id").alias("id_a"), F.col("p_partkey").alias("id_b")
+    )
+    near_edges = edit_distance_join(parts, "p_partkey", "p_name", k=1).select(
+        "id_a", "id_b"
+    )
+    comp = connected_components(
+        exact_edges.unionByName(near_edges), "id_a", "id_b"
+    )
+    return (
+        parts.join(comp, parts.p_partkey == comp.node, "left")
+        .select(
+            "p_partkey",
+            "p_name",
+            F.coalesce("component", "p_partkey").alias("entity"),
+        )
+    )
+
+
+# ------------------------------------------- correlated subqueries
+_EXISTS_SQL = """
+    SELECT c.c_custkey, c.c_name
+    FROM {p}customer c
+    WHERE EXISTS (
+        SELECT 1 FROM {p}orders o
+        WHERE o.o_custkey = c.c_custkey
+          AND o.o_orderpriority = '1-URGENT'
+      )
+      AND NOT EXISTS (
+        SELECT 1 FROM {p}orders o
+        WHERE o.o_custkey = c.c_custkey
+          AND o.o_orderpriority = '5-LOW'
+      )
+"""
+
+
+@_q("sql_exists_subquery", _EXISTS_SQL.format(p=""))
+def sql_exists_subquery(spark: SparkSession, sf: str) -> DataFrame:
+    """Correlated EXISTS / NOT EXISTS through the SQL interface:
+    customers with at least one urgent order and no low-priority
+    order.  Catalyst decorrelates both subqueries into a left-semi
+    and a left-anti hash join (pinned by the plan test) — the
+    subquery surface users port first when switching engines."""
+    for tb in ("customer", "orders"):
+        t(spark, sf, tb).createOrReplaceTempView(f"ex_{tb}")
+    return spark.sql(spark_fast_sql(_EXISTS_SQL).format(p="ex_"))
+
+
+# ------------------------------------------- scalar correlated subquery
+
+
+_SCALAR_SQL = """
+    SELECT o.o_orderkey, o.o_orderpriority, o.o_totalprice
+    FROM {p}orders o
+    WHERE o.o_totalprice = (
+      SELECT max(o2.o_totalprice) FROM {p}orders o2
+      WHERE o2.o_orderpriority = o.o_orderpriority
+    )
+"""
+
+
+@_q("sql_scalar_subquery", _SCALAR_SQL.format(p=""))
+def sql_scalar_subquery(spark: SparkSession, sf: str) -> DataFrame:
+    """Correlated *scalar* subquery through the SQL interface (orders
+    matching their priority class's maximum price) — the aggregate
+    decorrelation shape, complementing sql_exists_subquery's
+    semi/anti shape: Catalyst rewrites it to a grouped max + join,
+    never a per-row re-scan."""
+    t(spark, sf, "orders").createOrReplaceTempView("sc_orders")
+    return spark.sql(spark_fast_sql(_SCALAR_SQL).format(p="sc_"))
+
+
+# --------------------------------------------- VARIANT (semi-structured)
+@_q(
+    "scalar_variant_funcs",
+    """
+    SELECT event_id,
+      CAST(json_extract(props, '$.k') AS INT) AS k,
+      json_extract(props, '$.missing') IS NULL AS no_such_path,
+      CAST(json_extract(props, '$.k') AS INT) % 10 AS k_mod
+    FROM events
+    """,
+)
+def scalar_variant_funcs(spark: SparkSession, sf: str) -> DataFrame:
+    """Spark 4 VARIANT type over the JSON props column: parse once
+    into the binary semi-structured encoding, then typed path
+    extraction (``variant_get``) and missing-path probes
+    (``try_variant_get``) — the modern engine path for schema-on-read
+    JSON, replacing per-access string re-parsing (get_json_object,
+    covered by scalar_json_funcs) with a decoded tree the optimizer
+    can push into.  The oracle reads the same paths with DuckDB's
+    JSON extraction, certifying values and null semantics."""
+    e = t(spark, sf, "events").withColumn("v", F.parse_json("props"))
+    return e.select(
+        "event_id",
+        F.expr("variant_get(v, '$.k', 'int')").alias("k"),
+        F.expr("try_variant_get(v, '$.missing', 'string')")
+        .isNull()
+        .alias("no_such_path"),
+        (F.expr("variant_get(v, '$.k', 'int')") % 10).alias("k_mod"),
+    )
+
+
+# ----------------------------------------- interval-overlap join
+#
+# Intervals are derived deterministically from events: start = ts,
+# duration = (round(value*100) % 3600) + 60 seconds (integral, 1-61
+# min).  The query side is the first 300 event ids; a pair matches
+# when the two same-type intervals overlap (half-open [s, e)).
+_IV_DUR = "(CAST(round(value * 100) AS BIGINT) % 3600 + 60)"
+
+
+_OVERLAP_SQL = f"""
+    WITH iv AS (
+      SELECT event_id, event_type, epoch_us(ts) AS s,
+             epoch_us(ts) + {_IV_DUR} * 1000000 AS e
+      FROM events
+    )
+    SELECT a.event_id AS a_id, b.event_id AS b_id,
+           CAST(least(a.e, b.e) - greatest(a.s, b.s) AS BIGINT)
+             AS overlap_us
+    FROM iv a JOIN iv b
+      ON a.event_type = b.event_type
+     AND a.s < b.e AND b.s < a.e
+     AND a.event_id <> b.event_id
+    WHERE a.event_id < 300
+"""
+
+
+@_q("join_interval_overlap", _OVERLAP_SQL)
+def join_interval_overlap(spark: SparkSession, sf: str) -> DataFrame:
+    """Interval-overlap join (same-type event intervals that
+    intersect) via BIN BLOCKING: each interval explodes to the hour
+    buckets it covers (<=2 here, duration-bounded), candidates meet
+    on the (type, bucket) equi-key, duplicates collapse, and only
+    candidates evaluate the exact overlap predicate.  The oracle is
+    the naive theta join, so the driver hash match certifies the
+    blocking lost no pair.
+
+    At 100 TB the theta join is a cross product per type; the binned
+    rewrite's shuffle is instead ∝ Σ interval-hours, the same
+    filter-and-verify discipline as the fuzzy/grep ops.  Skewed
+    buckets (one hot hour) fall back to the salted-join escape hatch."""
+    from ..operators.interval_join import interval_overlap_join
+
+    iv = t(spark, sf, "events").select(
+        "event_id",
+        "event_type",
+        F.expr("unix_micros(ts)").alias("s"),
+        (F.expr("unix_micros(ts)") + F.expr(spark_fast_sql(_IV_DUR)) * 1_000_000).alias("e"),
+    )
+    pairs = interval_overlap_join(
+        iv.filter(F.col("event_id") < 300), iv, on=["event_type"]
+    )
+    return pairs.filter(F.col("event_id") != F.col("b_event_id")).select(
+        F.col("event_id").alias("a_id"),
+        F.col("b_event_id").alias("b_id"),
+        (F.least("e", "b_e") - F.greatest("s", "b_s"))
+        .cast("bigint")
+        .alias("overlap_us"),
+    )
+
+
+# ---------------------------------------------------- deterministic mode
+@_q(
+    "agg_mode",
+    """
+    SELECT l_returnflag, mode_qty, mode_count FROM (
+      SELECT l_returnflag,
+             CAST(l_quantity AS BIGINT) AS mode_qty,
+             CAST(count(*) AS BIGINT) AS mode_count,
+             row_number() OVER (
+               PARTITION BY l_returnflag
+               ORDER BY count(*) DESC, CAST(l_quantity AS BIGINT) ASC
+             ) AS rn
+      FROM lineitem
+      GROUP BY l_returnflag, CAST(l_quantity AS BIGINT)
+    ) WHERE rn = 1
+    """,
+)
+def agg_mode(spark: SparkSession, sf: str) -> DataFrame:
+    """Deterministic MODE (most frequent value) per group.  Engines'
+    native ``mode()`` leaves ties implementation-defined (both Spark
+    and DuckDB pick an arbitrary winner), so the catalog form is the
+    composition that pins them: count per (group, value), then a
+    row_number window ordered by (count DESC, value ASC) — exact,
+    engine-identical, and the same two-exchange plan a native
+    tie-broken mode would need.  Quantities are integral doubles;
+    grouping on their BIGINT cast keeps the key exact."""
+    li = t(spark, sf, "lineitem").select(
+        "l_returnflag", F.col("l_quantity").cast("bigint").alias("mode_qty")
+    )
+    counts = li.groupBy("l_returnflag", "mode_qty").agg(
+        F.count("*").alias("mode_count")
+    )
+    w = Window.partitionBy("l_returnflag").orderBy(
+        F.col("mode_count").desc(), F.col("mode_qty").asc()
+    )
+    return (
+        counts.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select("l_returnflag", "mode_qty", "mode_count")
+    )
+
+
+# ---------------------------------------------------- parse_url tier
+
+
+@_q(
+    "scalar_url_funcs",
+    # the oracle certifies Spark's parse_url against ground truth:
+    # it rebuilds the same URL fields directly from the source
+    # columns instead of re-parsing the string
+    """
+    SELECT doc_id,
+           source || '.example.com' AS url_host,
+           '/' || lang || '/doc/' || CAST(doc_id AS VARCHAR) AS url_path,
+           'ref=corpus&page=' || CAST(doc_id % 7 AS VARCHAR) AS url_query,
+           CAST(doc_id % 7 AS INT) AS page,
+           'sec' || CAST(doc_id % 3 AS VARCHAR) AS url_frag
+    FROM documents
+    """,
+)
+def scalar_url_funcs(spark: SparkSession, sf: str) -> DataFrame:
+    """URL scalar-function tier: build a deterministic URL per
+    document, then extract host / path / query / named query param /
+    fragment with Spark's ``parse_url`` (a JVM engine function the
+    scalar tiers hadn't covered).  The oracle reconstructs each field
+    from the source columns — certifying the parser against ground
+    truth rather than against another parser."""
+    d = t(spark, sf, "documents").withColumn(
+        "url",
+        F.concat(
+            F.lit("https://"),
+            F.col("source"),
+            F.lit(".example.com/"),
+            F.col("lang"),
+            F.lit("/doc/"),
+            F.col("doc_id").cast("string"),
+            F.lit("?ref=corpus&page="),
+            (F.col("doc_id") % 7).cast("string"),
+            F.lit("#sec"),
+            (F.col("doc_id") % 3).cast("string"),
+        ),
+    )
+    return d.select(
+        "doc_id",
+        F.parse_url("url", F.lit("HOST")).alias("url_host"),
+        F.parse_url("url", F.lit("PATH")).alias("url_path"),
+        F.parse_url("url", F.lit("QUERY")).alias("url_query"),
+        F.parse_url("url", F.lit("QUERY"), F.lit("page"))
+        .cast("int")
+        .alias("page"),
+        F.parse_url("url", F.lit("REF")).alias("url_frag"),
+    )
+
+
+# ---------------------------------------------------- LATERAL top-k join
+_LATERAL_SQL = """
+    SELECT r.r_name, t.n_name, t.c_name, t.c_acctbal
+    FROM {p}region r, LATERAL (
+      SELECT n.n_name, c.c_name, c.c_acctbal
+      FROM {p}customer c
+      JOIN {p}nation n ON c.c_nationkey = n.n_nationkey
+      WHERE n.n_regionkey = r.r_regionkey
+      ORDER BY c.c_acctbal DESC, c.c_name
+      LIMIT 3
+    ) t
+    ORDER BY r.r_name, t.c_acctbal DESC, t.c_name
+"""
+
+
+@_q("sql_lateral_topk", _LATERAL_SQL.format(p=""))
+def sql_lateral_topk(spark: SparkSession, sf: str) -> DataFrame:
+    """Correlated LATERAL subquery with ORDER BY + LIMIT — per-region
+    top-3 customers by balance, expressed as the SQL-standard lateral
+    join rather than the row_number idiom (window_topk_per_segment
+    covers that form).  Catalyst decorrelates the lateral limit into
+    a per-group window under a DomainJoin; DuckDB runs the same
+    statement natively, certifying the rewrite end to end."""
+    for tb in ("region", "nation", "customer"):
+        t(spark, sf, tb).createOrReplaceTempView(f"lat_{tb}")
+    return spark.sql(_LATERAL_SQL.format(p="lat_"))
+
+
+# ---------------------------------------------------- null-safe join
+
+
+@_q(
+    "join_null_safe",
+    """
+    WITH per_user AS (
+      SELECT user_id,
+             CASE WHEN user_id % 10 = 0 THEN NULL
+                  ELSE CAST(user_id % 5 AS INT) END AS seg,
+             CAST(count(*) AS BIGINT) AS n_events
+      FROM events GROUP BY user_id
+    ),
+    seg_dim AS (
+      SELECT DISTINCT
+             CASE WHEN n_nationkey % 10 = 0 THEN NULL
+                  ELSE CAST(n_nationkey % 5 AS INT) END AS seg,
+             CAST(n_nationkey % 5 AS INT) AS seg_code
+      FROM nation WHERE n_nationkey < 10
+    )
+    SELECT u.user_id, u.seg, u.n_events, d.seg_code
+    FROM per_user u
+    JOIN seg_dim d ON u.seg IS NOT DISTINCT FROM d.seg
+    """,
+)
+def join_null_safe(spark: SparkSession, sf: str) -> DataFrame:
+    """Null-safe equi-join (Spark's ``<=>`` / SQL ``IS NOT DISTINCT
+    FROM``): NULL segment keys MATCH each other instead of dropping —
+    the semantics a plain equi-join silently loses.  Catalyst plans
+    ``<=>`` as a hash join on a null-safe key (no fallback to
+    nested-loop), which is what makes the form usable at scale;
+    the oracle runs the standard-SQL spelling."""
+    ev = t(spark, sf, "events")
+    na = t(spark, sf, "nation")
+    per_user = (
+        ev.groupBy("user_id")
+        .agg(F.count("*").alias("n_events"))
+        .withColumn(
+            "seg",
+            F.when(F.col("user_id") % 10 == 0, F.lit(None).cast("int")).otherwise(
+                (F.col("user_id") % 5).cast("int")
+            ),
+        )
+    )
+    seg_dim = (
+        na.filter(F.col("n_nationkey") < 10)
+        .select(
+            F.when(
+                F.col("n_nationkey") % 10 == 0, F.lit(None).cast("int")
+            )
+            .otherwise((F.col("n_nationkey") % 5).cast("int"))
+            .alias("seg"),
+            (F.col("n_nationkey") % 5).cast("int").alias("seg_code"),
+        )
+        .distinct()
+    )
+    return per_user.join(
+        seg_dim, per_user["seg"].eqNullSafe(seg_dim["seg"]), "inner"
+    ).select(
+        "user_id", per_user["seg"].alias("seg"), "n_events", "seg_code"
+    )
+
+
+# ---------------------------------------------------- exact-moment corr/cov
+
+
+@_q(
+    "agg_corr_cov",
+    """
+    WITH m AS (
+      SELECT l_returnflag,
+             CAST(count(*) AS BIGINT) AS n,
+             sum(CAST(CAST(l_quantity AS BIGINT) AS DECIMAL(38,0))) AS sx,
+             sum(CAST(CAST(round(l_extendedprice * 100) AS BIGINT)
+                      AS DECIMAL(38,0))) AS sy,
+             sum(CAST(CAST(l_quantity AS BIGINT)
+                      * CAST(l_quantity AS BIGINT) AS DECIMAL(38,0))) AS sxx,
+             sum(CAST(CAST(round(l_extendedprice * 100) AS BIGINT)
+                      * CAST(round(l_extendedprice * 100) AS BIGINT)
+                      AS DECIMAL(38,0))) AS syy,
+             sum(CAST(CAST(l_quantity AS BIGINT)
+                      * CAST(round(l_extendedprice * 100) AS BIGINT)
+                      AS DECIMAL(38,0))) AS sxy
+      FROM lineitem GROUP BY l_returnflag
+    )
+    SELECT l_returnflag,
+           round((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
+                  - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
+                 / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) / 100.0, 6)
+             AS covar_pop_qty_price,
+           round((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
+                  - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
+                 / (CAST(n AS DOUBLE) * CAST(n - 1 AS DOUBLE)) / 100.0, 6)
+             AS covar_samp_qty_price,
+           round((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
+                  - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
+                 / sqrt((CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
+                         - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
+                        * (CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
+                           - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 6)
+             AS corr_qty_price
+    FROM m ORDER BY l_returnflag
+    """,
+)
+def agg_corr_cov(spark: SparkSession, sf: str) -> DataFrame:
+    """Correlation / covariance aggregates from EXACT integer moments:
+    native corr()/covar_samp() accumulate doubles whose value depends
+    on partition merge order — fine statistically, fatal for a hash
+    gate and for reproducible pipelines.  The catalog form sums the
+    five moments as DECIMAL(38,0) (quantities integral, prices exact
+    cents; decimal sums never overflow at 100-TB row counts where a
+    BIGINT sum of squared cents would) and assembles Pearson r and
+    covariances in one final double step — order-independent,
+    engine-identical, and still a single map-side-partial hash agg
+    over the scan."""
+    li = t(spark, sf, "lineitem").select(
+        "l_returnflag",
+        F.col("l_quantity").cast("bigint").alias("x"),
+        F.expr(_HA.format(x="l_extendedprice", m=100)).alias("y"),
+    )
+    d38 = "decimal(38,0)"
+    m = li.groupBy("l_returnflag").agg(
+        F.count("*").alias("n"),
+        F.sum(F.col("x").cast(d38)).alias("sx"),
+        F.sum(F.col("y").cast(d38)).alias("sy"),
+        F.sum((F.col("x") * F.col("x")).cast(d38)).alias("sxx"),
+        F.sum((F.col("y") * F.col("y")).cast(d38)).alias("syy"),
+        F.sum((F.col("x") * F.col("y")).cast(d38)).alias("sxy"),
+    )
+    n, sx, sy = (F.col(c).cast("double") for c in ("n", "sx", "sy"))
+    sxx, syy, sxy = (F.col(c).cast("double") for c in ("sxx", "syy", "sxy"))
+    num = n * sxy - sx * sy
+    return m.select(
+        "l_returnflag",
+        F.round(num / (n * n) / 100.0, 6).alias("covar_pop_qty_price"),
+        F.round(num / (n * (n - F.lit(1).cast("double"))) / 100.0, 6).alias(
+            "covar_samp_qty_price"
+        ),
+        F.round(
+            num / F.sqrt((n * sxx - sx * sx) * (n * syy - sy * sy)), 6
+        ).alias("corr_qty_price"),
+    ).orderBy("l_returnflag")
+
+
+# ---------------------------------------------------- bitwise scalar tier
+
+
+@_q(
+    "scalar_bitwise_funcs",
+    """
+    SELECT event_id,
+           user_id & 255 AS low_byte,
+           user_id | 4096 AS with_flag,
+           xor(user_id, event_id) AS mixed,
+           user_id << 3 AS shifted_l,
+           event_id >> 2 AS shifted_r,
+           CAST(bit_count(user_id) AS INT) AS popcnt,
+           ~user_id AS flipped
+    FROM events
+    """,
+)
+def scalar_bitwise_funcs(spark: SparkSession, sf: str) -> DataFrame:
+    """Bitwise scalar tier: AND/OR/XOR/NOT, shifts, and popcount over
+    BIGINT ids — the primitive layer under the simhash/banding ops,
+    exposed as engine functions (all JVM codegen, no UDFs).  The
+    oracle uses DuckDB's spellings (xor(), <<, ~); Spark's ^ is
+    bitwise xor and shiftleft/shiftright are functions."""
+    ev = t(spark, sf, "events")
+    return ev.select(
+        "event_id",
+        F.expr("user_id & 255").alias("low_byte"),
+        F.expr("user_id | 4096").alias("with_flag"),
+        F.expr("user_id ^ event_id").alias("mixed"),
+        F.shiftleft(F.col("user_id"), 3).alias("shifted_l"),
+        F.shiftright(F.col("event_id"), 2).alias("shifted_r"),
+        F.bit_count(F.col("user_id")).cast("int").alias("popcnt"),
+        F.expr("~user_id").alias("flipped"),
+    )
+
+
+# ---------------------------------------------- grouped-agg pandas UDF
+
+
+@_q(
+    "agg_pandas_udf_trimmed",
+    """
+    WITH n AS (
+      SELECT label,
+        sqrt(list_sum(list_transform(CAST(embedding AS DOUBLE[]),
+                                     x -> x * x))) AS nrm
+      FROM embeddings
+    ), g AS (
+      SELECT label, list_sort(list(nrm)) AS s, count(*) AS cnt
+      FROM n GROUP BY label
+    )
+    SELECT label,
+      round(CASE WHEN cnt > 2 * CAST(floor(cnt * 0.1) AS BIGINT)
+            THEN list_sum(list_slice(s, CAST(floor(cnt * 0.1) AS BIGINT) + 1,
+                                     cnt - CAST(floor(cnt * 0.1) AS BIGINT)))
+                 / (cnt - 2 * CAST(floor(cnt * 0.1) AS BIGINT))
+            ELSE list_sum(s) / cnt END, 6) AS trimmed_norm
+    FROM g ORDER BY label
+    """,
+)
+def agg_pandas_udf_trimmed(spark: SparkSession, sf: str) -> DataFrame:
+    """Per-label 10%-trimmed mean of embedding norms via a
+    GROUPED_AGG pandas UDF — the aggregation cell of the Python-
+    boundary matrix (functions/pandas_udfs.py): the whole group
+    arrives as one Arrow series, reduces to one scalar.  The oracle
+    computes the identical trim with list_sort + list_slice, so the
+    Arrow aggregation path sits under the hash gate."""
+    from ..functions.pandas_udfs import trimmed_mean
+    from ..operators.similarity import with_norm
+
+    emb = with_norm(t(spark, sf, "embeddings"), "embedding")
+    return (
+        emb.groupBy("label")
+        .agg(F.round(trimmed_mean(F.col("norm")), 6).alias("trimmed_norm"))
+        .orderBy("label")
+    )
+
+
+# -------------------------------- incremental view maintenance (IVM)
+@_q(
+    "mv_incremental_orders",
+    # oracle = the DECLARATIVE full recompute over the post-delta
+    # order set (base minus retractions plus late inserts): a hash
+    # match certifies the counting-algorithm maintenance path never
+    # touched the base yet landed on the same view
+    """
+    WITH b AS (
+      SELECT *, CAST(('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 8))
+                     AS BIGINT) % 100 AS bucket
+      FROM orders
+    ), post AS (
+      SELECT * FROM b WHERE bucket >= 10
+    )
+    SELECT o_orderstatus, o_orderpriority,
+           CAST(count(*) AS BIGINT) AS cnt,
+           CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+             AS total_cents
+    FROM post
+    GROUP BY o_orderstatus, o_orderpriority
+    """,
+)
+def mv_incremental_orders(spark: SparkSession, sf: str) -> DataFrame:
+    """Incremental view maintenance, certified: a count/sum view over
+    the base orders (md5 buckets 0-89) is maintained under one signed
+    delta batch — inserts (buckets 90-99, arriving late) and
+    retractions (bucket 0-9 rows, deleted) — via operators/ivm.py's
+    counting algorithm.  The base table is scanned once to build the
+    view and NEVER again; the oracle recomputes the post-delta state
+    declaratively, so the hash gate certifies the merge arithmetic.
+
+    Money stays exact as bigint cents (the house scaled-integer
+    idiom)."""
+    from ..operators.ivm import delta_agg_apply
+
+    orders = t(spark, sf, "orders").withColumn(
+        "bucket",
+        F.conv(F.md5(F.col("o_orderkey").cast("string")).substr(1, 8), 16, 10)
+        .cast("long")
+        % 100,
+    ).withColumn(
+        "cents", F.expr(_HA.format(x="o_totalprice", m=100))
+    )
+    base = orders.filter(F.col("bucket") < 90)
+    mv = base.groupBy("o_orderstatus", "o_orderpriority").agg(
+        F.count("*").alias("cnt"),
+        F.sum("cents").alias("total_cents"),
+    )
+    inserts = orders.filter(F.col("bucket") >= 90).withColumn(
+        "_sign", F.lit(1)
+    )
+    retracts = orders.filter(F.col("bucket") < 10).withColumn(
+        "_sign", F.lit(-1)
+    )
+    delta = inserts.unionByName(retracts).select(
+        "o_orderstatus", "o_orderpriority", "cents", "_sign"
+    )
+    return delta_agg_apply(
+        mv,
+        delta,
+        keys=["o_orderstatus", "o_orderpriority"],
+        sums={"total_cents": "cents"},
+    ).select(
+        "o_orderstatus",
+        "o_orderpriority",
+        F.col("cnt").cast("bigint").alias("cnt"),
+        F.col("total_cents").cast("bigint").alias("total_cents"),
+    )
+
+
+# ------------------------------ point-in-time SCD2 dimension lookup
+
+
+@_q(
+    "join_scd2_pointintime",
+    """
+    WITH v AS (
+      SELECT o_custkey, o_orderkey, o_orderstatus,
+             o_orderdate AS valid_from,
+             lead(o_orderdate) OVER (
+               PARTITION BY o_custkey
+               ORDER BY o_orderdate, o_orderkey) AS valid_to
+      FROM orders
+    )
+    SELECT e.event_id, e.user_id, e.ts, v.o_orderkey, v.o_orderstatus
+    FROM events e JOIN v ON v.o_custkey = e.user_id
+      AND e.ts >= v.valid_from
+      AND (v.valid_to IS NULL OR e.ts < v.valid_to)
+    """,
+)
+def join_scd2_pointintime(spark: SparkSession, sf: str) -> DataFrame:
+    """Point-in-time ("time travel") dimension lookup: each event is
+    joined to the SCD2 version (operators/scd.py intervals over the
+    order log) valid AT the event's timestamp.  Same-date versions
+    collapse to empty [d, d) intervals, so the non-empty intervals
+    partition time and every event matches at most one version —
+    the half-open containment the oracle states declaratively.
+
+    Scale shape: the join is EQUI on the customer key (hash join;
+    the interval containment is a post-filter), with fan-out bounded
+    by versions-per-customer — no inequality-only join, no window
+    over the event log."""
+    from ..operators.scd import scd2_build
+
+    orders = t(spark, sf, "orders").select(
+        "o_custkey", "o_orderkey", "o_orderstatus", "o_orderdate"
+    )
+    v = scd2_build(
+        orders, ["o_custkey"], "o_orderdate", tiebreak=["o_orderkey"]
+    )
+    e = t(spark, sf, "events").select("event_id", "user_id", "ts")
+    return e.join(
+        v,
+        (F.col("user_id") == F.col("o_custkey"))
+        & (F.col("ts") >= F.col("valid_from"))
+        & (F.col("valid_to").isNull() | (F.col("ts") < F.col("valid_to"))),
+    ).select("event_id", "user_id", "ts", "o_orderkey", "o_orderstatus")
+
+
+# ----------------------------------- table diff / reconciliation
+
+
+@_q(
+    "table_diff_orders",
+    # the oracle CLASSIFIES the planted delta declaratively; the Spark
+    # side must rediscover it through the generic diff operator
+    """
+    WITH k AS (
+      SELECT o_orderkey,
+             CAST(('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 8))
+                  AS BIGINT) % 100 AS bucket
+      FROM orders
+    )
+    SELECT o_orderkey, 'removed' AS status FROM k WHERE bucket < 5
+    UNION ALL
+    SELECT o_orderkey, 'changed' FROM k WHERE bucket BETWEEN 5 AND 9
+    UNION ALL
+    SELECT o_orderkey + 1000000000, 'added' FROM k
+    WHERE bucket BETWEEN 10 AND 14
+    """,
+)
+def table_diff_orders(spark: SparkSession, sf: str) -> DataFrame:
+    """Snapshot reconciliation (operators/diff.py): a second snapshot
+    of orders is derived with a planted delta — md5 buckets 0-4
+    deleted, 5-9 repriced, 10-14 duplicated under shifted keys — and
+    the generic full-outer null-safe diff must classify exactly that
+    delta (unchanged rows never surface).  The oracle states the
+    planted classification declaratively, so the hash gate certifies
+    the diff machinery end to end."""
+    from ..operators.diff import table_diff
+
+    orders = t(spark, sf, "orders").withColumn(
+        "bucket",
+        F.conv(F.md5(F.col("o_orderkey").cast("string")).substr(1, 8), 16, 10)
+        .cast("long")
+        % 100,
+    )
+    changed = orders.filter((F.col("bucket") >= 5) & (F.col("bucket") < 10))
+    added = orders.filter(
+        (F.col("bucket") >= 10) & (F.col("bucket") < 15)
+    ).withColumn("o_orderkey", F.col("o_orderkey") + F.lit(1_000_000_000))
+    snapshot_b = (
+        orders.filter(F.col("bucket") >= 5)
+        .withColumn(
+            "o_orderpriority",
+            F.when(F.col("bucket") < 10, F.lit("X-DIFF")).otherwise(
+                F.col("o_orderpriority")
+            ),
+        )
+        .unionByName(added)
+    )
+    cols = ["o_orderkey", "o_orderstatus", "o_totalprice", "o_orderpriority"]
+    return table_diff(
+        orders.select(*cols),
+        snapshot_b.select(*cols),
+        keys=["o_orderkey"],
+    )
+
+
+# --------------------------- per-group OLS regression aggregates
+@_q(
+    "agg_regression",
+    """
+    WITH p AS (
+      SELECT event_type,
+             CAST(floor(epoch(ts)) - epoch(TIMESTAMP '2024-01-01')
+                  AS BIGINT) AS x,  -- floor: Spark's unix_timestamp truncates
+             CAST(round(value * 1000000) AS BIGINT) AS y
+      FROM events
+    ), m AS (
+      SELECT event_type,
+             CAST(count(*) AS BIGINT) AS n,
+             sum(CAST(x AS DECIMAL(38,0))) AS sx,
+             sum(CAST(y AS DECIMAL(38,0))) AS sy,
+             sum(CAST(x * x AS DECIMAL(38,0))) AS sxx,
+             sum(CAST(y * y AS DECIMAL(38,0))) AS syy,
+             sum(CAST(x * y AS DECIMAL(38,0))) AS sxy
+      FROM p GROUP BY event_type
+    )
+    , a AS (
+      SELECT event_type,
+             CAST(n AS DOUBLE) AS nd, CAST(sx AS DOUBLE) AS sxd,
+             CAST(sy AS DOUBLE) AS syd, CAST(sxx AS DOUBLE) AS sxxd,
+             CAST(syy AS DOUBLE) AS syyd, CAST(sxy AS DOUBLE) AS sxyd
+      FROM m
+    )
+    -- integer-space rounding (house idiom): round(scaled double) to
+    -- an integer, then divide — round(x, 6) on a double at a
+    -- boundary diverges between the engines' shortest-repr vs
+    -- binary rounding
+    SELECT event_type,
+           round((nd * sxyd - sxd * syd) / (nd * sxxd - sxd * sxd)
+                 * 86400.0) / 1000000.0 AS slope_per_day,
+           round((syd - (nd * sxyd - sxd * syd)
+                        / (nd * sxxd - sxd * sxd) * sxd) / nd)
+             / 1000000.0 AS intercept,
+           round((nd * sxyd - sxd * syd) * (nd * sxyd - sxd * syd)
+                 / ((nd * sxxd - sxd * sxd) * (nd * syyd - syd * syd))
+                 * 1000000.0) / 1000000.0 AS r2
+    FROM a ORDER BY event_type
+    """,
+)
+def agg_regression(spark: SparkSession, sf: str) -> DataFrame:
+    """Per-group OLS regression (value drift per day per event type)
+    from EXACT integer moments — the regr_slope/intercept/r2 tier.
+    Native regr_* aggregates accumulate doubles whose value depends on
+    partition merge order (hash-gate-fatal, like corr); the catalog
+    form sums five DECIMAL(38,0) moments over (seconds-since-anchor,
+    micro-scaled value) and assembles slope/intercept/r² in one final
+    double step — order-independent, engine-identical, still one
+    map-side-partial hash agg over the scan."""
+    e = t(spark, sf, "events").select(
+        "event_type",
+        (
+            F.unix_timestamp("ts")
+            - F.unix_timestamp(F.lit("2024-01-01").cast("timestamp"))
+        ).cast("bigint").alias("x"),
+        F.expr(_HA.format(x="value", m=1000000)).alias("y"),
+    )
+    d38 = "decimal(38,0)"
+    m = e.groupBy("event_type").agg(
+        F.count("*").alias("n"),
+        F.sum(F.col("x").cast(d38)).alias("sx"),
+        F.sum(F.col("y").cast(d38)).alias("sy"),
+        F.sum((F.col("x") * F.col("x")).cast(d38)).alias("sxx"),
+        F.sum((F.col("y") * F.col("y")).cast(d38)).alias("syy"),
+        F.sum((F.col("x") * F.col("y")).cast(d38)).alias("sxy"),
+    )
+    n, sx, sy = (F.col(c).cast("double") for c in ("n", "sx", "sy"))
+    sxx, syy, sxy = (F.col(c).cast("double") for c in ("sxx", "syy", "sxy"))
+    num = n * sxy - sx * sy
+    den_x = n * sxx - sx * sx
+    den_y = n * syy - sy * sy
+    slope = num / den_x
+    # integer-space rounding (the seasonal-profile idiom): round the
+    # 1e6-scaled double to an INTEGER, then divide — identical on
+    # both engines where round(x, 6) diverges at repr boundaries
+    return m.select(
+        "event_type",
+        (F.round(slope * 86_400.0) / 1_000_000.0).alias("slope_per_day"),
+        (F.round((sy - slope * sx) / n) / 1_000_000.0).alias("intercept"),
+        (F.round(num * num / (den_x * den_y) * 1_000_000.0) / 1_000_000.0)
+        .alias("r2"),
+    ).orderBy("event_type")
+
+
+# ------------------------------------------- array set operations
+@_q(
+    "array_setops",
+    # per-order part lists vs the order's supplier-duplicated list:
+    # intersect/union/except with SORTED outputs (both engines leave
+    # set-op element order unspecified) joined to strings for the
+    # cross-engine hash
+    """
+    WITH g AS (
+      SELECT l_orderkey,
+             list_sort(list(DISTINCT l_partkey)) AS parts,
+             coalesce(list_sort(list(DISTINCT l_partkey)
+                       FILTER (WHERE l_linenumber <= 3)),
+                      CAST([] AS BIGINT[])) AS head_parts
+      FROM lineitem GROUP BY l_orderkey
+    )
+    -- coalesce: DuckDB's array_to_string of an EMPTY list is NULL
+    -- where Spark's array_join is ''
+    SELECT l_orderkey,
+           coalesce(array_to_string(
+             list_sort(list_intersect(parts, head_parts)), ','), '')
+             AS inter,
+           coalesce(array_to_string(list_sort(list_distinct(
+             list_concat(parts, head_parts))), ','), '') AS uni,
+           coalesce(array_to_string(list_sort(list_filter(parts,
+             x -> NOT list_contains(head_parts, x))), ','), '') AS diff,
+           CAST(len(parts) AS INT) AS n_parts
+    FROM g
+    """,
+)
+def array_setops(spark: SparkSession, sf: str) -> DataFrame:
+    """Array set-operation tier: array_intersect / array_union /
+    array_except over per-order part lists (full list vs the first
+    three line numbers).  Both engines leave set-op element ORDER
+    unspecified, so results are canonicalized by array_sort and
+    joined to strings before the hash — the same normalization the
+    inverted-index postings use."""
+    li = t(spark, sf, "lineitem")
+    g = li.groupBy("l_orderkey").agg(
+        F.array_sort(F.collect_set("l_partkey")).alias("parts"),
+        F.array_sort(
+            F.collect_set(
+                F.when(F.col("l_linenumber") <= 3, F.col("l_partkey"))
+            )
+        ).alias("head_parts"),
+    )
+    def joined(col):
+        return F.array_join(
+            F.transform(F.array_sort(col), lambda x: x.cast("string")), ","
+        )
+    return g.select(
+        "l_orderkey",
+        joined(F.array_intersect("parts", "head_parts")).alias("inter"),
+        joined(F.array_union("parts", "head_parts")).alias("uni"),
+        joined(F.array_except("parts", "head_parts")).alias("diff"),
+        F.size("parts").cast("int").alias("n_parts"),
+    )
+
+
+# ------------------------------------------------ struct scalar tier
+
+
+@_q(
+    "scalar_struct_funcs",
+    # struct construction, lexicographic struct MAX (field order =
+    # comparison order in both engines), field access, and JSON
+    # serialization (identical compact key:value form).  Timestamps
+    # stay OUT of to_json (engine serialization formats differ) and
+    # are emitted as plain columns instead.
+    """
+    WITH s AS (
+      SELECT event_type,
+             max(struct_pack(v := CAST(round(value * 100) AS BIGINT),
+                             ts := ts, eid := event_id)) AS peak,
+             max(struct_pack(ts := ts, eid := event_id,
+                             v := CAST(round(value * 100) AS BIGINT)))
+               AS latest
+      FROM events GROUP BY event_type
+    )
+    SELECT event_type,
+           to_json(struct_pack(v := peak.v, eid := peak.eid)) AS peak_json,
+           peak.ts AS peak_ts,
+           latest.ts AS latest_ts,
+           latest.eid AS latest_eid
+    FROM s
+    """,
+)
+def scalar_struct_funcs(spark: SparkSession, sf: str) -> DataFrame:
+    """Struct tier, completing the complex-type family (arrays, maps,
+    VARIANT already under the gate): construction, lexicographic
+    struct aggregation (field order IS the comparison order — the
+    argmax-by-tuple idiom OHLC uses), dot field access, and to_json
+    serialization, identical across engines for string/int fields."""
+    e = t(spark, sf, "events").select(
+        "event_type",
+        "ts",
+        "event_id",
+        F.expr(_HA.format(x="value", m=100)).alias("v"),
+    )
+    s = e.groupBy("event_type").agg(
+        F.max(F.struct("v", "ts", F.col("event_id").alias("eid"))).alias("peak"),
+        F.max(
+            F.struct("ts", F.col("event_id").alias("eid"), "v")
+        ).alias("latest"),
+    )
+    return s.select(
+        "event_type",
+        F.to_json(
+            F.struct(F.col("peak.v").alias("v"), F.col("peak.eid").alias("eid"))
+        ).alias("peak_json"),
+        F.col("peak.ts").alias("peak_ts"),
+        F.col("latest.ts").alias("latest_ts"),
+        F.col("latest.eid").alias("latest_eid"),
+    )
+
+
+# --------------------------------------- approximate quantile sketch
+@_q(
+    "agg_approx_quantiles",
+    """
+    WITH q AS (
+      SELECT event_type,
+        quantile_disc(value, [0.1, 0.25, 0.5, 0.75, 0.9, 0.99]) AS qs,
+        CAST(count(*) AS BIGINT) AS n
+      FROM events GROUP BY event_type
+    )
+    SELECT event_type, qs[1] AS q10, qs[2] AS q25, qs[3] AS q50,
+           qs[4] AS q75, qs[5] AS q90, qs[6] AS q99, n
+    FROM q ORDER BY event_type
+    """,
+)
+def agg_approx_quantiles(spark: SparkSession, sf: str) -> DataFrame:
+    """Mergeable approximate-quantile sketch (Greenwald-Khanna via
+    ``percentile_approx``), pinned at its provably-exact parameter
+    point — the same oracle pattern as ``sim_ivf_exact``: at
+    accuracy=1e6 the rank error n/(2·accuracy) is < 1 for every
+    fixture tier, the sketch returns the exact discrete quantile
+    element, and both engines pick elements by the same
+    smallest-rank-≥-⌈p·n⌉ convention (verified empirically), so
+    doubles hash-match bit-for-bit with no arithmetic involved.
+
+    Scale shape: this is the 100-TB replacement for exact percentiles
+    — partials are O(accuracy·log n) per group, merge associatively
+    map-side, and nothing sorts; the exact ``percentile`` twin
+    (agg_percentile_collect) buffers each group.  The approximation
+    contract at REAL sketch sizes (accuracy ≪ n) is pinned by
+    tests/test_operators.py::test_approx_quantiles_rank_error."""
+    g = (
+        t(spark, sf, "events")
+        .groupBy("event_type")
+        .agg(
+            F.percentile_approx(
+                "value", [0.1, 0.25, 0.5, 0.75, 0.9, 0.99], 1_000_000
+            ).alias("qs"),
+            F.count("*").cast("bigint").alias("n"),
+        )
+    )
+    names = ["q10", "q25", "q50", "q75", "q90", "q99"]
+    return g.select(
+        "event_type",
+        *[F.col("qs")[i].alias(nm) for i, nm in enumerate(names)],
+        "n",
+    ).orderBy("event_type")
+
+
+# ------------------------------------------- audience overlap (exact)
+_OVL_SQL = """
+    WITH tu AS (
+      SELECT DISTINCT event_type, user_id FROM events
+    ), c AS (
+      SELECT event_type, CAST(count(*) AS BIGINT) AS n
+      FROM tu GROUP BY event_type
+    ), pair AS (
+      SELECT a.event_type AS type_a, b.event_type AS type_b,
+        CAST(count(*) AS BIGINT) AS inter_users
+      FROM tu a JOIN tu b
+        ON a.user_id = b.user_id AND a.event_type < b.event_type
+      GROUP BY a.event_type, b.event_type
+    )
+    SELECT p.type_a, p.type_b, p.inter_users,
+      CAST(ca.n + cb.n - p.inter_users AS BIGINT) AS union_users,
+      CAST(p.inter_users * 1000000
+           // (ca.n + cb.n - p.inter_users) AS BIGINT) AS jaccard_ppm
+    FROM pair p
+    JOIN c ca ON ca.event_type = p.type_a
+    JOIN c cb ON cb.event_type = p.type_b
+"""
+
+
+@_q("agg_audience_overlap", _OVL_SQL)
+def agg_audience_overlap(spark: SparkSession, sf: str) -> DataFrame:
+    """Exact pairwise audience overlap between event types: |A ∩ B|,
+    |A ∪ B| (by inclusion-exclusion — never materialized), and Jaccard
+    in integer ppm.  This is the provably-exact twin of a theta-sketch
+    set-operation rollup: swap the distinct pair stream for sketch
+    partials and the same plan scales past memory.
+
+    Scale shape: the distinct and the self-join both key on user_id,
+    so one hash partitioning serves both sides; pair counting is a
+    map-side-combinable groupBy over ≤|types|² keys; per-type sizes
+    are a tiny broadcast joined twice."""
+    tu = t(spark, sf, "events").select("event_type", "user_id").distinct()
+    c = tu.groupBy("event_type").agg(
+        F.count("*").cast("bigint").alias("n")
+    )
+    a = tu.select(
+        F.col("event_type").alias("type_a"), "user_id"
+    )
+    b = tu.select(
+        F.col("event_type").alias("type_b"), "user_id"
+    )
+    pair = (
+        a.join(b, "user_id")
+        .filter(F.col("type_a") < F.col("type_b"))
+        .groupBy("type_a", "type_b")
+        .agg(F.count("*").cast("bigint").alias("inter_users"))
+    )
+    ca = c.select(F.col("event_type").alias("type_a"), F.col("n").alias("na"))
+    cb = c.select(F.col("event_type").alias("type_b"), F.col("n").alias("nb"))
+    return (
+        pair.join(F.broadcast(ca), "type_a")
+        .join(F.broadcast(cb), "type_b")
+        .select(
+            "type_a",
+            "type_b",
+            "inter_users",
+            (F.col("na") + F.col("nb") - F.col("inter_users"))
+            .cast("bigint")
+            .alias("union_users"),
+            F.expr("inter_users * 1000000 div (na + nb - inter_users)")
+            .cast("bigint")
+            .alias("jaccard_ppm"),
+        )
+    )
+
+
+# ------------------------------------------- nearest as-of join
+
+_NEAREST_SQL = """
+    WITH p AS (
+      SELECT e.event_id, e.user_id, o.o_orderdate,
+        abs(epoch_us(e.ts) - epoch_us(CAST(o.o_orderdate AS TIMESTAMP)))
+          AS dist_us,
+        row_number() OVER (PARTITION BY e.event_id
+          ORDER BY abs(epoch_us(e.ts)
+                       - epoch_us(CAST(o.o_orderdate AS TIMESTAMP))) ASC,
+                   o.o_orderdate ASC) AS rn
+      FROM events e JOIN orders o ON o.o_custkey = e.user_id
+      WHERE e.ts IS NOT NULL
+    )
+    SELECT event_id, user_id, CAST(o_orderdate AS DATE) AS nearest_order_date,
+      CAST(dist_us AS BIGINT) AS dist_us
+    FROM p WHERE rn = 1
+"""
+
+
+@_q("join_asof_nearest", _NEAREST_SQL)
+def join_asof_nearest(spark: SparkSession, sf: str) -> DataFrame:
+    """Nearest-neighbor as-of join: each event matches the order (same
+    user) with the smallest |event time − order date|, ties to the
+    EARLIER order — the bidirectional variant of
+    join_asof_events_orders (pandas ``merge_asof(direction='nearest')``
+    semantics, which plain ASOF JOIN cannot express).
+
+    Scale shape: the global minimum distance is provably at one of the
+    two directional as-of matches, so the plan is two keyed
+    sort-merge passes of operators/asof_join (backward then forward —
+    never a per-pair product like the oracle's rank-over-join) and a
+    per-row least().  Distances ride integer microseconds."""
+    ev = (
+        t(spark, sf, "events")
+        .filter(F.col("ts").isNotNull())
+        .select(
+            "event_id",
+            "user_id",
+            "ts",
+            F.expr("unix_micros(ts)").alias("tsu"),
+        )
+    )
+    od = t(spark, sf, "orders").select(
+        F.col("o_custkey").alias("user_id"),
+        F.col("o_orderdate").cast("timestamp").alias("ts"),
+        F.expr("unix_micros(CAST(o_orderdate AS TIMESTAMP))").alias("bt"),
+    )
+    n = asof_join(ev, od, on="ts", by="user_id", direction="nearest")
+    return n.filter(F.col("bt").isNotNull()).select(
+        "event_id",
+        "user_id",
+        F.to_date(F.timestamp_micros("bt")).alias("nearest_order_date"),
+        F.abs(F.col("tsu") - F.col("bt")).cast("bigint").alias("dist_us"),
+    )
+
+
+# ------------------------------------------- recursive CTE rollup
+_REC_SQL = """
+    WITH RECURSIVE anc AS (
+      SELECT user_id, user_id AS node, 0 AS steps
+      FROM (SELECT DISTINCT user_id FROM events WHERE user_id IS NOT NULL) u
+      UNION ALL
+      SELECT user_id, (node - 1) // 2, steps + 1
+      FROM anc WHERE node > 0
+    ), urev AS (
+      SELECT user_id,
+        SUM(CAST(round(value * 100) AS BIGINT)) AS rev_c
+      FROM events GROUP BY user_id
+    )
+    SELECT anc.node,
+      CAST(count(*) AS BIGINT) AS n_subtree_users,
+      CAST(max(anc.steps) AS BIGINT) AS subtree_depth,
+      CAST(SUM(urev.rev_c) AS BIGINT) AS subtree_rev_c
+    FROM anc JOIN urev ON anc.user_id = urev.user_id
+    GROUP BY anc.node
+"""
+
+
+@_q("sql_recursive_rollup", _REC_SQL)
+def sql_recursive_rollup(spark: SparkSession, sf: str) -> DataFrame:
+    """Hierarchical rollup through a RECURSIVE CTE (Spark 4 WITH
+    RECURSIVE): users form an implicit binary management tree
+    (parent(u) = (u-1) div 2); every user's revenue is attributed to
+    each of its ancestors, giving per-node subtree size, depth, and
+    integer-cents subtree revenue — the org-chart/category-tree
+    aggregation pattern relational engines traditionally punt to
+    application code.
+
+    Scale shape: recursion length = tree DEPTH (log n — ~30 iterations
+    at 1B users), and each iteration is a pure per-row projection of
+    the frontier (no join, no shuffle inside the loop); the revenue
+    attach and the node rollup are ordinary keyed hash aggregations.
+    The ancestor frame is n·depth rows — the same blow-up the
+    textbook adjacency-list rollup costs anywhere."""
+    t(spark, sf, "events").createOrReplaceTempView("events_rec")
+    return spark.sql(
+        """
+        WITH RECURSIVE anc AS (
+          SELECT user_id, user_id AS node, 0 AS steps
+          FROM (SELECT DISTINCT user_id FROM events_rec
+                WHERE user_id IS NOT NULL) u
+          UNION ALL
+          SELECT user_id, (node - 1) div 2, steps + 1
+          FROM anc WHERE node > 0
+        ), urev AS (
+          SELECT user_id,
+            SUM(CAST((value * 100) + CASE WHEN (value * 100) >= 0
+                THEN 0.5D ELSE -0.5D END AS BIGINT)) AS rev_c
+          FROM events_rec GROUP BY user_id
+        )
+        SELECT anc.node,
+          CAST(count(*) AS BIGINT) AS n_subtree_users,
+          CAST(max(anc.steps) AS BIGINT) AS subtree_depth,
+          CAST(SUM(urev.rev_c) AS BIGINT) AS subtree_rev_c
+        FROM anc JOIN urev ON anc.user_id = urev.user_id
+        GROUP BY anc.node
+        """
+    )
+
+
+# ------------------------------------------- regex scalar tier
+
+@_q(
+    "scalar_regex_funcs",
+    r"""
+    SELECT doc_id,
+      regexp_extract(text, '([a-z]{6,})', 1) AS first_long_word,
+      CAST(len(regexp_extract_all(text, '[aeiou]{2}')) AS BIGINT)
+        AS n_vowel_pairs,
+      CAST(CASE WHEN regexp_matches(text, 'the .* the ')
+           THEN 1 ELSE 0 END AS INT) AS has_the_twice,
+      regexp_replace(text[1:40], '[aeiou]', '_', 'g') AS devoweled_head
+    FROM documents
+    """,
+)
+def scalar_regex_funcs(spark: SparkSession, sf: str) -> DataFrame:
+    """Regex scalar-function tier: first capture-group extraction,
+    match counting via extract_all, boolean match, and global
+    replacement over a bounded prefix.  Patterns stay in the
+    dialect-portable subset (character classes, bounded quantifiers —
+    identical semantics in Java regex and RE2/DuckDB).
+
+    Scale shape: pure per-row projection over one scan — no shuffle;
+    regex evaluation is the per-row cost and lives in the JVM."""
+    d = t(spark, sf, "documents")
+    return d.select(
+        "doc_id",
+        F.regexp_extract("text", r"([a-z]{6,})", 1).alias(
+            "first_long_word"
+        ),
+        F.expr(r"CAST(size(regexp_extract_all(text, '[aeiou]{2}', 0)) AS BIGINT)")
+        .alias("n_vowel_pairs"),
+        F.expr(r"CAST(CASE WHEN text RLIKE 'the .* the ' THEN 1 ELSE 0 END AS INT)")
+        .alias("has_the_twice"),
+        F.regexp_replace(F.substring("text", 1, 40), r"[aeiou]", "_")
+        .alias("devoweled_head"),
+    )
+
+
+# ------------------------------------------- tolerance-bounded as-of
+_ASOF_TOL_SQL = """
+    SELECT e.event_id, e.user_id,
+      CASE WHEN o.o_orderdate >= e.ts - INTERVAL 30 DAY
+           THEN o.o_orderdate END AS recent_order_date
+    FROM events e ASOF LEFT JOIN orders o
+      ON e.user_id = o.o_custkey AND e.ts >= o.o_orderdate
+"""
+
+
+@_q("join_asof_tolerance", _ASOF_TOL_SQL)
+def join_asof_tolerance(spark: SparkSession, sf: str) -> DataFrame:
+    """As-of join with a staleness bound — pandas
+    ``merge_asof(tolerance=Timedelta('30D'))`` semantics: each event
+    takes the latest order at-or-before it, but a match older than 30
+    days is nulled out (the row survives) — the freshness contract a
+    feature-store point-in-time lookup enforces.  The oracle expresses
+    the same thing as an unbounded ASOF LEFT JOIN + CASE; the engine
+    applies the bound inside the operator.  Tie determinism: the only
+    carried value column is the match time itself, so equal-timestamp
+    right rows are indistinguishable and both engines agree.
+
+    Scale shape: identical to join_asof_events_orders — one union +
+    last-value window over a shared (user_id) partitioning (no
+    row-multiplying join, no range self-join); the tolerance adds a
+    per-row comparison, zero extra shuffles."""
+    e = t(spark, sf, "events").select("event_id", "user_id", "ts")
+    o = t(spark, sf, "orders").select(
+        F.col("o_custkey").alias("user_id"),
+        F.col("o_orderdate").alias("ts"),
+        "o_orderdate",
+    )
+    joined = asof_join(e, o, on="ts", by="user_id", tolerance="30 DAY")
+    return joined.select(
+        "event_id",
+        "user_id",
+        F.col("o_orderdate").alias("recent_order_date"),
+    )
+
+
+# --------------------------------------- association-rule lift
+_LIFT_SQL = """
+    WITH li AS (
+      SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
+    ), n AS (
+      SELECT CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_orders
+      FROM li
+    ), deg AS (
+      SELECT l_partkey, CAST(count(*) AS BIGINT) AS n_item
+      FROM li GROUP BY l_partkey
+    ), pairs AS (
+      SELECT a.l_partkey AS u, b.l_partkey AS v,
+        CAST(count(*) AS BIGINT) AS n_uv
+      FROM li a JOIN li b
+        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+      GROUP BY u, v HAVING count(*) >= 2
+    )
+    SELECT u, v, n_uv, du.n_item AS n_u, dv.n_item AS n_v,
+      CAST((n_uv * 1000000 // du.n_item) * n.n_orders // dv.n_item
+        AS BIGINT) AS lift_ppm
+    FROM pairs
+    JOIN deg du ON du.l_partkey = u
+    JOIN deg dv ON dv.l_partkey = v
+    CROSS JOIN n
+    ORDER BY lift_ppm DESC, u, v
+    LIMIT 500
+"""
+
+
+@_q("basket_association_lift", _LIFT_SQL)
+def basket_association_lift(spark: SparkSession, sf: str) -> DataFrame:
+    """Market-basket association lift for co-purchased part pairs
+    with support >= 2 co-orders: lift = P(u,v) / (P(u)·P(v)) in
+    integer ppm, evaluated with a DEFINED two-step floor —
+    ``(n_uv · 1e6 div n_u) · N div n_v`` — so the value is exact and
+    overflow-free at any scale (each intermediate stays under
+    n_uv·1e6 <= 1.5e14; a single-expression cross-multiply would
+    overflow BIGINT at x1000 order counts).  Top 500 by (lift, u, v)
+    — a deterministic total order.
+
+    Scale shape: pair generation is the basket pattern
+    (_copurchase_pairs — one collect_set groupBy, no self-join); the
+    per-item support frame keys on part (broadcast at dim scale) and
+    the corpus total is a 1-row broadcast."""
+    from ..operators.pairs import maybe_prefilter_min2, unfold_sorted_pairs
+
+    li = t(spark, sf, "lineitem")
+    # r13 shared exchange: the support frame (distinct pairs) and the
+    # basket frame (collect_set per order) each shuffled the full
+    # lineitem projection separately — hash(ok, pk) and hash(ok).  One
+    # explicit repartition on l_orderkey satisfies BOTH downstream
+    # clusterings (HashPartitioning([ok]) ⊆ ClusteredDistribution for
+    # the (ok, pk) distinct and the ok groupBy), so ReuseExchange
+    # runs the fact shuffle once.  sf0.1: 1.44 → 1.25 s same-window,
+    # result-equal; at scale it halves the fact bytes shuffled.
+    ex = li.select("l_orderkey", "l_partkey").repartition("l_orderkey")
+    dli = ex.distinct()
+    n = dli.agg(
+        F.countDistinct("l_orderkey").cast("bigint").alias("n_orders")
+    )
+    deg = dli.groupBy("l_partkey").agg(
+        F.count("*").cast("bigint").alias("n_item")
+    )
+    baskets = (
+        ex.groupBy("l_orderkey")
+        .agg(F.expr("sort_array(collect_set(l_partkey))").alias("parts"))
+        .where(F.expr("size(parts) >= 2"))
+    )
+    # r14: the (u, v) exchange is the query's dominant scale cost
+    # (3.6 GiB at x100) and 99.7% of distinct pairs are singletons the
+    # HAVING discards post-exchange; above the size gate a hash-count
+    # + broadcast-semi pre-filter drops them BEFORE the exchange
+    # (guide §8 / §2.3; x100 interleaved A/B 58.5/26.5 → 35.7/20.7 s,
+    # result-equal).  The exact
+    # ``n_uv >= 2`` below stays: it is what makes the filter lossless.
+    pairs = (
+        maybe_prefilter_min2(unfold_sorted_pairs(baskets, "parts"), li)
+        .groupBy("u", "v")
+        .agg(F.count("*").cast("bigint").alias("n_uv"))
+        .where("n_uv >= 2")
+    )
+    du = deg.select(F.col("l_partkey").alias("u"), F.col("n_item").alias("n_u"))
+    dv = deg.select(F.col("l_partkey").alias("v"), F.col("n_item").alias("n_v"))
+    return (
+        pairs.join(du, "u")
+        .join(dv, "v")
+        .crossJoin(F.broadcast(n))
+        .select(
+            "u", "v", "n_uv", "n_u", "n_v",
+            F.expr(
+                "CAST((n_uv * 1000000 div n_u) * n_orders div n_v"
+                " AS BIGINT)"
+            ).alias("lift_ppm"),
+        )
+        .orderBy(F.desc("lift_ppm"), "u", "v")
+        .limit(500)
+    )
+
+
+# ---------------------------------------------- shipping latency
+_SHIPLAT_SQL = """
+    WITH j AS (
+      SELECT o.o_orderpriority,
+        least(date_diff('day', CAST(o.o_orderdate AS DATE),
+          CAST(l.l_shipdate AS DATE)) // 7, 8) AS wk
+      FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
+      WHERE l.l_shipdate IS NOT NULL AND o.o_orderdate IS NOT NULL
+    ), per AS (
+      SELECT o_orderpriority, CAST(wk AS BIGINT) AS week_bucket,
+        CAST(count(*) AS BIGINT) AS n
+      FROM j GROUP BY o_orderpriority, wk
+    ), tot AS (
+      SELECT o_orderpriority, CAST(sum(n) AS BIGINT) AS tot
+      FROM per GROUP BY o_orderpriority
+    )
+    SELECT p.o_orderpriority, p.week_bucket, p.n,
+      CAST(p.n * 1000000 // t.tot AS BIGINT) AS share_ppm
+    FROM per p JOIN tot t USING (o_orderpriority)
+    ORDER BY o_orderpriority, week_bucket
+"""
+
+
+@_q("orders_ship_latency", _SHIPLAT_SQL)
+def orders_ship_latency(spark: SparkSession, sf: str) -> DataFrame:
+    """Order-to-ship latency distribution: integer weeks between
+    order date and each line's ship date, capped into an 8+ bucket,
+    per order priority, with the within-priority share in exact ppm
+    — the fulfilment-SLA histogram.  datediff is calendar-exact in
+    both engines (DATE-truncated operands).
+
+    Scale shape: the fact-to-fact join rides the orderkey clustering
+    (exchange-free under the bucketed layout); buckets collapse
+    map-side to ≤|priorities|·9 rows and the share join is a
+    broadcast."""
+    li = t(spark, sf, "lineitem").where("l_shipdate IS NOT NULL").select(
+        "l_orderkey", "l_shipdate"
+    )
+    od = t(spark, sf, "orders").where("o_orderdate IS NOT NULL").select(
+        "o_orderkey", "o_orderdate", "o_orderpriority"
+    )
+    j = li.join(od, li.l_orderkey == od.o_orderkey).select(
+        "o_orderpriority",
+        F.expr(
+            "least(datediff(CAST(l_shipdate AS DATE),"
+            " CAST(o_orderdate AS DATE)) div 7, 8)"
+        ).alias("week_bucket"),
+    )
+    per = j.groupBy("o_orderpriority", "week_bucket").agg(
+        F.count("*").cast("bigint").alias("n")
+    )
+    tot = per.groupBy("o_orderpriority").agg(
+        F.sum("n").cast("bigint").alias("tot")
+    )
+    return (
+        per.join(F.broadcast(tot), "o_orderpriority")
+        .select(
+            "o_orderpriority",
+            F.col("week_bucket").cast("bigint"),
+            "n",
+            F.expr("CAST(n * 1000000 div tot AS BIGINT)").alias("share_ppm"),
+        )
+        .orderBy("o_orderpriority", "week_bucket")
+    )
+
+
+# --------------------------------------------- repeat-purchase curve
+_REPEAT_SQL = """
+    WITH rk AS (
+      SELECT o_custkey,
+        row_number() OVER (PARTITION BY o_custkey
+                           ORDER BY o_orderdate, o_orderkey) AS rk
+      FROM orders
+    ), per AS (
+      SELECT CAST(rk AS BIGINT) AS order_rank,
+        CAST(count(*) AS BIGINT) AS n_customers
+      FROM rk WHERE rk <= 20 GROUP BY rk
+    ), tot AS (
+      SELECT CAST(max(n_customers) AS BIGINT) AS n_first FROM per
+    )
+    SELECT order_rank, n_customers,
+      CAST(n_customers * 1000000 // t.n_first AS BIGINT) AS reach_ppm
+    FROM per CROSS JOIN tot t
+    ORDER BY order_rank
+"""
+
+
+@_q("orders_repeat_curve", _REPEAT_SQL)
+def orders_repeat_curve(spark: SparkSession, sf: str) -> DataFrame:
+    """Repeat-purchase reach curve: how many customers place a 1st,
+    2nd, ... Nth order (curve reported through rank 20), with reach
+    as an exact ppm of first-order customers — the order-count twin of the
+    time-based cohort retention op (events_cohort_retention): this
+    one answers "do buyers come back", not "when".
+
+    Scale shape: one customer-keyed row_number window over orders
+    (single exchange on o_custkey), a ≤20-row rollup, and a 1-row
+    broadcast for the denominator."""
+    rk = t(spark, sf, "orders").select(
+        F.row_number()
+        .over(
+            Window.partitionBy("o_custkey").orderBy(
+                "o_orderdate", "o_orderkey"
+            )
+        )
+        .alias("rk")
+    )
+    per = (
+        rk.where("rk <= 20")
+        .groupBy(F.expr("CAST(rk AS BIGINT)").alias("order_rank"))
+        .agg(F.count("*").cast("bigint").alias("n_customers"))
+    )
+    tot = per.agg(F.max("n_customers").cast("bigint").alias("n_first"))
+    return (
+        per.crossJoin(F.broadcast(tot))
+        .select(
+            "order_rank",
+            "n_customers",
+            F.expr(
+                "CAST(n_customers * 1000000 div n_first AS BIGINT)"
+            ).alias("reach_ppm"),
+        )
+        .orderBy("order_rank")
+    )
+
+
+# --------------------------------------- monthly seasonality deltas
+_MOM_SQL = """
+    WITH m AS (
+      SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS month_start,
+        CAST(count(*) AS BIGINT) AS n_orders,
+        CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+          AS rev_c
+      FROM orders WHERE o_orderdate IS NOT NULL
+      GROUP BY month_start
+    ), d AS (
+      SELECT month_start, n_orders, rev_c, rev_c // 100000 AS rev_k,
+        lag(rev_c // 100000, 1) OVER w AS prev_m,
+        lag(rev_c // 100000, 12) OVER w AS prev_y
+      FROM m WINDOW w AS (ORDER BY month_start)
+    )
+    SELECT month_start, n_orders, rev_c,
+      CASE WHEN prev_m > 0
+        THEN CAST((rev_k - prev_m) * 1000000 // prev_m AS BIGINT) END
+        AS mom_ppm,
+      CASE WHEN prev_y > 0
+        THEN CAST((rev_k - prev_y) * 1000000 // prev_y AS BIGINT) END
+        AS yoy_ppm
+    FROM d ORDER BY month_start
+"""
+
+
+@_q("orders_seasonality_mom", _MOM_SQL)
+def orders_seasonality_mom(spark: SparkSession, sf: str) -> DataFrame:
+    """Monthly revenue in exact cents with month-over-month and
+    year-over-year deltas in integer ppm (lag 1 / lag 12 over the
+    months actually present; NULL until the base exists) — the
+    finance-calendar twin of events_forecast_snaive.  Deltas are
+    evaluated on the k$-scaled series (rev_c div 100000, the
+    window_bollinger_bands convention): monthly CENTS at x1000 reach
+    ~3·10¹³ and a cents·10⁶ cross-multiply would overflow BIGINT
+    (ANSI mode catches exactly this); k$ keeps the ppm exact to the
+    documented unit.
+
+    Scale shape: one ≤|months|-row rollup over the orders scan, then
+    lags over that tiny series (documented SinglePartition bound —
+    ~84 calendar months even at x1000)."""
+    m = (
+        t(spark, sf, "orders")
+        .where("o_orderdate IS NOT NULL")
+        .groupBy(
+            F.to_date(F.date_trunc("month", "o_orderdate")).alias(
+                "month_start"
+            )
+        )
+        .agg(
+            F.count("*").cast("bigint").alias("n_orders"),
+            F.sum(F.expr(_HA.format(x="o_totalprice", m="100")))
+            .cast("bigint")
+            .alias("rev_c"),
+        )
+    )
+    w = Window.orderBy("month_start")
+    return (
+        m.select(
+            "*",
+            F.expr("rev_c div 100000").alias("rev_k"),
+            F.lag(F.expr("rev_c div 100000"), 1).over(w).alias("prev_m"),
+            F.lag(F.expr("rev_c div 100000"), 12).over(w).alias("prev_y"),
+        )
+        .select(
+            "month_start",
+            "n_orders",
+            "rev_c",
+            F.expr(
+                "CASE WHEN prev_m > 0 THEN CAST((rev_k - prev_m) * 1000000"
+                " div prev_m AS BIGINT) END"
+            ).alias("mom_ppm"),
+            F.expr(
+                "CASE WHEN prev_y > 0 THEN CAST((rev_k - prev_y) * 1000000"
+                " div prev_y AS BIGINT) END"
+            ).alias("yoy_ppm"),
+        )
+        .orderBy("month_start")
+    )
+
+
+# ------------------------------------------- count-min sketch (exact pin)
+
+# depth-4 universal-hash rows over the BIGINT key: row 0 is the
+# IDENTITY row (a=1, b=0) whose universal-hash modulus P equals its
+# own width W (prime, ~1e15), so its bucket is exactly key % W —
+# collision-free for every key below W, i.e. up to part-key domains
+# of 1e15 (far past the 100 TB regime), and the CMS min equals the
+# true count — the provably-exact-at-a-point configuration (CMS
+# estimates are always >= truth; one exact row pins the min to
+# truth).  Rows 1-3 keep the classic P = 2^31-1 universal hash with
+# small prime widths and DO collide — the plumbing the exact row
+# certifies is the same plumbing production runs with all-small
+# widths.  All hashing is explicit integer arithmetic, portable to
+# the SQL twin.
+_CMS_W0 = 1_000_003_565_842_103  # identity row: prime > key domain
+_CMS_P = 2_147_483_647  # 2^31 - 1 (rows 1-3 only)
+_CMS_ROWS = [  # (a, b, p, width); row 0 has p == width => bucket = key % W
+    (1, 0, _CMS_W0, _CMS_W0),
+    (1_103_515_245, 12_345, _CMS_P, 8_191),
+    (214_013, 2_531_011, _CMS_P, 16_381),
+    (69_069, 362_437, _CMS_P, 32_749),
+]
+# the key is reduced mod P BEFORE the multiply: the universal-hash
+# guarantee needs key < P anyway, values are identical for every
+# key below P, and a * (key % P) stays under 2^62 where the raw
+# a * key overflows BIGINT once stride-replicated keys pass 2^33
+# (the x1000 ANSI canary caught exactly this, r8)
+_CMS_HASH = "((({a} * (l_partkey % {p}) + {b}) % {p}) % {w})"
+
+
+def _cms_bucket_sql(r: int) -> str:
+    a, b, p, w = _CMS_ROWS[r]
+    return _CMS_HASH.format(a=a, b=b, p=p, w=w)
+
+
+_CMS_SQL = f"""
+    WITH buckets AS (
+      {" UNION ALL ".join(
+          f"SELECT {r} AS row_id, {_cms_bucket_sql(r)} AS bucket,"
+          f" l_partkey FROM lineitem"
+          for r in range(len(_CMS_ROWS)))}
+    ), counters AS (
+      SELECT row_id, bucket, CAST(count(*) AS BIGINT) AS c
+      FROM buckets GROUP BY row_id, bucket
+    ), keys AS (
+      SELECT DISTINCT l_partkey FROM lineitem
+    ), probes AS (
+      SELECT k.l_partkey, b.row_id, {_CMS_HASH.format(
+          a="CASE b.row_id WHEN 0 THEN 1 WHEN 1 THEN 1103515245"
+            " WHEN 2 THEN 214013 ELSE 69069 END",
+          b="CASE b.row_id WHEN 0 THEN 0 WHEN 1 THEN 12345"
+            " WHEN 2 THEN 2531011 ELSE 362437 END",
+          p=f"CASE b.row_id WHEN 0 THEN {_CMS_W0} ELSE {_CMS_P} END",
+          w=f"CASE b.row_id WHEN 0 THEN {_CMS_W0} WHEN 1 THEN 8191"
+            " WHEN 2 THEN 16381 ELSE 32749 END")} AS bucket
+      FROM keys k CROSS JOIN (SELECT DISTINCT row_id FROM counters) b
+    ), est AS (
+      SELECT p.l_partkey, CAST(min(c.c) AS BIGINT) AS est_count
+      FROM probes p JOIN counters c
+        ON c.row_id = p.row_id AND c.bucket = p.bucket
+      GROUP BY p.l_partkey
+    )
+    SELECT l_partkey, est_count
+    FROM est ORDER BY est_count DESC, l_partkey LIMIT 20
+"""
+
+
+@_q("agg_count_min_exact", _CMS_SQL)
+def agg_count_min_exact(spark: SparkSession, sf: str) -> DataFrame:
+    """Count-Min-Sketch heavy hitters over lineitem part keys, in the
+    provably-exact configuration: depth-4 universal-hash counter
+    rows where row 0 is the identity row (collision-free W) — CMS
+    estimates are always >= truth and the exact row participates in
+    the min, so every estimate equals the true count and the DuckDB
+    twin can be the plain GROUP BY (the sim_ivf_exact /
+    agg_approx_quantiles exact-at-a-point discipline).  Rows 1-3 use
+    real small widths (8k/16k/32k) and genuinely collide — the
+    mergeable-counter plumbing being certified is exactly what a
+    production all-small-width sketch runs.  Top-20 by (est, key), a
+    deterministic total order.
+
+    Scale shape: the sketch build is one map-side-combinable
+    (row, bucket) count — 4 counters per input row, the classic
+    mergeable-sketch shuffle of O(d·W) not O(rows); the probe side
+    joins the |keys| frame to the counter table per row and takes a
+    4-way min.  At 100 TB only the d·W counter table moves."""
+    li = t(spark, sf, "lineitem").select("l_partkey")
+    bucket_structs = ", ".join(
+        f"named_struct('row_id', {r}, 'bucket', "
+        + _CMS_HASH.format(a=a, b=b, p=p, w=w)
+        + ")"
+        for r, (a, b, p, w) in enumerate(_CMS_ROWS)
+    )
+    counters = (
+        li.select(
+            F.explode(F.expr(f"array({bucket_structs})")).alias("rb")
+        )
+        .groupBy("rb.row_id", "rb.bucket")
+        .agg(F.count("*").cast("bigint").alias("c"))
+    )
+    keys = li.distinct()
+    probes = keys.select(
+        "l_partkey",
+        F.explode(F.expr(f"array({bucket_structs})")).alias("rb"),
+    ).select("l_partkey", "rb.row_id", "rb.bucket")
+    est = (
+        probes.join(counters, ["row_id", "bucket"])
+        .groupBy("l_partkey")
+        .agg(F.min("c").cast("bigint").alias("est_count"))
+    )
+    return est.orderBy(F.desc("est_count"), "l_partkey").limit(20)
+
+
+# ----------------------------------------------- backlog aging
+_BACKLOG_D = "2000-01-01"  # snapshot date: inside the orders span
+# at every fixture scale (dates are never stride-shifted)
+
+_BACKLOG_SQL = f"""
+    WITH ms AS (
+      SELECT l_orderkey, max(CAST(l_shipdate AS DATE)) AS mx
+      FROM lineitem GROUP BY l_orderkey
+    ), open_o AS (
+      SELECT CAST(o.o_orderdate AS DATE) AS od,
+        CAST(round(o.o_totalprice * 100) AS BIGINT) AS cents
+      FROM orders o LEFT JOIN ms ON ms.l_orderkey = o.o_orderkey
+      WHERE CAST(o.o_orderdate AS DATE) <= DATE '{_BACKLOG_D}'
+        AND (ms.mx IS NULL OR ms.mx > DATE '{_BACKLOG_D}')
+    ), per AS (
+      SELECT least(date_diff('day', od, DATE '{_BACKLOG_D}') // 30, 12)
+          AS age_bucket,
+        CAST(count(*) AS BIGINT) AS n_orders,
+        CAST(sum(cents) AS BIGINT) AS value_cents
+      FROM open_o GROUP BY age_bucket
+    ), tot AS (
+      SELECT CAST(sum(n_orders) AS BIGINT) AS t FROM per
+    )
+    SELECT CAST(age_bucket AS BIGINT) AS age_bucket, n_orders,
+      value_cents,
+      CAST(n_orders * 1000000 // t AS BIGINT) AS share_ppm
+    FROM per CROSS JOIN tot ORDER BY age_bucket
+"""
+
+
+@_q("orders_backlog_aging", _BACKLOG_SQL)
+def orders_backlog_aging(spark: SparkSession, sf: str) -> DataFrame:
+    """Open-order backlog aging at a snapshot date: orders placed on
+    or before the snapshot whose LAST line has not shipped by it
+    (or that have no lines at all), bucketed by 30-day age (capped
+    at 12 = "a year or older"), with order counts, exact order-value
+    cents and the backlog share in ppm — the fulfilment-ops twin of
+    orders_ship_latency (what is still OWED, not how fast we were).
+
+    Scale shape (EXISTS split, r9): "order still open" needs no
+    per-order max-shipdate aggregate — it is EXISTS(line with
+    shipdate > snapshot) ∪ NOT EXISTS(any line), two disjoint legs: a
+    left-semi against the shipdate-FILTERED lineitem slice (the
+    predicate reaches the parquet scan, so row-group min/max skips
+    fully-shipped history — 27% of rows survive on the fixture) and a
+    left-anti against the key-only projection for line-less orders.
+    Replacing the r8 max-agg plan, measured x1000
+    (min-of-2 warm): agg shape
+    84.1 s (its 150M-group date-max aggregate alone is 121 s cold)
+    → shj hint 52.1 → boolean-indicator agg 46.6 → **EXISTS split
+    32.0 s** — 2.6× over shipped while running LAST in the sweep
+    (the within-session degradation in HISTORY.md "Box shuffle-I/O
+    drift" biases
+    against it).  Both legs key on the orderkey — exchange-free over
+    tables co-bucketed on it (sources/layout.write_bucketed) like
+    dq_order_reconciliation; then a ≤13-row rollup with a 1-row total
+    broadcast."""
+    d = _BACKLOG_D
+    li = t(spark, sf, "lineitem")
+    o = t(spark, sf, "orders").select(
+        "o_orderkey",
+        F.expr("CAST(o_orderdate AS DATE)").alias("od"),
+        F.expr(_HA.format(x="o_totalprice", m="100")).alias("cents"),
+    ).where(f"od <= DATE'{d}'")
+    late = li.where(f"CAST(l_shipdate AS DATE) > DATE'{d}'").select(
+        F.col("l_orderkey").alias("k")
+    )
+    allk = li.select(F.col("l_orderkey").alias("k"))
+    open_o = (
+        o.join(late, o.o_orderkey == late.k, "left_semi")
+        .unionByName(o.join(allk, o.o_orderkey == allk.k, "left_anti"))
+        .select("od", "cents")
+    )
+    per = open_o.groupBy(
+        F.expr(f"least(datediff(DATE'{d}', od) div 30, 12)").alias(
+            "age_bucket"
+        )
+    ).agg(
+        F.count("*").cast("bigint").alias("n_orders"),
+        F.sum("cents").cast("bigint").alias("value_cents"),
+    )
+    tot = per.agg(F.sum("n_orders").cast("bigint").alias("t"))
+    return (
+        per.crossJoin(F.broadcast(tot))
+        .select(
+            F.col("age_bucket").cast("bigint"),
+            "n_orders",
+            "value_cents",
+            F.expr("CAST(n_orders * 1000000 div t AS BIGINT)").alias(
+                "share_ppm"
+            ),
+        )
+        .orderBy("age_bucket")
+    )
+
+
+# ----------------------------------------------- Pareto ABC classes
+
+_ABC_SQL = """
+    WITH pr AS (
+      SELECT l_partkey,
+        CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT))
+          AS BIGINT) AS rev_c
+      FROM lineitem GROUP BY l_partkey
+    ), r AS (
+      SELECT l_partkey, rev_c,
+        sum(rev_c) OVER (ORDER BY rev_c DESC, l_partkey
+          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+      FROM pr
+    ), tot AS (
+      SELECT CAST(sum(rev_c) AS BIGINT) AS t FROM pr
+    ), cls AS (
+      SELECT CASE
+          WHEN (cum // 100000) * 1000000 // (t // 100000) <= 800000
+            THEN 'A'
+          WHEN (cum // 100000) * 1000000 // (t // 100000) <= 950000
+            THEN 'B'
+          ELSE 'C' END AS abc_class,
+        rev_c
+      FROM r CROSS JOIN tot
+    )
+    SELECT abc_class, CAST(count(*) AS BIGINT) AS n_parts,
+      CAST(sum(rev_c) AS BIGINT) AS revenue_cents
+    FROM cls GROUP BY abc_class ORDER BY abc_class
+"""
+
+
+@_q("orders_pareto_abc", _ABC_SQL)
+def orders_pareto_abc(spark: SparkSession, sf: str) -> DataFrame:
+    """ABC inventory classification of parts by revenue: parts ranked
+    by exact revenue cents, class A while the inclusive cumulative
+    share ≤ 80%, B to 95%, C after — the classic Pareto cut every
+    supply/assortment review starts from.  The share test runs on
+    k$-scaled integers ((cum div 1e5)·10⁶ div (total div 1e5)) so the
+    cross-multiply stays inside BIGINT at x1000 (the
+    orders_seasonality_mom ANSI-canary lesson) and both engines
+    compare identical integers.
+
+    Scale shape: one part-keyed revenue aggregate, then the global
+    cumulative sum runs PARALLEL via operators.ranking.
+    global_running_sum (range partition + per-partition offsets — no
+    Exchange SinglePartition, the corpus_quality_prune_curve
+    discipline), a 1-row total broadcast, and a 3-row class rollup."""
+    from ..operators.ranking import global_running_sum
+
+    pr = (
+        t(spark, sf, "lineitem")
+        .groupBy("l_partkey")
+        .agg(
+            F.sum(F.expr(_HA.format(x="l_extendedprice", m="100")))
+            .cast("bigint")
+            .alias("rev_c")
+        )
+        .withColumn("neg_rev", -F.col("rev_c"))
+    )
+    r = global_running_sum(pr, ["neg_rev", "l_partkey"], "rev_c", "cum")
+    tot = pr.agg(F.sum("rev_c").cast("bigint").alias("t"))
+    cls = r.crossJoin(F.broadcast(tot)).select(
+        F.expr(
+            "CASE WHEN (cum div 100000) * 1000000 div (t div 100000)"
+            " <= 800000 THEN 'A'"
+            " WHEN (cum div 100000) * 1000000 div (t div 100000)"
+            " <= 950000 THEN 'B' ELSE 'C' END"
+        ).alias("abc_class"),
+        "rev_c",
+    )
+    return (
+        cls.groupBy("abc_class")
+        .agg(
+            F.count("*").cast("bigint").alias("n_parts"),
+            F.sum("rev_c").cast("bigint").alias("revenue_cents"),
+        )
+        .orderBy("abc_class")
     )

@@ -1,6 +1,6 @@
-"""TPC-H completion pack: the 12 query shapes not yet in the catalog
-(q2, q4, q8, q9, q11, q12, q15, q16, q17, q19, q20, q21), adapted to
-the fixture schema where the official columns are absent:
+"""TPC-H pack: the ``sql_tpch_*`` queries (q2, q4, q6-q22) — the
+official shapes run as SQL text, adapted to the fixture schema where
+the official columns are absent:
 
 - there is no ``partsupp`` table -> the distinct (l_partkey, l_suppkey)
   pairs of ``lineitem`` serve as the part-supplier bridge (q2/q11/q16/
@@ -18,20 +18,22 @@ scalar subqueries (q2/q17), EXISTS/NOT EXISTS chains (q4/q21), CTE +
 self-aggregation (q11/q15), OR-of-conjunction pushdown (q19),
 NOT IN (q16), nested semi-joins (q20), eight-table join tree (q8/q9)
 — which is what the SQL-interface tier is certifying.  With q1/q3/q5
-(relational.py) and q6/q7/q10/q13/q14/q18/q22 (analytics_ops/
-round4_ops) this completes all 22 TPC-H shapes.
+(DataFrame-API twins in relational.py) this covers all 22 TPC-H
+shapes.
 
 Oracle policy: both engines run the SAME SQL text (modulo view
 prefix); money sums ride the scaled-BIGINT idiom so totals are
 order-independent and engine-identical; every LIMIT has a total
-ORDER BY.  One escape hatch: ``_q(..., spark_sql=...)`` substitutes a
-restructured statement on the Spark side ONLY (the oracle always runs
-the original text), used when a Spark plan shape needs restructuring
-(q21's distinct-count rewrite); any such substitute carries the
-obligation of value-hash equality against the original at every
-checked SF.  Reference parity note: the reference delegates ALL SQL to
-stock Spark (spark-2.4/…/Bi5DataSourceReader.scala exposes only the
-scan), so this tier is certified against DuckDB, not reference code.
+ORDER BY.  q8 (a hand-shaped DataFrame join tree) and q14 (its LIKE
+pattern escapes ``%``) register with ``query`` directly.  One escape
+hatch: ``_q(..., spark_sql=...)`` substitutes a restructured
+statement on the Spark side ONLY (the oracle always runs the original
+text), used when a Spark plan shape needs restructuring (q21's
+distinct-count rewrite); any such substitute carries the obligation
+of value-hash equality against the original at every checked SF.
+Reference parity note: the reference delegates ALL SQL to stock
+Spark (spark-2.4/…/Bi5DataSourceReader.scala exposes only the scan),
+so this tier is certified against DuckDB, not reference code.
 """
 
 from __future__ import annotations
@@ -608,3 +610,215 @@ sql_tpch_q21 = _q(
     (_Q21_SPARK_SQL above).  Region-filtered (a single nation can be
     empty at sf0.001)."""
 )
+
+
+# ---------------------------------------------------- SQL-API surface
+_Q7_SQL = """
+    SELECT supp_nation, cust_nation, l_year,
+           (CAST(SUM(CAST(round(volume * 1000000) AS BIGINT)) AS DOUBLE)
+            / 1000000.0) AS revenue
+    FROM (
+      SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
+             CAST(year(l.l_shipdate) AS BIGINT) AS l_year,
+             l.l_extendedprice * (1 - l.l_discount) AS volume
+      FROM {p}supplier s
+      JOIN {p}lineitem l ON s.s_suppkey = l.l_suppkey
+      JOIN {p}orders o ON o.o_orderkey = l.l_orderkey
+      JOIN {p}customer c ON c.c_custkey = o.o_custkey
+      JOIN {p}nation n1 ON n1.n_nationkey = s.s_nationkey
+      JOIN {p}nation n2 ON n2.n_nationkey = c.c_nationkey
+      WHERE ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
+          OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
+        AND l.l_shipdate BETWEEN TIMESTAMP '1995-01-01'
+                             AND TIMESTAMP '1996-12-31'
+    ) shipping
+    GROUP BY supp_nation, cust_nation, l_year
+"""
+
+
+sql_tpch_q7 = _q(
+    "sql_tpch_q7", _Q7_SQL, ("supplier", "lineitem", "orders", "customer", "nation")
+)(
+    """TPC-H q7 (volume shipping between two nations) run through the
+    *SQL interface*: fixture tables registered as temp views, the
+    query submitted verbatim via spark.sql — same Catalyst plan
+    space as the DataFrame API (broadcast dims, partial+final agg),
+    certifying the engine's SQL entry point against the identical
+    DuckDB text.  Money sums use the scaled-long idiom (exact,
+    order-independent)."""
+)
+
+
+# ------------------------------------------------- TPC-H q13 shape
+_Q13_SQL = """
+    SELECT c_count, CAST(count(*) AS BIGINT) AS custdist
+    FROM (
+      SELECT c.c_custkey, CAST(count(o.o_orderkey) AS BIGINT) AS c_count
+      FROM {p}customer c
+      LEFT OUTER JOIN {p}orders o
+        ON c.c_custkey = o.o_custkey
+       AND o.o_orderpriority <> '1-URGENT'
+      GROUP BY c.c_custkey
+    ) c_orders
+    GROUP BY c_count
+"""
+
+
+sql_tpch_q13 = _q("sql_tpch_q13", _Q13_SQL, ("customer", "orders"))(
+    """TPC-H q13 (customer order-count distribution) through the SQL
+    interface: outer join with an ON-clause filter on the null-
+    producing side — the decorrelation-free outer-aggregate shape that
+    trips engines which push the filter below the join.  Two hash
+    aggregations; the second runs over |customers| rows only."""
+)
+
+
+# ------------------------------------------------- TPC-H q18 shape
+_Q18_SQL = """
+    SELECT c.c_name, c.c_custkey, o.o_orderkey, o.o_orderdate,
+           o.o_totalprice,
+           CAST(sum(CAST(l.l_quantity AS BIGINT)) AS BIGINT) AS sum_qty
+    FROM {p}customer c
+    JOIN {p}orders o ON c.c_custkey = o.o_custkey
+    JOIN {p}lineitem l ON o.o_orderkey = l.l_orderkey
+    WHERE o.o_orderkey IN (
+      SELECT l_orderkey FROM {p}lineitem
+      GROUP BY l_orderkey
+      HAVING sum(CAST(l_quantity AS BIGINT)) > 120
+    )
+    GROUP BY c.c_name, c.c_custkey, o.o_orderkey, o.o_orderdate,
+             o.o_totalprice
+    ORDER BY o.o_totalprice DESC, o.o_orderkey
+    LIMIT 100
+"""
+
+
+sql_tpch_q18 = _q(
+    "sql_tpch_q18", _Q18_SQL, ("customer", "orders", "lineitem")
+)(
+    """TPC-H q18 (large-volume customers) via spark.sql: an IN
+    subquery over a grouped HAVING — Catalyst rewrites it to a
+    left-semi join against the aggregated lineitem, so the big table
+    is scanned twice but never nested-looped.  Quantities are
+    integral in the fixtures; summing them as BIGINT keeps the HAVING
+    threshold and the output sums exact on both engines."""
+)
+
+
+# ------------------------------------------------- TPC-H q22 shape
+
+
+_Q22_SQL = """
+    WITH avg_bal AS (
+      SELECT CAST(sum(CAST(round(c_acctbal * 100) AS BIGINT)) AS DOUBLE)
+             / count(*) AS a
+      FROM {p}customer WHERE c_acctbal > 0.0
+    )
+    SELECT c.c_mktsegment,
+           CAST(count(*) AS BIGINT) AS numcust,
+           CAST(sum(CAST(round(c.c_acctbal * 100) AS BIGINT)) AS DOUBLE)
+           / 100.0 AS totacctbal
+    FROM {p}customer c CROSS JOIN avg_bal
+    WHERE CAST(round(c.c_acctbal * 100) AS BIGINT) > avg_bal.a
+      AND NOT EXISTS (
+        SELECT 1 FROM {p}orders o
+        WHERE o.o_custkey = c.c_custkey
+          AND o.o_orderpriority = '1-URGENT'
+      )
+    GROUP BY c.c_mktsegment
+"""
+
+
+sql_tpch_q22 = _q("sql_tpch_q22", _Q22_SQL, ("customer", "orders"))(
+    """TPC-H q22 shape (wealthy customers with no urgent orders,
+    grouped by market segment) via spark.sql: an uncorrelated scalar
+    subquery
+    (the global average balance, broadcast as a literal-like one-row
+    join) AND a correlated NOT EXISTS (anti join) in one query.
+    Balances are compared and summed as exact cents (scaled BIGINT)
+    so the average threshold and the totals are order-independent."""
+)
+
+
+# ------------------------------------------------- TPC-H q6 shape
+_Q6_SQL = """
+    SELECT (CAST(sum(CAST(round(l_extendedprice * l_discount * 1000000)
+                          AS BIGINT)) AS DOUBLE) / 1000000.0) AS revenue,
+           CAST(count(*) AS BIGINT) AS n_rows
+    FROM {p}lineitem
+    WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
+      AND l_shipdate <  TIMESTAMP '1997-01-01 00:00:00'
+      AND l_discount BETWEEN 0.05 AND 0.07
+      AND l_quantity < 24.0
+"""
+
+
+sql_tpch_q6 = _q("sql_tpch_q6", _Q6_SQL, ("lineitem",))(
+    """TPC-H q6 (forecasting revenue change) via spark.sql — the
+    purest pushdown probe in the suite: three range predicates and a
+    single global aggregate, no join.  All three filters must reach
+    the parquet scan (PushedFilters) and the sum runs partial+final;
+    the scaled-long idiom keeps the money total exact."""
+)
+
+
+# ------------------------------------------------ TPC-H q10 shape
+
+
+_Q10_SQL = """
+    SELECT c.c_custkey, c.c_name, n.n_name, c.c_acctbal,
+           (CAST(sum(CAST(round(l.l_extendedprice * (1 - l.l_discount)
+                                * 1000000) AS BIGINT)) AS DOUBLE)
+            / 1000000.0) AS revenue
+    FROM {p}customer c
+    JOIN {p}orders o ON c.c_custkey = o.o_custkey
+    JOIN {p}lineitem l ON l.l_orderkey = o.o_orderkey
+    JOIN {p}nation n ON c.c_nationkey = n.n_nationkey
+    WHERE o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
+      AND o.o_orderdate <  TIMESTAMP '1996-07-01 00:00:00'
+      AND l.l_returnflag = 'R'
+    GROUP BY c.c_custkey, c.c_name, n.n_name, c.c_acctbal
+    ORDER BY revenue DESC, c.c_custkey
+    LIMIT 20
+"""
+
+
+sql_tpch_q10 = _q(
+    "sql_tpch_q10", _Q10_SQL, ("customer", "orders", "lineitem", "nation")
+)(
+    """TPC-H q10 (returned-item reporting: top-20 customers by lost
+    revenue) via spark.sql: a three-table fact join with a broadcast
+    dim, selective date + returnflag filters pushed to both fact
+    scans, grouped aggregation over customer attributes, global
+    top-k via TakeOrderedAndProject — the canonical reporting query
+    shape."""
+)
+
+
+# ------------------------------------------------ TPC-H q14 shape
+
+
+_Q14_SQL = """
+    SELECT (100.0 * CAST(sum(CASE WHEN p.p_type LIKE 'PROMO%%'
+             THEN CAST(round(l.l_extendedprice * (1 - l.l_discount)
+                             * 1000000) AS BIGINT) ELSE 0 END) AS DOUBLE)
+            / CAST(sum(CAST(round(l.l_extendedprice * (1 - l.l_discount)
+                                  * 1000000) AS BIGINT)) AS DOUBLE))
+           AS promo_revenue_pct
+    FROM {p}lineitem l
+    JOIN {p}part p ON l.l_partkey = p.p_partkey
+    WHERE l.l_shipdate >= TIMESTAMP '1996-03-01 00:00:00'
+      AND l.l_shipdate <  TIMESTAMP '1996-04-01 00:00:00'
+"""
+
+
+@query("sql_tpch_q14", _Q14_SQL.format(p="").replace("%%", "%"))
+def sql_tpch_q14(spark: SparkSession, sf: str) -> DataFrame:
+    """TPC-H q14 (promotion effect) via spark.sql: conditional
+    aggregation over a fact⋈dim join — part broadcasts, the month
+    filter prunes lineitem at the scan, and the CASE-weighted ratio
+    is computed from two exact scaled-long sums (the division is the
+    only FP step, identical on both engines)."""
+    for tb in ("lineitem", "part"):
+        t(spark, sf, tb).createOrReplaceTempView(f"q14_{tb}")
+    return spark.sql(spark_fast_sql(_Q14_SQL).format(p="q14_").replace("%%", "%"))

@@ -93,7 +93,7 @@ def stream_corpus_build_writer(
     threshold: float = 0.5,
     checkpoint_dir: str | None = None,
 ):
-    """The STREAMING twin of ``plans.round15_ops.corpus_build_snapshot``:
+    """The STREAMING twin of ``plans.curation_ops.corpus_build_snapshot``:
     each micro-batch runs the full corpus-build stage chain —
 
     1. quality filter (``quality_score_cols`` ≥ ``quality_threshold``,

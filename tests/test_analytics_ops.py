@@ -160,9 +160,7 @@ class TestCosineRadius:
 
 class TestRepetitionStats:
     def _run(self, spark, texts):
-        from spark_bi5_datasource_spark.plans.analytics_ops import (
-            text_repetition_stats,
-        )
+        from spark_bi5_datasource_spark.plans.text_ops import text_repetition_stats
         import os
         import tempfile
 
@@ -203,9 +201,7 @@ class TestRepetitionStats:
 
 class TestActiveUsers:
     def test_wau_is_trailing_seven_days(self, spark):
-        from spark_bi5_datasource_spark.plans.analytics_ops import (
-            events_active_users,
-        )
+        from spark_bi5_datasource_spark.plans.events_ops import events_active_users
         import os
         import tempfile
 

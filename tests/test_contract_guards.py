@@ -50,7 +50,7 @@ class TestContaminationSourceCapGuard:
 
 
 class TestBandIndexMegabucketGuard:
-    """plans/round13_ops.dedup_band_index_merge ships max_bucket=200
+    """plans/dedup_ops.dedup_band_index_merge ships max_bucket=200
     while its oracle is the exact uncapped twin; the pytest gate
     (test_operators.test_merge_entry_cap_nonbinding_at_oracle_scales)
     fails loudly when a fixture saturates a bucket.  This fixture IS

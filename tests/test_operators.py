@@ -622,7 +622,7 @@ class TestCopurchaseKernel:
         the singleton/empty degenerate baskets."""
         import random
 
-        from spark_bi5_datasource_spark.plans.round4_ops import _copurchase_pairs
+        from spark_bi5_datasource_spark.plans.similarity_ops import _copurchase_pairs
         from tests.oracles import _copurchase_pairs_hof
 
         rng = random.Random(13)
@@ -639,7 +639,7 @@ class TestCopurchaseKernel:
         assert old.exceptAll(new).count() == 0
         assert new.where("u >= v").count() == 0
 
-    def test_prefilter_min2_lossless(self, spark):
+    def test_prefilter_min2_lossless(self, spark, monkeypatch):
         """The r14 singleton pre-filter must keep EVERY pair with
         global multiplicity >= 2 (the downstream HAVING makes the
         composition exact): counted results with the filter forced on
@@ -649,13 +649,12 @@ class TestCopurchaseKernel:
 
         from pyspark.sql import functions as F
 
+        from spark_bi5_datasource_spark.operators import pairs as pairs_mod
         from spark_bi5_datasource_spark.operators.pairs import (
-            PAIR_PREFILTER_CONF,
+            maybe_prefilter_min2,
             prefilter_min2,
         )
-        from spark_bi5_datasource_spark.plans.round4_ops import (
-            _copurchase_pairs,
-        )
+        from spark_bi5_datasource_spark.plans.similarity_ops import _copurchase_pairs
 
         rng = random.Random(29)
         rows = []
@@ -677,26 +676,20 @@ class TestCopurchaseKernel:
         assert sorted(map(tuple, base)) == sorted(map(tuple, filt))
         assert len(base) > 0  # the fixture actually exercises the band
 
-        # the conf gate: 0 forces the filter on through the public path
-        spark.conf.set(PAIR_PREFILTER_CONF, "0")
-        try:
-            from spark_bi5_datasource_spark.operators.pairs import (
-                maybe_prefilter_min2,
-            )
+        # the gate, through the public path: a known-size input at the
+        # threshold turns the filter on
+        monkeypatch.setattr(pairs_mod, "PAIR_PREFILTER_BYTES", 1)
+        gated = counted(maybe_prefilter_min2(pairs, li)).collect()
+        assert sorted(map(tuple, base)) == sorted(map(tuple, gated))
 
-            gated = counted(maybe_prefilter_min2(pairs, li)).collect()
-            assert sorted(map(tuple, base)) == sorted(map(tuple, gated))
-        finally:
-            spark.conf.unset(PAIR_PREFILTER_CONF)
-
-    def test_unknown_scan_size_skips_prefilter(self, spark, bi5_tree):
+    def test_unknown_scan_size_skips_prefilter(self, spark, bi5_tree, monkeypatch):
         """A bi5 scan has no statistics: Catalyst reports the
         defaultSizeInBytes sentinel for it, filtered or projected, so
         its size is unknown and the gate leaves the pairs alone."""
         from pyspark.sql import functions as F
 
+        from spark_bi5_datasource_spark.operators import pairs as pairs_mod
         from spark_bi5_datasource_spark.operators.pairs import (
-            PAIR_PREFILTER_CONF,
             maybe_prefilter_min2,
             scan_size_bytes,
         )
@@ -707,11 +700,10 @@ class TestCopurchaseKernel:
         pairs = spark.range(4).selectExpr("id AS u", "id + 1 AS v")
         assert scan_size_bytes(pairs) > 0
         assert maybe_prefilter_min2(pairs, ticks) is pairs
-        spark.conf.set(PAIR_PREFILTER_CONF, "0")
-        try:
-            assert maybe_prefilter_min2(pairs, ticks) is not pairs
-        finally:
-            spark.conf.unset(PAIR_PREFILTER_CONF)
+        # even a threshold every known size meets skips an unknown one
+        monkeypatch.setattr(pairs_mod, "PAIR_PREFILTER_BYTES", 1)
+        assert maybe_prefilter_min2(pairs, ticks) is pairs
+        assert maybe_prefilter_min2(pairs, pairs) is not pairs
 
     def test_winnow_unfold_kernel_parity(self, spark):
         """The generalized unfold (operators/pairs.py) must match the
@@ -902,13 +894,13 @@ class TestMultimodalKernels:
         from spark_bi5_datasource_spark.functions.multimodal import _decode_pixels
 
         head, px = self._ppm(17, 9, comment=True)
-        got, _ = _decode_pixels(head + px.tobytes())
+        got = _decode_pixels(head + px.tobytes())
         assert (got == px).all()
         bmp, px = self._bmp(13, 5)
-        got, _ = _decode_pixels(bmp)
+        got = _decode_pixels(bmp)
         assert (got == px).all()
         pgm = b"P5\n4 3\n255\n" + bytes(12)
-        assert _decode_pixels(pgm)[0].shape == (3, 4, 1)
+        assert _decode_pixels(pgm).shape == (3, 4, 1)
 
     def test_decode_image_rejects_unsupported_formats(self):
         import pytest
@@ -979,8 +971,7 @@ class TestMultimodalKernels:
         rng = np.random.default_rng(7)
         px = rng.integers(0, 256, (5, 11, 3), dtype=np.uint8)
         payload = self._png_manual(px, filters=[0, 1, 2, 3, 4])
-        got, meta = _decode_pixels(payload)
-        assert meta["fmt"] == b"\x89P"
+        got = _decode_pixels(payload)
         assert (got == px).all()
 
     def test_png_encode_decode_roundtrip_channel_counts(self):
@@ -992,7 +983,7 @@ class TestMultimodalKernels:
         rng = np.random.default_rng(11)
         for ch in (1, 2, 3, 4):  # gray / gray+A / RGB / RGBA
             px = rng.integers(0, 256, (6, 9, ch), dtype=np.uint8)
-            got, _ = _decode_pixels(_png_encode(px))
+            got = _decode_pixels(_png_encode(px))
             assert got.shape == (6, 9, ch) and (got == px).all()
 
     def test_png_palette_resolves_to_rgb(self):
@@ -1018,7 +1009,7 @@ class TestMultimodalKernels:
             + chunk(b"PLTE", pal.tobytes())
             + chunk(b"IDAT", _z.compress(raw)) + chunk(b"IEND", b"")
         )
-        got, _ = _decode_pixels(payload)
+        got = _decode_pixels(payload)
         assert got.shape == (2, 3, 3) and (got == pal[idx]).all()
 
     def test_png_unsupported_variants_raise(self):
@@ -1507,8 +1498,8 @@ class TestVideoKernels:
         got = sample_frames(avi, 3)
         assert len(got) == 4  # frames 0, 3, 6, 9
         for bmp, src in zip(got, frames[::3]):
-            px, meta = _decode_pixels(bmp)
-            assert meta["fmt"] == b"BM" and px.shape == (4, 6, 3)
+            px = _decode_pixels(bmp)
+            assert px.shape == (4, 6, 3)
         # sampled frame content round-trips exactly (body == raster)
         assert got[1][54:] == frames[3]
 
@@ -1571,7 +1562,7 @@ class TestVideoKernels:
         assert len(got) == 3 and [g[:2] for g in got] == [b"\xff\xd8"] * 3
         assert got[1] == frames[2]  # frames pass through byte-identical
         for i, g in zip((0, 2, 4), got):
-            px, _ = _decode_pixels(g)
+            px = _decode_pixels(g)
             assert px.shape == (8, 16, 3)
             assert abs(int(np.median(px)) - (40 + 20 * i)) <= 1
 
@@ -2091,8 +2082,8 @@ class TestJpegCodec:
         from spark_bi5_datasource_spark.functions.multimodal import _decode_pixels
         from tests.media_encoders import jpeg_encode
 
-        px, meta = _decode_pixels(jpeg_encode(self._gradient(), quality=95))
-        assert px.shape == (24, 40, 3) and meta["fmt"] == b"\xff\xd8"
+        px = _decode_pixels(jpeg_encode(self._gradient(), quality=95))
+        assert px.shape == (24, 40, 3)
 
     def test_canonical_huffman_matches_spec_assignment(self):
         # the standard luminance-DC table's well-known code assignment
@@ -2240,8 +2231,8 @@ class TestGifCodec:
         from tests.media_encoders import gif_encode
 
         px = self._palette_image(7, 10, 20)
-        got, meta = _decode_pixels(gif_encode(px))
-        assert meta["fmt"] == b"GI" and (got == px).all()
+        got = _decode_pixels(gif_encode(px))
+        assert (got == px).all()
 
     def test_unpalettizable_rejected_truncated_tolerated(self):
         import numpy as np
@@ -2681,7 +2672,7 @@ class TestTableDiff:
 
 class TestDeltaDedup:
     """minhash_delta_dedup: increment-vs-corpus near-dedup that never
-    pairs the corpus with itself (plans/round12_ops.py twin)."""
+    pairs the corpus with itself (plans/dedup_ops.py twin)."""
 
     @pytest.fixture()
     def crawl(self, spark):
@@ -2747,7 +2738,7 @@ class TestAnnRecallMonitor:
         """IVF recall must not DECREASE with wider probes (a superset
         of cells can only add candidates), every ppm is in [0, 1e6],
         and all six (tier, param) rows exist even at zero recall."""
-        from spark_bi5_datasource_spark.plans.round12_ops import (
+        from spark_bi5_datasource_spark.plans.similarity_ops import (
             sim_ann_recall_monitor,
         )
 
@@ -2770,7 +2761,7 @@ class TestStickinessAndEncoding:
         days."""
         from tests.conftest import TESTDATA_SF
 
-        from spark_bi5_datasource_spark.plans.round12_ops import (
+        from spark_bi5_datasource_spark.plans.events_ops import (
             events_stickiness_dau_mau,
         )
 
@@ -2791,9 +2782,7 @@ class TestStickinessAndEncoding:
     def test_encoding_audit_detects_planted_bytes(self, spark):
         """Non-ASCII, U+FFFD, tabs and newlines planted in a tiny
         frame must be counted exactly."""
-        from spark_bi5_datasource_spark.plans.round12_ops import (
-            text_encoding_audit,
-        )
+        from spark_bi5_datasource_spark.plans.text_ops import text_encoding_audit
 
         rows = [
             ("a", "plain ascii text"),
@@ -2822,7 +2811,7 @@ class TestStickinessAndEncoding:
 
 class TestBandIndexMaintenance:
     """operators/band_index.py: the stored per-crawl LSH index and its
-    MERGE-style maintenance (plans/round13_ops.py twin)."""
+    MERGE-style maintenance (plans/dedup_ops.py twin)."""
 
     @pytest.fixture()
     def corpus_frames(self, spark):
@@ -2937,7 +2926,7 @@ class TestBandIndexMaintenance:
     def test_merge_entry_cap_nonbinding_at_oracle_scales(
         self, spark, sf_dir
     ):
-        """GATE for plans/round13_ops.dedup_band_index_merge: the
+        """GATE for plans/dedup_ops.dedup_band_index_merge: the
         shipped entry probes with ``max_bucket=200`` while its oracle
         SQL is the exact uncapped twin, so Spark-vs-oracle equality
         holds only while the cap never binds.  The bucket key is an
@@ -2988,7 +2977,7 @@ class TestBandIndexMaintenance:
         )
 
     def test_delta_entry_stored_posture_equals_inline(self, spark):
-        """POSTURE pin for plans/round12_ops.dedup_incremental_delta
+        """POSTURE pin for plans/dedup_ops.dedup_incremental_delta
         (r11 flip): the shipped entry probes the warehouse-persisted
         fingerprint-keyed corpus index; this re-runs the same split
         with the inline-derived index and asserts exact row equality,
@@ -2997,9 +2986,7 @@ class TestBandIndexMaintenance:
         from spark_bi5_datasource_spark.operators.dedup import (
             minhash_delta_dedup,
         )
-        from spark_bi5_datasource_spark.plans.round12_ops import (
-            dedup_incremental_delta,
-        )
+        from spark_bi5_datasource_spark.plans.dedup_ops import dedup_incremental_delta
 
         sf = "/root/testdata/sf0.001"
         if not os.path.isdir(sf):
@@ -3024,7 +3011,7 @@ class TestBandIndexMaintenance:
 
 
 class TestCorpusBuildProduction:
-    """plans/round16_ops.corpus_build_production: the minhash-banded
+    """plans/curation_ops.corpus_build_production: the minhash-banded
     corpus build must equal the exact-bar snapshot at every oracle
     fixture scale — the dedup_minhash equality discipline applied to
     the composed pipeline (both entries share stages 3-5 by
@@ -3038,11 +3025,9 @@ class TestCorpusBuildProduction:
     def test_corpus_production_equals_snapshot(self, spark, sf_dir):
         if not os.path.isdir(sf_dir):
             pytest.skip(f"no fixture at {sf_dir}")
-        from spark_bi5_datasource_spark.plans.round15_ops import (
-            corpus_build_snapshot,
-        )
-        from spark_bi5_datasource_spark.plans.round16_ops import (
+        from spark_bi5_datasource_spark.plans.curation_ops import (
             corpus_build_production,
+            corpus_build_snapshot,
         )
 
         exact = sorted(
@@ -3055,7 +3040,7 @@ class TestCorpusBuildProduction:
 
 
 class TestMediaPhashDedup:
-    """Perceptual-hash dedup over binary media (plans/round13_ops.py
+    """Perceptual-hash dedup over binary media (plans/dedup_ops.py
     twin): dHash kernel + simhash-band reuse, pinned on images the
     catalog synthesizer did NOT produce."""
 
@@ -3083,10 +3068,10 @@ class TestMediaPhashDedup:
         )
 
         grad = [[120 - 10 * c for c in range(9)] for _ in range(8)]
-        px, _ = _decode_pixels(self._ppm(grad))
+        px = _decode_pixels(self._ppm(grad))
         assert dhash64(px) == -1  # all 64 bits set = signed -1
         big = [[120 - 10 * (c // 2) for c in range(18)] for _ in range(16)]
-        px_big, _ = _decode_pixels(self._ppm(big))
+        px_big = _decode_pixels(self._ppm(big))
         assert dhash64(px_big) == -1
 
     def test_planted_near_dup_pair_and_survivor(self, spark):
@@ -3119,7 +3104,7 @@ class TestMediaPhashDedup:
 
 
 class TestAudioFingerprintDedup:
-    """Audio-fingerprint dedup (plans/round13_ops.py twin): real WAV
+    """Audio-fingerprint dedup (plans/dedup_ops.py twin): real WAV
     payloads the catalog synthesizer did NOT produce — different
     sample rates, lengths, and codecs collapsing to one fingerprint."""
 
@@ -3181,7 +3166,7 @@ class TestAudioFingerprintDedup:
 
 class TestBandIndexHealth:
     """band_index_stats + the portable index twin
-    (plans/round13_ops.py dedup_band_index_health)."""
+    (plans/dedup_ops.py dedup_band_index_health)."""
 
     def test_stats_exact_on_planted_index(self, spark):
         rows = [(i, 0, "a") for i in range(3)] + [
@@ -3252,7 +3237,7 @@ class TestBandIndexHealth:
 
 
 class TestVideoFingerprintDedup:
-    """Temporal video dedup (plans/round14_ops.py twin): AVI synth →
+    """Temporal video dedup (plans/dedup_ops.py twin): AVI synth →
     real container walk → per-frame dHash → per-bit majority, pinned
     on videos the catalog synthesizer did NOT produce."""
 
@@ -3372,7 +3357,7 @@ class TestVideoFingerprintDedup:
 
 class TestIvfIndexMaintenance:
     """operators/ann_index.py: the stored IVF inverted file and its
-    MERGE-style maintenance (plans/round14_ops.py twin)."""
+    MERGE-style maintenance (plans/similarity_ops.py twin)."""
 
     @pytest.fixture()
     def vec_frames(self, spark):

@@ -556,12 +556,12 @@ def test_cobucketed_write_path_exchange_free_join(spark, tmp_path, monkeypatch):
     SortMergeJoin over two Bucketed: true scans with no exchange and
     no sort between them."""
     from spark_bi5_datasource_spark import plans
-    from spark_bi5_datasource_spark.plans import round13_ops
+    from spark_bi5_datasource_spark.plans import dedup_ops
 
     # isolate the warehouse artifact under tmp_path so the test never
     # reuses (or pollutes) the repo-level cache
     monkeypatch.setattr(
-        round13_ops, "_warehouse",
+        dedup_ops, "_warehouse",
         lambda sf, leaf: str(tmp_path / leaf),
     )
     # the fixture-scale embeddings side fits the auto-broadcast

@@ -93,7 +93,7 @@ def citations(text: str) -> set[str]:
 def test_citations_pattern():
     text = (
         "see scripts/plan_audit.py, plans/r14/q21.txt, BENCH_r02.json,"
-        " R14_CODEC_AB.jsonl, HISTORY.md, plans/round4_ops.py (functions/ohlc.py)"
+        " R14_CODEC_AB.jsonl, HISTORY.md, plans/text_ops.py (functions/ohlc.py)"
         " and spark_bi5_datasource_spark/sources/bi5_datasource.py;"
         " perfbench/data/X.json, perfbench/functions/x.py, CORRECTNESS_r{N}.json"
         " and the reference's scripts/bi5_to_csv.py are not citations"
@@ -104,7 +104,7 @@ def test_citations_pattern():
         "BENCH_r02.json",
         "R14_CODEC_AB.jsonl",
         "HISTORY.md",
-        "spark_bi5_datasource_spark/plans/round4_ops.py",
+        "spark_bi5_datasource_spark/plans/text_ops.py",
         "spark_bi5_datasource_spark/functions/ohlc.py",
         "spark_bi5_datasource_spark/sources/bi5_datasource.py",
     }
@@ -140,13 +140,13 @@ def top_level_names(rel: str) -> set[str]:
 
 def test_name_citations_pattern():
     text = (
-        "see sources/layout.write_bucketed, (plans/round11_ops.text_x)"
+        "see sources/layout.write_bucketed, (plans/text_ops.text_x)"
         " and spark_bi5_datasource_spark/operators/similarity.rank_topk;"
         " functions/ohlc.py is a file, perfbench/x.y and a/sources/b.c are not"
     )
     assert name_citations(text) == {
         (f"{PACKAGE}/sources/layout.py", "write_bucketed"),
-        (f"{PACKAGE}/plans/round11_ops.py", "text_x"),
+        (f"{PACKAGE}/plans/text_ops.py", "text_x"),
         (f"{PACKAGE}/operators/similarity.py", "rank_topk"),
     }
 
@@ -580,3 +580,153 @@ def test_plans_read_parquet_only_through_tables():
         with open(p, encoding="utf-8") as f:
             found += [f"{rel}:{n}" for n in parquet_reads(f.read())]
     assert not found, f"read fixtures through plans.tables.read_parquet: {found}"
+
+
+def unused_imports(source: str) -> list[str]:
+    """Names a module's imports bind (at any depth) that no expression
+    in it reads and its ``__all__`` does not list."""
+    tree = ast.parse(source)
+    bound = {}
+    exported: set[str] = set()
+    read = set()
+    for node in ast.walk(tree):
+        if isinstance(node, (ast.Import, ast.ImportFrom)):
+            if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+                continue
+            for a in node.names:
+                name = (a.asname or a.name).split(".")[0]
+                bound.setdefault(name, node.lineno)
+        elif isinstance(node, ast.Name) and not isinstance(node.ctx, ast.Store):
+            read.add(node.id)
+        elif isinstance(node, ast.stmt) and _is_all(node):
+            exported |= {e.value for e in ast.walk(node.value) if isinstance(e, ast.Constant)}
+    return sorted(
+        f"{line}: {name}"
+        for name, line in bound.items()
+        if name not in read and name not in exported
+    )
+
+
+def test_unused_imports_pattern():
+    source = (
+        "from __future__ import annotations\n"
+        "import os\n"
+        "from .a import used, unused as alias, exported\n"
+        "__all__ = ['exported']\n"
+        "def f():\n"
+        "    import json\n"
+        "    from .b import lazy\n"
+        "    return used(lazy)\n"
+    )
+    assert unused_imports(source) == ["2: os", "3: alias", "6: json"]
+
+
+def test_no_unused_imports():
+    found = []
+    for p in sorted(glob.glob(os.path.join(REPO, PACKAGE, "**", "*.py"), recursive=True)):
+        if os.path.basename(p) == "__init__.py":
+            continue
+        with open(p, encoding="utf-8") as f:
+            source = f.read()
+        rel = os.path.relpath(p, REPO)
+        found += [f"{rel}:{u}" for u in unused_imports(source)]
+    assert not found, f"imports nothing in the module reads: {found}"
+
+
+_PREFIX_ROW = re.compile(r"^    ([a-z_]+) {2,}(\S.*)$")
+_PREFIX_MORE = re.compile(r"^ {8,}(\S.*)$")
+
+
+def prefix_table(doc: str) -> dict[str, str]:
+    """The query-name prefix -> catalog module table of a docstring:
+    rows of ``<module>  <prefix> ...`` indented four spaces, prefixes
+    continued on lines indented deeper."""
+    table: dict[str, str] = {}
+    module = None
+    for line in doc.splitlines():
+        row, more = _PREFIX_ROW.match(line), _PREFIX_MORE.match(line)
+        if row:
+            module, prefixes = row.groups()
+        elif more and module:
+            prefixes = more.group(1)
+        else:
+            module = None
+            continue
+        for p in prefixes.split():
+            assert p not in table, f"prefix {p!r} is mapped twice"
+            table[p] = module
+    return table
+
+
+def module_for(name: str, table: dict[str, str]) -> str | None:
+    """The module of query ``name``: its longest prefix in ``table``."""
+    hits = [p for p in table if name.startswith(p)]
+    return table[max(hits, key=len)] if hits else None
+
+
+def test_prefix_table_pattern():
+    doc = (
+        "Catalog.\n\n"
+        "    rel     q sql_ join_\n"
+        "            agg_\n"
+        "    tpch    sql_tpch_\n"
+        "    text    text_\n\n"
+        "    unrelated indented prose\n"
+    )
+    table = prefix_table(doc)
+    assert table == {
+        "q": "rel", "sql_": "rel", "join_": "rel", "agg_": "rel",
+        "sql_tpch_": "tpch", "text_": "text",
+    }
+    assert module_for("sql_tpch_q6", table) == "tpch"
+    assert module_for("sql_exists", table) == "rel"
+    assert module_for("q1_pricing", table) == "rel"
+    assert module_for("dedup_x", table) is None
+
+
+def test_catalog_modules_follow_prefixes():
+    from spark_bi5_datasource_spark import plans
+    from spark_bi5_datasource_spark.plans.registry import REGISTRY
+
+    table = prefix_table(plans.__doc__)
+    misplaced = sorted(
+        f"{name} in {fn.__module__}, not {module_for(name, table)}"
+        for name, (fn, _sql) in REGISTRY.items()
+        if fn.__module__ != f"{plans.__name__}.{module_for(name, table)}"
+    )
+    assert not misplaced, f"catalog queries outside their prefix's module: {misplaced}"
+    assert not glob.glob(os.path.join(REPO, PACKAGE, "plans", "round*_ops.py"))
+
+
+def repeated_constants(sources: dict[str, str], min_len: int = 20) -> list[str]:
+    """Literal string values of at least ``min_len`` characters that two
+    or more module-level constants hold: ``"<value>: <path>:<name>, ..."``."""
+    holders: dict[str, list[str]] = {}
+    for rel, source in sources.items():
+        for node in ast.parse(source).body:
+            if isinstance(node, ast.Assign) and isinstance(node.value, ast.Constant):
+                value = node.value.value
+                if isinstance(value, str) and len(value) >= min_len:
+                    for t in node.targets:
+                        if isinstance(t, ast.Name):
+                            holders.setdefault(value, []).append(f"{rel}:{t.id}")
+    return sorted(f"{v!r}: {', '.join(h)}" for v, h in holders.items() if len(h) > 1)
+
+
+def test_repeated_constants_pattern():
+    sources = {
+        "a.py": "_TK = 'split(lower(text), x)   '\nSHORT = 'abc'\n",
+        "b.py": "_TK2 = 'split(lower(text), x)   '\nSHORT = 'abc'\n"
+        "def f():\n    local = 'split(lower(text), x)   '\n",
+    }
+    assert repeated_constants(sources) == [
+        "'split(lower(text), x)   ': a.py:_TK, b.py:_TK2"
+    ]
+
+
+def test_no_repeated_constants():
+    sources = {
+        rel: src for rel, src in package_sources().items() if rel.startswith(PACKAGE + "/")
+    }
+    repeated = repeated_constants(sources)
+    assert not repeated, f"define each shared string once and import it: {repeated}"

@@ -97,9 +97,7 @@ class TestSentenceStats:
         import os
         import tempfile
 
-        from spark_bi5_datasource_spark.plans.round4_ops import (
-            text_sentence_stats,
-        )
+        from spark_bi5_datasource_spark.plans.text_ops import text_sentence_stats
 
         rows = [
             (1, "One two three. Four five! six?", "en", "s", 30),
@@ -201,9 +199,7 @@ class TestIntervalOverlapJoin:
 
 class TestRollingCorr:
     def _corr(self, spark, vals):
-        from spark_bi5_datasource_spark.plans.round4_ops import (
-            window_rolling_corr,
-        )
+        from spark_bi5_datasource_spark.plans.events_ops import window_rolling_corr
         import datetime as dt
 
         rows = [
@@ -242,7 +238,7 @@ class TestEwma:
         import os
         import tempfile
 
-        from spark_bi5_datasource_spark.plans.round4_ops import window_ewma
+        from spark_bi5_datasource_spark.plans.events_ops import window_ewma
 
         rows = [
             (i, dt.datetime(2024, 1, 1) + dt.timedelta(minutes=i), 1, "t", v, "{}")
@@ -282,9 +278,7 @@ class TestTriangleCount:
         import os
         import tempfile
 
-        from spark_bi5_datasource_spark.plans.round4_ops import (
-            graph_triangle_count,
-        )
+        from spark_bi5_datasource_spark.plans.similarity_ops import graph_triangle_count
 
         # parts {1,2,3} co-occur in two orders -> 3 edges -> 1 triangle
         rows = []
@@ -315,7 +309,7 @@ class TestSpanDedup:
         import os
         import tempfile
 
-        from spark_bi5_datasource_spark.plans.round4_ops import text_span_dedup
+        from spark_bi5_datasource_spark.plans.text_ops import text_span_dedup
 
         words = [f"w{i}" for i in range(24)]  # 24 tokens -> spans at 0,4,8,12
         shared = " ".join(words)
@@ -350,7 +344,7 @@ class TestSpanDedup:
 
 class TestSampleMixture:
     def test_rates_and_determinism(self, spark):
-        from spark_bi5_datasource_spark.plans.round4_ops import sample_mixture
+        from spark_bi5_datasource_spark.plans.curation_ops import sample_mixture
 
         a = sample_mixture(spark, TESTDATA_SF).collect()
         b = sample_mixture(spark, TESTDATA_SF).collect()
@@ -389,9 +383,7 @@ class TestCumeUsers:
         import os
         import tempfile
 
-        from spark_bi5_datasource_spark.plans.round4_ops import (
-            events_cume_users,
-        )
+        from spark_bi5_datasource_spark.plans.events_ops import events_cume_users
 
         day = lambda d, h=0: dt.datetime(2024, 3, d, h)  # noqa: E731
         rows = [
@@ -420,13 +412,13 @@ class TestCumeUsers:
 
 class TestSqlPackPlans:
     def test_q18_semi_join_decorrelation(self, spark):
-        from spark_bi5_datasource_spark.plans.round4_ops import sql_tpch_q18
+        from spark_bi5_datasource_spark.plans.tpch_pack import sql_tpch_q18
 
         plan = sql_tpch_q18(spark, TESTDATA_SF)._jdf.queryExecution().toString()
         assert "LeftSemi" in plan
 
     def test_q22_anti_join_decorrelation(self, spark):
-        from spark_bi5_datasource_spark.plans.round4_ops import sql_tpch_q22
+        from spark_bi5_datasource_spark.plans.tpch_pack import sql_tpch_q22
 
         plan = sql_tpch_q22(spark, TESTDATA_SF)._jdf.queryExecution().toString()
         assert "LeftAnti" in plan

@@ -70,7 +70,7 @@ class TestEwmaProperties:
         import os
         import tempfile
 
-        from spark_bi5_datasource_spark.plans.round4_ops import window_ewma
+        from spark_bi5_datasource_spark.plans.events_ops import window_ewma
 
         rows = [
             (i, dt.datetime(2024, 1, 1) + dt.timedelta(minutes=i), 1, "t", v, "{}")
@@ -95,7 +95,7 @@ class TestEwmaProperties:
 
 
 class TestSaltedWedgeJoin:
-    """The wedge-skew guard (round4_ops._salted_wedge_join) must be
+    """The wedge-skew guard (similarity_ops._salted_wedge_join) must be
     output-identical to the plain equi-join — on benign graphs (empty
     hub set, salt-0 fast path) AND on a planted power-law graph where
     the cap forces hub salting."""
@@ -111,9 +111,7 @@ class TestSaltedWedgeJoin:
     def _common_counts(self, adj, **kw):
         from pyspark.sql import functions as F
 
-        from spark_bi5_datasource_spark.plans.round4_ops import (
-            _salted_wedge_join,
-        )
+        from spark_bi5_datasource_spark.plans.similarity_ops import _salted_wedge_join
 
         x = adj.toDF("u", "nbr")
         y = adj.toDF("v", "nbr")

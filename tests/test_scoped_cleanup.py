@@ -84,14 +84,14 @@ class TestRecallFeatCacheEviction:
         if not os.path.isdir(TESTDATA_SF):
             pytest.skip(f"no fixture at {TESTDATA_SF}")
         from spark_bi5_datasource_spark import plans
-        from spark_bi5_datasource_spark.plans import round12_ops
+        from spark_bi5_datasource_spark.plans import similarity_ops
 
         stale = ("app-stale", TESTDATA_SF)
-        round12_ops._RECALL_FEAT_CACHE[stale] = (None, "")
+        similarity_ops._RECALL_FEAT_CACHE[stale] = (None, "")
         try:
             plans.queries()["sim_ann_recall_monitor"](spark, TESTDATA_SF)
-            assert stale not in round12_ops._RECALL_FEAT_CACHE
+            assert stale not in similarity_ops._RECALL_FEAT_CACHE
             live = (spark.sparkContext.applicationId, TESTDATA_SF)
-            assert live in round12_ops._RECALL_FEAT_CACHE
+            assert live in similarity_ops._RECALL_FEAT_CACHE
         finally:
-            round12_ops._RECALL_FEAT_CACHE.pop(stale, None)
+            similarity_ops._RECALL_FEAT_CACHE.pop(stale, None)

@@ -1,7 +1,7 @@
 """SemDeDup semantic dedup (operators/semdedup.py).
 
 The exact single-cell mode is hash-gated against the DuckDB all-pairs
-oracle (plans/round11_ops.py); these tests pin the PRODUCTION
+oracle (plans/dedup_ops.py); these tests pin the PRODUCTION
 multi-cell mode, which has no SQL twin (k-means cells are
 Spark-side): precision is provable (intra-cell pairs are a subset of
 all pairs, each verified by an exact cosine), recall is measured
