@@ -2,16 +2,14 @@
 columns with typed metadata, processed via Arrow-batched
 ``mapInPandas`` (north-star operator, SURVEY §2 Tier C).
 
-The perceptual-hash kernels decode for real every format a pure-Python
-stack can honestly implement — images PPM (P6) / PGM (P5) / 24-bit
-BMP, 8-bit PNG (DEFLATE is stdlib ``zlib``; the five scanline filters
-unfilter in NumPy), baseline JPEG (SOF0 — full entropy decode + IDCT
-in ``jpeg_codec.py``, validated against real-world encoder output),
-and GIF (pure-Python LZW in ``gif_codec.py``, likewise pinned by real
-files), audio WAV (8/16-bit PCM, G.711 A-law/μ-law, IMA ADPCM), video
-AVI with uncompressed DIB or MJPEG frames.  Formats that remain out
-of pure-Python reach (progressive JPEG, MP3, H.264) raise
-``NotImplementedError``.  ``extract_media_features`` exercises the
+The perceptual-hash kernels decode for real the formats the catalog's
+adapters (``documents_as_{ppm,wav,avi}_media``) write, plus the two
+that share their code: images netpbm P6 / P5 and uncompressed 24-bit
+BMP, audio 8/16-bit PCM WAV, video AVI with uncompressed 24-bit DIB
+frames (each frame is decoded as a BMP).  Every other format (PNG,
+JPEG, GIF, TIFF, compressed WAV codecs, MJPEG, H.264, ...) raises
+``NotImplementedError``, which the ``extract_*`` kernels turn into a
+null hash.  ``extract_media_features`` exercises the
 Arrow plumbing with a deterministic fake kernel that derives the
 dimensions from the payload size, independent of payload format.
 """
@@ -19,7 +17,6 @@ dimensions from the payload size, independent of payload format.
 from __future__ import annotations
 
 import struct
-import zlib
 from typing import Iterator
 
 import numpy as np
@@ -125,115 +122,6 @@ def _bmp_header(data: bytes) -> tuple[int, int, int, int, bool]:
     return w, abs(h), offset, stride, h > 0
 
 
-_PNG_SIG = b"\x89PNG\r\n\x1a\n"
-# channels per PNG color type (8-bit): gray, RGB, palette idx, gray+A, RGBA
-_PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
-
-
-def _png_parse(data: bytes) -> tuple[int, int, int, int, int, bytes, bytes]:
-    """Chunk walk → (w, h, depth, color_type, interlace, plte, idat).
-    Chunk CRCs are not verified (lenient, like the bi5 reader's
-    dirty-input policy); IDAT chunks concatenate per the spec."""
-    if data[:8] != _PNG_SIG:
-        raise ValueError("not a PNG payload")
-    pos, n = 8, len(data)
-    w = h = depth = ct = interlace = -1
-    plte = b""
-    idat: list[bytes] = []
-    while pos + 8 <= n:
-        (length,), ctype = struct.unpack_from(">I", data, pos), data[pos + 4 : pos + 8]
-        body = data[pos + 8 : pos + 8 + length]
-        if len(body) < length:
-            raise ValueError("truncated PNG chunk")
-        if ctype == b"IHDR":
-            w, h, depth, ct, _comp, _filt, interlace = struct.unpack(
-                ">IIBBBBB", body
-            )
-        elif ctype == b"PLTE":
-            plte = body
-        elif ctype == b"IDAT":
-            idat.append(body)
-        elif ctype == b"IEND":
-            break
-        pos += 12 + length  # length + type + payload + crc
-    if w < 0:
-        raise ValueError("PNG without IHDR")
-    return w, h, depth, ct, interlace, plte, b"".join(idat)
-
-
-def _png_unfilter(raw: np.ndarray, bpp: int) -> np.ndarray:
-    """Reverse the five PNG scanline filters.  ``raw`` is (h, 1+stride)
-    uint8 (leading filter byte per row).  None/Up/Sub rows stay fully
-    vectorized (Sub is a cumsum over bpp-strided lanes); Average/Paeth
-    carry a data-dependent horizontal recurrence, so those rows fall
-    back to a per-byte loop — O(stride) Python only on rows that used
-    them."""
-    h, stride = raw.shape[0], raw.shape[1] - 1
-    filters = raw[:, 0]
-    rows = raw[:, 1:].astype(np.int64)
-    out = np.empty((h, stride), np.int64)
-    prev = np.zeros(stride, np.int64)
-    for y in range(h):
-        r, f = rows[y], int(filters[y])
-        if f == 0:
-            cur = r
-        elif f == 1:  # Sub: recon[x] = raw[x] + recon[x-bpp]
-            cur = r.copy()
-            for c in range(bpp):
-                cur[c::bpp] = np.cumsum(cur[c::bpp]) & 0xFF
-        elif f == 2:  # Up
-            cur = (r + prev) & 0xFF
-        elif f == 3:  # Average
-            cur = np.empty(stride, np.int64)
-            for x in range(stride):
-                left = cur[x - bpp] if x >= bpp else 0
-                cur[x] = (r[x] + ((left + prev[x]) >> 1)) & 0xFF
-        elif f == 4:  # Paeth
-            cur = np.empty(stride, np.int64)
-            for x in range(stride):
-                a = cur[x - bpp] if x >= bpp else 0
-                b = prev[x]
-                c_ = prev[x - bpp] if x >= bpp else 0
-                p = a + b - c_
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c_)
-                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c_)
-                cur[x] = (r[x] + pred) & 0xFF
-        else:
-            raise ValueError(f"bad PNG filter type {f}")
-        out[y] = cur
-        prev = cur
-    return out.astype(np.uint8)
-
-
-def _png_decode(data: bytes) -> np.ndarray:
-    """8-bit non-interlaced PNG → (H, W, C) uint8.  Palette images
-    resolve through PLTE to RGB (palette alpha/tRNS is dropped — these
-    are feature kernels, not a compositor).  16-bit and Adam7
-    variants raise ``NotImplementedError`` (rare in training corpora;
-    the dirty-input-null policy upstream absorbs them)."""
-    w, h, depth, ct, interlace, plte, idat = _png_parse(data)
-    if interlace != 0:
-        raise NotImplementedError("Adam7-interlaced PNG is not supported")
-    if depth != 8 or ct not in _PNG_CHANNELS:
-        raise NotImplementedError(
-            f"only 8-bit PNG is supported (depth={depth}, color_type={ct})"
-        )
-    ch = _PNG_CHANNELS[ct]
-    stride = w * ch
-    raw = zlib.decompress(idat)
-    if len(raw) != h * (stride + 1):
-        raise ValueError("PNG raster size mismatch")
-    px = _png_unfilter(
-        np.frombuffer(raw, np.uint8).reshape(h, stride + 1), ch
-    ).reshape(h, w, ch)
-    if ct == 3:
-        if not plte:
-            raise ValueError("palette PNG without PLTE")
-        pal = np.frombuffer(plte, np.uint8).reshape(-1, 3)
-        px = pal[px[:, :, 0]]
-    return px
-
-
 def _nn_index(dst: int, src: int) -> np.ndarray:
     """Nearest-neighbor source indices (pixel-center convention)."""
     return np.minimum(
@@ -261,180 +149,7 @@ def _decode_pixels(data: bytes) -> np.ndarray:
         if bottom_up:
             px = px[::-1]
         return px
-    if data[:8] == _PNG_SIG:
-        return _png_decode(data)
-    if head == b"\xff\xd8":
-        from .jpeg_codec import jpeg_decode
-
-        return jpeg_decode(data)
-    if data[:6] in (b"GIF87a", b"GIF89a"):
-        from .gif_codec import gif_decode
-
-        return gif_decode(data)
     raise NotImplementedError(f"payload magic {head!r} needs an imaging library")
-
-
-_WAV_TAGS = {1: "pcm", 6: "alaw", 7: "ulaw", 17: "ima_adpcm"}
-
-
-def _wav_header(data: bytes) -> tuple[int, int, int, int, int, str, int]:
-    """Parse a RIFF/WAVE header by walking its chunk list: returns
-    (n_channels, sample_rate, bits_per_sample, data_offset, data_len,
-    codec, block_align).  Supported codecs need no library:
-    uncompressed PCM (format tag 1), the formula-defined G.711
-    companders A-law (tag 6) and μ-law (tag 7), and IMA/DVI ADPCM
-    (tag 17 — public step-table spec); anything else (MS-ADPCM,
-    MP3-in-WAV, extensible) raises ``NotImplementedError``."""
-    if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE payload")
-    pos, fmt, data_span = 12, None, None
-    while pos + 8 <= len(data):
-        cid = data[pos : pos + 4]
-        (size,) = struct.unpack_from("<I", data, pos + 4)
-        body = pos + 8
-        if cid == b"fmt " and size >= 16:
-            tag, ch, rate = struct.unpack_from("<HHI", data, body)
-            (balign, bits) = struct.unpack_from("<HH", data, body + 12)
-            if tag not in _WAV_TAGS:
-                raise NotImplementedError(
-                    f"only PCM / A-law / μ-law / IMA-ADPCM WAV is supported "
-                    f"without a codec library (got format tag={tag})"
-                )
-            fmt = (ch, rate, bits, _WAV_TAGS[tag], balign)
-        elif cid == b"data":
-            data_span = (body, min(size, len(data) - body))
-        pos = body + size + (size & 1)  # chunks pad to even offsets
-    if fmt is None or data_span is None:
-        raise ValueError("WAV payload missing fmt/data chunk")
-    ch, rate, bits, codec, balign = fmt
-    if (
-        ch < 1
-        or (codec == "pcm" and bits not in (8, 16))
-        or (codec in ("alaw", "ulaw") and bits != 8)
-        or (codec == "ima_adpcm" and bits != 4)
-    ):
-        raise NotImplementedError(
-            f"unsupported WAV layout (codec={codec}, bits={bits}, ch={ch})"
-        )
-    return ch, rate, bits, data_span[0], data_span[1], codec, balign
-
-
-def _ulaw_decode(b: np.ndarray) -> np.ndarray:
-    """G.711 μ-law byte → int16-range linear (vectorized formula)."""
-    u = ~b.astype(np.int64) & 0xFF
-    exp = (u >> 4) & 7
-    mant = u & 0xF
-    mag = (((mant << 3) + 0x84) << exp) - 0x84
-    return np.where(u & 0x80, -mag, mag)
-
-
-def _alaw_decode(b: np.ndarray) -> np.ndarray:
-    """G.711 A-law byte → int16-range linear (vectorized formula)."""
-    a = b.astype(np.int64) ^ 0x55
-    exp = (a >> 4) & 7
-    mant = a & 0xF
-    mag = np.where(exp == 0, (mant << 4) + 8, ((mant << 4) + 0x108) << np.maximum(exp - 1, 0))
-    return np.where(a & 0x80, mag, -mag)
-
-
-# IMA/DVI ADPCM: the 89-entry quantizer step table and the 8-entry
-# index-adjust table from the public IMA spec (the same constants every
-# tag-17 decoder ships; see e.g. the stdlib ``audioop`` module, whose
-# adpcm2lin implements the identical recurrence without WAV framing)
-_IMA_STEP = np.array([
-    7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31, 34, 37,
-    41, 45, 50, 55, 60, 66, 73, 80, 88, 97, 107, 118, 130, 143, 157, 173,
-    190, 209, 230, 253, 279, 307, 337, 371, 408, 449, 494, 544, 598, 658,
-    724, 796, 876, 963, 1060, 1166, 1282, 1411, 1552, 1707, 1878, 2066,
-    2272, 2499, 2749, 3024, 3327, 3660, 4026, 4428, 4871, 5358, 5894,
-    6484, 7132, 7845, 8630, 9493, 10442, 11487, 12635, 13899, 15289,
-    16818, 18500, 20350, 22385, 24623, 27086, 29794, 32767,
-], np.int32)
-_IMA_INDEX = np.array([-1, -1, -1, -1, 2, 4, 6, 8], np.int32)
-
-
-def _ima_adpcm_decode(
-    data: bytes, off: int, dlen: int, ch: int, balign: int
-) -> np.ndarray:
-    """WAV format-tag-17 IMA ADPCM → int16 (frames, channels).
-
-    Block layout (public spec): per channel a 4-byte header
-    (int16-LE predictor = the block's first output sample, uint8 step
-    index, reserved), then 4-byte words interleaved channel-major,
-    each byte low-nibble-first.  The predictor recurrence is
-    inherently sequential per channel, so the loop runs over the
-    within-block sample position while every step is vectorized
-    across (blocks × channels) — blocks are independent by design
-    (that is what makes the format seekable, and what makes this
-    decode parallel)."""
-    if balign < 8 * ch or (balign - 4 * ch) % (4 * ch):
-        raise ValueError(f"bad IMA ADPCM block align {balign} for ch={ch}")
-    nfull, rem = divmod(dlen, balign)
-    parts = []
-    for nb, bsize in ((nfull, balign), (1 if rem >= 4 * ch else 0, rem)):
-        if nb == 0:
-            continue
-        start = off if bsize == balign else off + nfull * balign
-        usable = 4 * ch + (bsize - 4 * ch) // (4 * ch) * (4 * ch)
-        buf = np.frombuffer(data, np.uint8, nb * bsize, start).reshape(
-            nb, bsize
-        )[:, :usable]
-        heads = buf[:, : 4 * ch].reshape(nb, ch, 4).astype(np.int32)
-        pred = ((heads[:, :, 0] | (heads[:, :, 1] << 8)) ^ 0x8000) - 0x8000
-        idx = np.clip(heads[:, :, 2], 0, 88)
-        stream = (
-            buf[:, 4 * ch :]
-            .reshape(nb, -1, ch, 4)
-            .transpose(0, 2, 1, 3)
-            .reshape(nb, ch, -1)
-            .astype(np.int32)
-        )
-        nib = np.empty((nb, ch, stream.shape[2] * 2), np.int32)
-        nib[:, :, 0::2] = stream & 0xF
-        nib[:, :, 1::2] = stream >> 4
-        out = np.empty((nb, ch, nib.shape[2] + 1), np.int16)
-        out[:, :, 0] = pred
-        for i in range(nib.shape[2]):
-            n = nib[:, :, i]
-            step = _IMA_STEP[idx]
-            diff = (
-                (step >> 3)
-                + np.where(n & 1, step >> 2, 0)
-                + np.where(n & 2, step >> 1, 0)
-                + np.where(n & 4, step, 0)
-            )
-            pred = np.clip(
-                np.where(n & 8, pred - diff, pred + diff), -32768, 32767
-            )
-            idx = np.clip(idx + _IMA_INDEX[n & 7], 0, 88)
-            out[:, :, i + 1] = pred
-        parts.append(out.transpose(0, 2, 1).reshape(-1, ch))
-    if not parts:
-        return np.zeros((0, ch), np.int16)
-    return np.concatenate(parts) if len(parts) > 1 else parts[0]
-
-
-def _audio_samples(data: bytes) -> tuple[np.ndarray, int]:
-    """Payload → (frames, channels) float64 in [-1, 1] + sample rate."""
-    ch, rate, bits, off, dlen, codec, balign = _wav_header(data)
-    if codec == "ima_adpcm":
-        x = _ima_adpcm_decode(data, off, dlen, ch, balign).astype(np.float64)
-        return x / 32768.0, rate
-    step = ch * bits // 8
-    n = dlen // step
-    if codec == "ulaw":
-        raw = np.frombuffer(data, np.uint8, n * ch, off)
-        x = _ulaw_decode(raw).astype(np.float64) / 32768.0
-    elif codec == "alaw":
-        raw = np.frombuffer(data, np.uint8, n * ch, off)
-        x = _alaw_decode(raw).astype(np.float64) / 32768.0
-    elif bits == 16:
-        raw = np.frombuffer(data, "<i2", n * ch, off).astype(np.float64)
-        x = raw / 32768.0
-    else:  # 8-bit PCM WAV is unsigned, midpoint 128
-        raw = np.frombuffer(data, np.uint8, n * ch, off).astype(np.float64)
-        x = (raw - 128.0) / 128.0
-    return x.reshape(n, ch), rate
 
 
 def _riff_chunks(data: bytes, start: int, end: int):
@@ -450,23 +165,63 @@ def _riff_chunks(data: bytes, start: int, end: int):
         pos = body + size + (size & 1)
 
 
-_MJPG_FOURCC = struct.unpack("<I", b"MJPG")[0]
+def _wav_header(data: bytes) -> tuple[int, int, int, int, int]:
+    """Parse a RIFF/WAVE header by walking its chunk list: returns
+    (n_channels, sample_rate, bits_per_sample, data_offset, data_len).
+    Only uncompressed 8/16-bit PCM (format tag 1) is supported; any
+    other tag (A-law, μ-law, ADPCM, MP3-in-WAV, extensible) raises
+    ``NotImplementedError``."""
+    if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"WAVE":
+        raise ValueError("not a RIFF/WAVE payload")
+    fmt, data_span = None, None
+    for cid, body, blen in _riff_chunks(data, 12, len(data)):
+        if cid == b"fmt " and blen >= 16:
+            tag, ch, rate = struct.unpack_from("<HHI", data, body)
+            (bits,) = struct.unpack_from("<H", data, body + 14)
+            if tag != 1:
+                raise NotImplementedError(
+                    f"only PCM WAV is supported without a codec library "
+                    f"(got format tag={tag})"
+                )
+            fmt = (ch, rate, bits)
+        elif cid == b"data":
+            data_span = (body, blen)
+    if fmt is None or data_span is None:
+        raise ValueError("WAV payload missing fmt/data chunk")
+    ch, rate, bits = fmt
+    if ch < 1 or bits not in (8, 16):
+        raise NotImplementedError(
+            f"unsupported PCM WAV layout (bits={bits}, ch={ch})"
+        )
+    return ch, rate, bits, data_span[0], data_span[1]
 
 
-def _avi_frames(data: bytes) -> tuple[int, int, list[bytes], str]:
-    """Parse an AVI (RIFF) container: returns (width, height, frames,
-    kind) where kind is ``"dib"`` (raw bottom-up BGR rasters) or
-    ``"mjpg"`` (each frame is a standalone baseline JPEG, decodable by
-    ``jpeg_codec``).  Other compressed streams (H.264 etc.) raise
-    ``NotImplementedError`` — those need a real codec."""
+def _audio_samples(data: bytes) -> tuple[np.ndarray, int]:
+    """Payload → (frames, channels) float64 in [-1, 1] + sample rate."""
+    ch, rate, bits, off, dlen = _wav_header(data)
+    step = ch * bits // 8
+    n = dlen // step
+    if bits == 16:
+        raw = np.frombuffer(data, "<i2", n * ch, off).astype(np.float64)
+        x = raw / 32768.0
+    else:  # 8-bit PCM WAV is unsigned, midpoint 128
+        raw = np.frombuffer(data, np.uint8, n * ch, off).astype(np.float64)
+        x = (raw - 128.0) / 128.0
+    return x.reshape(n, ch), rate
+
+
+def _avi_frames(data: bytes) -> tuple[int, int, list[bytes]]:
+    """Parse an AVI (RIFF) container with an uncompressed 24-bit DIB
+    video stream: returns (width, height, frames), each frame a raw
+    bottom-up BGR raster.  Compressed streams (MJPEG, H.264, ...)
+    raise ``NotImplementedError`` — those need a real codec."""
     if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"AVI ":
         raise ValueError("not a RIFF/AVI payload")
     dims: tuple[int, int] | None = None
-    kind = "dib"
     frames: list[bytes] = []
 
     def walk(start: int, end: int) -> None:
-        nonlocal dims, kind
+        nonlocal dims
         for cid, body, blen in _riff_chunks(data, start, end):
             if cid == b"LIST":
                 walk(body + 4, body + blen)  # skip the subtype fourcc
@@ -474,46 +229,37 @@ def _avi_frames(data: bytes) -> tuple[int, int, list[bytes], str]:
                 w, h = struct.unpack_from("<ii", data, body + 4)
                 bpp, = struct.unpack_from("<H", data, body + 14)
                 compression, = struct.unpack_from("<I", data, body + 16)
-                if compression == _MJPG_FOURCC:
-                    kind = "mjpg"
-                elif compression != 0 or bpp != 24:
+                if compression != 0 or bpp != 24:
                     raise NotImplementedError(
-                        f"only uncompressed 24-bit DIB or MJPG video is "
-                        f"supported without a codec library "
+                        f"only uncompressed 24-bit DIB video is supported "
+                        f"without a codec library "
                         f"(bpp={bpp}, compression={compression})"
                     )
                 dims = (w, abs(h))
             elif cid[2:] == b"dc":
-                if kind != "mjpg":
-                    raise NotImplementedError(
-                        "compressed video frames need a codec library"
-                    )
-                frames.append(data[body : body + blen])
+                raise NotImplementedError(
+                    "compressed video frames need a codec library"
+                )
             elif cid[2:] == b"db":  # uncompressed DIB frame
                 frames.append(data[body : body + blen])
 
     walk(12, len(data))
     if dims is None:
         raise ValueError("AVI payload missing strf header")
-    return dims[0], dims[1], frames, kind
+    return dims[0], dims[1], frames
 
 
 def sample_frames(payload: bytes, every_n: int) -> list[bytes]:
     """Sample every ``every_n``-th frame from a video payload,
     returned as standalone images (consumable by ``_decode_pixels``).
 
-    REAL for AVI containers with uncompressed 24-bit DIB streams (the
-    frame raster IS a BMP body — bottom-up, 4-byte row stride — so
-    each sampled frame just gains a 54-byte BMP header) and for MJPEG
-    streams whose frames carry their own DQT/DHT tables (each frame
-    is a standalone baseline JPEG, decoded by ``jpeg_codec``;
-    table-less MJPEG frames — the implicit-tables convention — fail
-    per-frame into the dirty-input skip).  Other codecs (H.264/...)
-    raise ``NotImplementedError``."""
+    REAL for AVI containers with uncompressed 24-bit DIB streams: the
+    frame raster IS a BMP body (bottom-up, 4-byte row stride), so each
+    sampled frame just gains a 54-byte BMP header.  Compressed streams
+    (MJPEG, H.264, ...) raise ``NotImplementedError`` in
+    ``_avi_frames``."""
     data = bytes(payload)
-    w, h, frames, kind = _avi_frames(data)
-    if kind == "mjpg":
-        return list(frames[:: max(1, every_n)])
+    w, h, frames = _avi_frames(data)
     stride = (w * 3 + 3) // 4 * 4
     out = []
     for raw in frames[:: max(1, every_n)]:
@@ -624,9 +370,10 @@ PHASH_SCHEMA = StructType(
 def extract_phash(media: DataFrame) -> DataFrame:
     """binary payload → 64-bit perceptual dHash via Arrow-batched
     mapInPandas, through the REAL pure-Python decoders
-    (``_decode_pixels``: PPM/PGM/BMP/PNG/baseline-JPEG/GIF).  Dirty
-    or unsupported payloads yield a null hash (the bi5 scan's
-    silent-skip discipline) so one bad image never kills the task."""
+    (``_decode_pixels``: netpbm P6/P5, 24-bit BMP).  Dirty or
+    unsupported payloads (PNG, JPEG, GIF, ...) yield a null hash (the
+    bi5 scan's silent-skip discipline) so one bad image never kills
+    the task."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -726,10 +473,10 @@ AUDIO_FP_SCHEMA = StructType(
 
 def extract_audio_fingerprint(media: DataFrame) -> DataFrame:
     """WAV payload → 64-bit audio fingerprint via Arrow-batched
-    mapInPandas through the REAL decoder stack (``_audio_samples``:
-    8/16-bit PCM, G.711 A-law/μ-law, IMA ADPCM).  Dirty or
-    unsupported payloads yield a null fingerprint (the bi5
-    silent-skip discipline)."""
+    mapInPandas through the REAL decoder (``_audio_samples``:
+    8/16-bit PCM).  Dirty or unsupported payloads (compressed WAV
+    codecs, ...) yield a null fingerprint (the bi5 silent-skip
+    discipline)."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -839,13 +586,13 @@ def extract_video_fingerprint(
     media: DataFrame, every_n: int = _VFP_EVERY
 ) -> DataFrame:
     """video payload → 64-bit temporal fingerprint via Arrow-batched
-    mapInPandas through the REAL container/codec stack: frames are
-    sampled with ``sample_frames`` (AVI walk; DIB frames gain a BMP
-    header, MJPEG frames decode through the JPEG codec), each sampled
-    frame is dHashed (``dhash64``), and the per-frame hashes combine
-    by per-bit majority (``vhash64``).  Dirty or unsupported payloads
-    yield a null hash (the bi5 silent-skip discipline); payload bytes
-    never travel past this kernel."""
+    mapInPandas through the REAL container stack: frames are sampled
+    with ``sample_frames`` (AVI walk; DIB frames gain a BMP header),
+    each sampled frame is dHashed (``dhash64``), and the per-frame
+    hashes combine by per-bit majority (``vhash64``).  Dirty or
+    unsupported payloads (MJPEG, H.264, ...) yield a null hash (the
+    bi5 silent-skip discipline); payload bytes never travel past this
+    kernel."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:

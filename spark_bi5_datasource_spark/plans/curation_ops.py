@@ -15,24 +15,10 @@ from pyspark.sql import functions as F
 from .dedup_ops import _SH
 from .registry import query as _q
 from .tables import t
-from .text_ops import _QUALITY_SQL, _TKS, _TKS_D
+from .text_ops import _FP_SQL, _QL_STOPS, _QUALITY_SQL, _TKS, _TKS_D
 
 
 # ---------------------------------------------- pipeline utilities
-# DuckDB twin of functions.text.doc_fingerprint — the rolling
-# polynomial fold (exact BIGINT arithmetic, identical cross-engine).
-_FP_SQL = """
-      list_reduce(
-        list_prepend(CAST(0 AS BIGINT),
-          list_transform(string_split(text, ' '), tk ->
-            list_reduce(
-              list_prepend(CAST(0 AS BIGINT),
-                list_transform(regexp_extract_all(tk, '(?s).'),
-                               c -> CAST(unicode(c) AS BIGINT))),
-              (a, c) -> (a * 33 + c) % 1000000000000))),
-        (h, th) -> (h * 31 + th) % 1000000000000)
-"""
-
 # per-language keep rates in basis points of 10000 (down-sample the
 # dominant language, keep the tail) — the CC-style rebalancing shape
 _STRATA_BPS = {"en": 5000, "de": 2500, "fr": 2500, "es": 2500, "zh": 1000}
@@ -296,11 +282,10 @@ def split_training_shards(spark: SparkSession, sf: str) -> DataFrame:
 # --------------------- weighted sampling without replacement (A-ES)
 @_q(
     "sample_weighted_wor",
-    """
+    f"""
     WITH d AS (
       SELECT doc_id,
-             len(list_filter(string_split_regex(lower(text), '[^a-z]+'),
-                             x -> x <> '')) AS w
+             len({_TKS_D}) AS w
       FROM documents
     ), keyed AS (
       SELECT doc_id, w,
@@ -794,16 +779,13 @@ def corpus_dedup_inflation(spark: SparkSession, sf: str) -> DataFrame:
 
 
 # -------------------------------------- quality prune curve
-_PRUNE_SQL = """
+_PRUNE_SQL = f"""
     WITH f AS (
       SELECT doc_id, n_chars,
         2 * (1000000 * len(list_filter(string_split_regex(lower(text),
-              '[^a-z]+'), x -> x <> '' AND x IN ('the','a','of','and',
-              'to','in','is','it','for','on')))
-            // greatest(len(list_filter(string_split_regex(lower(text),
-              '[^a-z]+'), x -> x <> '')), 1))
-        + (1000000 * least(len(list_filter(string_split_regex(lower(text),
-              '[^a-z]+'), x -> x <> '')), 400) // 400)
+              '[^a-z]+'), x -> x <> '' AND x IN {_QL_STOPS}))
+            // greatest(len({_TKS_D}), 1))
+        + (1000000 * least(len({_TKS_D}), 400) // 400)
         - 3 * (1000000 * length(regexp_replace(text, '[^.!?,;]', '', 'g'))
             // greatest(length(text), 1)) AS logit
       FROM documents
@@ -847,18 +829,16 @@ def corpus_quality_prune_curve(spark: SparkSession, sf: str) -> DataFrame:
     exchange (the events_rfm pattern).  Then a 10-row rollup."""
     from ..operators.ranking import ntile_expr, with_global_rank
 
-    stops = "('the','a','of','and','to','in','is','it','for','on')"
-    tks = "filter(split(lower(text), '[^a-z]+'), x -> x <> '')"
     f = t(spark, sf, "documents").select(
         "doc_id",
         "n_chars",
         (
             F.lit(2)
             * F.expr(
-                f"1000000 * size(filter({tks}, x -> x IN {stops}))"
-                f" div greatest(size({tks}), 1)"
+                f"1000000 * size(filter({_TKS}, x -> x IN {_QL_STOPS}))"
+                f" div greatest(size({_TKS}), 1)"
             )
-            + F.expr(f"1000000 * least(size({tks}), 400) div 400")
+            + F.expr(f"1000000 * least(size({_TKS}), 400) div 400")
             - F.lit(3)
             * F.expr(
                 "1000000 * length(regexp_replace(text, '[^.!?,;]', ''))"

@@ -37,16 +37,16 @@ from .tables import t
 
 
 # ------------------------------------------- shared oracle fragments
-def _sh_cte(key: str = "doc_id", short: str | None = "SELECT") -> str:
+def _sh_cte(key: str = "doc_id", short: bool = True) -> str:
     """The 3-word shingle CTE ``sh(key, shingle)`` over ``toks(key, tk)``:
-    the oracle twin of ``operators/dedup.with_shingles``.  A doc shorter
-    than the shingle width contributes its whole text as its one
-    shingle, through the branch ``short`` opens (``None`` drops it,
-    keeping full-width shingles only)."""
+    the oracle twin of ``operators/dedup.with_shingles``.  With
+    ``short``, a doc shorter than the shingle width contributes its
+    whole text as its one shingle; without it, only full-width
+    shingles are kept."""
     tail = (
         f"""
       UNION
-      {short} {key}, array_to_string(tk, ' ') AS shingle
+      SELECT {key}, array_to_string(tk, ' ') AS shingle
       FROM toks WHERE len(tk) < 3"""
         if short
         else ""
@@ -646,7 +646,7 @@ def dedup_prefix_clusters(spark: SparkSession, sf: str) -> DataFrame:
 _SHDF_SQL = f"""
     WITH toks AS (
       SELECT doc_id, string_split(text, ' ') AS tk FROM documents
-    ), {_sh_cte(short='SELECT DISTINCT')}, df AS (
+    ), {_SH}, df AS (
       SELECT shingle, CAST(count(*) AS BIGINT) AS df
       FROM sh GROUP BY shingle
     )
@@ -1739,8 +1739,9 @@ def dedup_video_fingerprint(spark: SparkSession, sf: str) -> DataFrame:
     the rasters the synth wrote — any container, sampler, decoder,
     hash, majority, banding or survivor error breaks value equality),
     identical banded chunk join.  A planted near-dup pytest
-    additionally pins the kernel on MJPEG and dirty containers the
-    synthesizer did NOT produce (tests/test_operators.py).
+    additionally pins the kernel on frame sampling and dirty
+    containers the synthesizer did NOT produce
+    (tests/test_operators.py).
 
     Scale shape: identical to dedup_media_phash — one Arrow pass per
     payload (container walk + 3 frame decodes + 3 dHashes, no

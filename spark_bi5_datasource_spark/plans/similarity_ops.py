@@ -611,21 +611,17 @@ def graph_triangle_count(spark: SparkSession, sf: str) -> DataFrame:
 
 
 # ---------------------------------------------------- PQ ANN tier
-_BRUTE_COSINE_SQL = """
+_BRUTE_COSINE_SQL = f"""
     WITH n AS (
       SELECT vec_id, embedding,
         sqrt(list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x))) AS nrm
       FROM embeddings
     )
     SELECT b.vec_id AS query_id, a.vec_id AS nbr_id,
-      round(list_sum(list_transform(list_zip(CAST(a.embedding AS DOUBLE[]),
-            CAST(b.embedding AS DOUBLE[])), x -> x[1] * x[2]))
-            / (a.nrm * b.nrm), 6) AS cosine,
+      round({_DOT_D} / (a.nrm * b.nrm), 6) AS cosine,
       CAST(row_number() OVER (
         PARTITION BY b.vec_id
-        ORDER BY list_sum(list_transform(list_zip(CAST(a.embedding AS DOUBLE[]),
-              CAST(b.embedding AS DOUBLE[])), x -> x[1] * x[2]))
-              / (a.nrm * b.nrm) DESC, a.vec_id ASC) AS INT) AS rank
+        ORDER BY {_DOT_D} / (a.nrm * b.nrm) DESC, a.vec_id ASC) AS INT) AS rank
     FROM n a, n b
     WHERE b.vec_id < 10 AND a.vec_id <> b.vec_id
     QUALIFY rank <= 5

@@ -24,6 +24,27 @@ from .fastmoney import HALF_ADJUST_CENTS as _HA
 from .registry import query as _q
 from .tables import fanout, t
 
+# one tokenization, bound as a column so every downstream branch
+# (counts, gram generators) reads the materialized array — the same
+# no-re-tokenize discipline as functions/text.py.  _TKS_D is its
+# DuckDB twin.
+_TKS = "filter(split(lower(text), '[^a-z]+'), x -> x <> '')"
+_TKS_D = "list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')"
+
+# DuckDB twin of functions.text.doc_fingerprint — the rolling
+# polynomial fold (exact BIGINT arithmetic, identical cross-engine).
+_FP_SQL = """
+      list_reduce(
+        list_prepend(CAST(0 AS BIGINT),
+          list_transform(string_split(text, ' '), tk ->
+            list_reduce(
+              list_prepend(CAST(0 AS BIGINT),
+                list_transform(regexp_extract_all(tk, '(?s).'),
+                               c -> CAST(unicode(c) AS BIGINT))),
+              (a, c) -> (a * 33 + c) % 1000000000000))),
+        (h, th) -> (h * 31 + th) % 1000000000000)
+"""
+
 
 @_q(
     "text_chunk_pack",
@@ -199,26 +220,9 @@ def text_quality_filter(spark: SparkSession, sf: str) -> DataFrame:
 
 @_q(
     "text_fingerprint",
-    """
-    SELECT doc_id,
-      list_reduce(
-        list_prepend(CAST(0 AS BIGINT),
-          list_transform(string_split(text, ' '), tk ->
-            list_reduce(
-              list_prepend(CAST(0 AS BIGINT),
-                list_transform(regexp_extract_all(tk, '(?s).'),
-                               c -> CAST(unicode(c) AS BIGINT))),
-              (a, c) -> (a * 33 + c) % 1000000000000))),
-        (h, th) -> (h * 31 + th) % 1000000000000) AS fingerprint,
-      CASE WHEN list_reduce(
-        list_prepend(CAST(0 AS BIGINT),
-          list_transform(string_split(text, ' '), tk ->
-            list_reduce(
-              list_prepend(CAST(0 AS BIGINT),
-                list_transform(regexp_extract_all(tk, '(?s).'),
-                               c -> CAST(unicode(c) AS BIGINT))),
-              (a, c) -> (a * 33 + c) % 1000000000000))),
-        (h, th) -> (h * 31 + th) % 1000000000000) % 100 < 90
+    f"""
+    SELECT doc_id, {_FP_SQL} AS fingerprint,
+      CASE WHEN {_FP_SQL} % 100 < 90
       THEN 'train' ELSE 'eval' END AS split
     FROM documents
     """,
@@ -551,12 +555,6 @@ def tok_vocab_sketch(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-# one tokenization, bound as a column so every downstream branch
-# (counts, gram generators) reads the materialized array — the same
-# no-re-tokenize discipline as functions/text.py
-_TKS = "filter(split(lower(text), '[^a-z]+'), x -> x <> '')"
-
-
 # ------------------------------------------- repetition quality stats
 
 
@@ -565,8 +563,7 @@ _TKS = "filter(split(lower(text), '[^a-z]+'), x -> x <> '')"
     f"""
     WITH d AS (
       SELECT doc_id,
-             list_filter(string_split_regex(lower(text), '[^a-z]+'),
-                         x -> x <> '') AS tks
+             {_TKS_D} AS tks
       FROM documents
     ), dd AS (
       SELECT doc_id, tks, len(tks) AS n_tokens FROM d WHERE len(tks) >= 3
@@ -645,8 +642,7 @@ def text_repetition_stats(spark: SparkSession, sf: str) -> DataFrame:
     f"""
     WITH toks AS (
       SELECT doc_id,
-             unnest(list_filter(string_split_regex(lower(text), '[^a-z]+'),
-                                x -> x <> '')) AS tok
+             unnest({_TKS_D}) AS tok
       FROM documents
     ), p AS (
       SELECT DISTINCT doc_id, tok FROM toks
@@ -692,8 +688,7 @@ def text_inverted_index(spark: SparkSession, sf: str) -> DataFrame:
     f"""
     WITH d AS (
       SELECT doc_id,
-             list_filter(string_split_regex(lower(text), '[^a-z]+'),
-                         x -> x <> '') AS tks
+             {_TKS_D} AS tks
       FROM documents
     ), dd AS (
       SELECT doc_id, tks FROM d WHERE len(tks) >= 2
@@ -773,8 +768,7 @@ def text_pmi_bigrams(spark: SparkSession, sf: str) -> DataFrame:
     f"""
     WITH d AS (
       SELECT doc_id,
-             list_filter(string_split_regex(lower(text), '[^a-z]+'),
-                         x -> x <> '') AS tks
+             {_TKS_D} AS tks
       FROM documents
     ), dd AS (
       SELECT doc_id, tks FROM d WHERE len(tks) >= 2
@@ -878,8 +872,7 @@ def _bm25_oracle() -> str:
     WITH q AS ({qrows}),
     d AS (
       SELECT doc_id,
-             list_filter(string_split_regex(lower(text), '[^a-z]+'),
-                         x -> x <> '') AS tks
+             {_TKS_D} AS tks
       FROM documents
     ), toks AS (
       SELECT doc_id, unnest(tks) AS tok FROM d
@@ -1157,8 +1150,7 @@ _SPAN_W, _SPAN_S = 12, 4
 _SPAN_SQL = f"""
     WITH d AS (
       SELECT doc_id,
-             list_filter(string_split_regex(lower(text), '[^a-z]+'),
-                         x -> x <> '') AS tks
+             {_TKS_D} AS tks
       FROM documents
     ), dd AS (
       SELECT doc_id, tks FROM d WHERE len(tks) >= {_SPAN_W}
@@ -1228,14 +1220,11 @@ def text_span_dedup(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-_TKS_D = "list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')"
-
-
 # ---------------------------------------------------- n-gram novelty
 _NOVELTY_SQL = f"""
     WITH toks AS (
       SELECT doc_id, {_TKS_D} AS tk FROM documents
-    ), {_sh_cte(short=None)}, cnt AS (
+    ), {_sh_cte(short=False)}, cnt AS (
       SELECT shingle, count(*) AS docs FROM sh GROUP BY shingle
     )
     SELECT sh.doc_id,
@@ -1327,13 +1316,12 @@ def text_quality_logit(spark: SparkSession, sf: str) -> DataFrame:
     Scale shape: a pure per-row map over one scan — no shuffle at all;
     the tokenization is the same single-pass split every text op
     shares."""
-    stops = "('the','a','of','and','to','in','is','it','for','on')"
     f = t(spark, sf, "documents").select(
         "doc_id",
         "source",
         F.expr(f"size({_TKS})").alias("nw"),
         F.expr(
-            f"size(filter({_TKS}, x -> x IN {stops}))"
+            f"size(filter({_TKS}, x -> x IN {_QL_STOPS}))"
         ).alias("nstop"),
         F.length(F.regexp_replace("text", r"[^.!?,;]", "")).alias("npunct"),
         F.length("text").alias("nchar"),
@@ -1646,13 +1634,11 @@ def text_boilerplate_spans(spark: SparkSession, sf: str) -> DataFrame:
 
 
 # ---------------------------------------------------- token fertility
-_FERTILITY_SQL = """
+_FERTILITY_SQL = f"""
     WITH tc AS (
       SELECT lang,
         CAST(count(*) AS BIGINT) AS n_docs,
-        CAST(sum(len(list_filter(
-          string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')))
-          AS BIGINT) AS n_tokens,
+        CAST(sum(len({_TKS_D})) AS BIGINT) AS n_tokens,
         CAST(sum(n_chars) AS BIGINT) AS sum_chars
       FROM documents GROUP BY lang
     )
@@ -1710,10 +1696,9 @@ def tok_fertility_by_lang(spark: SparkSession, sf: str) -> DataFrame:
 
 
 # ------------------------------------------------ type-token ratio
-_TTR_SQL = """
+_TTR_SQL = f"""
     WITH toks AS (
-      SELECT source, unnest(list_filter(
-          string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')) AS tok
+      SELECT source, unnest({_TKS_D}) AS tok
       FROM documents
     ), tc AS (
       SELECT source, tok, CAST(count(*) AS BIGINT) AS c
@@ -1773,10 +1758,9 @@ def tok_ttr_by_source(spark: SparkSession, sf: str) -> DataFrame:
 
 
 # ------------------------------------------------ OOV rate by source
-_OOV_SQL = """
+_OOV_SQL = f"""
     WITH toks AS (
-      SELECT source, unnest(list_filter(
-          string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')) AS tok
+      SELECT source, unnest({_TKS_D}) AS tok
       FROM documents
     ), vocab AS (
       SELECT tok FROM (
@@ -1862,7 +1846,7 @@ def tok_oov_by_source(spark: SparkSession, sf: str) -> DataFrame:
 _CONTAM_SQL = f"""
     WITH toks AS (
       SELECT source, string_split(text, ' ') AS tk FROM documents
-    ), {_sh_cte('source', 'SELECT DISTINCT')}, sz AS (
+    ), {_sh_cte('source')}, sz AS (
       SELECT source, CAST(count(*) AS BIGINT) AS sz
       FROM sh GROUP BY source
     ), inter AS (

@@ -765,15 +765,13 @@ sql_tpch_q6 = _q("sql_tpch_q6", _Q6_SQL, ("lineitem",))(
 # ------------------------------------------------ TPC-H q10 shape
 
 
-_Q10_SQL = """
+_Q10_SQL = f"""
     SELECT c.c_custkey, c.c_name, n.n_name, c.c_acctbal,
-           (CAST(sum(CAST(round(l.l_extendedprice * (1 - l.l_discount)
-                                * 1000000) AS BIGINT)) AS DOUBLE)
-            / 1000000.0) AS revenue
-    FROM {p}customer c
-    JOIN {p}orders o ON c.c_custkey = o.o_custkey
-    JOIN {p}lineitem l ON l.l_orderkey = o.o_orderkey
-    JOIN {p}nation n ON c.c_nationkey = n.n_nationkey
+           (CAST(sum({_REV}) AS DOUBLE) / 1000000.0) AS revenue
+    FROM {{p}}customer c
+    JOIN {{p}}orders o ON c.c_custkey = o.o_custkey
+    JOIN {{p}}lineitem l ON l.l_orderkey = o.o_orderkey
+    JOIN {{p}}nation n ON c.c_nationkey = n.n_nationkey
     WHERE o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
       AND o.o_orderdate <  TIMESTAMP '1996-07-01 00:00:00'
       AND l.l_returnflag = 'R'
@@ -798,15 +796,13 @@ sql_tpch_q10 = _q(
 # ------------------------------------------------ TPC-H q14 shape
 
 
-_Q14_SQL = """
+_Q14_SQL = f"""
     SELECT (100.0 * CAST(sum(CASE WHEN p.p_type LIKE 'PROMO%%'
-             THEN CAST(round(l.l_extendedprice * (1 - l.l_discount)
-                             * 1000000) AS BIGINT) ELSE 0 END) AS DOUBLE)
-            / CAST(sum(CAST(round(l.l_extendedprice * (1 - l.l_discount)
-                                  * 1000000) AS BIGINT)) AS DOUBLE))
+             THEN {_REV} ELSE 0 END) AS DOUBLE)
+            / CAST(sum({_REV}) AS DOUBLE))
            AS promo_revenue_pct
-    FROM {p}lineitem l
-    JOIN {p}part p ON l.l_partkey = p.p_partkey
+    FROM {{p}}lineitem l
+    JOIN {{p}}part p ON l.l_partkey = p.p_partkey
     WHERE l.l_shipdate >= TIMESTAMP '1996-03-01 00:00:00'
       AND l.l_shipdate <  TIMESTAMP '1996-04-01 00:00:00'
 """

@@ -6,13 +6,6 @@ import struct
 
 import pytest
 
-from _proto_compat import ensure_protobuf
-
-# Module-level on purpose: the worker env is snapshotted when the
-# session JVM launches, so the protobuf shim's PYTHONPATH must be in
-# place before any fixture can create the SparkSession.
-HAVE_PROTOBUF = ensure_protobuf()
-
 # Reference fixture tree (read-only); golden tests skip if absent.
 REFERENCE_RESOURCES = "/root/reference/spark-2.4/src/test/resources"
 

@@ -1,18 +1,27 @@
 """Property-based codec tests (Hypothesis): encode→decode round-trips
-for arbitrary record content, truncation behavior, and calendar
-leniency equivalence against Python's datetime arithmetic."""
+for arbitrary record content, truncation behavior, calendar leniency
+equivalence against Python's datetime arithmetic, PCM WAV decoding, and
+the scan's file prune against an unpruned read filtered in Python."""
 
 from __future__ import annotations
 
 import lzma
 import math
+import operator
 import struct
 from datetime import datetime, timedelta, timezone
 
 import numpy as np
-import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
+from pyspark.sql.datasource import (
+    EqualTo,
+    GreaterThan,
+    GreaterThanOrEqual,
+    In,
+    LessThan,
+    LessThanOrEqual,
+)
 
 from spark_bi5_datasource_spark.sources.bi5_codec import (
     decode_bi5_bytes,
@@ -249,71 +258,6 @@ def test_wav_decode_roundtrip_property(samples, ch, rate):
 
 
 @given(
-    st.integers(-32768, 32767),
-    st.integers(0, 88),
-    st.lists(st.integers(0, 255), min_size=4, max_size=64),
-    st.sampled_from([1, 2]),
-)
-@settings(max_examples=60, deadline=None)
-def test_ima_adpcm_matches_audioop_property(pred0, idx0, nibbles, ch):
-    """The IMA ADPCM block decoder reproduces the stdlib ``audioop``
-    DVI/IMA recurrence (an independent C implementation of the same
-    public spec) nibble-for-nibble: sample 0 is the block header's
-    predictor, samples 1.. equal ``adpcm2lin`` seeded with the same
-    (predictor, index) state.  WAV packs low-nibble-first and
-    interleaves 4-byte words channel-major; audioop packs
-    high-nibble-first with no framing — the test re-packs
-    accordingly."""
-    import struct
-    import warnings
-
-    import numpy as np
-
-    audioop = pytest.importorskip("audioop")  # removed in Python 3.13
-    from spark_bi5_datasource_spark.functions.multimodal import _audio_samples
-
-    # pad the per-channel nibble stream to whole 4-byte words
-    nib = nibbles[: len(nibbles) - len(nibbles) % 8] or nibbles + [0] * (
-        8 - len(nibbles)
-    )
-    words = len(nib) // 8  # 8 nibbles = one 4-byte word per channel
-    chan_bytes = bytes(
-        (nib[2 * i] & 0xF) | ((nib[2 * i + 1] & 0xF) << 4)
-        for i in range(len(nib) // 2)
-    )
-    # interleave the SAME per-channel stream word-by-word for each channel
-    body = b"".join(
-        chan_bytes[4 * w : 4 * w + 4] * ch for w in range(words)
-    )
-    header = struct.pack("<hBB", pred0, idx0, 0) * ch
-    balign = len(header) + len(body)
-    wav = (
-        b"RIFF" + struct.pack("<I", 40 + balign) + b"WAVE"
-        + b"fmt "
-        + struct.pack("<IHHIIHHH", 18, 17, ch, 8000, 0, balign, 4, 0)
-        + b"data" + struct.pack("<I", balign) + header + body
-    )
-    frames = 1 + len(nib)
-    got, rate = _audio_samples(wav)
-    assert rate == 8000 and got.shape == (frames, ch)
-    # audioop oracle: high-nibble-first packing of the same nibbles
-    op_bytes = bytes(
-        ((nib[2 * i] & 0xF) << 4) | (nib[2 * i + 1] & 0xF)
-        for i in range(len(nib) // 2)
-    )
-    with warnings.catch_warnings():
-        warnings.simplefilter("ignore")
-        ref, _ = audioop.adpcm2lin(op_bytes, 2, (pred0, idx0))
-    want = np.concatenate(
-        [[pred0], np.frombuffer(ref, "<i2").astype(np.int64)]
-    )
-    for c in range(ch):
-        assert np.array_equal(
-            np.round(got[:, c] * 32768.0).astype(np.int64), want
-        )
-
-
-@given(
     st.lists(
         st.tuples(st.integers(0, 65535), st.integers(0, 65535)),
         min_size=1,
@@ -342,72 +286,139 @@ def test_zvalue_bijective_and_bounded_property(pairs):
     assert all(0 <= v < 1 << 32 for v in zs)
 
 
-# ------------------------------------------------- image codec properties
+# ------------------------------------------------------ scan prune property
 
+_TICKERS = ("EURUSD", "USDJPY", "XAUUSD")
+# offsets at and around the edges of a file's hour; the last two lie
+# outside it, where the codec drops the record
+_EDGE_MS = (0, 1, 1_799_999, 3_599_999, 3_600_000, 7_200_000)
+# hour slot 0 is 2020-01-01 22:00 UTC
+_T0 = datetime(2020, 1, 1, 22, tzinfo=timezone.utc)
 
-@given(
-    st.integers(1, 24),
-    st.integers(1, 24),
-    st.sampled_from([1, 2, 3, 4]),
-    st.integers(0, 2**32 - 1),
+_tick_file = st.tuples(
+    st.sampled_from(_TICKERS),
+    st.integers(0, 3),  # hour slot; slots 2-3 fall on 2020-01-02
+    st.booleans(),  # slots 2-3 under the rolled-over path (01/24h ≡ 02/00h)
+    st.lists(
+        st.tuples(
+            st.one_of(st.sampled_from(_EDGE_MS), st.integers(0, 7_300_000)),
+            st.integers(1, 999),
+        ),
+        max_size=5,
+    ),
 )
-@settings(max_examples=60, deadline=None)
-def test_png_roundtrip_property(h, w, ch, seed):
-    """PNG encode→decode is the identity for every 8-bit raster shape
-    and channel count (gray / gray+A / RGB / RGBA)."""
-    from spark_bi5_datasource_spark.functions.multimodal import _decode_pixels
-    from tests.media_encoders import _png_encode
-
-    px = np.random.default_rng(seed).integers(0, 256, (h, w, ch), dtype=np.uint8)
-    got = _decode_pixels(_png_encode(px))
-    assert got.shape == px.shape and np.array_equal(got, px)
-
-
-@given(
-    st.integers(1, 20),
-    st.integers(1, 20),
-    st.integers(2, 40),
-    st.integers(0, 2**32 - 1),
+_ts_bound = st.builds(
+    lambda slot, us: _T0 + timedelta(hours=slot, microseconds=us),
+    st.integers(-1, 5),
+    st.one_of(st.just(0), st.sampled_from((-1_000, -1, 1, 1_000, 1_800_000_000))),
 )
-@settings(max_examples=40, deadline=None)
-def test_gif_roundtrip_property(h, w, n_colors, seed):
-    """GIF encode→decode is the identity for every palettizable raster
-    — including single-pixel images and 2-color palettes (the LZW
-    minimum-code-size floor)."""
-    from spark_bi5_datasource_spark.functions.gif_codec import gif_decode
-    from tests.media_encoders import gif_encode
-
-    rng = np.random.default_rng(seed)
-    pal = np.unique(rng.integers(0, 256, (n_colors, 3), dtype=np.uint8), axis=0)
-    px = pal[rng.integers(0, pal.shape[0], (h, w))]
-    assert np.array_equal(gif_decode(gif_encode(px)), px)
-
-
-@given(
-    st.integers(8, 64),
-    st.integers(8, 64),
-    st.integers(0, 2**32 - 1),
-    st.sampled_from([75, 90, 95]),
+_names = st.sampled_from(_TICKERS + ("GBPUSD",))
+_ticker_filters = st.lists(
+    st.one_of(
+        st.builds(lambda v: EqualTo(("ticker",), v), _names),
+        st.builds(lambda vs: In(("ticker",), tuple(vs)), st.lists(_names, min_size=1, max_size=3)),
+    ),
+    max_size=2,
 )
-@settings(max_examples=25, deadline=None)
-def test_jpeg_smooth_roundtrip_bounded_error_property(h, w, seed, quality):
-    """JPEG is lossy, but for any smooth (low-frequency) input the
-    round-trip error stays within a few quant steps at every size —
-    including dimensions that are not block multiples (edge-padded
-    partial MCUs)."""
-    from spark_bi5_datasource_spark.functions.jpeg_codec import jpeg_decode
-    from tests.media_encoders import jpeg_encode
+_ts_filters = st.lists(
+    st.builds(
+        lambda cls, v: cls(("ts",), v),
+        st.sampled_from([GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual]),
+        _ts_bound,
+    ),
+    max_size=3,
+)
+_filters = st.builds(operator.add, _ticker_filters, _ts_filters)
+_options = st.fixed_dictionaries(
+    {"january": st.sampled_from(["0", "1"])},
+    optional={
+        "tickers": st.lists(st.sampled_from(_TICKERS), min_size=1, max_size=2).map(",".join),
+        "start": _ts_bound.map(datetime.isoformat),
+        "end": _ts_bound.map(datetime.isoformat),
+    },
+)
 
-    rng = np.random.default_rng(seed)
-    # smooth field: random plane + gentle sinusoid per channel
-    yy, xx = np.meshgrid(np.arange(h), np.arange(w), indexing="ij")
-    chans = []
-    for _ in range(3):
-        a, b, c = rng.uniform(-1, 1, 3)
-        f = 128 + 60 * (a * xx / w + b * yy / h) + 40 * c * np.sin(xx / 9)
-        chans.append(f)
-    px = np.clip(np.stack(chans, axis=-1), 0, 255).astype(np.uint8)
-    dec = jpeg_decode(jpeg_encode(px, quality=quality))
-    err = np.abs(dec.astype(int) - px.astype(int))
-    assert dec.shape == px.shape
-    assert err.max() <= (6 if quality >= 90 else 14) and err.mean() < 3
+
+@given(st.lists(_tick_file, min_size=1, max_size=8), _filters, _options)
+@example(  # a record two hours into its 22:00 file, read from 23:00 on
+    [("EURUSD", 0, False, [(7_200_000, 7)])],
+    [GreaterThanOrEqual(("ts",), _T0 + timedelta(hours=1))],
+    {"january": "0"},
+)
+@settings(max_examples=50, deadline=None)
+def test_pruned_read_equals_unpruned_read_filtered(tmp_path_factory, files, filters, options):
+    """A read with pushed ticker/ts filters and the tickers/start/end
+    options keeps exactly the rows that an unpruned read keeps under
+    the same predicates, applied in Python, and adds no row the
+    unpruned read lacks.  The trees carry stray names, an empty, a
+    corrupt and an unparseable file, one hour under two paths through
+    the lenient calendar, and records at and past the edges of an
+    hour; the reads use both ``january`` values."""
+    from collections import Counter
+
+    from spark_bi5_datasource_spark.sources.bi5_datasource import Bi5Reader
+    from tests.conftest import make_bi5_bytes, write_bi5
+
+    root = tmp_path_factory.mktemp("prune")
+    strays = {
+        "notes.txt": b"not a tick file",
+        "EURUSD/2020/00/01/22h_ticks.bi5.tmp": make_bi5_bytes([(5, 1, 1, 1.0, 1.0)]),
+        "EURUSD/2020/00/01/stray.bi5": make_bi5_bytes([(5, 1, 1, 1.0, 1.0)]),
+        "GBPUSD/2020/00/01/22h_ticks.bi5": b"",
+        "GBPUSD/2020/00/01/23h_ticks.bi5": make_bi5_bytes(
+            [(0, 1, 1, 1.0, 1.0), (3_599_999, 2, 2, 1.0, 1.0), (3_600_000, 3, 3, 1.0, 1.0)]
+        )[:-7],
+    }
+    for rel, data in strays.items():
+        (root / rel).parent.mkdir(parents=True, exist_ok=True)
+        (root / rel).write_bytes(data)
+    month = f"{int(options['january']):02d}"  # January under either convention
+    for ticker, slot, rolled, recs in files:
+        day, hour = (1, 22 + slot) if slot < 2 or rolled else (2, slot - 2)
+        write_bi5(
+            str(root / f"{ticker}/2020/{month}/{day:02d}/{hour:02d}h_ticks.bi5"),
+            [(ms, v, v, 1.0, 1.0) for ms, v in recs],
+        )
+
+    def rows(reader):
+        return [
+            row
+            for part in reader.partitions()
+            for batch in reader.read(part)
+            for row in zip(*(c.to_pylist() for c in batch.columns))
+        ]
+
+    base = {"path": str(root), "digits": "3", "january": options["january"]}
+    pruned = Bi5Reader({**base, **options})
+    list(pruned.pushFilters(filters))
+    predicates = list(filters)
+    if "tickers" in options:
+        predicates.append(In(("ticker",), tuple(options["tickers"].split(","))))
+    if "start" in options:
+        predicates.append(GreaterThanOrEqual(("ts",), datetime.fromisoformat(options["start"])))
+    if "end" in options:
+        predicates.append(LessThanOrEqual(("ts",), datetime.fromisoformat(options["end"])))
+    ops = {
+        GreaterThan: operator.gt,
+        GreaterThanOrEqual: operator.ge,
+        LessThan: operator.lt,
+        LessThanOrEqual: operator.le,
+    }
+
+    def holds(row):
+        ticker, ts = row[0], row[1]
+        for f in predicates:
+            if isinstance(f, EqualTo):
+                ok = ticker == f.value
+            elif isinstance(f, In):
+                ok = ticker in f.value
+            else:
+                ok = ops[type(f)](ts, f.value)
+            if not ok:
+                return False
+        return True
+
+    got = rows(pruned)
+    full = rows(Bi5Reader(base))
+    assert not Counter(got) - Counter(full)  # the prune adds no row
+    assert sorted(filter(holds, got)) == sorted(filter(holds, full))

@@ -907,131 +907,16 @@ class TestMultimodalKernels:
 
         from spark_bi5_datasource_spark.functions.multimodal import _decode_pixels
 
-        # PNG, baseline JPEG, and GIF decode for real (tests below);
-        # formats still outside the pure-Python codecs reject cleanly
-        with pytest.raises(NotImplementedError, match="imaging library"):
-            _decode_pixels(b"II*\x00" + bytes(64))  # TIFF
-
-    # ---- PNG: stdlib-zlib + NumPy-unfilter codec ------------------
-
-    @staticmethod
-    def _png_manual(px, filters):
-        """Independent forward PNG filtering (vectorized, per the spec
-        formulas) — the module's sequential unfilter must invert it."""
-        import struct
-        import zlib as _z
-
-        import numpy as np
-
-        h, w, ch = px.shape
-        bpp = ch
-
-        def chunk(ctype, body):
-            return (
-                struct.pack(">I", len(body)) + ctype + body
-                + struct.pack(">I", _z.crc32(ctype + body))
-            )
-
-        raw = bytearray()
-        prev = np.zeros(w * ch, np.int64)
-        for y, f in zip(range(h), filters):
-            cur = px[y].reshape(-1).astype(np.int64)
-            left = np.concatenate([np.zeros(bpp, np.int64), cur[:-bpp]])
-            ul = np.concatenate([np.zeros(bpp, np.int64), prev[:-bpp]])
-            if f == 0:
-                filt = cur
-            elif f == 1:
-                filt = cur - left
-            elif f == 2:
-                filt = cur - prev
-            elif f == 3:
-                filt = cur - (left + prev) // 2
-            else:  # Paeth
-                p = left + prev - ul
-                pa, pb, pc = abs(p - left), abs(p - prev), abs(p - ul)
-                pred = np.where(
-                    (pa <= pb) & (pa <= pc), left, np.where(pb <= pc, prev, ul)
-                )
-                filt = cur - pred
-            raw.append(f)
-            raw.extend((filt % 256).astype(np.uint8).tobytes())
-            prev = cur
-        ihdr = struct.pack(">IIBBBBB", w, h, 8, {1: 0, 3: 2, 4: 6}[ch], 0, 0, 0)
-        return (
-            b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", _z.compress(bytes(raw)))
-            + chunk(b"IEND", b"")
-        )
-
-    def test_png_unfilter_inverts_all_five_filters(self):
-        import numpy as np
-
-        from spark_bi5_datasource_spark.functions.multimodal import _decode_pixels
-
-        rng = np.random.default_rng(7)
-        px = rng.integers(0, 256, (5, 11, 3), dtype=np.uint8)
-        payload = self._png_manual(px, filters=[0, 1, 2, 3, 4])
-        got = _decode_pixels(payload)
-        assert (got == px).all()
-
-    def test_png_encode_decode_roundtrip_channel_counts(self):
-        import numpy as np
-
-        from spark_bi5_datasource_spark.functions.multimodal import _decode_pixels
-        from tests.media_encoders import _png_encode
-
-        rng = np.random.default_rng(11)
-        for ch in (1, 2, 3, 4):  # gray / gray+A / RGB / RGBA
-            px = rng.integers(0, 256, (6, 9, ch), dtype=np.uint8)
-            got = _decode_pixels(_png_encode(px))
-            assert got.shape == (6, 9, ch) and (got == px).all()
-
-    def test_png_palette_resolves_to_rgb(self):
-        import struct
-        import zlib as _z
-
-        import numpy as np
-
-        from spark_bi5_datasource_spark.functions.multimodal import _decode_pixels
-
-        def chunk(ctype, body):
-            return (
-                struct.pack(">I", len(body)) + ctype + body
-                + struct.pack(">I", _z.crc32(ctype + body))
-            )
-
-        pal = np.array([[250, 0, 0], [0, 250, 0], [0, 0, 250]], np.uint8)
-        idx = np.array([[0, 1, 2], [2, 1, 0]], np.uint8)
-        ihdr = struct.pack(">IIBBBBB", 3, 2, 8, 3, 0, 0, 0)
-        raw = b"".join(b"\x00" + idx[y].tobytes() for y in range(2))
-        payload = (
-            b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-            + chunk(b"PLTE", pal.tobytes())
-            + chunk(b"IDAT", _z.compress(raw)) + chunk(b"IEND", b"")
-        )
-        got = _decode_pixels(payload)
-        assert got.shape == (2, 3, 3) and (got == pal[idx]).all()
-
-    def test_png_unsupported_variants_raise(self):
-        import struct
-        import zlib as _z
-
-        import pytest
-
-        from spark_bi5_datasource_spark.functions.multimodal import _decode_pixels
-
-        def png_with_ihdr(depth, ct, interlace):
-            ihdr = struct.pack(">IIBBBBB", 2, 2, depth, ct, 0, 0, interlace)
-            body = (
-                struct.pack(">I", len(ihdr)) + b"IHDR" + ihdr
-                + struct.pack(">I", _z.crc32(b"IHDR" + ihdr))
-            )
-            return b"\x89PNG\r\n\x1a\n" + body
-
-        with pytest.raises(NotImplementedError, match="Adam7"):
-            _decode_pixels(png_with_ihdr(8, 2, 1))
-        with pytest.raises(NotImplementedError, match="8-bit"):
-            _decode_pixels(png_with_ihdr(16, 2, 0))
+        # only netpbm and 24-bit BMP decode; every other image format
+        # rejects cleanly (the extract_* kernels turn that into a null)
+        for payload in (
+            b"II*\x00" + bytes(64),  # TIFF
+            b"\x89PNG\r\n\x1a\n" + bytes(64),  # PNG
+            b"\xff\xd8\xff\xe0" + bytes(64),  # JPEG
+            b"GIF89a" + bytes(64),  # GIF
+        ):
+            with pytest.raises(NotImplementedError, match="imaging library"):
+                _decode_pixels(payload)
 
 class TestAudioKernels:
     """Real (codec-free) PCM WAV decoding."""
@@ -1081,114 +966,16 @@ class TestAudioKernels:
 
         with pytest.raises(ValueError, match="RIFF"):
             _audio_samples(b"OggS" + bytes(64))
-        # format tag 3 = IEEE float → needs a codec path we don't have
+        # tags 2 (MS-ADPCM), 3 (IEEE float), 6 (A-law), 7 (μ-law) and
+        # 17 (IMA ADPCM) all need a codec path we don't have
         f = self._wav(10)
-        bad = f.replace(
-            b"fmt " + struct.pack("<IHH", 16, 1, 1),
-            b"fmt " + struct.pack("<IHH", 16, 3, 1),
-        )
-        with pytest.raises(NotImplementedError, match="PCM"):
-            _audio_samples(bad)
-
-class TestG711Companding:
-    """μ-law / A-law WAV (G.711): the decoders are vectorized formula
-    implementations; independent scalar FORWARD companders here pin
-    them as mutual inverses over the entire byte domain."""
-
-    @staticmethod
-    def _ulaw_encode(v: int) -> int:
-        s = 0x80 if v < 0 else 0
-        m = min(abs(v), 32635) + 0x84
-        exp = m.bit_length() - 8
-        mant = (m >> (exp + 3)) & 0xF
-        return (~(s | (exp << 4) | mant)) & 0xFF
-
-    @staticmethod
-    def _alaw_encode(v: int) -> int:
-        s = 0x80 if v >= 0 else 0
-        m = min(abs(v), 32767)
-        if m < 256:
-            exp, mant = 0, m >> 4
-        else:
-            exp = m.bit_length() - 8
-            mant = (m >> (exp + 3)) & 0xF
-        return (s | (exp << 4) | mant) ^ 0x55
-
-    def test_companders_are_mutual_inverses_on_all_bytes(self):
-        import numpy as np
-
-        from spark_bi5_datasource_spark.functions.multimodal import (
-            _alaw_decode, _ulaw_decode,
-        )
-
-        all_bytes = np.arange(256, dtype=np.uint8)
-        u = _ulaw_decode(all_bytes)
-        a = _alaw_decode(all_bytes)
-        assert u.max() == 32124 and u.min() == -32124  # G.711 μ-law range
-        assert a.max() == 32256 and a.min() == -32256  # G.711 A-law range
-        for b in range(256):
-            # μ-law has two zero codewords (0x7F = -0, 0xFF = +0); the
-            # encoder canonicalizes both to +0 — everywhere else the
-            # byte domain round-trips exactly
-            if u[b] == 0 and b == 0x7F:
-                assert self._ulaw_encode(0) == 0xFF
-            else:
-                assert self._ulaw_encode(int(u[b])) == b, ("ulaw", b)
-            assert self._alaw_encode(int(a[b])) == b, ("alaw", b)
-
-    @staticmethod
-    def _companded_wav(codec_tag, payload, ch=1, rate=8000):
-        import struct
-
-        chunks = (
-            b"fmt "
-            + struct.pack("<IHHIIHH", 16, codec_tag, ch, rate, rate * ch, ch, 8)
-            + b"data" + struct.pack("<I", len(payload)) + payload
-        )
-        return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
-
-    def test_wav_surface_decodes_companded_audio(self):
-        import numpy as np
-
-        from spark_bi5_datasource_spark.functions.multimodal import _audio_samples
-
-        sig = np.round(np.sin(np.arange(400) * 0.07) * 20000).astype(int)
-        for tag, enc in ((7, self._ulaw_encode), (6, self._alaw_encode)):
-            payload = bytes(enc(int(v)) for v in sig)
-            x, rate = _audio_samples(self._companded_wav(tag, payload))
-            assert (x.shape, rate) == ((400, 1), 8000)
-            # companding error ≪ signal level: the RMS matches PCM truth
-            rms = np.sqrt(np.mean(np.square(x)))
-            assert abs(rms - np.sqrt(np.mean((sig / 32768) ** 2))) < 0.01
-
-    def test_ima_adpcm_decodes_msadpcm_still_rejects(self):
-        """IMA ADPCM (tag 17) is now a real decoder (see
-        test_ima_adpcm_matches_audioop_property for the value-level
-        oracle); MS-ADPCM (tag 2) and MP3-in-WAV (tag 85) stay
-        honestly rejected."""
-        import struct
-
-        import pytest
-
-        from spark_bi5_datasource_spark.functions.multimodal import _audio_samples
-
-        # tag-17 needs bits=4 + block_align: a 12-byte mono block
-        # (4-byte header + 8 nibble bytes) = 17 samples
-        body = struct.pack("<hBB", 100, 20, 0) + bytes(8)
-        chunks = (
-            b"fmt "
-            + struct.pack("<IHHIIHHH", 18, 17, 1, 8000, 0, len(body), 4, 0)
-            + b"data" + struct.pack("<I", len(body)) + body
-        )
-        wav = b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
-        x, rate = _audio_samples(wav)
-        assert (x.shape, rate) == ((17, 1), 8000)
-
-        for tag in (2, 85):
-            bad = self._companded_wav(tag, bytes(64))
-            with pytest.raises(NotImplementedError, match="codec library"):
+        for tag in (2, 3, 6, 7, 17):
+            bad = f.replace(
+                b"fmt " + struct.pack("<IHH", 16, 1, 1),
+                b"fmt " + struct.pack("<IHH", 16, tag, 1),
+            )
+            with pytest.raises(NotImplementedError, match="PCM"):
                 _audio_samples(bad)
-
 
 class TestMergeUpsert:
     def _target(self, spark):
@@ -1516,55 +1303,12 @@ class TestVideoKernels:
         dc = avi.replace(b"00db", b"00dc")
         with pytest.raises(NotImplementedError, match="codec"):
             sample_frames(dc, 1)
-
-    @staticmethod
-    def _mjpeg_avi(w, h, n_frames):
-        import struct
-
-        import numpy as np
-
-        from tests.media_encoders import jpeg_encode
-
-        frames = []
-        for f in range(n_frames):
-            px = np.full((h, w, 3), 40 + 20 * f, np.uint8)
-            frames.append(jpeg_encode(px, quality=95))
-        strf = b"strf" + struct.pack(
-            "<I" + "Iii HHIIiiII".replace(" ", ""),
-            40, 40, w, h, 1, 24,
-            struct.unpack("<I", b"MJPG")[0], 0, 0, 0, 0, 0,
+        # an MJPG strf (planes, bpp, compression) is rejected too
+        mjpg = avi.replace(
+            struct.pack("<HHI", 1, 24, 0), struct.pack("<HH4s", 1, 24, b"MJPG"), 1
         )
-        strh = b"strh" + struct.pack("<I", 8) + b"vids" + b"MJPG"
-        strl = (
-            b"LIST" + struct.pack("<I", 4 + len(strh) + len(strf))
-            + b"strl" + strh + strf
-        )
-        hdrl = b"LIST" + struct.pack("<I", 4 + len(strl)) + b"hdrl" + strl
-        movi_body = b"".join(
-            b"00dc" + struct.pack("<I", len(fr)) + fr
-            + (b"\x00" if len(fr) & 1 else b"")
-            for fr in frames
-        )
-        movi = b"LIST" + struct.pack("<I", 4 + len(movi_body)) + b"movi" + movi_body
-        body = b"AVI " + hdrl + movi
-        return b"RIFF" + struct.pack("<I", len(body)) + body, frames
-
-    def test_mjpeg_frames_sample_and_decode(self):
-        import numpy as np
-
-        from spark_bi5_datasource_spark.functions.multimodal import (
-            _decode_pixels,
-            sample_frames,
-        )
-
-        avi, frames = self._mjpeg_avi(16, 8, 5)
-        got = sample_frames(avi, every_n=2)
-        assert len(got) == 3 and [g[:2] for g in got] == [b"\xff\xd8"] * 3
-        assert got[1] == frames[2]  # frames pass through byte-identical
-        for i, g in zip((0, 2, 4), got):
-            px = _decode_pixels(g)
-            assert px.shape == (8, 16, 3)
-            assert abs(int(np.median(px)) - (40 + 20 * i)) <= 1
+        with pytest.raises(NotImplementedError, match="24-bit DIB"):
+            sample_frames(mjpg, 1)
 
 
 class TestWhitenPerGroup:
@@ -2012,246 +1756,6 @@ class TestTopKSketch:
         for tok, cnt in exact.items():
             if cnt > n / width:
                 assert out.get(tok) == cnt, tok
-
-
-class TestJpegCodec:
-    """Pure-NumPy baseline JPEG decoder (functions/jpeg_codec.py) and
-    the test encoder (tests/media_encoders.py) are independent
-    implementations of the wire format (the encoder uses fixed-length
-    canonical tables, the decoder handles arbitrary DHT tables), so
-    round-trip agreement within the quant step pins both sides."""
-
-    @staticmethod
-    def _gradient(h=24, w=40):
-        import numpy as np
-
-        yy, xx = np.meshgrid(np.arange(h), np.arange(w), indexing="ij")
-        return np.stack([
-            xx * 255 / (w - 1), yy * 255 / (h - 1),
-            (xx + yy) * 255 / (w + h - 2),
-        ], axis=-1).astype(np.uint8)
-
-    def test_roundtrip_within_quant_step(self):
-        import numpy as np
-
-        from spark_bi5_datasource_spark.functions.jpeg_codec import jpeg_decode
-        from tests.media_encoders import jpeg_dims, jpeg_encode
-
-        px = self._gradient()
-        enc = jpeg_encode(px, quality=95)
-        assert jpeg_dims(enc) == (40, 24)
-        err = np.abs(jpeg_decode(enc).astype(int) - px.astype(int))
-        assert err.max() <= 2 and err.mean() < 0.5
-
-    def test_constant_and_grayscale_exact(self):
-        import numpy as np
-
-        from spark_bi5_datasource_spark.functions.jpeg_codec import jpeg_decode
-        from tests.media_encoders import jpeg_encode
-
-        c = np.full((16, 16, 3), 77, np.uint8)
-        assert (jpeg_decode(jpeg_encode(c, quality=95)) == c).all()
-        g = self._gradient()[:, :, :1]
-        err = np.abs(jpeg_decode(jpeg_encode(g, quality=95)).astype(int) - g)
-        assert err.max() <= 1
-
-    def test_chroma_subsampling_420(self):
-        import numpy as np
-
-        from spark_bi5_datasource_spark.functions.jpeg_codec import jpeg_decode
-        from tests.media_encoders import jpeg_encode
-
-        px = self._gradient()
-        dec = jpeg_decode(jpeg_encode(px, quality=95, subsample=True))
-        err = np.abs(dec.astype(int) - px.astype(int))
-        assert dec.shape == px.shape and err.max() <= 12 and err.mean() < 4
-
-    def test_restart_markers(self):
-        import numpy as np
-
-        from spark_bi5_datasource_spark.functions.jpeg_codec import jpeg_decode
-        from tests.media_encoders import jpeg_encode
-
-        px = self._gradient()
-        enc = jpeg_encode(px, quality=95, restart_interval=2)
-        assert b"\xff\xdd" in enc and b"\xff\xd0" in enc  # DRI + RST0
-        err = np.abs(jpeg_decode(enc).astype(int) - px.astype(int))
-        assert err.max() <= 2
-
-    def test_multimodal_dispatch(self):
-        from spark_bi5_datasource_spark.functions.multimodal import _decode_pixels
-        from tests.media_encoders import jpeg_encode
-
-        px = _decode_pixels(jpeg_encode(self._gradient(), quality=95))
-        assert px.shape == (24, 40, 3)
-
-    def test_canonical_huffman_matches_spec_assignment(self):
-        # the standard luminance-DC table's well-known code assignment
-        from spark_bi5_datasource_spark.functions.jpeg_codec import _build_huffman
-
-        bits = [0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0]
-        t = _build_huffman(bits, list(range(12)))
-        inv = {sym: lc for lc, sym in t.items()}
-        assert inv[0] == (2, 0b00)
-        assert inv[1] == (3, 0b010)
-        assert inv[5] == (3, 0b110)
-        assert inv[6] == (4, 0b1110)
-        assert inv[11] == (9, 0b111111110)
-
-    def test_progressive_rejected(self):
-        import struct
-
-        import pytest
-
-        from spark_bi5_datasource_spark.functions.jpeg_codec import jpeg_decode
-
-        sof2 = struct.pack(">BHHB", 8, 4, 4, 1) + bytes([1, 0x11, 0])
-        data = (
-            b"\xff\xd8"
-            + struct.pack(">BBH", 0xFF, 0xC2, len(sof2) + 2) + sof2
-            + b"\xff\xd9"
-        )
-        with pytest.raises(NotImplementedError, match="baseline"):
-            jpeg_decode(data)
-
-    def test_foreign_encoder_files(self):
-        """Files produced by real-world encoders (CPython/IPython test
-        data, rust docs — present on this image, skipped elsewhere):
-        a single bit of Huffman desync would cascade, so clean decode
-        to the header dims over thousands of blocks pins the decoder
-        against independent producers."""
-        import os
-
-        import numpy as np
-        import pytest
-
-        candidates = [
-            "/mnt/sandboxing/model_tools_env/v1/python/install/lib/"
-            "python3.11/test/imghdrdata/python.jpg",
-            "/root/.rustup/toolchains/stable-x86_64-unknown-linux-gnu/"
-            "share/doc/rust/html/embedded-book/assets/verify.jpeg",
-        ]
-        found = [p for p in candidates if os.path.isfile(p)]
-        if not found:
-            pytest.skip("no foreign JPEG fixtures on this image")
-        from spark_bi5_datasource_spark.functions.jpeg_codec import jpeg_decode
-        from tests.media_encoders import jpeg_dims
-
-        for p in found:
-            data = open(p, "rb").read()
-            w, h = jpeg_dims(data)
-            px = jpeg_decode(data)
-            assert px.shape[:2] == (h, w)
-            assert np.ptp(px) > 0  # non-degenerate content
-
-
-class TestGifCodec:
-    """Pure-Python GIF/LZW (functions/gif_codec.py).  The decoder's
-    code-width schedule is pinned by real-world files (every idlelib
-    icon — a single off-by-one in the width bump desyncs the LZW walk
-    immediately); the test encoder (tests/media_encoders.py)
-    round-trips bit-exact against it."""
-
-    @staticmethod
-    def _palette_image(n_colors, h, w, seed=1):
-        import numpy as np
-
-        rng = np.random.default_rng(seed)
-        pal = np.unique(
-            rng.integers(0, 256, (n_colors, 3), dtype=np.uint8), axis=0
-        )
-        return pal[rng.integers(0, pal.shape[0], (h, w))]
-
-    def test_roundtrip_exact_through_width_growth(self):
-        from spark_bi5_datasource_spark.functions.gif_codec import gif_decode
-        from tests.media_encoders import gif_encode
-
-        # enough entropy that the LZW dictionary crosses several
-        # code-width boundaries
-        px = self._palette_image(200, 64, 64)
-        assert (gif_decode(gif_encode(px)) == px).all()
-        tiny = self._palette_image(2, 9, 7)
-        assert (gif_decode(gif_encode(tiny)) == tiny).all()
-
-    def test_interlaced_rows_reordered(self):
-        import struct
-
-        import numpy as np
-
-        from spark_bi5_datasource_spark.functions.gif_codec import gif_decode
-        from tests.media_encoders import _lzw_encode
-
-        pal = np.array([[i, 0, 0] for i in range(16)], np.uint8)
-        h, w = 13, 4
-        idx = np.arange(h * w).reshape(h, w) % 16
-        # rows serialized in Adam-style pass order, interlace flag set
-        order = (
-            list(range(0, h, 8)) + list(range(4, h, 8))
-            + list(range(2, h, 4)) + list(range(1, h, 2))
-        )
-        serial = idx[order].astype(np.uint8).reshape(-1)
-        out = bytearray(b"GIF89a")
-        out += struct.pack("<HHBBB", w, h, 0x80 | 3, 0, 0)
-        out += pal.tobytes() + bytes(3 * 16 - pal.size)
-        out += b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, 0x40)
-        out.append(4)
-        blob = _lzw_encode(serial, 4)
-        for i in range(0, len(blob), 255):
-            chunk = blob[i : i + 255]
-            out.append(len(chunk))
-            out += chunk
-        out += b"\x00\x3b"
-        got = gif_decode(bytes(out))
-        pal_full = np.vstack([pal, np.zeros((240, 3), np.uint8)])
-        assert (got == pal_full[idx]).all()
-
-    def test_real_world_files(self):
-        import glob
-        import os
-
-        import pytest
-
-        from spark_bi5_datasource_spark.functions.gif_codec import (
-            gif_decode, gif_dims,
-        )
-
-        icons = sorted(glob.glob(
-            "/mnt/sandboxing/model_tools_env/v1/python/install/"
-            "lib/python3.11/idlelib/Icons/*.gif"
-        ))
-        if not icons:
-            pytest.skip("no foreign GIF fixtures on this image")
-        for p in icons:
-            data = open(p, "rb").read()
-            w, h = gif_dims(data)
-            assert gif_decode(data).shape == (h, w, 3), os.path.basename(p)
-
-    def test_multimodal_dispatch(self):
-        from spark_bi5_datasource_spark.functions.multimodal import _decode_pixels
-        from tests.media_encoders import gif_encode
-
-        px = self._palette_image(7, 10, 20)
-        got = _decode_pixels(gif_encode(px))
-        assert (got == px).all()
-
-    def test_unpalettizable_rejected_truncated_tolerated(self):
-        import numpy as np
-        import pytest
-
-        from spark_bi5_datasource_spark.functions.gif_codec import gif_decode
-        from tests.media_encoders import gif_encode
-
-        # 300 guaranteed-distinct 24-bit colors > the 256-entry table
-        c = (np.arange(300, dtype=np.int64) * 65539) % (1 << 24)
-        many = np.stack(
-            [c >> 16, (c >> 8) & 255, c & 255], axis=-1
-        ).astype(np.uint8).reshape(20, 15, 3)
-        with pytest.raises(NotImplementedError, match="palettizable"):
-            gif_encode(many)
-        px = self._palette_image(5, 16, 16)
-        enc = gif_encode(px)
-        got = gif_decode(enc[: len(enc) - 12] + b"\x00\x3b")
-        assert got.shape == px.shape  # truncated LZW pads, never throws
 
 
 class TestApproxQuantiles:
@@ -3106,7 +2610,8 @@ class TestMediaPhashDedup:
 class TestAudioFingerprintDedup:
     """Audio-fingerprint dedup (plans/dedup_ops.py twin): real WAV
     payloads the catalog synthesizer did NOT produce — different
-    sample rates, lengths, and codecs collapsing to one fingerprint."""
+    sample rates, lengths, and PCM bit depths collapsing to one
+    fingerprint."""
 
     @staticmethod
     def _wav(vals, bits=16, rate=8000):

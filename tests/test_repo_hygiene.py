@@ -3,7 +3,7 @@ file and module name the code cites exists, every bi5 option is
 documented, every package def is reachable, and the catalog reads
 parquet in one place.
 
-Six checks, no Spark:
+Checks, no Spark:
 
 - each file in ``scripts/`` is named in README.md;
 - each ``scripts/<name>.py``, ``plans/r<NN>/``, root
@@ -22,7 +22,11 @@ Six checks, no Spark:
   names it; and each ``__all__`` name is used by reached code or named
   by a test;
 - no module under ``plans/`` but ``plans/tables.py`` calls
-  ``read.parquet``: fixtures load through its schema-pinning reader.
+  ``read.parquet``: fixtures load through its schema-pinning reader;
+- no two module-level constants hold the same string, and no string
+  literal spells out (whitespace aside) a 40-character-or-longer
+  module-level string held by another binding: shared oracle fragments
+  are interpolated, not copied.
 """
 
 from __future__ import annotations
@@ -63,7 +67,6 @@ BI5_OPTION_READERS = (
 UNROOTED_SURFACES = {
     f"{PACKAGE}/plans/scale_audit.py": ("README.md", "explain_scale"),
     f"{PACKAGE}/functions/bi5_udtf.py": ("SURVEY.md", "`bi5_decode` UDTF"),
-    f"{PACKAGE}/streaming/tws.py": ("SURVEY.md", "transformWithState"),
     f"{PACKAGE}/sources/layout.py:validate_bucketed": ("README.md", "`validate_bucketed`"),
     f"{PACKAGE}/sources/layout.py:bucket_fragmentation": ("README.md", "`bucket_fragmentation`"),
     f"{PACKAGE}/sources/layout.py:compact_buckets_selective": (
@@ -730,3 +733,107 @@ def test_no_repeated_constants():
     }
     repeated = repeated_constants(sources)
     assert not repeated, f"define each shared string once and import it: {repeated}"
+
+
+def _squash(text: str) -> str:
+    """Collapse whitespace runs to one space and drop the space next to
+    a bracket or comma, so copies of a SQL fragment compare equal
+    however they break their lines."""
+    return re.sub(r" ?([()\[\],]) ?", r"\1", " ".join(text.split()))
+
+
+def _str_value(node: ast.AST, scope: dict[str, str]) -> str | None:
+    """The string a module-level expression evaluates to, or None:
+    literals, and f-strings, ``+`` and ``str.format`` over them and over
+    the string bindings in ``scope``."""
+    if isinstance(node, ast.Constant):
+        return node.value if isinstance(node.value, str) else None
+    if isinstance(node, ast.Name):
+        return scope.get(node.id)
+    if isinstance(node, ast.JoinedStr):
+        parts = []
+        for v in node.values:
+            if isinstance(v, ast.FormattedValue):
+                if v.conversion != -1 or v.format_spec:
+                    return None
+                v = v.value
+            parts.append(_str_value(v, scope))
+        return None if None in parts else "".join(parts)
+    if isinstance(node, ast.BinOp) and isinstance(node.op, ast.Add):
+        a, b = _str_value(node.left, scope), _str_value(node.right, scope)
+        return None if a is None or b is None else a + b
+    if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+        base = _str_value(node.func.value, scope)
+        kw = {k.arg: _str_value(k.value, scope) for k in node.keywords}
+        if node.func.attr == "format" and base is not None and not node.args:
+            if None not in kw and None not in kw.values():
+                return base.format(**kw)
+    return None
+
+
+def inlined_constants(sources: dict[str, str], min_len: int = 40) -> list[str]:
+    """String literals that spell out the text of a module-level string
+    binding of at least ``min_len`` characters held elsewhere, compared
+    after ``_squash``: ``"<path>:<line> spells <path>:<name>"``.
+    Bindings are evaluated statically (``_str_value``), following
+    ``from .x import name`` across modules."""
+    graph = ReferenceGraph(sources)
+    values: dict[str, dict[str, str]] = {d: {} for d in graph.trees}
+    defs: dict[tuple[str, str], ast.Assign] = {}
+    changed = True
+    while changed:  # to a fixpoint: a binding may read an import
+        changed = False
+        for dotted, (rel, tree) in graph.trees.items():
+            scope = {
+                name: values.get(b[1], {}).get(b[2])
+                for name, b in graph.bindings[dotted].items()
+                if b[0] == "name"
+            }
+            scope = {k: v for k, v in scope.items() if v is not None}
+            for n in tree.body:
+                if isinstance(n, ast.Assign) and len(n.targets) == 1:
+                    target = n.targets[0]
+                    value = _str_value(n.value, scope) if isinstance(target, ast.Name) else None
+                    if value is not None:
+                        scope[target.id] = value
+                        defs[(rel, target.id)] = n
+                        if values[dotted].get(target.id) != value:
+                            values[dotted][target.id] = value
+                            changed = True
+    frags = {(rel, name): _squash(values[_dotted(rel)][name]) for rel, name in defs}
+    frags = {k: v for k, v in frags.items() if len(v) >= min_len}
+    out = []
+    for rel, tree in graph.trees.values():
+        for node in ast.walk(tree):
+            if not (isinstance(node, ast.Constant) and isinstance(node.value, str)):
+                continue
+            text = _squash(node.value)
+            for (frel, name), frag in frags.items():
+                if frag in text and node not in ast.walk(defs[(frel, name)].value):
+                    out.append(f"{rel}:{node.lineno} spells {frel}:{name}")
+    return sorted(out)
+
+
+def test_inlined_constants_pattern():
+    a, b = f"{PACKAGE}/a.py", f"{PACKAGE}/b.py"
+    sources = {
+        a: "_FRAG = 'list_filter(split(lower(text), x), y -> y <> 0)'\n"
+        "_LIST = 'sum({a}, {b}) over the whole frame of its rows'\n"
+        "_DOT = _LIST.format(a='left_embedding', b='right_embedding')\n"
+        "_SHORT = 'split(lower(text), x)'\n",
+        b: "from .a import _FRAG\n"
+        "Q = f'''SELECT {_FRAG} AS t'''\n"
+        "R = '''SELECT list_filter(\n  split(lower(text), x),\n  y -> y <> 0) AS r'''\n"
+        "def f():\n"
+        "    return 'sum(left_embedding, right_embedding) over the whole frame of its rows'\n"
+        "S = 'split(lower(text), x) twice: split(lower(text), x)'\n",
+    }
+    assert inlined_constants(sources) == [f"{b}:3 spells {a}:_FRAG", f"{b}:7 spells {a}:_DOT"]
+
+
+def test_no_inlined_constants():
+    sources = {
+        rel: src for rel, src in package_sources().items() if rel.startswith(PACKAGE + "/")
+    }
+    inlined = inlined_constants(sources)
+    assert not inlined, f"interpolate the shared fragment instead of copying it: {inlined}"

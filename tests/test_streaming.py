@@ -723,95 +723,6 @@ def test_stream_static_enrich_matches_batch(spark, tmp_path):
     assert any(d is None for _, d in got)  # unmatched type survives
 
 
-def test_transform_with_state_accumulates_across_batches(spark, tmp_path):
-    """transformWithStateInPandas (Spark 4 stateful API): per-key
-    ValueState must accumulate across two separate triggers of a file
-    stream, surviving via the checkpoint between restarts.
-
-    The TWS python worker speaks protobuf to the JVM state server;
-    the container ships no google.protobuf package, but
-    tests/_proto_compat.py shims in the image's bundled pure-python
-    runtime (driver sys.path + worker sitecustomize) when one exists —
-    the skip remains only for images with no runtime at all.  The
-    legacy arbitrary-state API (applyInPandasWithState) is fully
-    tested in test_stateful_running_stats_across_batches."""
-    from conftest import HAVE_PROTOBUF
-
-    if not HAVE_PROTOBUF:
-        pytest.skip("no google.protobuf runtime available on this image")
-
-    from spark_bi5_datasource_spark.streaming.tws import running_totals_tws
-
-    schema = "event_id long, ts timestamp, event_type string, value double"
-    d, ckpt = str(tmp_path / "ev"), str(tmp_path / "ckpt_tws")
-
-    def write_batch(rows, mode):
-        spark.createDataFrame(
-            rows, "event_id long, ts_s string, event_type string, value double"
-        ).select(
-            "event_id", F.col("ts_s").cast("timestamp").alias("ts"),
-            "event_type", "value",
-        ).write.mode(mode).parquet(d)
-
-    # transformWithState requires the RocksDB state store provider
-    prior = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-
-    def run_trigger(qname):
-        # foreachBatch, not the memory sink: only fault-tolerant sinks
-        # may resume from a checkpoint, and the restart IS the thing
-        # under test (state surviving across separate triggers).
-        rows = []
-
-        def sink(batch_df, _batch_id):
-            rows.extend(batch_df.collect())
-
-        out = running_totals_tws(
-            spark.readStream.schema(schema).parquet(d)
-        )
-        q = (
-            out.writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        return {r.event_type: (r.cnt, r.value_sum) for r in rows}
-
-    write_batch(
-        [(1, "2024-01-01 00:00:00", "buy", 1.5),
-         (2, "2024-01-01 00:01:00", "buy", 2.25),
-         (3, "2024-01-01 00:02:00", "sell", 10.0)],
-        "overwrite",
-    )
-    got1 = run_trigger("tws_out1")
-    assert got1["buy"] == (2, 3.75)
-    assert got1["sell"] == (1, 10.0)
-
-    write_batch(
-        [(4, "2024-01-01 01:00:00", "buy", 0.25),
-         (5, "2024-01-01 01:01:00", "hold", 7.0)],
-        "append",
-    )
-    try:
-        got2 = run_trigger("tws_out2")
-    finally:
-        if prior is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prior
-            )
-    # state carried over the restart: buy continues from (2, 3.75)
-    assert got2["buy"] == (3, 4.0)
-    assert got2["hold"] == (1, 7.0)
-    assert "sell" not in got2  # update mode: untouched keys not re-emitted
-
-
 def test_stream_bi5_sink_reproduces_reference_tree(spark, tmp_path):
     """Streaming ingestion closes the format loop: the reference's
     EURUSD fixture tree is scanned (batch), replayed as a parquet
